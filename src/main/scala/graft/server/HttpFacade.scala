@@ -42,8 +42,12 @@ import graft.sources.LineProtocol
   *
   * The server itself is the JDK's `com.sun.net.httpserver` — a facade, not
   * a data path: bodies are capped micro-batches; all heavy lifting (parse
-  * fan-out, dedup, SQL) stays in Spark. Query views register lazily per
-  * request so the one-JVM Spark catalog never holds stale state.
+  * fan-out, dedup, SQL) stays in Spark. Query views register per request
+  * so the one-JVM Spark catalog never holds stale state; each is built
+  * before the shared catalog lock from a per-measurement deduplicated
+  * snapshot that the first read after a write folds the new chunks into
+  * (see [[measurementView]]), so a read's plan does not grow with the
+  * write count.
   */
 class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     clockNs: () => Long = () => System.currentTimeMillis() * 1000000L,
@@ -296,26 +300,82 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   /** The merged, upsert-deduplicated view of one measurement — the same
     * scan the engine gives any multi-chunk table (provider.rs chunk stitch
     * + DeduplicateExec): chunks union by name with schema merge, later
-    * chunks win per-field on equal (tags, time). */
+    * chunks win per-field on equal (tags, time). Tombstones apply on top
+    * at every read.
+    *
+    * A measurement with one chunk reads that chunk. With more, the read
+    * goes through a per-(db, measurement) snapshot: the deduplicated
+    * frame, materialized once with `localCheckpoint()`, so a read plans
+    * over one checkpointed scan whatever the chunk count (the role the
+    * reference's read-buffer compaction plays, data_management.md). The
+    * snapshot is keyed by the exact chunk frames it covers, compared by
+    * reference: chunk frames are immutable and appended, never replaced,
+    * so reference equality is both cheap and exact.
+    *  - chunks == key: the snapshot is reused;
+    *  - chunks extend the key: only the new chunks fold in, as
+    *    `dedup(snapshot @ seq 0, new chunks @ seq 1..k)` — the same
+    *    per-field last-non-null rule, so rows, column order and category
+    *    metadata equal a dedup over all chunks;
+    *  - anything else (a fresh or restarted facade): rebuild from all.
+    * Building happens lazily on the first read after a write, so a write
+    * stays a chunk append. A superseded snapshot is never unpersisted
+    * explicitly: a concurrent reader may still be scanning it, and
+    * checkpoint blocks cannot be recomputed. Dropping the map's
+    * reference lets Spark's ContextCleaner free the blocks once no plan
+    * holds them. */
   def measurementView(db: String, measurement: String): Option[DataFrame] =
     databases.get(db).flatMap { chunks =>
       val mine = chunks.collect { case (m, df) if m == measurement => df }
       val merged =
         if (mine.isEmpty) None
         else if (mine.size == 1) Some(mine.head)
-        else {
-          val tagged = mine.zipWithIndex.map { case (df, i) =>
-            df.withColumn("__seq", lit(i.toLong))
-          }
-          val merged = IoxSchema.mergeUnion(tagged)
-          val pk = merged.schema.fields.collect {
-            case f if IoxSchema.categoryOf(f).exists(c =>
-              c == IoxSchema.Tag || c == IoxSchema.Time) => f.name
-          }.toSeq
-          Some(Upsert.dedup(merged, pk, "__seq"))
-        }
+        else Some(snapshot(db, measurement, mine))
       merged.map(applyTombstones(db, measurement, _))
     }
+
+  /** (db, measurement) -> (chunk frames covered, deduplicated snapshot);
+    * see [[measurementView]]. DROP MEASUREMENT removes the entry. */
+  private val snapshots =
+    TrieMap.empty[(String, String), (Vector[DataFrame], DataFrame)]
+  private val snapshotBuilds = new AtomicLong
+  private val snapshotReuses = new AtomicLong
+
+  private def snapshot(db: String, measurement: String,
+      chunks: Vector[DataFrame]): DataFrame = {
+    def build(frames: Seq[DataFrame]): DataFrame = {
+      val snap = dedupChunks(frames).localCheckpoint()
+      snapshotBuilds.incrementAndGet()
+      val entry = (chunks, snap)
+      snapshots.put((db, measurement), entry)
+      // a DROP MEASUREMENT that raced this build must not leave the
+      // dropped chunks' snapshot pinned in the map
+      if (!databases.get(db).exists(_.exists(_._2 eq chunks.head)))
+        snapshots.remove((db, measurement), entry)
+      snap
+    }
+    snapshots.get((db, measurement)) match {
+      case Some((key, snap)) if key.size <= chunks.size &&
+          key.indices.forall(i => key(i) eq chunks(i)) =>
+        if (key.size == chunks.size) {
+          snapshotReuses.incrementAndGet()
+          snap
+        } else build(snap +: chunks.drop(key.size))
+      case _ => build(chunks)
+    }
+  }
+
+  /** Union `frames` by name and collapse equal (tags, time) keys, later
+    * frames winning per field (last non-null). */
+  private def dedupChunks(frames: Seq[DataFrame]): DataFrame = {
+    val merged = IoxSchema.mergeUnion(frames.zipWithIndex.map {
+      case (df, i) => df.withColumn("__seq", lit(i.toLong))
+    })
+    val pk = merged.schema.fields.collect {
+      case f if IoxSchema.categoryOf(f).exists(c =>
+        c == IoxSchema.Tag || c == IoxSchema.Time) => f.name
+    }.toSeq
+    Upsert.dedup(merged, pk, "__seq")
+  }
 
   /** Excludes every tombstoned region (DELETE predicates) from a read.
     * A row is deleted if it falls inside ANY recorded region; a null
@@ -516,10 +576,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
 
   /** Plan `q` over the db's measurement views (+ `extraViews`, which win
     * on name collision — the scatter-gather path injects fetched remote
-    * tables) and stream the response. Planning happens under the shared
-    * temp-view catalog lock, streaming after (same pattern as do_get):
-    * spark.sql analyzes eagerly, so the plan is bound to this request's
-    * views before the lock releases. */
+    * tables) with [[planSql]] and stream the response. */
   private def planAndRespond(ex: HttpExchange, db: String, q: String,
       format: String, extraViews: Seq[(String, DataFrame)]): Unit = {
         // system tables ride the query path like the reference's
@@ -527,22 +584,11 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         // through the db's query engine) — registered only when the query
         // text mentions them, so the data hot path never pays the
         // metadata collection
-        val sysViews =
+        def sysViews =
           if (q.toLowerCase(java.util.Locale.ROOT).contains("system_"))
             systemViews(db)
           else Nil
-        val planned = HttpFacade.synchronized {
-          try {
-            HttpFacade.registerMeasurementViews(spark,
-              measurements(db).flatMap(m =>
-                measurementView(db, m).map(m -> _)) ++ sysViews ++ extraViews)
-            Right(spark.sql(q))
-          } catch {
-            case NonFatal(e) =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-          }
-        }
-        planned match {
+        planSql(db, q, sysViews ++ extraViews) match {
           case Left(err) => respondJsonError(ex, 400, s"query error: $err")
           case Right(df) if format == "pretty" =>
             // pretty needs global column widths, so it stays eager — it is
@@ -578,6 +624,27 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         }
   }
 
+  /** Plans `sql` over `db`'s measurement views plus `extraViews` (which
+    * win on a name collision), for the SQL endpoint, the do_get bridge
+    * and Flight. The views, and any snapshot build behind them, are built
+    * BEFORE the shared temp-view catalog lock is taken; under it the
+    * views are only registered and the query analyzed. spark.sql
+    * analyzes eagerly, so the plan is bound to this request's views
+    * before the lock releases and streaming runs outside it. Errors come
+    * back as their message. */
+  private[server] def planSql(db: String, sql: String,
+      extraViews: => Seq[(String, DataFrame)] = Nil): Either[String, DataFrame] =
+    try {
+      val views = dbTables(db).toSeq ++ extraViews
+      HttpFacade.synchronized {
+        HttpFacade.registerMeasurementViews(spark, views)
+        Right(spark.sql(sql))
+      }
+    } catch {
+      case NonFatal(e) =>
+        Left(Option(e.getMessage).getOrElse(e.getClass.getName))
+    }
+
   /** The db's system tables as queryable views over the facade's write
     * store — the HTTP twin of the reference serving system.chunks /
     * system.columns / system.chunk_columns / system.operations through
@@ -590,9 +657,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * run only if the view is actually queried). */
   private def systemViews(db: String): Seq[(String, DataFrame)] = {
     import spark.implicits._
-    val mviews = measurements(db).flatMap(m =>
-      measurementView(db, m).map(m -> _)).toMap
-    val sysColumns = graft.sources.SqlFrontend.systemColumns(spark, mviews)
+    val sysColumns = graft.sources.SqlFrontend.systemColumns(spark, dbTables(db))
     val sysChunks = chunkRows(db)
       .map(c => (c.id.toLong, c.partitionKey, c.table, c.storage, c.rowCount))
       .toDF("id", "partition_key", "table_name", "storage", "row_count")
@@ -802,13 +867,11 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             spark.sparkContext.setJobGroup(s"influxql-$qid", q,
               interruptOnCancel = true)
             try {
-            // plan all statements under the catalog lock, then stream
-            val planned = HttpFacade.synchronized {
-              stmts.map { stmt =>
-                try planStatement(db, stmt)
-                catch { case NonFatal(e) =>
-                  Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
-              }
+            // plan every statement in order, then stream
+            val planned = stmts.map { stmt =>
+              try lockedPlan(db, stmt)
+              catch { case NonFatal(e) =>
+                Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
             }
             ex.getResponseHeaders.set("Content-Type", "application/json")
             ex.sendResponseHeaders(200, 0)
@@ -847,10 +910,30 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** Plans one 1.x statement against `db` (caller holds the catalog
-    * lock): returns (series name, tag columns, frame) or an in-band
-    * error string. */
-  private def planStatement(db: String, stmt: graft.core.InfluxQl.Stmt)
+  /** Plans one 1.x statement under the catalog lock. The measurement
+    * views it reads are built first, outside the lock, so a snapshot
+    * build never stalls other requests' planning; they are resolved per
+    * statement, so a statement sees the writes, deletes and drops of the
+    * ones before it. */
+  private def lockedPlan(db: String, stmt: graft.core.InfluxQl.Stmt)
+      : Either[String, Option[(String, Seq[String], DataFrame)]] = {
+    val views = stmt match {
+      case _: graft.core.InfluxQl.Select | _: graft.core.InfluxQl.Explain |
+          _: graft.core.InfluxQl.Delete |
+          graft.core.InfluxQl.Drop("series", _, _, _) => dbTables(db)
+      case sh: graft.core.InfluxQl.Show if !ViewlessShows(sh.what) =>
+        dbTables(db)
+      case _ => Map.empty[String, DataFrame]
+    }
+    HttpFacade.synchronized(planStatement(db, stmt, views))
+  }
+
+  /** Plans one 1.x statement against `db` over `views` (the db's
+    * measurement views, for the statements that read them; caller holds
+    * the catalog lock): returns (series name, tag columns, frame) or an
+    * in-band error string. */
+  private def planStatement(db: String, stmt: graft.core.InfluxQl.Stmt,
+      views: Map[String, DataFrame])
       : Either[String, Option[(String, Seq[String], DataFrame)]] = stmt match {
     case sel: graft.core.InfluxQl.Select =>
       // subqueries may nest: resolve the root measurement for the series
@@ -858,9 +941,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       def root(s: graft.core.InfluxQl.Select): String =
         s.fromSub.map(root).getOrElse(s.from)
       val name = root(sel)
-      val msAll = measurements(db).flatMap { m =>
-        measurementView(db, m).map(df => m -> asMeasurement(df))
-      }.toMap
+      val msAll = views.map { case (m, df) => m -> asMeasurement(df) }
       if (!msAll.contains(name)) Left(s"measurement not found: $name")
       else if (sel.into.isDefined) {
         // `SELECT … INTO <target>`: run now and land the result in the
@@ -961,16 +1042,14 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       if (continuousQueries.remove(key).isDefined) Right(None)
       else Left(s"continuous query not found: $name")
     case sh: graft.core.InfluxQl.Show =>
-      val ms = measurements(db).flatMap { m =>
-        measurementView(db, m).map(df => m -> asMeasurement(df))
-      }.toMap
+      val ms = views.map { case (m, df) => m -> asMeasurement(df) }
       Right(Some((sh.what, Seq.empty[String],
         graft.operators.InfluxQlPlanner.showPlan(ms, sh))))
     case graft.core.InfluxQl.Delete(from, where) =>
       if (!measurements(db).contains(from))
         Left(s"measurement not found: $from")
       else {
-        val tags = measurementView(db, from).map(asMeasurement(_).tagCols)
+        val tags = views.get(from).map(asMeasurement(_).tagCols)
           .getOrElse(Seq.empty)
         // DELETE ... WHERE time < now() - 7d is the canonical retention
         // command: resolve now() against the server clock before the
@@ -1026,6 +1105,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             })
             databases.put(db, survivors.map(_._1))
           }
+          snapshots.remove((db, m))
           dataDir.foreach(_ => writeManifest(db))
         }
         tombstones.remove((db, m))
@@ -1037,7 +1117,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       // series
       if (!measurements(db).contains(m)) Left(s"measurement not found: $m")
       else {
-        val tags = measurementView(db, m).map(asMeasurement(_).tagCols)
+        val tags = views.get(m).map(asMeasurement(_).tagCols)
           .getOrElse(Seq.empty)
         where.foreach { e =>
           val bad = collectRefs(e).filterNot(tags.contains)
@@ -1059,9 +1139,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       // ANALYZE = the final AQE-resolved executed plan after running
       def root(s0: graft.core.InfluxQl.Select): String =
         s0.fromSub.map(root).getOrElse(s0.from)
-      val msAll = measurements(db).flatMap { m =>
-        measurementView(db, m).map(df => m -> asMeasurement(df))
-      }.toMap
+      val msAll = views.map { case (m, df) => m -> asMeasurement(df) }
       if (!msAll.contains(root(sel)))
         Left(s"measurement not found: ${root(sel)}")
       else {
@@ -1110,10 +1188,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           Bin("<", Ref("time"), IntLit(end)))
         val bounded = cq.sel.copy(where =
           Some(cq.sel.where.map(w => Bin("and", w, bound)).getOrElse(bound)))
-        val planned = HttpFacade.synchronized {
-          try planStatement(cdb, bounded)
+        val planned =
+          try lockedPlan(cdb, bounded)
           catch { case NonFatal(e) => Left(String.valueOf(e.getMessage)) }
-        }
         planned match {
           case Right(Some((_, _, ack))) =>
             // the INTO path acks with one (time, written) row
@@ -1186,19 +1263,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         if (!databases.contains(db)) {
           respondJsonError(ex, 404, s"database not found: $db"); return
         }
-        // plan under the shared temp-view catalog lock, stream after
-        val planned = HttpFacade.synchronized {
-          try {
-            HttpFacade.registerMeasurementViews(spark,
-              measurements(db).flatMap(m =>
-                measurementView(db, m).map(m -> _)))
-            Right(spark.sql(sql))
-          } catch {
-            case NonFatal(e) =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-          }
-        }
-        planned match {
+        planSql(db, sql) match {
           case Left(err) => respondJsonError(ex, 400, s"query error: $err")
           case Right(df) =>
             ex.getResponseHeaders.set("Content-Type",
@@ -1375,8 +1440,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private def tableOf(body: String): Option[String] =
     jsonStrField(body, "table").orElse(jsonStrField(body, "measurement"))
 
-  /** All measurements of `db` as a name->view map (the database-level
-    * operand of the *AcrossTables metadata ops). */
+  /** All measurements of `db` as a name->view map: the catalog SQL and
+    * InfluxQL plan over, and the database-level operand of the
+    * *AcrossTables metadata ops. */
   private[server] def dbTables(db: String): Map[String, DataFrame] =
     measurements(db).flatMap(m => measurementView(db, m).map(m -> _)).toMap
 
@@ -2327,6 +2393,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
          |ingest_fields_total ${ingestFields.get}
          |ingest_points_bytes_total ${ingestBytes.get}
          |http_requests_total ${httpRequests.get}
+         |read_snapshot_builds ${snapshotBuilds.get}
+         |read_snapshot_reuses ${snapshotReuses.get}
          |""".stripMargin
     respond(ex, 200, "text/plain", body)
   }
@@ -2352,6 +2420,10 @@ object HttpFacade {
 
   /** Max accepted body, pre- and post-inflate (http.rs:345 MAX_SIZE). */
   val MaxBodySize: Int = 10 * 1024 * 1024
+
+  /** The SHOW statements answered without reading any measurement. */
+  private val ViewlessShows =
+    Set("databases", "retention policies", "queries", "continuous queries")
 
   /** Measurement temp views currently registered in the shared session
     * catalog (guarded by `HttpFacade.synchronized`, like the
