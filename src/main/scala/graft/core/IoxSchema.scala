@@ -34,11 +34,6 @@ object IoxSchema {
   def fieldColumns(schema: StructType): Seq[String] =
     schema.fields.filter(f => categoryOf(f).contains(Field)).map(_.name).toSeq
 
-  /** Primary key = sorted tags + time (reference dedup key,
-    * query/src/provider/deduplicate.rs:72-105). */
-  def primaryKey(schema: StructType): Seq[String] =
-    tagColumns(schema).sorted :+ NsTime.TimeColumn
-
   // ------------------------------------------------------------ sort key
 
   val SortKeyMeta = "graft.sortKey"

@@ -333,18 +333,6 @@ object TextFunctions {
       lit(84.6) * (syllableCount(text) / words)
   }
 
-  def langScores(text: Column): Seq[(String, Column)] = {
-    // r16: all four lists counted in ONE native tokenize pass (see
-    // WordListCountsExpr); per-language element_at projections of the
-    // same kernel call are deduplicated by codegen subexpression
-    // elimination
-    val langs = langMarkers.toSeq.sortBy(_._1)
-    val counts = wordListCounts(text, langs.map(_._2), withTotal = false)
-    langs.zipWithIndex.map { case ((lang, _), i) =>
-      lang -> element_at(counts, i + 1)
-    }
-  }
-
   /** Predicted language code, or "und" when no marker matches.
     * Single pass over the tokens: the native [[WordListCountsExpr]]
     * kernel counts all languages' markers at once (r16 — the prior

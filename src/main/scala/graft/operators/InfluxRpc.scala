@@ -341,12 +341,13 @@ object InfluxRpc {
     * series tag keys, partition_key_vals = the group's values of
     * `groupKeys` in request order — followed by each member series'
     * series/points frame pair. Same streaming shape as [[toSeriesSet]]:
-    * repartition on the group key, spillable sort, run-detecting iterator.
-    * One GROUP's frames buffer at a time (the group frame must lead but
-    * its tag-key union is only known after its members stream past) —
-    * fine for aggregated read_group output, where a group holds one small
-    * frame pair per member series, not raw points. For `AggKind.None`
-    * regrouped reads (raw series in a group), use
+    * the groups are clustered on the group key and each is walked in
+    * (series key, field) order, with no shuffle when the input is one
+    * partition. One GROUP's frames buffer at a time (the group frame must
+    * lead but its tag-key union is only known after its members stream
+    * past) — fine for aggregated read_group output, where a group holds
+    * one small frame pair per member series, not raw points. For
+    * `AggKind.None` regrouped reads (raw series in a group), use
     * [[toGroupedFramesStreaming]], which never buffers a group. */
   def toGroupedFrames(series: Dataset[Series], measurement: String,
       groupKeys: Seq[String]): Dataset[Frame] = {
@@ -355,27 +356,16 @@ object InfluxRpc {
     series
       .map(s => (groupKeys.map(k => s.tags.getOrElse(k, "")),
         s.tags.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }, s.field, s))
-      .repartition(col("_1"))
-      .sortWithinPartitions(col("_1"), col("_2"), col("_3"))
-      .mapPartitions { it =>
-        val rows = it.buffered
-        new Iterator[Seq[Frame]] {
-          override def hasNext: Boolean = rows.hasNext
-          override def next(): Seq[Frame] = {
-            val gv = rows.head._1
-            // two passes are impossible on an iterator: collect the group's
-            // series frames while accumulating the tag-key union, then
-            // prepend the group frame
-            val tagKeys = scala.collection.mutable.SortedSet.empty[String]
-            val frames = scala.collection.mutable.ArrayBuffer.empty[Frame]
-            while (rows.hasNext && rows.head._1 == gv) {
-              val s = rows.next()._4
-              tagKeys ++= s.tags.keys
-              frames ++= seriesFramePair(s, measurement)
-            }
-            Frame("group", Map.empty, Nil, Nil, tagKeys.toSeq, gv) +: frames.toSeq
-          }
-        }.flatten
+      .groupBy(col("_1"))
+      .as[Seq[String], (Seq[String], Seq[String], String, Series)]
+      .flatMapSortedGroups(col("_2"), col("_3")) { (gv, rows) =>
+        val tagKeys = scala.collection.mutable.SortedSet.empty[String]
+        val frames = scala.collection.mutable.ArrayBuffer.empty[Frame]
+        rows.foreach { case (_, _, _, s) =>
+          tagKeys ++= s.tags.keys
+          frames ++= seriesFramePair(s, measurement)
+        }
+        Frame("group", Map.empty, Nil, Nil, tagKeys.toSeq, gv) +: frames
       }
   }
 
@@ -439,13 +429,13 @@ object InfluxRpc {
   /** Sorted rows -> one Series per (tag-combination, field) — the
     * reference's SeriesSetConverter (query/src/exec/seriesset.rs:76-140)
     * walks sorted batches detecting contiguous tag runs; same shape here:
-    * repartition on the tag tuple, sortWithinPartitions (Spark's
-    * spillable external sort — a hot series never has to fit in an
-    * in-memory sort buffer, unlike a flatMapGroups
-    * `rows.toSeq.sortBy`), then a run-detecting iterator over each
-    * sorted partition. One shuffle on the series key; only the ONE series
-    * currently being assembled is buffered, matching the reference's
-    * streaming converter.
+    * the rows are clustered on the tag tuple and each series is walked in
+    * time order (Spark's spillable external sort — a hot series never has
+    * to fit in an in-memory sort buffer, unlike a flatMapGroups
+    * `rows.toSeq.sortBy`). Clustered on the key; no shuffle when the
+    * input is one partition, one hash shuffle on the key otherwise. Only
+    * the ONE series currently being assembled is buffered, matching the
+    * reference's streaming converter.
     */
   def toSeriesSet(df: DataFrame, fieldCols: Seq[String]): Dataset[Series] = {
     val spark = df.sparkSession
@@ -457,30 +447,20 @@ object InfluxRpc {
         array(tagCols.map(t => col(t).cast("string")): _*).as("tv"),
         time.as("t"),
         array(fieldCols.map(f => coalesce(col(f).cast("double"), lit(Double.NaN))): _*).as("vals"))
-      .repartition(col("tv"))
-      .sortWithinPartitions(col("tv"), col("t"))
-      .as[(Seq[String], Long, Seq[Double])]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        new Iterator[Seq[Series]] {
-          override def hasNext: Boolean = rows.hasNext
-          override def next(): Seq[Series] = {
-            val key = rows.head._1
-            val pts = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Double])]
-            while (rows.hasNext && rows.head._1 == key)
-              { val r = rows.next(); pts += ((r._2, r._3)) }
-            // null tags are OMITTED from the series key (seriesset.rs
-            // tag conversion), and a field that is null across the whole
-            // series produces NO series at all (influxrpc.rs: "the null
-            // field ... are not sent as series")
-            val tagsKey = tagCols.zip(key).filter(_._2 != null).toMap
-            fieldCols.zipWithIndex.flatMap { case (f, i) =>
-              val series = pts.collect {
-                case (t, vs) if !vs(i).isNaN => SeriesPoint(t, vs(i)) }
-              if (series.isEmpty) None else Some(Series(tagsKey, f, series.toSeq))
-            }
-          }
-        }.flatten
+      .groupBy(col("tv"))
+      .as[Seq[String], (Seq[String], Long, Seq[Double])]
+      .flatMapSortedGroups(col("t")) { (key, rows) =>
+        val pts = rows.map(r => (r._2, r._3)).toVector
+        // null tags are OMITTED from the series key (seriesset.rs
+        // tag conversion), and a field that is null across the whole
+        // series produces NO series at all (influxrpc.rs: "the null
+        // field ... are not sent as series")
+        val tagsKey = tagCols.zip(key).filter(_._2 != null).toMap
+        fieldCols.zipWithIndex.flatMap { case (f, i) =>
+          val series = pts.collect {
+            case (t, vs) if !vs(i).isNaN => SeriesPoint(t, vs(i)) }
+          if (series.isEmpty) None else Some(Series(tagsKey, f, series))
+        }
       }
   }
 }

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: images / audio / video travel as opaque
   * `binary` columns with typed metadata, and per-item compute (decode,
@@ -15,15 +14,6 @@ import org.apache.spark.sql.types._
   * production deployment swaps [[Codecs]] for real implementations.
   */
 object Multimodal {
-
-  /** Schema convention for a multimodal asset table. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false), // image|audio|video
-    StructField("content", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true)))
 
   case class Asset(asset_id: Long, media_type: String, content: Array[Byte],
       width: Option[Int], height: Option[Int], duration_ms: Option[Long])

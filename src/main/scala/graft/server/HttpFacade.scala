@@ -13,6 +13,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.core.IoxSchema
@@ -277,6 +278,13 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private val ingestBytes = new AtomicLong
   private val httpRequests = new AtomicLong
 
+  // TCP_NODELAY on accepted sockets: a fixed-length response goes out as
+  // a header write then a body write, and with Nagle on the body waits
+  // for the client's delayed ACK (~40 ms per response). The JDK server
+  // reads the property once, when the JVM creates its first HttpServer;
+  // a value the embedder set wins.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // daemon threads + explicit shutdown: the facade must never pin the JVM
   // (a lingering non-daemon pool would hang any main() that started one)
@@ -322,7 +330,21 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * explicitly: a concurrent reader may still be scanning it, and
     * checkpoint blocks cannot be recomputed. Dropping the map's
     * reference lets Spark's ContextCleaner free the blocks once no plan
-    * holds them. */
+    * holds them.
+    *
+    * A view whose data is one partition is handed to the planners as
+    * one partition (`coalesce(1)`, a narrow no-op that reports
+    * `SinglePartition`): a snapshot that AQE sized to one partition, and
+    * a chunk built from one (every LP, write_pb and do_put write).
+    * Catalyst cannot see that by itself — a checkpoint taken under AQE
+    * and a frame over a parallelized RDD both report an unknown
+    * partitioning — so every aggregate, ORDER BY and series-set
+    * conversion would plan a shuffle over a few kilobytes. Marked, a read
+    * runs as one job with no exchange. Everything else plans as before:
+    * parquet chunks reloaded from [[dataDir]] and a snapshot with more
+    * than one partition. Only the view is marked, never the stored
+    * snapshot or chunk: the fold keeps its dedup shuffle, so AQE still
+    * decides how many partitions a growing snapshot gets. */
   def measurementView(db: String, measurement: String): Option[DataFrame] =
     databases.get(db).flatMap { chunks =>
       val mine = chunks.collect { case (m, df) if m == measurement => df }
@@ -330,7 +352,15 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         if (mine.isEmpty) None
         else if (mine.size == 1) Some(mine.head)
         else Some(snapshot(db, measurement, mine))
-      merged.map(applyTombstones(db, measurement, _))
+      merged.map(df => applyTombstones(db, measurement, markOnePartition(df)))
+    }
+
+  /** `df` as a one-partition plan when it scans an existing RDD of one
+    * partition (a chunk or a checkpoint); otherwise `df` unchanged. */
+  private def markOnePartition(df: DataFrame): DataFrame =
+    df.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.getNumPartitions == 1 => df.coalesce(1)
+      case _ => df
     }
 
   /** (db, measurement) -> (chunk frames covered, deduplicated snapshot);
@@ -915,7 +945,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * build never stalls other requests' planning; they are resolved per
     * statement, so a statement sees the writes, deletes and drops of the
     * ones before it. */
-  private def lockedPlan(db: String, stmt: graft.core.InfluxQl.Stmt)
+  private[server] def lockedPlan(db: String, stmt: graft.core.InfluxQl.Stmt)
       : Either[String, Option[(String, Seq[String], DataFrame)]] = {
     val views = stmt match {
       case _: graft.core.InfluxQl.Select | _: graft.core.InfluxQl.Explain |
@@ -1367,16 +1397,25 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         // build from measurementView over the concurrent chunk map and
         // never touch the shared temp-view catalog the SQL endpoint
         // synchronizes on — a slow metadata scan must not stall queries
-        measurementView(db, table).map { df =>
-          graft.operators.InfluxRpc.toFrames(
-            graft.operators.InfluxRpc.toSeriesSet(
-              graft.operators.InfluxRpc.readFilter(df, pred),
-              IoxSchema.fieldColumns(df.schema)),
-            table)
-        } match {
+        planReadFilter(db, table, pred) match {
           case None => respondJsonError(ex, 404, s"no table $table in database $db")
           case Some(frames) => streamFrames(ex, frames)
         }
+    }
+  }
+
+  /** Transport-neutral read_filter planning core — shared by the HTTP
+    * bridge above and the gRPC service ([[StorageGrpc]]): the table's
+    * series frames, or None when `db` has no such table. */
+  private[server] def planReadFilter(db: String, table: String,
+      pred: graft.core.RpcPredicate)
+      : Option[org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]] = {
+    import graft.operators.InfluxRpc
+    measurementView(db, table).map { df =>
+      InfluxRpc.toFrames(
+        InfluxRpc.toSeriesSet(InfluxRpc.readFilter(df, pred),
+          IoxSchema.fieldColumns(df.schema)),
+        table)
     }
   }
 
@@ -1446,14 +1485,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private[server] def dbTables(db: String): Map[String, DataFrame] =
     measurements(db).flatMap(m => measurementView(db, m).map(m -> _)).toMap
 
-  /** LP ingest core shared by the HTTP write endpoint and the gRPC write
-    * service (rpc/write.rs:23-54 funnels into the same
-    * `Server::write_lines` the HTTP route uses): one driver-side parse
-    * for the per-write counters the reference tracks (num_lines /
-    * num_fields, http.rs:494-506), frames appended to the per-db chunk
-    * store, parse errors surfaced to the caller's transport. The frames
-    * re-parse the same <=10MiB body — still one facade-sized pass, the
-    * data path proper stays in Spark. Returns lines written. */
   /** Write entry point: shard-routes when the database's rules carry a
     * ShardConfig with specific (table-regex) targets whose shard ids
     * resolve through the `remotes` registry — the reference's
@@ -1538,12 +1569,18 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
+  /** LP ingest core shared by the HTTP write endpoint and the gRPC write
+    * service (rpc/write.rs:23-54 funnels into the same
+    * `Server::write_lines` the HTTP route uses): one driver-side parse
+    * of the <=10MiB body feeds both the per-write counters the reference
+    * tracks (num_lines / num_fields, http.rs:494-506) and the frames
+    * appended to the per-db chunk store; parse errors are surfaced to the
+    * caller's transport. Returns lines written. */
   private def writeLinesLocal(db: String, body: String,
       bodyBytes: Int): Either[String, Long] = {
-    val lines = body.split("\n").toSeq
     try {
-      val parsed = LineProtocol.parseLines(lines.iterator).toSeq
-      val frames = LineProtocol.ingest(spark, lines, clockNs())
+      val parsed = LineProtocol.parseLines(body.split("\n").iterator).toSeq
+      val frames = LineProtocol.framesOf(spark, parsed, clockNs())
       appendChunks(db, frames.toVector)
       ingestLines.addAndGet(parsed.size.toLong)
       ingestFields.addAndGet(parsed.iterator.map(_.fields.size.toLong).sum)

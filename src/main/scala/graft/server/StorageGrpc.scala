@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.util.control.NonFatal
 
-import graft.core.IoxSchema
 import graft.operators.InfluxRpc
 
 /** The storage gRPC service over [[GrpcServer]]'s real HTTP/2 framing —
@@ -224,14 +223,8 @@ object StorageGrpc {
     StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
       (req.databaseName, meas) match {
         case (Some(db), Some(t)) =>
-          f.measurementView(db, t) match {
-            case Some(df) =>
-              import scala.jdk.CollectionConverters._
-              val frames = InfluxRpc.toFrames(
-                InfluxRpc.toSeriesSet(InfluxRpc.readFilter(df, pred),
-                  IoxSchema.fieldColumns(df.schema)), t)
-              Right(frames.toLocalIterator().asScala.map(fr =>
-                StorageProto.readResponse(Seq(StorageProto.encodeFrame(fr)))))
+          f.planReadFilter(db, t, pred) match {
+            case Some(frames) => Right(frameStream(frames))
             case None => Left(s"no table $t in database $db")
           }
         case (None, _) => Left("request needs read_source")

@@ -128,13 +128,11 @@ object StorageProto {
   }
 
   /** *PointsFrame { repeated sfixed64 timestamps = 1; repeated <T>
-    * values = 2; } — all five variants share the packed-timestamps
-    * layout; only the values encoding differs. */
+    * values = 2; } — every variant shares the packed-timestamps layout;
+    * only the values encoding differs. */
   def floatPoints(ts: Seq[Long], vs: Seq[Double]): Array[Byte] =
     new Writer().packedSfixed64(1, ts).packedDouble(2, vs).result()
   def integerPoints(ts: Seq[Long], vs: Seq[Long]): Array[Byte] =
-    new Writer().packedSfixed64(1, ts).packedVarint(2, vs).result()
-  def unsignedPoints(ts: Seq[Long], vs: Seq[Long]): Array[Byte] =
     new Writer().packedSfixed64(1, ts).packedVarint(2, vs).result()
   def booleanPoints(ts: Seq[Long], vs: Seq[Boolean]): Array[Byte] =
     new Writer().packedSfixed64(1, ts).packedBool(2, vs).result()
@@ -146,8 +144,7 @@ object StorageProto {
 
   /** Frame oneof member numbers (storage_common.proto:92-102). */
   val FrameSeries = 1; val FrameFloatPoints = 2; val FrameIntegerPoints = 3
-  val FrameUnsignedPoints = 4; val FrameBooleanPoints = 5
-  val FrameStringPoints = 6; val FrameGroup = 7
+  val FrameBooleanPoints = 5; val FrameGroup = 7
 
   /** Frame { oneof data { ... } } — the member is written even when its
     * payload is empty (oneof presence is explicit). */

@@ -299,20 +299,24 @@ object LineProtocol {
     })
   }
 
-  /** Batch ingest: lines -> one DataFrame per measurement (driver-side
-    * schema inference over the batch; fine for tests and micro-batches).
-    * `defaultTimeNs` stands in for the server-assigned wall clock the
-    * reference applies to timestamp-less lines.
-    */
-  def ingest(spark: SparkSession, lines: Seq[String], defaultTimeNs: Long = 0L)
-      : Map[String, DataFrame] = {
-    val parsed = parseLines(lines).toSeq
+  /** Batch ingest of parsed lines: one DataFrame per measurement, each
+    * one partition (driver-side schema inference over the batch; fine for
+    * tests and micro-batches). `defaultTimeNs` stands in for the
+    * server-assigned wall clock the reference applies to timestamp-less
+    * lines. Callers that need the parsed lines themselves (the server's
+    * write counters) parse once and call this. */
+  def framesOf(spark: SparkSession, parsed: Seq[ParsedLine],
+      defaultTimeNs: Long = 0L): Map[String, DataFrame] =
     parsed.groupBy(_.measurement).map { case (m, ls) =>
       val schema = inferSchema(ls)
       val rows = ls.map(toRow(_, schema, defaultTimeNs))
       m -> spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     }
-  }
+
+  /** [[framesOf]] over raw line-protocol lines. */
+  def ingest(spark: SparkSession, lines: Seq[String], defaultTimeNs: Long = 0L)
+      : Map[String, DataFrame] =
+    framesOf(spark, parseLines(lines).toSeq, defaultTimeNs)
 
   /** Distributed ingest of ONE known measurement with a fixed schema: the
     * scalable path (schema from a prior inference pass or a catalog), used

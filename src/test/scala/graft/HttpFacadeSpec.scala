@@ -182,6 +182,21 @@ class HttpFacadeSpec extends SparkSpec {
     }
   }
 
+  test("a fixed-length response does not wait on the client's delayed ACK") {
+    withFacade { facade =>
+      // headers and body go out as two writes; with Nagle on, the body
+      // waits ~40 ms for the client's delayed ACK of the headers
+      def roundTripMs(): Double = {
+        val t0 = System.nanoTime()
+        assert(get(facade.boundPort, "/health") == (200, "OK"))
+        (System.nanoTime() - t0) / 1e6
+      }
+      roundTripMs() // connection set-up and class loading
+      val ms = Seq.fill(10)(roundTripMs()).sorted
+      assert((ms(4) + ms(5)) / 2 < 20.0, ms)
+    }
+  }
+
   test("pretty format caps rendered rows with a banner; csv streams them all") {
     withFacade { facade =>
       val p = facade.boundPort

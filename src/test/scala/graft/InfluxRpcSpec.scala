@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.core.RpcPredicate
 import graft.operators.InfluxRpc
@@ -268,6 +271,27 @@ class InfluxRpcSpec extends SparkSpec {
     assert(frames.count(_.frameType == "series") == 3)
     assert(acc.value == 3L,
       s"series pipeline produced ${acc.value} rows for 3 series — must run once")
+  }
+
+  test("series-set converters: a one-partition input plans no exchange and emits the 8-partition frames") {
+    object plans extends AdaptiveSparkPlanHelper
+    def shuffles(ds: Dataset[_]): Int =
+      plans.collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+    // each converter with its shuffles over 8 partitions: the round-robin
+    // spread, then one hash shuffle on the key per converter
+    val converters: Seq[(DataFrame => Dataset[InfluxRpc.Frame], Int)] = Seq(
+      (df => InfluxRpc.toFrames(InfluxRpc.toSeriesSet(df, Seq("temp", "humid")), "h2o"), 2),
+      (df => InfluxRpc.toGroupedFrames(InfluxRpc.toSeriesSet(df, Seq("temp")), "h2o",
+        Seq("state")), 3))
+    converters.foreach { case (convert, spreadShuffles) =>
+      val one = convert(h2o.coalesce(1))
+      val oneFrames = one.collect().toSeq
+      assert(shuffles(one) == 0, one.queryExecution.executedPlan)
+      val eight = convert(h2o.repartition(8))
+      val eightFrames = eight.collect().toSeq
+      assert(shuffles(eight) == spreadShuffles, eight.queryExecution.executedPlan)
+      assert(oneFrames.nonEmpty && oneFrames == eightFrames)
+    }
   }
 
   test("validateRpcExpr rejects LIKE / IS NULL / modulo, allows rlike") {
