@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{IoxSchema, NsTime, RpcPredicate}
 import graft.functions.{Selectors, WindowBounds}
 
@@ -254,12 +257,8 @@ object InfluxRpc {
       case AggKind.Last => Selectors.lastTime(col(f), time)
       case _ => throw new IllegalStateException(s"$agg is not a selector")
     }
-    val isSelector = agg match {
-      case AggKind.First | AggKind.Last | AggKind.Min | AggKind.Max => true
-      case _ => false
-    }
     val aggCols: Seq[Column] =
-      if (isSelector)
+      if (isSelector(agg))
         fs.flatMap(f => Seq(aggExpr(f).as(f),
           selectorTime(f).as(s"${NsTime.TimeColumn}_$f")))
       else fs.map(f => aggExpr(f).as(f)) :+ max(time).as(NsTime.TimeColumn)
@@ -267,6 +266,11 @@ object InfluxRpc {
       .groupBy(grouping.map(col): _*)
       .agg(aggCols.head, aggCols.tail: _*)
       .orderBy(grouping.map(col): _*)
+  }
+
+  private def isSelector(agg: AggKind): Boolean = agg match {
+    case AggKind.First | AggKind.Last | AggKind.Min | AggKind.Max => true
+    case _ => false
   }
 
   /** read_window_aggregate: per-series time-bucketed aggregates
@@ -330,43 +334,117 @@ object InfluxRpc {
       Frame("points", Map.empty, s.points.map(_.time), s.points.map(_.value)))
   }
 
+  // The assembly of a series and of a group, shared by the distributed
+  // converters below (Dataset in, Dataset out) and the driver-side stream
+  // ([[SeriesPlan]]): one definition of each, whichever form runs it.
+
+  /** The points of one run of rows that share a series key, per field, in
+    * arrival (time) order. A null tag is left out of the series key, a
+    * null or NaN value is not a point, and a field with no point gives no
+    * series at all (seriesset.rs tag conversion; influxrpc.rs: "the null
+    * field ... are not sent as series"). */
+  private final class SeriesRun(tagCols: Seq[String], tagValues: Seq[String],
+      fieldCols: Seq[String]) {
+    private val points =
+      Array.fill(fieldCols.size)(scala.collection.mutable.ArrayBuffer.empty[SeriesPoint])
+
+    def add(field: Int, time: Long, value: Double): Unit =
+      if (!value.isNaN) points(field) += SeriesPoint(time, value)
+
+    def series: Seq[Series] = {
+      val key = tagCols.zip(tagValues).filter(_._2 != null).toMap
+      fieldCols.indices.collect {
+        case i if points(i).nonEmpty => Series(key, fieldCols(i), points(i).toVector)
+      }
+    }
+  }
+
+  /** A group's partition key values: the group keys' tag values in
+    * request order, "" for a tag the series lacks. */
+  private def groupValues(groupKeys: Seq[String], s: Series): Seq[String] =
+    groupKeys.map(k => s.tags.getOrElse(k, ""))
+
+  /** A series' tags as a sorted `k=v` list: the first member-order key. */
+  private def memberKey(s: Series): Seq[String] =
+    s.tags.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
+
+  /** Strings compared as Spark compares them (UTF-8 bytes), so a sort here
+    * and a Spark sort on the same keys agree; sequences compare element by
+    * element, then shorter first, like Spark arrays. */
+  private val sparkStringOrder: Ordering[String] = (a, b) =>
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** Member order within a group: by [[memberKey]], then by field. */
+  private val memberOrder: Ordering[Series] = Ordering.by[Series, (Seq[String], String)](
+    s => (memberKey(s), s.field))(
+    Ordering.Tuple2(Ordering.Implicits.seqOrdering[Seq, String](sparkStringOrder),
+      sparkStringOrder))
+
+  private def groupFrame(gv: Seq[String], tagKeys: Seq[String]): Frame =
+    Frame("group", Map.empty, Nil, Nil, tagKeys, gv)
+
+  /** One group's frames (data.rs:75-121): the `group` frame — tag keys =
+    * the union of the members' tag keys, partition key values = `gv` —
+    * then each member's series/points pair in [[memberOrder]]. */
+  private def groupFrames(members: Seq[Series], gv: Seq[String],
+      measurement: String): Seq[Frame] = {
+    val sorted = members.sorted(memberOrder)
+    groupFrame(gv, tagKeyUnion(sorted.iterator.flatMap(_.tags.keys))) +:
+      sorted.flatMap(seriesFramePair(_, measurement))
+  }
+
+  /** A group's tag keys: the sorted union of its members' tag keys. */
+  private def tagKeyUnion(keys: IterableOnce[String]): Seq[String] =
+    scala.collection.immutable.SortedSet.from(keys).toSeq
+
+  /** Series that arrive in group order, each group in member order, to
+    * frames: a `group` frame (tag keys from `unions`) ahead of each group's
+    * first member, nothing buffered. */
+  private def streamedGroupFrames(series: Iterator[Series], groupKeys: Seq[String],
+      unions: Map[Seq[String], Seq[String]], measurement: String): Iterator[Frame] = {
+    var current: Seq[String] = null
+    series.flatMap { s =>
+      val gv = groupValues(groupKeys, s)
+      val lead =
+        if (gv == current) Nil
+        else {
+          current = gv
+          Seq(groupFrame(gv, unions.getOrElse(gv, Nil)))
+        }
+      lead ++ seriesFramePair(s, measurement)
+    }
+  }
+
+  // ------------------------------------- series sets, distributed form
+
   def toFrames(series: Dataset[Series], measurement: String): Dataset[Frame] = {
     val spark = series.sparkSession
     import spark.implicits._
     series.flatMap(seriesFramePair(_, measurement))
   }
 
-  /** read_group response stream (data.rs:75-121): per distinct value of
-    * the group keys, ONE `group` frame — tag_keys = union of the group's
-    * series tag keys, partition_key_vals = the group's values of
-    * `groupKeys` in request order — followed by each member series'
-    * series/points frame pair. Same streaming shape as [[toSeriesSet]]:
-    * the groups are clustered on the group key and each is walked in
-    * (series key, field) order, with no shuffle when the input is one
-    * partition. One GROUP's frames buffer at a time (the group frame must
-    * lead but its tag-key union is only known after its members stream
-    * past) — fine for aggregated read_group output, where a group holds
-    * one small frame pair per member series, not raw points. For
+  /** read_group response stream (data.rs:75-121), distributed form: per
+    * distinct value of the group keys, ONE `group` frame — tag_keys =
+    * union of the group's series tag keys, partition_key_vals = the
+    * group's values of `groupKeys` in request order — followed by each
+    * member series' series/points frame pair. The series are clustered on
+    * the group key, with no shuffle when the input is one partition, and
+    * each group is buffered whole and put in member order (series key,
+    * then field). That suits aggregated read_group output, where a group
+    * holds one small frame pair per member series, not raw points. For
     * `AggKind.None` regrouped reads (raw series in a group), use
-    * [[toGroupedFramesStreaming]], which never buffers a group. */
+    * [[toGroupedFramesStreaming]], which never buffers a group. The
+    * server streams both shapes from the driver instead
+    * ([[groupedSeriesPlan]]). */
   def toGroupedFrames(series: Dataset[Series], measurement: String,
       groupKeys: Seq[String]): Dataset[Frame] = {
     val spark = series.sparkSession
     import spark.implicits._
     series
-      .map(s => (groupKeys.map(k => s.tags.getOrElse(k, "")),
-        s.tags.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }, s.field, s))
+      .map(s => (groupValues(groupKeys, s), s))
       .groupBy(col("_1"))
-      .as[Seq[String], (Seq[String], Seq[String], String, Series)]
-      .flatMapSortedGroups(col("_2"), col("_3")) { (gv, rows) =>
-        val tagKeys = scala.collection.mutable.SortedSet.empty[String]
-        val frames = scala.collection.mutable.ArrayBuffer.empty[Frame]
-        rows.foreach { case (_, _, _, s) =>
-          tagKeys ++= s.tags.keys
-          frames ++= seriesFramePair(s, measurement)
-        }
-        Frame("group", Map.empty, Nil, Nil, tagKeys.toSeq, gv) +: frames
-      }
+      .as[Seq[String], (Seq[String], Series)]
+      .flatMapGroups((gv, rows) => groupFrames(rows.map(_._2).toSeq, gv, measurement))
   }
 
   /** Streaming variant of [[toGroupedFrames]] for groups that may hold
@@ -392,50 +470,40 @@ object InfluxRpc {
     val spark = series.sparkSession
     import spark.implicits._
     val shuffled = series
-      .map(s => (groupKeys.map(k => s.tags.getOrElse(k, "")),
-        s.tags.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }, s.field, s))
+      .map(s => (groupValues(groupKeys, s), memberKey(s), s.field, s))
       .repartition(col("_1"))
       .as[(Seq[String], Seq[String], String, Series)]
       .rdd
     val unions: Map[Seq[String], Seq[String]] = shuffled
       .mapPartitions { it =>
         val acc = scala.collection.mutable.HashMap
-          .empty[Seq[String], scala.collection.mutable.SortedSet[String]]
+          .empty[Seq[String], scala.collection.mutable.Set[String]]
         it.foreach { case (gv, _, _, s) =>
-          acc.getOrElseUpdate(gv,
-            scala.collection.mutable.SortedSet.empty[String]) ++= s.tags.keys
+          acc.getOrElseUpdate(gv, scala.collection.mutable.Set.empty) ++= s.tags.keys
         }
-        acc.iterator.map { case (gv, ks) => (gv, ks.toSeq) }
+        acc.iterator.map { case (gv, keys) => (gv, tagKeyUnion(keys)) }
       }
       .collect().toMap
     val unionsB = spark.sparkContext.broadcast(unions)
     spark.createDataset(shuffled)
       .sortWithinPartitions(col("_1"), col("_2"), col("_3"))
-      .mapPartitions { it =>
-        var current: Seq[String] = null
-        it.flatMap { case (gv, _, _, s) =>
-          val lead =
-            if (gv == current) Nil
-            else {
-              current = gv
-              Seq(Frame("group", Map.empty, Nil, Nil,
-                unionsB.value.getOrElse(gv, Nil), gv))
-            }
-          lead ++ seriesFramePair(s, measurement)
-        }
-      }
+      .mapPartitions(it =>
+        streamedGroupFrames(it.map(_._4), groupKeys, unionsB.value, measurement))
   }
 
-  /** Sorted rows -> one Series per (tag-combination, field) — the
-    * reference's SeriesSetConverter (query/src/exec/seriesset.rs:76-140)
-    * walks sorted batches detecting contiguous tag runs; same shape here:
-    * the rows are clustered on the tag tuple and each series is walked in
-    * time order (Spark's spillable external sort — a hot series never has
-    * to fit in an in-memory sort buffer, unlike a flatMapGroups
-    * `rows.toSeq.sortBy`). Clustered on the key; no shuffle when the
-    * input is one partition, one hash shuffle on the key otherwise. Only
-    * the ONE series currently being assembled is buffered, matching the
-    * reference's streaming converter.
+  /** Sorted rows -> one Series per (tag-combination, field): the library's
+    * distributed form of the reference's SeriesSetConverter
+    * (query/src/exec/seriesset.rs:76-140), which walks sorted batches
+    * detecting contiguous tag runs. Same shape here: the rows are
+    * clustered on the tag tuple and each series is walked in time order
+    * (Spark's spillable external sort — a hot series never has to fit in
+    * an in-memory sort buffer, unlike a flatMapGroups `rows.toSeq.sortBy`).
+    * Clustered on the key; no shuffle when the input is one partition, one
+    * hash shuffle on the key otherwise. Only the ONE series currently
+    * being assembled is buffered, matching the reference's streaming
+    * converter. The server does not run it: its reads stream their
+    * already-sorted rows through the driver-side [[seriesPlan]] /
+    * [[groupedSeriesPlan]], which assemble series with the same code.
     */
   def toSeriesSet(df: DataFrame, fieldCols: Seq[String]): Dataset[Series] = {
     val spark = df.sparkSession
@@ -450,17 +518,144 @@ object InfluxRpc {
       .groupBy(col("tv"))
       .as[Seq[String], (Seq[String], Long, Seq[Double])]
       .flatMapSortedGroups(col("t")) { (key, rows) =>
-        val pts = rows.map(r => (r._2, r._3)).toVector
-        // null tags are OMITTED from the series key (seriesset.rs
-        // tag conversion), and a field that is null across the whole
-        // series produces NO series at all (influxrpc.rs: "the null
-        // field ... are not sent as series")
-        val tagsKey = tagCols.zip(key).filter(_._2 != null).toMap
-        fieldCols.zipWithIndex.flatMap { case (f, i) =>
-          val series = pts.collect {
-            case (t, vs) if !vs(i).isNaN => SeriesPoint(t, vs(i)) }
-          if (series.isEmpty) None else Some(Series(tagsKey, f, series))
-        }
+        val run = new SeriesRun(tagCols, key, fieldCols)
+        rows.foreach { case (_, t, vs) => vs.indices.foreach(i => run.add(i, t, vs(i))) }
+        run.series
       }
+  }
+
+  // ------------------------------------- series sets, driver-side stream
+
+  /** A storage read as the server runs it: the operator's sorted rows and
+    * the converter that turns them into response frames on the driver,
+    * as `toLocalIterator()` hands them over. `rows` is the plan that runs
+    * (inspect `rows.queryExecution`); [[frames]] runs it. */
+  final case class SeriesPlan(rows: DataFrame, toFrames: Iterator[Row] => Iterator[Frame]) {
+    def frames(): Iterator[Frame] = toFrames(rows.toLocalIterator().asScala)
+  }
+
+  /** The frames of a read_filter or read_window_aggregate output: rows
+    * sorted by series key (the tags), then time — the order
+    * [[readFilter]] and [[readWindowAggregate]] plan — become one series
+    * per run of equal tag values and field, each followed by its points.
+    * One series is buffered at a time. The fields are the output's
+    * non-tag columns other than `time`. No typed regroup runs in Spark:
+    * the operator's sort already clusters each series, so a second
+    * `groupBy` → `flatMapSortedGroups` (what [[toSeriesSet]] plans) would
+    * only add encoder derivation, analysis of the typed operators and a
+    * serializer per row. */
+  def seriesPlan(out: DataFrame, measurement: String): SeriesPlan = {
+    val tagCols = tags(out)
+    val fieldCols = out.columns.toSeq.filterNot(c => tagCols.contains(c) ||
+      c == NsTime.TimeColumn)
+    SeriesPlan(frameRows(out, tagCols, fieldCols.map(_ -> NsTime.TimeColumn)), it =>
+      seriesRuns(it, tagCols, fieldCols).flatMap(seriesFramePair(_, measurement)))
+  }
+
+  /** The frames of a [[readGroup]] output with `groupKeys` and `agg`:
+    * each group's `group` frame ahead of its members, members in series
+    * key then field order, as [[toGroupedFrames]] emits them.
+    *  - sum, count, mean: the rows arrive ordered by the grouping, one
+    *    row per series. One group is buffered (its one-point members),
+    *    its tag-key union taken and its members sorted.
+    *  - first, last, min, max (selectors): the same, with field `f`'s
+    *    point at its own `time_f`.
+    *  - none (raw rows regrouped): no group is buffered, since a group
+    *    holds raw points. One untyped aggregate collects each group's
+    *    tag-key union (one row per group) here, while planning; the rows
+    *    then stream ordered by (group keys, series key, time), one series
+    *    buffered at a time, and each group frame goes out ahead of its
+    *    first member.
+    * The fields are the output's, not the table's: a `_field`
+    * restriction projects fewer of them. */
+  def groupedSeriesPlan(out: DataFrame, measurement: String,
+      groupKeys: Seq[String], agg: AggKind): SeriesPlan = {
+    val tagCols = tags(out)
+    val rest = out.columns.toSeq.filterNot(tagCols.contains)
+    agg match {
+      case AggKind.None =>
+        val fieldCols = rest.filterNot(_ == NsTime.TimeColumn).sorted(sparkStringOrder)
+        val rows = frameRows(
+          out.orderBy(groupKeys.map(col) :+ memberKeyColumn(tagCols) :+ time: _*),
+          tagCols, fieldCols.map(_ -> NsTime.TimeColumn))
+        val unions = groupTagKeyUnions(out, tagCols, fieldCols, groupKeys)
+        SeriesPlan(rows, it =>
+          streamedGroupFrames(seriesRuns(it, tagCols, fieldCols), groupKeys, unions, measurement))
+      case _ =>
+        val fields =
+          if (isSelector(agg)) rest.collect {
+            case f if rest.contains(s"${NsTime.TimeColumn}_$f") => f -> s"${NsTime.TimeColumn}_$f"
+          }
+          else rest.filterNot(_ == NsTime.TimeColumn).map(_ -> NsTime.TimeColumn)
+        SeriesPlan(frameRows(out, tagCols, fields), it =>
+          bufferedGroupFrames(seriesRuns(it, tagCols, fields.map(_._1)), groupKeys, measurement))
+    }
+  }
+
+  /** The final projection the driver reads: the tags as strings, each
+    * field as a double (the cast [[toSeriesSet]] applies, so values match
+    * it bit for bit), then each field's time column, in `fields` order. */
+  private def frameRows(out: DataFrame, tagCols: Seq[String],
+      fields: Seq[(String, String)]): DataFrame =
+    out.select(tagCols.map(t => col(t).cast("string").as(t)) ++
+      fields.map { case (f, _) => col(f).cast("double").as(f) } ++
+      fields.map { case (_, t) => col(t) }: _*)
+
+  /** Rows in [[frameRows]] layout, sorted by series key and then time, to
+    * series: one run of equal tag values buffered at a time. */
+  private def seriesRuns(rows: Iterator[Row], tagCols: Seq[String],
+      fieldCols: Seq[String]): Iterator[Series] = {
+    val in = rows.buffered
+    val (nTags, nFields) = (tagCols.size, fieldCols.size)
+    def key(r: Row): Seq[String] = (0 until nTags).map(r.getString)
+    Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap { _ =>
+      val k = key(in.head)
+      val run = new SeriesRun(tagCols, k, fieldCols)
+      while (in.hasNext && key(in.head) == k) {
+        val r = in.next()
+        for (i <- 0 until nFields if !r.isNullAt(nTags + i))
+          run.add(i, r.getLong(nTags + nFields + i), r.getDouble(nTags + i))
+      }
+      run.series
+    }
+  }
+
+  /** Series in group order to frames, one whole group buffered at a time
+    * (aggregated read_group output: one small member per series). */
+  private def bufferedGroupFrames(series: Iterator[Series], groupKeys: Seq[String],
+      measurement: String): Iterator[Frame] = {
+    val in = series.buffered
+    Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap { _ =>
+      val gv = groupValues(groupKeys, in.head)
+      val members = Vector.newBuilder[Series]
+      while (in.hasNext && groupValues(groupKeys, in.head) == gv) members += in.next()
+      groupFrames(members.result(), gv, measurement)
+    }
+  }
+
+  /** [[memberKey]] as a column: the non-null tags as sorted `k=v` strings. */
+  private def memberKeyColumn(tagCols: Seq[String]): Column =
+    array_compact(array(tagCols.sorted.map(t =>
+      when(col(t).isNotNull, concat(lit(s"$t="), col(t).cast("string")))): _*))
+
+  /** Each group's tag-key union, from one aggregate with one row per
+    * group: the tags that are non-null on some row that has a point (a
+    * field neither null nor NaN), i.e. on some member series. */
+  private def groupTagKeyUnions(out: DataFrame, tagCols: Seq[String],
+      fieldCols: Seq[String], groupKeys: Seq[String]): Map[Seq[String], Seq[String]] = {
+    if (tagCols.isEmpty) return Map.empty // no tags, no group keys: no union
+    val hasPoint = fieldCols.map(f => col(f).cast("double"))
+      .map(v => v.isNotNull && !isnan(v)).reduceOption(_ || _).getOrElse(lit(false))
+    val present = tagCols.map(t => count(when(col(t).isNotNull && hasPoint, lit(1))).as(t))
+    val n = groupKeys.size
+    out.groupBy(groupKeys.map(col): _*)
+      .agg(present.head, present.tail: _*)
+      .collect().toSeq
+      .map { r =>
+        val gv = (0 until n).map(i => Option(r.getString(i)).getOrElse(""))
+        gv -> tagCols.indices.collect { case i if r.getLong(n + i) > 0 => tagCols(i) }
+      }
+      .groupMapReduce(_._1)(_._2)(_ ++ _)
+      .map { case (gv, ks) => gv -> tagKeyUnion(ks) }
   }
 }

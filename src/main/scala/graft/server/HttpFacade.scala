@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.core.IoxSchema
-import graft.operators.Upsert
+import graft.operators.{InfluxRpc, Upsert}
 import graft.sources.LineProtocol
 
 /** The reference's HTTP front door, re-expressed over the Spark engine
@@ -1399,25 +1399,22 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         // synchronizes on — a slow metadata scan must not stall queries
         planReadFilter(db, table, pred) match {
           case None => respondJsonError(ex, 404, s"no table $table in database $db")
-          case Some(frames) => streamFrames(ex, frames)
+          case Some(plan) => streamFrames(ex, plan)
         }
     }
   }
 
   /** Transport-neutral read_filter planning core — shared by the HTTP
     * bridge above and the gRPC service ([[StorageGrpc]]): the table's
-    * series frames, or None when `db` has no such table. */
+    * rows sorted by series key and time, with the driver-side converter
+    * that streams them out as series frames one series at a time
+    * ([[InfluxRpc.seriesPlan]]); None when `db` has no such table. The
+    * sort is the only regroup: no typed series-set pipeline runs in
+    * Spark. */
   private[server] def planReadFilter(db: String, table: String,
-      pred: graft.core.RpcPredicate)
-      : Option[org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]] = {
-    import graft.operators.InfluxRpc
-    measurementView(db, table).map { df =>
-      InfluxRpc.toFrames(
-        InfluxRpc.toSeriesSet(InfluxRpc.readFilter(df, pred),
-          IoxSchema.fieldColumns(df.schema)),
-        table)
-    }
-  }
+      pred: graft.core.RpcPredicate): Option[InfluxRpc.SeriesPlan] =
+    measurementView(db, table).map(df =>
+      InfluxRpc.seriesPlan(InfluxRpc.readFilter(df, pred), table))
 
   // -------------------------------------- remaining storage RPC surface
   // (service.rs:218-782) with HTTP carrying the tonic payloads: request
@@ -1484,6 +1481,17 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * *AcrossTables metadata ops. */
   private[server] def dbTables(db: String): Map[String, DataFrame] =
     measurements(db).flatMap(m => measurementView(db, m).map(m -> _)).toMap
+
+  /** [[dbTables]] restricted to the measurements where some chunk has a
+    * column named `column`: the only ones whose views can answer a tag
+    * values read for it across measurements. A merged view's columns are
+    * the union of its chunks', so every other measurement would answer
+    * nothing — after building its view, snapshot fold included. */
+  private[server] def tablesWithColumn(db: String, column: String): Map[String, DataFrame] =
+    databases.get(db).toSeq
+      .flatMap(_.collect { case (m, df) if df.columns.contains(column) => m })
+      .distinct
+      .flatMap(m => measurementView(db, m).map(m -> _)).toMap
 
   /** Write entry point: shard-routes when the database's rules carry a
     * ShardConfig with specific (table-regex) targets whose shard ids
@@ -1606,15 +1614,13 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     os.write(bytes); os.close()
   }
 
-  /** Stream encoded frames as concatenated single-frame ReadResponse
+  /** Stream a read's frames as concatenated single-frame ReadResponse
     * messages (valid as one message by proto repeated-field concat). */
-  private def streamFrames(ex: HttpExchange,
-      frames: org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]): Unit = {
-    import scala.jdk.CollectionConverters._
+  private def streamFrames(ex: HttpExchange, plan: InfluxRpc.SeriesPlan): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
     ex.sendResponseHeaders(200, 0) // chunked
     val os = ex.getResponseBody
-    try frames.toLocalIterator().asScala.foreach { f =>
+    try plan.frames().foreach { f =>
       os.write(StorageProto.readResponse(Seq(StorageProto.encodeFrame(f))))
     } finally os.close()
   }
@@ -1635,8 +1641,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * response stream interleaves one GroupFrame per distinct group-key
     * value with its member series/points pairs (data.rs:75-121). */
   private def handleReadGroup(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
-    import graft.operators.InfluxRpc.AggKind
     val raw = storageBodyBytes(ex).getOrElse(return)
     val parsed: Either[String,
         (String, String, graft.core.RpcPredicate, String, Seq[String])] =
@@ -1678,18 +1682,21 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
     planReadGroup(db, table, pred, aggName, groupKeys) match {
       case Left((status, err)) => respondJsonError(ex, status, err)
-      case Right(frames) => streamFrames(ex, frames)
+      case Right(plan) => streamFrames(ex, plan)
     }
   }
 
   /** Transport-neutral read_group planning core — shared by the HTTP
-    * bridge above and the gRPC service ([[StorageGrpc]]). */
+    * bridge above and the gRPC service ([[StorageGrpc]]): the read_group
+    * rows in group order, with the driver-side converter that streams
+    * each group frame ahead of its member series
+    * ([[InfluxRpc.groupedSeriesPlan]]). An aggregated read buffers one
+    * group of one-point members; a raw (`none`) read buffers one series
+    * and takes its group frames' tag keys from one small aggregate. No
+    * typed series-set pipeline runs in Spark. */
   private[server] def planReadGroup(db: String, table: String,
       pred: graft.core.RpcPredicate, aggName: String, groupKeys: Seq[String])
-      : Either[(Int, String),
-        org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]] = {
-    import graft.operators.InfluxRpc
-    import graft.operators.InfluxRpc.AggKind
+      : Either[(Int, String), InfluxRpc.SeriesPlan] = {
     val agg = aggKinds.get(aggName) match {
       case Some(a) => a
       case scala.None => return Left((400, s"unknown aggregate: $aggName"))
@@ -1702,41 +1709,14 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         if (bad.nonEmpty)
           Left((400,
             s"group keys must be tag columns; not tags: ${bad.mkString(", ")}"))
-        else {
-          val out = InfluxRpc.readGroup(df, pred, agg, groupKeys)
-          val fieldCols = IoxSchema.fieldColumns(df.schema)
-          val series = agg match {
-            case AggKind.None | AggKind.Sum | AggKind.Count | AggKind.Mean =>
-              // output shape is (tags..., fields..., time): direct
-              InfluxRpc.toSeriesSet(out, fieldCols)
-            case _ =>
-              // selectors emit per-field (value, time_<field>): one
-              // series per field from its own selected timestamps; a
-              // field-less table has no series at all
-              fieldCols.map { f =>
-                InfluxRpc.toSeriesSet(
-                  out.select((IoxSchema.tagColumns(out.schema).map(col) :+
-                    col(f)) :+
-                    col(s"${graft.core.NsTime.TimeColumn}_$f")
-                      .as(graft.core.NsTime.TimeColumn): _*),
-                  Seq(f))
-              }.reduceOption(_ union _).getOrElse {
-                import df.sparkSession.implicits._
-                df.sparkSession.emptyDataset[InfluxRpc.Series]
-              }
-          }
-          Right(
-            if (agg == AggKind.None)
-              InfluxRpc.toGroupedFramesStreaming(series, table, groupKeys)
-            else InfluxRpc.toGroupedFrames(series, table, groupKeys))
-        }
+        else Right(InfluxRpc.groupedSeriesPlan(
+          InfluxRpc.readGroup(df, pred, agg, groupKeys), table, groupKeys, agg))
     }
   }
 
   /** read_window_aggregate (service.rs:339): per-series time-bucketed
     * series frames; fixed ns or calendar-month widths. */
   private def handleReadWindowAggregate(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
     val raw = storageBodyBytes(ex).getOrElse(return)
     // (db, table, pred, aggName, everyNs, everyMonths, offsetNs, offsetMonths)
     val parsed: Either[String, (String, String, graft.core.RpcPredicate,
@@ -1789,7 +1769,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     planReadWindowAggregate(db, table, pred, aggName, everyNs, everyMonths,
         offsetNs, offsetMonths) match {
       case Left((status, err)) => respondJsonError(ex, status, err)
-      case Right(frames) => streamFrames(ex, frames)
+      case Right(plan) => streamFrames(ex, plan)
     }
   }
 
@@ -1823,13 +1803,15 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
 
   /** Transport-neutral read_window_aggregate planning core — shared by
-    * the HTTP bridge above and the gRPC service ([[StorageGrpc]]). */
+    * the HTTP bridge above and the gRPC service ([[StorageGrpc]]): the
+    * windowed rows sorted by series key and window, with the driver-side
+    * converter that streams them out one series at a time
+    * ([[InfluxRpc.seriesPlan]]), for nanosecond and calendar-month
+    * windows alike. No typed series-set pipeline runs in Spark. */
   private[server] def planReadWindowAggregate(db: String, table: String,
       pred: graft.core.RpcPredicate, aggName: String, everyNs: Option[Long],
       everyMonths: Option[Long], offsetNs: Long, offsetMonths: Int)
-      : Either[(Int, String),
-        org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]] = {
-    import graft.operators.InfluxRpc
+      : Either[(Int, String), InfluxRpc.SeriesPlan] = {
     val agg = aggKinds.get(aggName) match {
       case Some(InfluxRpc.AggKind.None) | scala.None =>
         return Left((400,
@@ -1853,9 +1835,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             InfluxRpc.readWindowAggregateMonths(df, pred, agg,
               months.get.toInt, offsetMonths)
         }
-        Right(InfluxRpc.toFrames(
-          InfluxRpc.toSeriesSet(out, IoxSchema.fieldColumns(df.schema)),
-          table))
+        Right(InfluxRpc.seriesPlan(out, table))
     }
   }
 
@@ -1864,7 +1844,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * (tag_keys_to_byte_vecs, data.rs:45-56). Without a table, keys merge
     * across the database's measurements. */
   private def handleTagKeys(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
     val raw = storageBodyBytes(ex).getOrElse(return)
     // (db, optional table restriction, predicate)
     val parsed: Either[String,
@@ -1921,7 +1900,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * measurement names, `ÿ`/`_field` lists field names
     * (service.rs:483-526). */
   private def handleTagValues(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
     val raw = storageBodyBytes(ex).getOrElse(return)
     // (db, optional table, tag key, predicate) — the proto tag_key bytes
     // carry the same \x00/\xff sentinels the JSON spelling writes as
@@ -1961,34 +1939,38 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       case Left(err) => respondJsonError(ex, 400, err)
       case Right((db, table, tagKey, pred)) =>
         if (!requireDb(ex, db)) return
-        val values: Option[Seq[String]] = {
-          val tables = dbTables(db)
-          tagKey match {
-            case "\u0000" | "_measurement" =>
-              Some(InfluxRpc.tableNames(tables, pred))
-            case "ÿ" | "_field" =>
-              table match {
-                case Some(t) => tables.get(t).map(df =>
-                  InfluxRpc.fieldColumns(df, pred).collect().map(_.getString(0)).toSeq)
-                case scala.None =>
-                  Some(InfluxRpc.fieldColumnsAcrossTables(tables, pred).map(_._1))
-              }
-            case k =>
-              table match {
-                case Some(t) => tables.get(t).map(df =>
-                  InfluxRpc.tagValues(df, k, pred)
-                    .collect().map(_.getString(0)).toSeq)
-                case scala.None =>
-                  Some(InfluxRpc.tagValuesAcrossTables(tables, k, pred))
-              }
-          }
-        }
-        values match {
+        planTagValues(db, table, tagKey, pred) match {
           case scala.None => respondJsonError(ex, 404, s"no such table in $db")
           case Some(vs) => respondProto(ex,
             StorageProto.stringValuesResponse(vs.map(_.getBytes(UTF_8))))
         }
     }
+  }
+
+  /** Transport-neutral tag_values core — shared by the HTTP bridge above
+    * and the gRPC service ([[StorageGrpc]]): the values of `tagKey` in
+    * `table`, or across the database without one; None when there is no
+    * such table. The sentinel keys list measurement or field names.
+    * Across measurements, only those with a `tagKey` column are read
+    * ([[tablesWithColumn]]). */
+  private[server] def planTagValues(db: String, table: Option[String], tagKey: String,
+      pred: graft.core.RpcPredicate): Option[Seq[String]] = tagKey match {
+    case "\u0000" | "_measurement" =>
+      Some(InfluxRpc.tableNames(dbTables(db), pred))
+    case "ÿ" | "_field" =>
+      table match {
+        case Some(t) => measurementView(db, t).map(df =>
+          InfluxRpc.fieldColumns(df, pred).collect().map(_.getString(0)).toSeq)
+        case scala.None =>
+          Some(InfluxRpc.fieldColumnsAcrossTables(dbTables(db), pred).map(_._1))
+      }
+    case k =>
+      table match {
+        case Some(t) => measurementView(db, t).map(df =>
+          InfluxRpc.tagValues(df, k, pred).collect().map(_.getString(0)).toSeq)
+        case scala.None =>
+          Some(InfluxRpc.tagValuesAcrossTables(tablesWithColumn(db, k), k, pred))
+      }
   }
 
   /** measurement_names (service.rs:605): StringValuesResponse of table
@@ -1999,7 +1981,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       case Some(db) =>
         if (!requireDb(ex, db)) return
         val names =
-          graft.operators.InfluxRpc.tableNames(dbTables(db), predOf(body))
+          InfluxRpc.tableNames(dbTables(db), predOf(body))
         respondProto(ex,
           StorageProto.stringValuesResponse(names.map(_.getBytes(UTF_8))))
       case _ => respondJsonError(ex, 400, """expected {"database_name": ...}""")
@@ -2010,7 +1992,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * (key, FieldType, last-timestamp) per field. Without a measurement,
     * the database-level merge (fieldlist.rs into_fieldlist). */
   private def handleMeasurementFields(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
     val body = storageBody(ex).getOrElse(return)
     jsonStrField(body, "database_name") match {
       case Some(db) =>
@@ -2038,7 +2019,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * distinct-series count. Without a table, series sum across the
     * database's measurements (series are per-table tag sets). */
   private def handleSeriesCardinality(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
     val body = storageBody(ex).getOrElse(return)
     jsonStrField(body, "database_name") match {
       case Some(db) =>

@@ -16,10 +16,11 @@ import graft.operators.InfluxRpc
   * reference storage clients put on the wire.
   *
   * The FULL service.rs route surface is wired: Capabilities, ReadFilter /
-  * ReadGroup / ReadWindowAggregate (server-streaming ReadResponse, the
-  * latter two through transport-neutral planning cores shared with the
-  * HTTP bridge), TagKeys, TagValues (incl. the `_measurement`/`_field`
-  * sentinel keys), MeasurementNames, MeasurementTagKeys,
+  * ReadGroup / ReadWindowAggregate (server-streaming ReadResponse, planned
+  * by transport-neutral cores shared with the HTTP bridge and converted
+  * to frames on the driver as the rows stream in), TagKeys, TagValues
+  * (incl. the `_measurement`/`_field` sentinel keys, also through a
+  * shared core), MeasurementNames, MeasurementTagKeys,
   * MeasurementTagValues, MeasurementFields, ReadSeriesCardinality
   * (exact; service.rs:560 declares it unimplemented), and Offsets
   * (empty response, service.rs:794).
@@ -176,7 +177,7 @@ object StorageGrpc {
                   f.planReadWindowAggregate(db, t, pred, aggName, evNs,
                       evMonths, offNs, offMonths) match {
                     case Left((_, err)) => Left(err)
-                    case Right(frames) => Right(frameStream(frames))
+                    case Right(plan) => Right(frameStream(plan))
                   }
               }
             case None =>
@@ -188,13 +189,10 @@ object StorageGrpc {
     }
   }
 
-  private def frameStream(
-      frames: org.apache.spark.sql.Dataset[InfluxRpc.Frame])
-      : Iterator[Array[Byte]] = {
-    import scala.jdk.CollectionConverters._
-    frames.toLocalIterator().asScala.map(fr =>
-      StorageProto.readResponse(Seq(StorageProto.encodeFrame(fr))))
-  }
+  /** One ReadResponse message per frame, converted on the driver as the
+    * plan's rows stream in. */
+  private def frameStream(plan: InfluxRpc.SeriesPlan): Iterator[Array[Byte]] =
+    plan.frames().map(fr => StorageProto.readResponse(Seq(StorageProto.encodeFrame(fr))))
 
   private def readGroup(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
@@ -207,7 +205,7 @@ object StorageGrpc {
             case Some(aggName) =>
               f.planReadGroup(db, t, pred, aggName, req.groupKeys) match {
                 case Left((_, err)) => Left(err)
-                case Right(frames) => Right(frameStream(frames))
+                case Right(plan) => Right(frameStream(plan))
               }
             case None => Left(s"unconvertible aggregate type enum: $code")
           }
@@ -224,7 +222,7 @@ object StorageGrpc {
       (req.databaseName, meas) match {
         case (Some(db), Some(t)) =>
           f.planReadFilter(db, t, pred) match {
-            case Some(frames) => Right(frameStream(frames))
+            case Some(plan) => Right(frameStream(plan))
             case None => Left(s"no table $t in database $db")
           }
         case (None, _) => Left("request needs read_source")
@@ -262,28 +260,7 @@ object StorageGrpc {
     StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
       (req.databaseName, req.tagKey) match {
         case (Some(db), Some(tk)) =>
-          val tables = f.dbTables(db)
-          val values: Option[Seq[String]] =
-            StorageProtoReader.renderTagKey(tk) match {
-              case "\u0000" | "_measurement" =>
-                Some(InfluxRpc.tableNames(tables, pred))
-              case "ÿ" | "_field" => meas match {
-                case Some(t) => tables.get(t).map(df =>
-                  InfluxRpc.fieldColumns(df, pred).collect()
-                    .map(_.getString(0)).toSeq)
-                case None =>
-                  Some(InfluxRpc.fieldColumnsAcrossTables(tables, pred)
-                    .map(_._1))
-              }
-              case k => meas match {
-                case Some(t) => tables.get(t).map(df =>
-                  InfluxRpc.tagValues(df, k, pred)
-                    .collect().map(_.getString(0)).toSeq)
-                case None =>
-                  Some(InfluxRpc.tagValuesAcrossTables(tables, k, pred))
-              }
-            }
-          values match {
+          f.planTagValues(db, meas, StorageProtoReader.renderTagKey(tk), pred) match {
             case Some(vs) => Right(Iterator.single(
               StorageProto.stringValuesResponse(vs.map(_.getBytes(UTF_8)))))
             case None => Left(s"no such table in $db")

@@ -234,7 +234,7 @@ object StorageProto {
   // ------------------------------------------ InfluxRpc.Frame -> bytes
 
   /** Encode one engine frame row. Series values flow through the engine
-    * as doubles (toSeriesSet coerces), so points land as
+    * as doubles (the series converters cast them), so points land as
     * FloatPointsFrame, matching the reference's float path; the series
     * frame's synthetic `_measurement`/`_field` tags are re-split into
     * the reference's explicit ordering. */

@@ -200,4 +200,140 @@ class GrpcStorageSpec extends SparkSpec {
       grpc.stop(); facade.stop()
     }
   }
+
+  // ---- a `_field` restriction: the series frames carry only that field
+
+  /** Runs `body` against a storage gRPC server whose database (the
+    * read_source 0xab/0xcd) holds `cpu` with fields usage and temp, where
+    * host=c has no usage. */
+  private def withTwoFields(body: Int => Unit): Unit = {
+    val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
+    val grpc = new GrpcServer(StorageGrpc.dispatcher(facade))
+    try {
+      assert(HttpFacade.postWrite(facade.boundPort, "00000000000000ab", "00000000000000cd",
+        "cpu,host=a usage=1.5,temp=30.0 100\ncpu,host=a usage=2.5,temp=31.0 200\n" +
+          "cpu,host=b usage=5.0,temp=20.0 100\ncpu,host=c temp=10.0 300") == 204)
+      body(grpc.boundPort)
+    } finally {
+      grpc.stop(); facade.stop()
+    }
+  }
+
+  private val cpu = cmp(R.Cmp.Equal, tagRef(measurementSentinel), litStr("cpu"))
+  private val usageOnly = predicate(msg(w => w.varintField(1, R.NodeType.Logical)
+    .bytes(2, cpu)
+    .bytes(2, cmp(R.Cmp.Equal, tagRef(Array(0xff.toByte)), litStr("usage"))) // _field
+    .varintField(11, 0))) // AND
+
+  private def readGroup(aggregate: Int, pred: Array[Byte] = usageOnly) = msg { b =>
+    b.bytes(1, readSource(0xab, 0xcd))
+    b.bytes(3, pred)
+    b.bytes(4, "host".getBytes(UTF_8))
+    b.varintField(5, 2) // Group::GROUP_BY
+    b.bytes(6, msg(a => a.varintField(1, aggregate.toLong)))
+  }
+
+  /** The `_field` tag of every series frame a read returns, in order. */
+  private def seriesFields(port: Int, rpc: String, req: Array[Byte]): Seq[String] = {
+    val (status, resp) = GrpcClient.call(port, StorageGrpc.ServicePrefix + rpc, req)
+    assert(status == 0, s"$rpc: grpc-status $status")
+    def fields(tags: R.Reader): Seq[String] = {
+      val out = Seq.newBuilder[String]
+      while (tags.hasMore) tags.key() match {
+        case (1, 2) =>
+          val tag = tags.sub()
+          var kv = Map.empty[Int, String]
+          while (tag.hasMore) tag.key() match {
+            case (n, 2) => kv += n -> tag.stringField()
+            case (_, wt) => tag.skip(wt)
+          }
+          if (kv.get(1).contains("_field")) out += kv.getOrElse(2, "")
+        case (_, wt) => tags.skip(wt)
+      }
+      out.result()
+    }
+    resp.flatMap { m =>
+      val r = new R.Reader(m)
+      val out = Seq.newBuilder[String]
+      while (r.hasMore) r.key() match {
+        case (1, 2) =>
+          val frame = r.sub()
+          frame.key() match {
+            case (1, 2) => out ++= fields(frame.sub()) // a series frame
+            case (_, wt) => frame.skip(wt)
+          }
+        case (_, wt) => r.skip(wt)
+      }
+      out.result()
+    }
+  }
+
+  test("ReadFilter with a _field restriction returns only that field's series") {
+    withTwoFields { p =>
+      val req = msg { b => b.bytes(1, readSource(0xab, 0xcd)); b.bytes(3, usageOnly) }
+      assert(seriesFields(p, "ReadFilter", req) == Seq("usage", "usage"))
+    }
+  }
+
+  test("ReadGroup with a _field restriction returns only that field's series (sum and a selector)") {
+    withTwoFields { p =>
+      assert(seriesFields(p, "ReadGroup", readGroup(1)) == Seq("usage", "usage")) // SUM
+      assert(seriesFields(p, "ReadGroup", readGroup(4)) == Seq("usage", "usage")) // MAX
+    }
+  }
+
+  test("ReadWindowAggregate with a _field restriction returns only that field's series") {
+    withTwoFields { p =>
+      val req = msg { b =>
+        b.bytes(1, readSource(0xab, 0xcd))
+        b.bytes(3, usageOnly)
+        b.varintField(4, 100L) // WindowEvery ns
+        b.bytes(5, msg(a => a.varintField(1, 1))) // Aggregate SUM
+      }
+      assert(seriesFields(p, "ReadWindowAggregate", req) == Seq("usage", "usage"))
+    }
+  }
+
+  test("ReadGroup with a selector: a series whose field is never selected has no series for it") {
+    withTwoFields { p =>
+      // host=c selects no usage, so it has only its temp series
+      assert(seriesFields(p, "ReadGroup", readGroup(4, predicate(cpu))) ==
+        Seq("temp", "usage", "temp", "usage", "temp"))
+    }
+  }
+
+  test("TagValues across measurements reads only the measurements that have the key") {
+    val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
+    val storage = StorageGrpc.dispatcher(facade)
+    try {
+      // two chunks each, so each measurement's first read builds a snapshot
+      Seq("cpu,host=a usage=1.0 100", "cpu,host=b usage=2.0 200",
+        "disk,dev=sda free=1.0 100", "disk,dev=sdb free=2.0 200").foreach { lp =>
+        assert(HttpFacade.postWrite(facade.boundPort, "00000000000000ab",
+          "00000000000000cd", lp) == 204)
+      }
+      def tagValues(key: String): Either[String, Seq[String]] =
+        storage(StorageGrpc.ServicePrefix + "TagValues", msg { b =>
+          b.bytes(1, readSource(0xab, 0xcd))
+          b.bytes(4, key.getBytes(UTF_8))
+        }).map(resp => stringValues(resp.next()))
+      def snapshotBuilds(): Long = {
+        val conn = new URI(s"http://127.0.0.1:${facade.boundPort}/metrics").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        new String(conn.getInputStream.readAllBytes(), UTF_8).split("\n")
+          .collectFirst { case l if l.startsWith("read_snapshot_builds ") =>
+            l.split(" ")(1).toLong }.get
+      }
+      val before = snapshotBuilds()
+      assert(tagValues("dev") == Right(Seq("sda", "sdb")))
+      assert(snapshotBuilds() == before + 1, "only disk has a dev column")
+      assert(tagValues("host") == Right(Seq("a", "b")))
+      assert(snapshotBuilds() == before + 2)
+      // a key no measurement has: no values, and no view read
+      assert(tagValues("rack") == Right(Nil))
+      // a key that is a field of some measurement is still an error
+      assert(tagValues("free").isLeft)
+      assert(snapshotBuilds() == before + 2)
+    } finally facade.stop()
+  }
 }

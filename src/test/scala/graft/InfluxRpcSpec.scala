@@ -128,22 +128,39 @@ class InfluxRpcSpec extends SparkSpec {
     assert(la.field == "temp" && la.points.map(_.value) == Seq(90.0))
   }
 
-  test("toSeriesSet: skewed series assemble sorted without group buffering") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{lit => flit}
-    // one hot series (host=hot, 5k points shuffled across 8 partitions)
-    // next to small ones; points must come back time-sorted and complete
+  /** One hot series (host=hot, 5k points shuffled across 8 partitions)
+    * next to a small one. */
+  private lazy val skewed: DataFrame = {
     val rows = scala.util.Random.shuffle(
       (1 to 5000).map(i => ("hot", i.toLong, i.toDouble)) ++
         (1 to 3).map(i => ("cold", i.toLong * 10, -i.toDouble)))
     val df0 = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 8)).toDF("host", "time", "v")
-    val df = spark.createDataFrame(df0.rdd, // re-tag schema as tag/time/field
+    spark.createDataFrame(df0.rdd, // re-tag schema as tag/time/field
       org.apache.spark.sql.types.StructType(Seq(
         graft.core.IoxSchema.tagged("host", org.apache.spark.sql.types.StringType, graft.core.IoxSchema.Tag),
         graft.core.IoxSchema.tagged("time", org.apache.spark.sql.types.LongType, graft.core.IoxSchema.Time),
         graft.core.IoxSchema.tagged("v", org.apache.spark.sql.types.DoubleType, graft.core.IoxSchema.Field))))
-    val series = InfluxRpc.toSeriesSet(df, Seq("v")).collect()
+  }
+
+  /** Raw regrouped rows: region=hot holds a heavily skewed raw series
+    * (4k points across two hosts) next to a tiny group. */
+  private lazy val rawRegions: DataFrame = {
+    import spark.implicits._
+    val rows = (1 to 4000).map(i => ("hot", s"h${i % 2}", i.toLong, i.toDouble)) ++
+      Seq(("cold", "h9", 1L, 9.0))
+    spark.createDataFrame(
+      rows.toDF("region", "host", "time", "v").rdd,
+      org.apache.spark.sql.types.StructType(Seq(
+        graft.core.IoxSchema.tagged("region", org.apache.spark.sql.types.StringType, graft.core.IoxSchema.Tag),
+        graft.core.IoxSchema.tagged("host", org.apache.spark.sql.types.StringType, graft.core.IoxSchema.Tag),
+        graft.core.IoxSchema.tagged("time", org.apache.spark.sql.types.LongType, graft.core.IoxSchema.Time),
+        graft.core.IoxSchema.tagged("v", org.apache.spark.sql.types.DoubleType, graft.core.IoxSchema.Field))))
+  }
+
+  test("toSeriesSet: skewed series assemble sorted without group buffering") {
+    // points must come back time-sorted and complete
+    val series = InfluxRpc.toSeriesSet(skewed, Seq("v")).collect()
     assert(series.length == 2)
     val hot = series.find(_.tags.get("host").contains("hot")).get
     assert(hot.points.length == 5000)
@@ -210,23 +227,10 @@ class InfluxRpcSpec extends SparkSpec {
   }
 
   test("toGroupedFramesStreaming: None-agg raw groups, skewed, identical frames") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{lit => flit}
-    // a None-agg grouped read = raw series regrouped: make one group
-    // (region=hot) hold a heavily skewed raw series (4k points across two
-    // hosts) next to a tiny group — the shape that must NOT buffer per
-    // group on the streaming path
-    val rows = (1 to 4000).map(i => ("hot", s"h${i % 2}", i.toLong, i.toDouble)) ++
-      Seq(("cold", "h9", 1L, 9.0))
-    val df = spark.createDataFrame(
-      rows.toDF("region", "host", "time", "v").rdd,
-      org.apache.spark.sql.types.StructType(Seq(
-        graft.core.IoxSchema.tagged("region", org.apache.spark.sql.types.StringType, graft.core.IoxSchema.Tag),
-        graft.core.IoxSchema.tagged("host", org.apache.spark.sql.types.StringType, graft.core.IoxSchema.Tag),
-        graft.core.IoxSchema.tagged("time", org.apache.spark.sql.types.LongType, graft.core.IoxSchema.Time),
-        graft.core.IoxSchema.tagged("v", org.apache.spark.sql.types.DoubleType, graft.core.IoxSchema.Field))))
+    // a None-agg grouped read = raw series regrouped: the skewed group is
+    // the shape that must NOT buffer per group on the streaming path.
     // AggKind.None regroup: raw rows, group-key column prefix
-    val raw = InfluxRpc.readGroup(df, RpcPredicate(), InfluxRpc.AggKind.None,
+    val raw = InfluxRpc.readGroup(rawRegions, RpcPredicate(), InfluxRpc.AggKind.None,
       groupCols = Seq("region"))
     val series = InfluxRpc.toSeriesSet(raw, Seq("v"))
 
@@ -303,5 +307,122 @@ class InfluxRpcSpec extends SparkSpec {
       InfluxRpc.validateRpcExpr(col("state").isNull))
     assertThrows[IllegalArgumentException](
       InfluxRpc.validateRpcExpr(col("temp") % 2 === 0))
+  }
+
+  // ------------------------------------------------------------------
+  // The driver-side stream (SeriesPlan) against the distributed form: on
+  // one-partition input both emit the same frames in the same order.
+
+  private object plans extends AdaptiveSparkPlanHelper
+
+  /** `stream`'s frames equal `dataset`'s, in order, and `stream` plans no
+    * typed operator (no object serializer: the rows go out untyped). */
+  private def assertSameFrames(stream: InfluxRpc.SeriesPlan,
+      dataset: Dataset[InfluxRpc.Frame]): Seq[InfluxRpc.Frame] = {
+    val got = stream.frames().toSeq
+    val want = dataset.collect().toSeq
+    assert(got.nonEmpty)
+    assert(got == want)
+    val plan = stream.rows.queryExecution.executedPlan
+    assert(plans.collect(plan) {
+      case o: org.apache.spark.sql.execution.SerializeFromObjectExec => o }.isEmpty, plan)
+    got
+  }
+
+  /** The library's typed read_group pipeline: selectors give one series
+    * per field at that field's own `time_<field>`, over the rows where the
+    * field was selected (a null `time_<field>` cannot decode as a point). */
+  private def datasetGroupFrames(out: DataFrame, fields: Seq[String], agg: AggKind,
+      groupKeys: Seq[String]): Dataset[InfluxRpc.Frame] = agg match {
+    case AggKind.None => InfluxRpc.toGroupedFramesStreaming(
+      InfluxRpc.toSeriesSet(out, fields), "m", groupKeys)
+    case AggKind.Sum | AggKind.Count | AggKind.Mean => InfluxRpc.toGroupedFrames(
+      InfluxRpc.toSeriesSet(out, fields), "m", groupKeys)
+    case _ => InfluxRpc.toGroupedFrames(
+      fields.map { f =>
+        val ts = graft.core.IoxSchema.tagColumns(out.schema)
+        InfluxRpc.toSeriesSet(
+          out.where(col(f).isNotNull)
+            .select(ts.map(col) :+ col(f) :+ col(s"time_$f").as("time"): _*), Seq(f))
+      }.reduce(_ union _), "m", groupKeys)
+  }
+
+  test("series stream = Dataset converters: read_filter and window aggregates over the null-city h2o") {
+    val one = h2o.coalesce(1)
+    val fields = graft.core.IoxSchema.fieldColumns(h2o.schema) // the table's order
+    val filtered = InfluxRpc.readFilter(one, RpcPredicate())
+    val frames = assertSameFrames(InfluxRpc.seriesPlan(filtered, "m"),
+      InfluxRpc.toFrames(InfluxRpc.toSeriesSet(filtered, fields), "m"))
+    // 4 series keys; humid only on SF; the null city left out of its key
+    assert(frames.count(_.frameType == "series") == 5)
+    assert(frames.exists(f => f.frameType == "series" && f.tags.get("state").contains("MA") &&
+      !f.tags.contains("city")))
+    Seq(AggKind.Sum, AggKind.Count, AggKind.Mean, AggKind.First, AggKind.Max).foreach { agg =>
+      val out = InfluxRpc.readWindowAggregate(one, RpcPredicate(), agg, everyNs = 100L)
+      assertSameFrames(InfluxRpc.seriesPlan(out, "m"),
+        InfluxRpc.toFrames(InfluxRpc.toSeriesSet(out, fields), "m"))
+    }
+    // a field restriction: only the restricted field's series
+    val humid = InfluxRpc.readFilter(one, RpcPredicate().withFields("humid"))
+    val humidFrames = assertSameFrames(InfluxRpc.seriesPlan(humid, "m"),
+      InfluxRpc.toFrames(InfluxRpc.toSeriesSet(humid, Seq("humid")), "m"))
+    assert(humidFrames.collect { case f if f.frameType == "series" => f.tags("_field") } ==
+      Seq("humid"))
+  }
+
+  test("series stream = Dataset converters: the 5 000-point skewed series over 8 partitions") {
+    val want = InfluxRpc.toFrames(
+      InfluxRpc.toSeriesSet(InfluxRpc.readFilter(skewed.coalesce(1), RpcPredicate()), Seq("v")), "m")
+    Seq(skewed, skewed.coalesce(1)).foreach { df =>
+      val frames = assertSameFrames(InfluxRpc.seriesPlan(InfluxRpc.readFilter(df, RpcPredicate()), "m"), want)
+      assert(frames.filter(_.frameType == "points").map(_.timestamps.size) == Seq(3, 5000))
+    }
+  }
+
+  test("series stream = Dataset converters: read_group aggregates, selectors and the None regroup") {
+    val sel = LineProtocol.ingest(spark, Seq(
+      "m2,host=a x=1.0,y=9.0 10",
+      "m2,host=a x=5.0,y=2.0 20",
+      "m2,host=a x=3.0,y=4.0 30",
+      "m2,host=b x=2.0 15"))("m2").coalesce(1)
+    val cases: Seq[(DataFrame, Seq[String], Seq[String], Seq[AggKind])] = Seq(
+      (h2o.coalesce(1), Seq("humid", "temp"), Seq("state"),
+        Seq(AggKind.Sum, AggKind.Count, AggKind.Mean, AggKind.First, AggKind.Last,
+          AggKind.Min, AggKind.Max, AggKind.None)),
+      // a group key that is null on one series: its group value is ""
+      (h2o.coalesce(1), Seq("humid", "temp"), Seq("city"),
+        Seq(AggKind.Sum, AggKind.Last, AggKind.None)),
+      (h2o.coalesce(1), Seq("humid", "temp"), Nil, Seq(AggKind.Count, AggKind.None)),
+      (sel, Seq("x", "y"), Seq("host"),
+        Seq(AggKind.First, AggKind.Last, AggKind.Min, AggKind.Max, AggKind.Mean)),
+      (rawRegions.coalesce(1), Seq("v"), Seq("region"), Seq(AggKind.None, AggKind.Sum)))
+    cases.foreach { case (df, fields, groupKeys, aggs) =>
+      aggs.foreach { agg =>
+        val out = InfluxRpc.readGroup(df, RpcPredicate(), agg, groupKeys)
+        val frames = assertSameFrames(InfluxRpc.groupedSeriesPlan(out, "m", groupKeys, agg),
+          datasetGroupFrames(out, fields, agg, groupKeys))
+        assert(frames.head.frameType == "group", s"$agg by $groupKeys")
+      }
+    }
+    // selectors: each field at its own selected time
+    val max = InfluxRpc.groupedSeriesPlan(
+      InfluxRpc.readGroup(sel, RpcPredicate(), AggKind.Max, Seq("host")), "m", Seq("host"),
+      AggKind.Max).frames().toSeq
+    assert(max.collect { case f if f.frameType == "points" => (f.timestamps, f.values) } ==
+      Seq((Seq(20L), Seq(5.0)), (Seq(10L), Seq(9.0)), (Seq(15L), Seq(2.0))))
+  }
+
+  test("series stream = Dataset converters: calendar-month windows") {
+    def ns(date: String) = java.time.Instant.parse(s"${date}T00:00:00Z").toEpochMilli * 1000000L
+    val months = LineProtocol.ingest(spark, Seq(
+      s"mo,host=a v=1.0 ${ns("2021-01-15")}",
+      s"mo,host=a v=2.0 ${ns("2021-02-10")}",
+      s"mo,host=a v=4.0 ${ns("2021-02-20")}",
+      s"mo,host=b v=8.0 ${ns("2021-03-05")}"))("mo").coalesce(1)
+    val out = InfluxRpc.readWindowAggregateMonths(months, RpcPredicate(), AggKind.Sum, 1)
+    val frames = assertSameFrames(InfluxRpc.seriesPlan(out, "m"),
+      InfluxRpc.toFrames(InfluxRpc.toSeriesSet(out, Seq("v")), "m"))
+    assert(frames.collect { case f if f.frameType == "points" => f.values } ==
+      Seq(Seq(1.0, 6.0), Seq(8.0)))
   }
 }

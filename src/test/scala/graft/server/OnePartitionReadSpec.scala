@@ -66,6 +66,10 @@ class OnePartitionReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Read(if (ordered) rows else rows.map(_.toString).sorted, ds)
   }
 
+  /** A storage read as the transports stream it: its frames, in order. */
+  private def run(plan: InfluxRpc.SeriesPlan): Read =
+    Read(plan.frames().toSeq, plan.rows)
+
   /** Shuffles in the executed (final adaptive) plan of a read. */
   private def shuffles(r: Read): Int =
     collect(r.plan.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
@@ -93,15 +97,15 @@ class OnePartitionReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       run(f.lockedPlan(Db, stmt).fold(fail(_), _.get._3), ordered = false)
     },
     "planReadFilter" -> { (f, m) =>
-      run(f.planReadFilter(Db, m, RpcPredicate()).get, ordered = true)
+      run(f.planReadFilter(Db, m, RpcPredicate()).get)
     },
     "planReadGroup" -> { (f, m) =>
       run(f.planReadGroup(Db, m, RpcPredicate(), "sum", Seq("region"))
-        .fold(e => fail(e._2), identity), ordered = true)
+        .fold(e => fail(e._2), identity))
     },
     "planReadWindowAggregate" -> { (f, m) =>
       run(f.planReadWindowAggregate(Db, m, RpcPredicate(), "sum", Some(100L),
-        None, 0L, 0).fold(e => fail(e._2), identity), ordered = true)
+        None, 0L, 0).fold(e => fail(e._2), identity))
     },
     "tag values" -> { (f, m) =>
       run(InfluxRpc.tagValues(f.measurementView(Db, m).get, "host",

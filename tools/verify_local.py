@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's correctness gate: run graft.Verify first
-(dumps each query's result parquet + oracle_sql.json), then this script runs
-every oracle SQL in DuckDB over the same sf tables and compares row counts,
-schemas (column names), and a canonical value hash (columns sorted by name,
-rows sorted, values stringified EXACTLY like the driver does — plain str(),
-no float canonicalization; an integer-valued float64 stringifies as "10.0"
-and will NOT match a BIGINT's "10").
+"""Local stand-in for the driver's correctness gate. It runs graft.Verify
+(which dumps each query's result parquet + oracle_sql.json into the out dir),
+then runs every oracle SQL in DuckDB over the same sf tables and compares row
+counts, schemas (column names), and a canonical value hash (columns sorted by
+name, rows sorted, values stringified EXACTLY like the driver does — plain
+str(), no float canonicalization; an integer-valued float64 stringifies as
+"10.0" and will NOT match a BIGINT's "10"). A hash mismatch also prints the
+first differing sorted row.
 
 It additionally hard-fails two oracle-typing defect classes that exact
 stringification would surface only as an opaque hash mismatch:
@@ -14,17 +15,20 @@ stringification would surface only as an opaque hash mismatch:
   * any column whose pandas dtype kind is integer on one side and float on
     the other with no NULLs present to explain the promotion.
 
-Usage: python3 tools/verify_local.py <sfDir> <verifyOutDir> [query ...]
+Usage: python3 tools/verify_local.py <sfDir> <verifyOutDir> [query ...] [--skip-verify]
        python3 tools/verify_local.py --selftest
+--skip-verify compares an out dir that graft.Verify already filled.
 """
-import sys, json, glob, os
+import sys, json, glob, os, subprocess
 import duckdb
 import pandas as pd
 import hashlib
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-def canon(df: pd.DataFrame) -> str:
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+def canon_rows(df: pd.DataFrame) -> list:
     df = df[sorted(df.columns)]
     def cell(v):
         if v is None or (isinstance(v, float) and pd.isna(v)):
@@ -32,8 +36,26 @@ def canon(df: pd.DataFrame) -> str:
         # driver-faithful: plain str(); dates read back as datetime64 vs
         # date objects, normalize midnight
         return str(v).removesuffix(" 00:00:00")
-    rows = sorted("|".join(cell(v) for v in r) for r in df.itertuples(index=False, name=None))
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
+    return sorted("|".join(cell(v) for v in r) for r in df.itertuples(index=False, name=None))
+
+def canon(df: pd.DataFrame) -> str:
+    return hashlib.md5("\n".join(canon_rows(df)).encode()).hexdigest()
+
+def first_difference(spark_df: pd.DataFrame, ora_df: pd.DataFrame) -> str:
+    for i, (g, w) in enumerate(zip(canon_rows(spark_df), canon_rows(ora_df))):
+        if g != w:
+            return f" first differing sorted row {i}: spark={g!r} oracle={w!r}"
+    return ""
+
+def run_verify(sf_dir: str, out_dir: str, only: list) -> None:
+    """Dump the Spark side: graft.Verify writes <out>/<query>/*.parquet and
+    <out>/oracle_sql.json (only the named queries, when any are named)."""
+    main = " ".join(["runMain graft.Verify", sf_dir, out_dir] + only)
+    r = subprocess.run(["sbt", "-batch", main], cwd=REPO, capture_output=True,
+                       text=True, timeout=3600)
+    if r.returncode != 0:
+        print(r.stdout[-3000:]); print(r.stderr[-3000:])
+        sys.exit(1)
 
 def type_defects(rel, spark_df: pd.DataFrame, ora_df: pd.DataFrame):
     """Flag engine-typed oracle output that hash-flips against Spark."""
@@ -82,8 +104,11 @@ def selftest():
 def main():
     if sys.argv[1:2] == ["--selftest"]:
         selftest(); return
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    args = [a for a in sys.argv[1:] if a != "--skip-verify"]
+    sf_dir, out_dir, names = args[0], args[1], args[2:]
+    if "--skip-verify" not in sys.argv[1:]:
+        run_verify(sf_dir, out_dir, names)
+    only = set(names)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -111,7 +136,8 @@ def main():
         bad += 0 if ok else 1
         print(f"{name}: {'OK' if ok else 'FAIL'} rows={len(spark_df)}/{len(ora_df)}"
               + ("" if schema else f" schema {sorted(spark_df.columns)} vs {sorted(ora_df.columns)}")
-              + ("" if h or not (rows and schema) else " HASH-MISMATCH")
+              + ("" if h or not (rows and schema) else
+                 " HASH-MISMATCH" + first_difference(spark_df, ora_df))
               + ("".join(f" TYPE[{t}]" for t in typing)))
     sys.exit(1 if bad else 0)
 
