@@ -241,7 +241,7 @@ class GoldenSqlSpec extends SparkSpec {
     // each maps to the spec+test that ports it. `sbt test` runs every
     // covering spec, so a green suite means every sql.rs case passed.
     val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/query_tests/src/sql.rs")), "UTF-8")
+      referenceFile("query_tests/src/sql.rs")), "UTF-8")
     val cases = "async fn (\\w+)".r.findAllMatchIn(src).map(_.group(1)).toSeq
     val coverage: Map[String, String] = (Seq(
       "sql_select_from_cpu" -> "GoldenSqlSpec select/projection/pred/group",

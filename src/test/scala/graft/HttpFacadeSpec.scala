@@ -8,12 +8,17 @@ import java.util.zip.GZIPOutputStream
 import graft.server.HttpFacade
 
 /** End-to-end drive of the HTTP wire facade (http.rs:364,462,595): the
-  * SURVEY §7.2 minimum slice — ingest the reference's air_and_water.lp
-  * fixture over POST /api/v2/write, query it back over the SQL endpoint —
-  * plus the protocol edges (gzip, size cap, errors, formats, dedup). */
+  * SURVEY §7.2 minimum slice — ingest the committed transcription of the
+  * reference's air_and_water.lp (test resource
+  * `lineproto/air_and_water.lp`, FIXTURES.md §1) over POST /api/v2/write,
+  * query it back over the SQL endpoint — plus the protocol edges (gzip,
+  * size cap, errors, formats, dedup). */
 class HttpFacadeSpec extends SparkSpec {
 
-  private val fixture = "/root/reference/tests/fixtures/lineproto/air_and_water.lp"
+  private def fixture: Array[Byte] = {
+    val in = getClass.getResourceAsStream("/lineproto/air_and_water.lp")
+    try in.readAllBytes() finally in.close()
+  }
 
   private def withFacade[A](f: HttpFacade => A): A = {
     val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
@@ -56,8 +61,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("minimum slice: LP fixture over HTTP write, SQL back over query endpoint") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      val (ws, _) = post(p, "/api/v2/write?org=myorg&bucket=mybucket", lp)
+      val (ws, _) = post(p, "/api/v2/write?org=myorg&bucket=mybucket", fixture)
       assert(ws == 204)
 
       val q = "SELECT state, city, location, surface_degrees, bottom_degrees, time " +
@@ -317,8 +321,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("flight do_get: ticket -> Arrow IPC stream round-trips all types (flight.rs:158)") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      assert(post(p, "/api/v2/write?org=myorg&bucket=mybucket", lp)._1 == 204)
+      assert(post(p, "/api/v2/write?org=myorg&bucket=mybucket", fixture)._1 == 204)
       // mixed types in one measurement: double, i64, bool, string + null
       val extra = ("m,tag=a f_d=1.5,f_i=7i,f_b=true,f_s=\"x\" 100\n" +
         "m,tag=b f_d=2.5,f_i=9i 200").getBytes(UTF_8)
@@ -389,8 +392,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("InfluxQL 1.x /query endpoint: raw, tag-split series, in-band errors") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      assert(post(p, "/api/v2/write?org=o&bucket=b", lp)._1 == 204)
+      assert(post(p, "/api/v2/write?org=o&bucket=b", fixture)._1 == 204)
 
       // raw select: one unnamed-tag series, ns-epoch time first
       val (s1, b1) = get(p, s"/query?db=o_b&q=${enc(
@@ -499,8 +501,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("epoch= parameter scales the 1.x time axis (s/ms/us/ns)") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      assert(post(p, "/api/v2/write?org=o&bucket=b", lp)._1 == 204)
+      assert(post(p, "/api/v2/write?org=o&bucket=b", fixture)._1 == 204)
       def first(epoch: String): String = get(p,
         s"/query?db=o_b&epoch=$epoch&q=${enc(
           "SELECT surface_degrees FROM h2o_temperature " +
@@ -519,8 +520,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("SHOW QUERIES lists in-flight requests; KILL QUERY cancels jobs") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      assert(post(p, "/api/v2/write?org=o&bucket=b", lp)._1 == 204)
+      assert(post(p, "/api/v2/write?org=o&bucket=b", fixture)._1 == 204)
 
       // SHOW QUERIES lists itself (the 1.x behavior)
       val (s1, b1) = get(p, s"/query?db=o_b&q=${enc("SHOW QUERIES")}")
@@ -562,8 +562,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("EXPLAIN [ANALYZE]: the plan-inspection statement, engine-native") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      assert(post(p, "/api/v2/write?org=o&bucket=b", lp)._1 == 204)
+      assert(post(p, "/api/v2/write?org=o&bucket=b", fixture)._1 == 204)
       val (s1, b1) = get(p, s"/query?db=o_b&q=${enc(
         "EXPLAIN SELECT mean(surface_degrees) FROM h2o_temperature GROUP BY state")}")
       assert(s1 == 200 && b1.contains(""""columns":["QUERY PLAN"]"""), b1)
@@ -581,8 +580,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("DROP SERIES and DROP MEASUREMENT: 1.x management statements") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      assert(post(p, "/api/v2/write?org=o&bucket=b", lp)._1 == 204)
+      assert(post(p, "/api/v2/write?org=o&bucket=b", fixture)._1 == 204)
 
       // DROP SERIES with a tag condition: matching series vanish across
       // ALL time, on every read path
@@ -749,8 +747,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("SELECT INTO materializes a queryable measurement; snapshot is pinned") {
     withFacade { facade =>
       val p = facade.boundPort
-      val lp = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
-      assert(post(p, "/api/v2/write?org=o&bucket=b", lp)._1 == 204)
+      assert(post(p, "/api/v2/write?org=o&bucket=b", fixture)._1 == 204)
       // write the per-state maxima into a new measurement
       val (si, bi) = get(p, s"/query?db=o_b&q=${enc(
         "SELECT max(surface_degrees) AS peak INTO sd_peaks " +

@@ -7,17 +7,22 @@ import org.apache.spark.sql.functions._
   * to the facts the reference's own tests assert (reader.rs:685-801,
   * mapper.rs:650-745): block/measurement counts, time range, org/bucket
   * ids, per-block value counts, and the cpu measurement's tag/field
-  * columns. */
+  * columns. Those files cannot be rebuilt in this repo, so each test that reads
+  * one cancels (`referenceFile`) where the reference checkout is absent. */
 class TsmSpec extends SparkSpec {
 
-  private def gunzip(path: String): Array[Byte] = {
+  private def gunzip(path: java.nio.file.Path): Array[Byte] = {
     val in = new java.util.zip.GZIPInputStream(
-      new java.io.FileInputStream(path))
+      java.nio.file.Files.newInputStream(path))
     try in.readAllBytes() finally in.close()
   }
 
+  // the guard runs before the gunzip, so a missing file cancels the test
   private lazy val fixture =
-    gunzip("/root/reference/tests/fixtures/000000000000005-000000002.tsm.gz")
+    gunzip(referenceFile("tests/fixtures/000000000000005-000000002.tsm.gz"))
+
+  private def mergeTsm(f: String): java.nio.file.Path =
+    referenceFile(s"tests/fixtures/merge-tsm/$f")
 
   test("index walk reproduces the reference reader's fixture facts") {
     assert(fixture.length == 4222248) // documented file size (reader.rs:711)
@@ -86,10 +91,9 @@ class TsmSpec extends SparkSpec {
   }
 
   test("distributed readPoints + measurement ingest over a fixture dir") {
+    val srcs = Seq("merge_a.tsm.gz", "merge_b.tsm.gz").map(f => f -> mergeTsm(f))
     val tmp = java.nio.file.Files.createTempDirectory("graft-tsm")
-    for (f <- Seq("merge_a.tsm.gz", "merge_b.tsm.gz"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(
-        s"/root/reference/tests/fixtures/merge-tsm/$f"), tmp.resolve(f))
+    for ((f, src) <- srcs) java.nio.file.Files.copy(src, tmp.resolve(f))
 
     val pts = Tsm.readPoints(spark, tmp.toString + "/*.tsm.gz")
     // the two generations interleave: both contribute cpu and disk
@@ -130,9 +134,8 @@ class TsmSpec extends SparkSpec {
     // the same file under two generation names: every (series, time,
     // field) arrives twice; the pivot's file-arrival last-write-wins
     // must collapse them to the single-file row count
+    val src = mergeTsm("merge_a.tsm.gz")
     val tmp = java.nio.file.Files.createTempDirectory("graft-tsm-shadow")
-    val src = java.nio.file.Paths.get(
-      "/root/reference/tests/fixtures/merge-tsm/merge_a.tsm.gz")
     val one = java.nio.file.Files.createTempDirectory("graft-tsm-one")
     java.nio.file.Files.copy(src, one.resolve("000000001-000000001.tsm.gz"))
     java.nio.file.Files.copy(src, tmp.resolve("000000001-000000001.tsm.gz"))
@@ -153,9 +156,8 @@ class TsmSpec extends SparkSpec {
     // <root>/13/000000001-000000001.tsm are DIFFERENT files; file
     // identity (and so the arrival rank) must key on the full path —
     // basename identity merged them (r13 advice)
+    val src = mergeTsm("merge_a.tsm.gz")
     val root = java.nio.file.Files.createTempDirectory("graft-tsm-shards")
-    val src = java.nio.file.Paths.get(
-      "/root/reference/tests/fixtures/merge-tsm/merge_a.tsm.gz")
     for (shard <- Seq("12", "13")) {
       val d = root.resolve(shard)
       java.nio.file.Files.createDirectory(d)
@@ -207,10 +209,9 @@ class TsmSpec extends SparkSpec {
     import org.apache.spark.sql.types.MetadataBuilder
     import graft.core.{IoxSchema, RpcPredicate}
     import graft.operators.InfluxRpc
+    val src = mergeTsm("merge_a.tsm.gz")
     val tmp = java.nio.file.Files.createTempDirectory("graft-tsm-rpc")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(
-      "/root/reference/tests/fixtures/merge-tsm/merge_a.tsm.gz"),
-      tmp.resolve("merge_a.tsm.gz"))
+    java.nio.file.Files.copy(src, tmp.resolve("merge_a.tsm.gz"))
     val cpu = Tsm.ingest(spark, tmp.toString + "/*.tsm.gz")("cpu")
     def meta(cat: String) = new MetadataBuilder()
       .putString(IoxSchema.CategoryKey, cat).build()
