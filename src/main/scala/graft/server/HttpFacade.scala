@@ -1903,7 +1903,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     val raw = storageBodyBytes(ex).getOrElse(return)
     // (db, optional table, tag key, predicate) — the proto tag_key bytes
     // carry the same \x00/\xff sentinels the JSON spelling writes as
-    // " "/"ÿ"; the reader renders them "_measurement"/"_field"
+    // "\u0000"/"\u00ff"; the reader renders them "_measurement"/"_field"
     val parsed: Either[String,
         (String, Option[String], String, graft.core.RpcPredicate)] =
       if (isProtoRequest(ex)) {
