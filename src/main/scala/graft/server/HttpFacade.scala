@@ -15,6 +15,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.core.IoxSchema
 import graft.operators.{InfluxRpc, Upsert}
@@ -48,7 +49,9 @@ import graft.sources.LineProtocol
   * before the shared catalog lock from a per-measurement deduplicated
   * snapshot that the first read after a write folds the new chunks into
   * (see [[measurementView]]), so a read's plan does not grow with the
-  * write count.
+  * write count. The fold is lazy and, over small one-partition data,
+  * shuffle-free: that read's single job computes it and stores its
+  * blocks, and later reads scan them.
   */
 class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     clockNs: () => Long = () => System.currentTimeMillis() * 1000000L,
@@ -210,24 +213,26 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       }.mkString("\n").getBytes(UTF_8))
   }
 
-  /** Append write-batch chunks to a db's vector; with [[dataDir]] set,
-    * write each through to parquet and advance the manifest. Every write
-    * path (HTTP LP, write_pb, gRPC WriteEntry, SELECT INTO, 1.x JSON)
-    * lands here so durability is uniform. The parquet writes run FIRST:
-    * if any fails, neither store advances, so the client's error
-    * truthfully means "nothing landed" (no half-applied write that is
-    * queryable in memory but absent after restart). */
+  /** Append write-batch chunks, as (measurement, frame, rows), to a db's
+    * vector; with [[dataDir]] set, write each through to parquet and
+    * advance the manifest. Every write path (HTTP LP, write_pb, gRPC
+    * WriteEntry, SELECT INTO, 1.x JSON) lands here so durability is
+    * uniform. The parquet writes run FIRST: if any fails, neither store
+    * advances, so the client's error truthfully means "nothing landed"
+    * (no half-applied write that is queryable in memory but absent after
+    * restart). */
   private def appendChunks(db: String,
-      frames: Seq[(String, DataFrame)]): Unit = persistLock(db).synchronized {
+      chunks: Seq[(String, DataFrame, Long)]): Unit = persistLock(db).synchronized {
     val fids = dataDir.map { _ =>
-      frames.map { case (_, df) =>
+      chunks.map { case (_, df, _) =>
         val fid = nextChunkFid.getAndIncrement()
         df.write.mode("overwrite").parquet(s"${dbDir(db)}/chunks/c$fid")
         fid
       }
     }
+    chunks.foreach { case (_, df, rows) => chunkRowCounts.put(df, rows) }
     databases.updateWith(db) { prev =>
-      Some(prev.getOrElse(Vector.empty) ++ frames.toVector)
+      Some(prev.getOrElse(Vector.empty) ++ chunks.map(c => c._1 -> c._2))
     }
     fids.foreach { ids =>
       chunkFiles.updateWith(db) { prev =>
@@ -313,38 +318,55 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     *
     * A measurement with one chunk reads that chunk. With more, the read
     * goes through a per-(db, measurement) snapshot: the deduplicated
-    * frame, materialized once with `localCheckpoint()`, so a read plans
-    * over one checkpointed scan whatever the chunk count (the role the
-    * reference's read-buffer compaction plays, data_management.md). The
-    * snapshot is keyed by the exact chunk frames it covers, compared by
-    * reference: chunk frames are immutable and appended, never replaced,
-    * so reference equality is both cheap and exact.
+    * frame behind a lazy `localCheckpoint(eager = false)`, so a read
+    * plans over one checkpointed scan whatever the chunk count (the role
+    * the reference's read-buffer compaction plays, data_management.md).
+    * The snapshot is keyed by the exact chunk frames it covers, compared
+    * by reference: chunk frames are immutable and appended, never
+    * replaced, so reference equality is both cheap and exact.
     *  - chunks == key: the snapshot is reused;
     *  - chunks extend the key: only the new chunks fold in, as
     *    `dedup(snapshot @ seq 0, new chunks @ seq 1..k)` — the same
     *    per-field last-non-null rule, so rows, column order and category
-    *    metadata equal a dedup over all chunks;
+    *    metadata equal a dedup over all chunks. A snapshot no read has
+    *    scanned yet is only a plan, so instead of folding over it the new
+    *    chunks join its own fold: at most one unscanned fold stands
+    *    between a read and checkpointed blocks;
     *  - anything else (a fresh or restarted facade): rebuild from all.
-    * Building happens lazily on the first read after a write, so a write
-    * stays a chunk append. A superseded snapshot is never unpersisted
-    * explicitly: a concurrent reader may still be scanning it, and
-    * checkpoint blocks cannot be recomputed. Dropping the map's
+    * Building happens on the first read after a write, so a write stays a
+    * chunk append, and the build itself runs no job of its own: the first
+    * read's job computes the deduplicated rows and stores the blocks, and
+    * later reads scan them. A fold that shuffles runs its map stage when
+    * it is built (AQE materializes it to size the output); only its final
+    * stage moves into the read. A superseded snapshot is never
+    * unpersisted explicitly: a concurrent reader may still be scanning
+    * it, and checkpoint blocks cannot be recomputed. Dropping the map's
     * reference lets Spark's ContextCleaner free the blocks once no plan
     * holds them.
     *
+    * The incremental fold plans with no exchange when AQE would give its
+    * output one partition anyway: every input is one partition (see
+    * [[onePartition]]) and the fold's size bound — the rows its chunks
+    * recorded at write time times the schema's row width — is under the
+    * shuffle size at which AQE would split the dedup output. Its inputs
+    * union under `coalesce(1)`, so the partial and final aggregate run in
+    * one stage. A full rebuild, a snapshot of more than one partition,
+    * and a fold past that size keep the dedup shuffle, so AQE still
+    * decides how many partitions a growing snapshot gets and a long-lived
+    * snapshot is never pinned to one.
+    *
     * A view whose data is one partition is handed to the planners as
     * one partition (`coalesce(1)`, a narrow no-op that reports
-    * `SinglePartition`): a snapshot that AQE sized to one partition, and
-    * a chunk built from one (every LP, write_pb and do_put write).
-    * Catalyst cannot see that by itself — a checkpoint taken under AQE
-    * and a frame over a parallelized RDD both report an unknown
-    * partitioning — so every aggregate, ORDER BY and series-set
-    * conversion would plan a shuffle over a few kilobytes. Marked, a read
-    * runs as one job with no exchange. Everything else plans as before:
-    * parquet chunks reloaded from [[dataDir]] and a snapshot with more
-    * than one partition. Only the view is marked, never the stored
-    * snapshot or chunk: the fold keeps its dedup shuffle, so AQE still
-    * decides how many partitions a growing snapshot gets. */
+    * `SinglePartition`): a snapshot that AQE sized to one partition or
+    * folded without an exchange, and a chunk built from one (every LP,
+    * write_pb and do_put write). Catalyst cannot see that by itself — a
+    * checkpoint taken under AQE and a frame over a parallelized RDD both
+    * report an unknown partitioning — so every aggregate, ORDER BY and
+    * series-set conversion would plan a shuffle over a few kilobytes.
+    * Marked, a read runs as one job with no exchange. Everything else
+    * plans as before: parquet chunks reloaded from [[dataDir]] and a
+    * snapshot with more than one partition. Only the view is marked,
+    * never the stored snapshot or chunk. */
   def measurementView(db: String, measurement: String): Option[DataFrame] =
     databases.get(db).flatMap { chunks =>
       val mine = chunks.collect { case (m, df) if m == measurement => df }
@@ -355,56 +377,121 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       merged.map(df => applyTombstones(db, measurement, markOnePartition(df)))
     }
 
-  /** `df` as a one-partition plan when it scans an existing RDD of one
-    * partition (a chunk or a checkpoint); otherwise `df` unchanged. */
-  private def markOnePartition(df: DataFrame): DataFrame =
+  /** Whether `df` scans an existing RDD of one partition (a chunk or a
+    * checkpoint). */
+  private def onePartition(df: DataFrame): Boolean =
     df.queryExecution.logical match {
-      case r: LogicalRDD if r.rdd.getNumPartitions == 1 => df.coalesce(1)
-      case _ => df
+      case r: LogicalRDD => r.rdd.getNumPartitions == 1
+      case _ => false
     }
 
-  /** (db, measurement) -> (chunk frames covered, deduplicated snapshot);
-    * see [[measurementView]]. DROP MEASUREMENT removes the entry. */
-  private val snapshots =
-    TrieMap.empty[(String, String), (Vector[DataFrame], DataFrame)]
+  /** `df` as a one-partition plan when [[onePartition]]; otherwise `df`
+    * unchanged. */
+  private def markOnePartition(df: DataFrame): DataFrame =
+    if (onePartition(df)) df.coalesce(1) else df
+
+  /** Rows of each in-memory chunk frame, recorded when it is appended and
+    * keyed by the frame itself (`Dataset` keeps reference equality).
+    * Parquet chunks reloaded from [[dataDir]] have no entry. Bounds a
+    * snapshot fold's size without running a job. */
+  private val chunkRowCounts = TrieMap.empty[DataFrame, Long]
+
+  /** A measurement's read snapshot (see [[measurementView]]): the chunk
+    * frames it covers, the fold that built it (`base`, the snapshot it
+    * folded over, then the `added` chunks; no base for a full rebuild),
+    * the deduplicated frame, and an upper bound on its rows when every
+    * covered chunk recorded one. */
+  private case class Snapshot(covers: Vector[DataFrame],
+      base: Option[DataFrame], added: Vector[DataFrame], frame: DataFrame,
+      rows: Option[Long])
+
+  /** (db, measurement) -> its [[Snapshot]]. DROP MEASUREMENT removes the
+    * entry. */
+  private val snapshots = TrieMap.empty[(String, String), Snapshot]
   private val snapshotBuilds = new AtomicLong
   private val snapshotReuses = new AtomicLong
+  private val snapshotLocalFolds = new AtomicLong
 
   private def snapshot(db: String, measurement: String,
       chunks: Vector[DataFrame]): DataFrame = {
-    def build(frames: Seq[DataFrame]): DataFrame = {
-      val snap = dedupChunks(frames).localCheckpoint()
+    def rowsOf(frames: Seq[DataFrame]): Option[Long] =
+      frames.foldLeft(Option(0L)) { (acc, df) =>
+        acc.flatMap(n => chunkRowCounts.get(df).map(n + _))
+      }
+    def build(base: Option[DataFrame], added: Vector[DataFrame],
+        rows: Option[Long]): DataFrame = {
+      val frame = fold(base, added, rows)
       snapshotBuilds.incrementAndGet()
-      val entry = (chunks, snap)
+      val entry = Snapshot(chunks, base, added, frame, rows)
       snapshots.put((db, measurement), entry)
       // a DROP MEASUREMENT that raced this build must not leave the
       // dropped chunks' snapshot pinned in the map
       if (!databases.get(db).exists(_.exists(_._2 eq chunks.head)))
         snapshots.remove((db, measurement), entry)
-      snap
+      frame
     }
     snapshots.get((db, measurement)) match {
-      case Some((key, snap)) if key.size <= chunks.size &&
-          key.indices.forall(i => key(i) eq chunks(i)) =>
-        if (key.size == chunks.size) {
+      case Some(s) if s.covers.size <= chunks.size &&
+          s.covers.indices.forall(i => s.covers(i) eq chunks(i)) =>
+        val more = chunks.drop(s.covers.size)
+        val rows = for (n <- s.rows; m <- rowsOf(more)) yield n + m
+        if (more.isEmpty) {
           snapshotReuses.incrementAndGet()
-          snap
-        } else build(snap +: chunks.drop(key.size))
-      case _ => build(chunks)
+          s.frame
+        } else if (checkpointed(s.frame)) build(Some(s.frame), more, rows)
+        else build(s.base, s.added ++ more, rows)
+      case _ => build(None, chunks, rowsOf(chunks))
     }
   }
 
-  /** Union `frames` by name and collapse equal (tags, time) keys, later
-    * frames winning per field (last non-null). */
-  private def dedupChunks(frames: Seq[DataFrame]): DataFrame = {
+  /** Whether a read has stored the blocks of checkpointed frame `df`. */
+  private def checkpointed(df: DataFrame): Boolean =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => true
+    }
+
+  /** Union `base` (if any) then `added` by name and collapse equal (tags,
+    * time) keys, later frames winning per field (last non-null), behind a
+    * lazy checkpoint. Exchange-free, and counted as such, when there is a
+    * base, every input is one partition and `rows` times the row width is
+    * under [[aqeSplitBytes]]; see [[measurementView]]. */
+  private def fold(base: Option[DataFrame], added: Seq[DataFrame],
+      rows: Option[Long]): DataFrame = {
+    val frames = base.toSeq ++ added
     val merged = IoxSchema.mergeUnion(frames.zipWithIndex.map {
       case (df, i) => df.withColumn("__seq", lit(i.toLong))
     })
+    // Catalyst's per-row size estimate: an 8-byte header plus each
+    // column's default size
+    val local = base.isDefined && frames.forall(onePartition) &&
+      rows.exists(_ * (8L + merged.schema.defaultSize) < aqeSplitBytes)
+    if (local) snapshotLocalFolds.incrementAndGet()
     val pk = merged.schema.fields.collect {
       case f if IoxSchema.categoryOf(f).exists(c =>
         c == IoxSchema.Tag || c == IoxSchema.Time) => f.name
     }.toSeq
-    Upsert.dedup(merged, pk, "__seq")
+    Upsert.dedup(if (local) merged.coalesce(1) else merged, pk, "__seq")
+      .localCheckpoint(eager = false)
+  }
+
+  /** The shuffle size above which AQE would split the dedup output into
+    * more than one partition; 0 when AQE does not coalesce. AQE coalesces
+    * into partitions of `max(min(total / n, advisoryPartitionSizeInBytes),
+    * minPartitionSize)` bytes, with n the `minPartitionNum`, else the
+    * default parallelism under `parallelismFirst` (the default), else 1. */
+  private def aqeSplitBytes: Long = {
+    val conf = spark.sessionState.conf
+    val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val n = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+      .getOrElse(
+        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+          spark.sparkContext.defaultParallelism
+        else 1)
+    if (!conf.adaptiveExecutionEnabled ||
+        !conf.coalesceShufflePartitionsEnabled) 0L
+    else if (n > 1) minSize
+    else math.max(minSize, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
   }
 
   /** Excludes every tombstoned region (DELETE predicates) from a read.
@@ -554,7 +641,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       tables: Vector[WriteProto.PbTableBatch], bodyBytes: Int): Unit = {
     val frames = WriteProto.toFrames(spark,
       WriteProto.PbDatabaseBatch(db, tables))
-    appendChunks(db, frames.toVector)
+    appendChunks(db, frames.zip(tables).map { case ((m, df), t) =>
+      (m, df, t.rowCount.toLong)
+    })
     ingestLines.addAndGet(tables.iterator.map(_.rowCount.toLong).sum)
     ingestFields.addAndGet(tables.iterator.flatMap { t =>
       t.columns.iterator.filter(_.semanticType == WriteProto.Semantic.Field)
@@ -1003,10 +1092,11 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           if (out.columns.contains("time")) out.select(metaCols: _*)
           else out.select(metaCols :+ lit(0L).as("time", meta(IoxSchema.Time)): _*)
         val snap = projected.localCheckpoint()
-        appendChunks(db, Seq(target -> snap))
+        val written = snap.count()
+        appendChunks(db, Seq((target, snap, written)))
         import spark.implicits._
         Right(Some(("result", Seq.empty[String],
-          Seq((0L, snap.count())).toDF("time", "written"))))
+          Seq((0L, written)).toDF("time", "written"))))
       } else {
         val df = graft.operators.InfluxQlPlanner.plan(msAll, sel,
           nowNs = Some(clockNs()))
@@ -1134,6 +1224,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
               fids.zip(chunks.map(_._1)).filterNot(_._2 == m).map(_._1)
             })
             databases.put(db, survivors.map(_._1))
+            chunks.filter(_._1 == m).foreach(c => chunkRowCounts.remove(c._2))
           }
           snapshots.remove((db, m))
           dataDir.foreach(_ => writeManifest(db))
@@ -1340,7 +1431,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             })
           val df = spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), withMeta)
-          appendChunks(db, Seq(m -> df))
+          appendChunks(db, Seq((m, df, rows.size.toLong)))
           ingestLines.addAndGet(rows.size.toLong)
           ingestFields.addAndGet(withMeta.fields.iterator
             .filter(f => IoxSchema.categoryOf(f).contains(IoxSchema.Field))
@@ -1589,7 +1680,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     try {
       val parsed = LineProtocol.parseLines(body.split("\n").iterator).toSeq
       val frames = LineProtocol.framesOf(spark, parsed, clockNs())
-      appendChunks(db, frames.toVector)
+      val rows = parsed.groupMapReduce(_.measurement)(_ => 1L)(_ + _)
+      appendChunks(db, frames.toSeq.map { case (m, df) => (m, df, rows(m)) })
       ingestLines.addAndGet(parsed.size.toLong)
       ingestFields.addAndGet(parsed.iterator.map(_.fields.size.toLong).sum)
       ingestBytes.addAndGet(bodyBytes.toLong)
@@ -2412,6 +2504,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
          |http_requests_total ${httpRequests.get}
          |read_snapshot_builds ${snapshotBuilds.get}
          |read_snapshot_reuses ${snapshotReuses.get}
+         |read_snapshot_local_folds ${snapshotLocalFolds.get}
          |""".stripMargin
     respond(ex, 200, "text/plain", body)
   }

@@ -3,7 +3,13 @@ package graft
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.core.IoxSchema
@@ -17,7 +23,7 @@ import graft.sources.LineProtocol
   * in rows, column order and category metadata, across folds, deletes,
   * drops, restarts and concurrent writes. All data is inline line
   * protocol. */
-class MeasurementSnapshotSpec extends SparkSpec {
+class MeasurementSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val Db = HttpFacade.dbName("o", "b")
 
@@ -83,6 +89,53 @@ class MeasurementSnapshotSpec extends SparkSpec {
       case Array(k, v) => k -> v.toLong
     }.toMap
     (m("read_snapshot_builds"), m("read_snapshot_reuses"))
+  }
+
+  /** read_snapshot_local_folds from /metrics. */
+  private def localFolds(f: HttpFacade): Long =
+    get(f, "/metrics").split("\n").collectFirst {
+      case l if l.startsWith("read_snapshot_local_folds ") => l.split(" ")(1).toLong
+    }.get
+
+  private val Sentinel = "graft.test.sentinel"
+
+  /** `body`'s value, and the stage count of each Spark job it started. */
+  private def jobsOf[A](body: => A): (A, Seq[Int]) = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Sentinel) != null))
+          seen.countDown()
+        else stages.add(e.stageInfos.size)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      // the listener bus delivers in order: once the start of a job run
+      // after `body` arrives, every job `body` started has been counted
+      sc.setLocalProperty(Sentinel, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(Sentinel, null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, stages.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Shuffles in the executed (final adaptive) plan of `df`. */
+  private def shuffles(df: DataFrame): Int =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+
+  /** Longest dependency chain below `rdd`. */
+  private def depth(rdd: RDD[_]): Int =
+    1 + rdd.dependencies.map(d => depth(d.rdd)).foldLeft(0)(math.max)
+
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   private def withFacade[A](f: HttpFacade => A): A = {
@@ -202,6 +255,83 @@ class MeasurementSnapshotSpec extends SparkSpec {
       errors.forEach(e => throw e)
       // each reader's last read started after the final write
       assert(seen.contains(batches.size - 1))
+    }
+  }
+
+  test("after a read, a write and the view build run no job; the next read runs one job with no exchange") {
+    withFacade { f =>
+      batches.take(2).foreach(write(f, _))
+      shape(view(f))
+      batches.indices.drop(2).foreach { i =>
+        val (builds, _) = counters(f)
+        val folds = localFolds(f)
+        val (v, buildJobs) = jobsOf { write(f, batches(i)); view(f) }
+        assert(buildJobs.isEmpty, s"write ${i + 1} and view build")
+        val (got, readJobs) = jobsOf(shape(v))
+        assert(readJobs == Seq(1), s"read after write ${i + 1}: stages per job")
+        assert(shuffles(v) == 0, v.queryExecution.executedPlan)
+        assert(got == shape(reference(chunks(batches.take(i + 1)))))
+        assert(counters(f)._1 == builds + 1 && localFolds(f) == folds + 1)
+      }
+      // the next read scans the stored blocks
+      val (again, jobs) = jobsOf(shape(view(f)))
+      assert(jobs == Seq(1) && again == shape(reference(chunks(batches))))
+    }
+  }
+
+  test("past the size at which AQE would split the dedup output, the incremental fold keeps its exchange") {
+    Seq(
+      Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"),
+      Seq("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")).foreach { conf =>
+      withFacade { f =>
+        batches.take(2).foreach(write(f, _))
+        shape(view(f))
+        val folds = localFolds(f)
+        val (v, buildJobs) = withConf(conf: _*)(jobsOf { write(f, batches(2)); view(f) })
+        // the fold's map stage runs when it is built
+        assert(buildJobs.nonEmpty, conf)
+        assert(localFolds(f) == folds, conf)
+        assert(shape(v) == shape(reference(chunks(batches.take(3)))), conf)
+      }
+    }
+  }
+
+  test("two readers racing to materialize one lazily folded snapshot read the same rows") {
+    val expected = shape(reference(chunks(batches.take(3))))
+    withFacade { f =>
+      batches.take(2).foreach(write(f, _))
+      shape(view(f))
+      write(f, batches(2))
+      view(f)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+      val readers = (1 to 2).map { _ =>
+        val t = new Thread(() => {
+          start.await()
+          results.add(try shape(view(f)) catch { case e: Throwable => e })
+        })
+        t.start(); t
+      }
+      start.countDown()
+      readers.foreach(_.join())
+      assert(results.asScala.toSeq == Seq(expected, expected))
+      assert(shape(view(f)) == expected)
+    }
+  }
+
+  test("folds no read has scanned join one fold: a read's lineage does not grow with them") {
+    withFacade { f =>
+      batches.take(2).foreach(write(f, _))
+      shape(view(f))
+      write(f, batches(2))
+      val one = depth(view(f).queryExecution.toRdd)
+      write(f, batches(3))
+      val two = depth(view(f).queryExecution.toRdd)
+      assert(two == one)
+      val (got, jobs) = jobsOf(shape(view(f)))
+      assert(jobs == Seq(1) && got == shape(reference(chunks(batches))))
     }
   }
 }
