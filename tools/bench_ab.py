@@ -11,9 +11,10 @@ Every result line and a per-metric summary (each side's median and
 quartiles, and how many pairs the change won) go to a JSON sidecar, by
 default `ab-<workload>-<seeds>.json` in the current directory; each run's
 stderr goes to `<sidecar>.log`. The printed verdict is the same-window rule:
-a metric improved only when the change wins at least nine tenths of the
-pairs (ties count for neither side) and the medians differ, in the better
-direction, by more than the parent's own q1-q3 spread. A metric with a
+a metric improved only when at least ten pairs ran, the change wins at
+least nine tenths of them (ties count for neither side) and the medians
+differ, in the better direction, by more than the parent's own q1-q3
+spread. A metric with a
 bound in BENCHMARK.json also reports whether the change's median is worse
 than the parent's by more than that bound.
 
@@ -28,6 +29,8 @@ import statistics
 import subprocess
 import sys
 import time
+
+MIN_PAIRS = 10  # fewer pairs never show a gain
 
 
 def quartiles(xs):
@@ -59,12 +62,18 @@ def summarize(pairs, better, bound=None):
         "parent": {"median": pmed, "q1": pq1, "q3": pq3},
         "change": {"median": cmed, "q1": cq1, "q3": cq3},
         "gap": gap, "parent_iqr": iqr,
-        "improved": wins * 10 >= 9 * len(pairs) and gap > iqr,
+        "improved": len(pairs) >= MIN_PAIRS and wins * 10 >= 9 * len(pairs)
+                    and gap > iqr,
     }
     if bound is not None:
         out["bound"] = bound
         out["regressed"] = -gap > bound * abs(pmed)
     return out
+
+
+def value(metric):
+    """A result metric's number: run.py prints `{"value": v, "unit": u}`."""
+    return metric["value"] if isinstance(metric, dict) else metric
 
 
 def metric_specs(checkout):
@@ -138,12 +147,15 @@ def selftest():
     # higher-is-better flips the direction
     up = summarize([(p, p + 5) for p in parent], "higher", 0.25)
     assert up["wins"] == 10 and up["gap"] == 5 and up["improved"]
+    # fewer than ten pairs never show a gain
+    assert not summarize([(p, p - 5) for p in parent[:9]], "lower")["improved"]
     assert summarize([(p, p - 5) for p in parent], "higher")["wins"] == 0
     # a change 30 % worse than the parent's median breaks a 0.25 bound
     assert summarize([(10, 13)] * 3, "lower", 0.25)["regressed"]
     assert not summarize([(10, 12)] * 3, "lower", 0.25)["regressed"]
     assert summarize([(10, 7)] * 3, "higher", 0.25)["regressed"]
     assert quartiles([3.0]) == (3.0, 3.0, 3.0)
+    assert value({"value": 1.5, "unit": "s"}) == 1.5 and value(2) == 2
     assert parse_seeds("5-7") == [5, 6, 7] and parse_seeds("4") == [4]
     assert math.isclose(quartiles([1, 2, 3, 4])[1], 2.5)
     print("bench_ab selftest ok")
@@ -192,8 +204,9 @@ def main():
     for name in names:
         better, bound = specs.get(name, ("lower", None))
         summary[name] = summarize(
-            [(by[(s, "parent")]["metrics"][name], by[(s, "change")]["metrics"][name])
-             for s in complete], better, bound)
+            [(value(by[(s, "parent")]["metrics"][name]),
+              value(by[(s, "change")]["metrics"][name])) for s in complete],
+            better, bound)
     failed = {side: [by[(s, side)].get("failed") for s in a.seeds]
               for side in ("parent", "change")}
     with open(out, "w") as fh:
