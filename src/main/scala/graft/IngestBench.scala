@@ -127,12 +127,21 @@ object IngestBench {
         col("ts_ns")).as("value"))
     }
     def corpusDir(scale: Int) = s"$scratch/lp_x$scale"
+    // what a corpus was made from: the canonical sf directory and its
+    // events row count, kept in `<corpus>.source`; a corpus made from
+    // another source (or with no record) is rebuilt
+    lazy val source = s"${new java.io.File(sfDir).getCanonicalPath} " +
+      s"events=${graft.sources.Tables.events(spark, sfDir).count()}"
 
     for (scale <- scales) {
       val dir = corpusDir(scale)
-      if (!new java.io.File(dir).exists()) {
-        println(s"[ingest-bench] materializing LP corpus x$scale -> $dir")
+      val stamp = java.nio.file.Paths.get(s"$dir.source")
+      val cached = java.nio.file.Files.exists(stamp) &&
+        new String(java.nio.file.Files.readAllBytes(stamp), "UTF-8") == source
+      if (!cached) {
+        println(s"[ingest-bench] materializing LP corpus x$scale from $source -> $dir")
         lpFrame(scale).write.mode("overwrite").text(dir)
+        java.nio.file.Files.write(stamp, source.getBytes("UTF-8"))
       }
       val ds = spark.read.textFile(dir)
       val bytes = ds.map(_.length.toLong + 1).reduce(_ + _)

@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.core.{IoxSchema, NsTime, RpcPredicate}
+import graft.core.{IoxSchema, NsTime, ResultRows, RpcPredicate}
 import graft.functions.{Selectors, WindowBounds}
 
 /** The InfluxDB "storage gRPC" operator set, re-expressed as DataFrame
@@ -111,7 +109,7 @@ object InfluxRpc {
     tables0.toSeq
       .filter { case (name, _) => pred.tables.forall(_.contains(name)) }
       .flatMap { case (_, df) =>
-        tagValues(df, tag, pred).collect().map(_.getString(0)) }
+        ResultRows.collect(tagValues(df, tag, pred)).map(_.getString(0)) }
       .distinct.sorted
 
   /** field_columns: (field name, last timestamp at which the field was
@@ -145,7 +143,7 @@ object InfluxRpc {
     tables0.toSeq
       .filter { case (name, _) => pred.tables.forall(_.contains(name)) }
       .flatMap { case (_, df) =>
-        fieldColumns(df, pred).collect()
+        ResultRows.collect(fieldColumns(df, pred))
           .map(r => (r.getString(0), r.getString(1), r.getLong(2))) }
       .groupBy(_._1).view
       .map { case (n, fs) =>
@@ -527,11 +525,17 @@ object InfluxRpc {
   // ------------------------------------- series sets, driver-side stream
 
   /** A storage read as the server runs it: the operator's sorted rows and
-    * the converter that turns them into response frames on the driver,
-    * as `toLocalIterator()` hands them over. `rows` is the plan that runs
-    * (inspect `rows.queryExecution`); [[frames]] runs it. */
+    * the converter that turns them into response frames on the driver as
+    * [[graft.core.ResultRows.stream]] hands the rows over, one partition
+    * at a time. `rows` is the plan that runs (inspect
+    * `rows.queryExecution`); [[streamFrames]] and [[frames]] run it. */
   final case class SeriesPlan(rows: DataFrame, toFrames: Iterator[Row] => Iterator[Frame]) {
-    def frames(): Iterator[Frame] = toFrames(rows.toLocalIterator().asScala)
+    /** Runs the read and hands `send` its frames as they are made. */
+    def streamFrames[T](send: Iterator[Frame] => T): T =
+      ResultRows.stream(rows)(it => send(toFrames(it)))
+
+    /** Every frame of the read, in order. */
+    def frames(): Iterator[Frame] = streamFrames(_.toVector).iterator
   }
 
   /** The frames of a read_filter or read_window_aggregate output: rows
@@ -648,9 +652,8 @@ object InfluxRpc {
       .map(v => v.isNotNull && !isnan(v)).reduceOption(_ || _).getOrElse(lit(false))
     val present = tagCols.map(t => count(when(col(t).isNotNull && hasPoint, lit(1))).as(t))
     val n = groupKeys.size
-    out.groupBy(groupKeys.map(col): _*)
-      .agg(present.head, present.tail: _*)
-      .collect().toSeq
+    ResultRows.collect(out.groupBy(groupKeys.map(col): _*)
+        .agg(present.head, present.tail: _*))
       .map { r =>
         val gv = (0 until n).map(i => Option(r.getString(i)).getOrElse(""))
         gv -> tagCols.indices.collect { case i if r.getLong(n + i) > 0 => tagCols(i) }

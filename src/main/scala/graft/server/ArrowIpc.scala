@@ -12,6 +12,8 @@ import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema =
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
+import graft.core.ResultRows
+
 /** Arrow IPC (de)serialization of query results — the data plane of the
   * reference's Arrow Flight `do_get` (src/influxdb_ioxd/rpc/flight.rs:158:
   * schema message, then one record batch per result batch, over the wire).
@@ -42,9 +44,10 @@ object ArrowIpc {
   }
 
   /** Serialize a DataFrame as an Arrow IPC stream in `batchRows` batches.
-    * Rows arrive via toLocalIterator — one partition in memory at a time,
-    * streamed as they are written (the reference TODO-notes exactly this
-    * streaming upgrade over its collect(), flight.rs:156). */
+    * Rows arrive through [[graft.core.ResultRows.stream]] — one partition
+    * in memory at a time, streamed as they are written (the reference
+    * TODO-notes exactly this streaming upgrade over its collect(),
+    * flight.rs:156). */
   def writeStream(df: DataFrame, out: OutputStream, batchRows: Int = 4096): Unit = {
     val sparkSchema = df.schema
     val schema = new ArrowSchema(sparkSchema.fields.map(arrowField).toSeq.asJava)
@@ -53,7 +56,7 @@ object ArrowIpc {
     val writer = new ArrowStreamWriter(root, null, out)
     try {
       writer.start()
-      df.toLocalIterator().asScala.grouped(batchRows).foreach { rows =>
+      ResultRows.stream(df)(_.grouped(batchRows).foreach { rows =>
         root.allocateNew()
         var i = 0
         rows.foreach { row =>
@@ -78,7 +81,7 @@ object ArrowIpc {
         }
         root.setRowCount(i)
         writer.writeBatch()
-      }
+      })
       writer.end()
     } finally {
       writer.close(); root.close(); alloc.close()

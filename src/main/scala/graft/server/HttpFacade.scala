@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
-import graft.core.IoxSchema
+import graft.core.{IoxSchema, ResultRows}
 import graft.operators.{InfluxRpc, Upsert}
 import graft.sources.LineProtocol
 
@@ -916,10 +916,11 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * schema metadata). The response is the 1.x JSON document — one series
     * object per tag set with columns/values arrays — with time rendered
     * as epoch ns (the `epoch=ns` convention; this engine's time axis is
-    * ns-precise). Rows stream through `toLocalIterator` and series split
-    * on the planner's (tags, time) ordering, so large results never
-    * collect on the facade; errors surface INSIDE the results array with
-    * HTTP 200, exactly as 1.x clients expect. */
+    * ns-precise). Rows stream through [[graft.core.ResultRows.stream]],
+    * one partition at a time, and series split on the planner's
+    * (tags, time) ordering, so large results never collect on the
+    * facade; errors surface INSIDE the results array with HTTP 200,
+    * exactly as 1.x clients expect. */
   /** Tag/time roles for a measurement view, read from the ingest schema
     * category metadata (every other column is a field). */
   private def asMeasurement(df: DataFrame): graft.operators.InfluxMeasurement = {
@@ -1327,14 +1328,13 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * planner's (tags, time) ordering. */
   private def writeSeriesArray(w: java.io.Writer, mName: String,
       tags: Seq[String], df: DataFrame, epochDiv: Long = 1L): Unit = {
-    import scala.jdk.CollectionConverters._
     val cols = df.columns.toSeq
     val tagIdx = cols.zipWithIndex.filter { case (c, _) => tags.contains(c) }
     val valIdx = cols.zipWithIndex.filterNot { case (c, _) => tags.contains(c) }
     var curTags: Seq[Any] = null
     var firstSeries = true
     var firstRow = true
-    df.toLocalIterator().asScala.foreach { r =>
+    ResultRows.stream(df)(_.foreach { r =>
       val tvals = tagIdx.map { case (_, i) => r.get(i) }
       if (curTags == null || tvals != curTags) {
         if (curTags != null) w.write("]}")
@@ -1360,7 +1360,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           case v => jsonVal(v)
         }
       }.mkString("[", ",", "]"))
-    }
+    })
     if (curTags != null) w.write("]}")
   }
 
@@ -1712,9 +1712,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
     ex.sendResponseHeaders(200, 0) // chunked
     val os = ex.getResponseBody
-    try plan.frames().foreach { f =>
+    try plan.streamFrames(_.foreach { f =>
       os.write(StorageProto.readResponse(Seq(StorageProto.encodeFrame(f))))
-    } finally os.close()
+    }) finally os.close()
   }
 
   private[server] val aggKinds: Map[String, graft.operators.InfluxRpc.AggKind] = {
@@ -2052,14 +2052,14 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     case "ÿ" | "_field" =>
       table match {
         case Some(t) => measurementView(db, t).map(df =>
-          InfluxRpc.fieldColumns(df, pred).collect().map(_.getString(0)).toSeq)
+          ResultRows.collect(InfluxRpc.fieldColumns(df, pred)).map(_.getString(0)))
         case scala.None =>
           Some(InfluxRpc.fieldColumnsAcrossTables(dbTables(db), pred).map(_._1))
       }
     case k =>
       table match {
         case Some(t) => measurementView(db, t).map(df =>
-          InfluxRpc.tagValues(df, k, pred).collect().map(_.getString(0)).toSeq)
+          ResultRows.collect(InfluxRpc.tagValues(df, k, pred)).map(_.getString(0)))
         case scala.None =>
           Some(InfluxRpc.tagValuesAcrossTables(tablesWithColumn(db, k), k, pred))
       }
@@ -2092,8 +2092,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         val fields: Option[Seq[(String, String, Long)]] =
           tableOf(body) match {
             case Some(t) => measurementView(db, t).map(df =>
-              InfluxRpc.fieldColumns(df, pred).collect()
-                .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)
+              ResultRows.collect(InfluxRpc.fieldColumns(df, pred))
+                .map(r => (r.getString(0), r.getString(1), r.getLong(2))))
             case scala.None =>
               Some(InfluxRpc.fieldColumnsAcrossTables(dbTables(db), pred))
           }
@@ -2235,8 +2235,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     val template = rulesOf(db).partitionTemplate
     databases.getOrElse(db, Vector.empty).zipWithIndex.flatMap {
       case ((m, df), i) =>
-        df.groupBy(template.keyColumn(m, df.schema).as("k"))
-          .agg(count(lit(1)).as("n")).collect()
+        ResultRows.collect(df.groupBy(template.keyColumn(m, df.schema).as("k"))
+            .agg(count(lit(1)).as("n")))
           .map(r => HttpFacade.ChunkRow(r.getString(0), m, i,
             chunkStage(db, i), r.getLong(1)))
     }.sortBy(c => (c.partitionKey, c.table, c.id))
@@ -2279,8 +2279,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private[server] def partitionKeysOf(db: String): Seq[String] = {
     val template = rulesOf(db).partitionTemplate
     databases.getOrElse(db, Vector.empty).flatMap { case (m, df) =>
-      df.select(template.keyColumn(m, df.schema).as("k"))
-        .distinct().collect().map(_.getString(0))
+      ResultRows.collect(df.select(template.keyColumn(m, df.schema).as("k"))
+        .distinct()).map(_.getString(0))
     }.distinct.sorted
   }
 
@@ -2484,8 +2484,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         val template = rulesOf(db).partitionTemplate
         val keys = measurements(db).flatMap { m =>
           measurementView(db, m).toSeq.flatMap { df =>
-            df.select(template.keyColumn(m, df.schema).as("k"))
-              .distinct().collect().map(r => (m, r.getString(0)))
+            ResultRows.collect(df.select(template.keyColumn(m, df.schema).as("k"))
+              .distinct()).map(r => (m, r.getString(0)))
           }
         }.sorted
         val body = keys.map { case (m, k) =>
@@ -2745,13 +2745,12 @@ object HttpFacade {
 
   /** Stream a result to `os` the way influxdb_iox_client/src/format.rs
     * shapes it (csv = header + escaped rows, json = array of row objects)
-    * WITHOUT collecting: `toLocalIterator` pulls one partition at a time
-    * to the driver, rows flow straight through a buffered writer, so
+    * WITHOUT collecting: [[graft.core.ResultRows.stream]] runs one job per
+    * partition and rows flow straight through a buffered writer, so
     * memory is bounded by one partition regardless of result size. Pretty
     * falls back to the eager render (global column widths need all rows —
     * it is the human/debug format). */
   def writeResult(df: DataFrame, format: String, os: java.io.OutputStream): Unit = {
-    import scala.jdk.CollectionConverters._
     val cols = df.columns.toSeq
     val w = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(os, UTF_8), 64 * 1024)
@@ -2759,19 +2758,19 @@ object HttpFacade {
       case "csv" =>
         w.write(cols.map(csvCell).mkString(","))
         w.write("\n")
-        df.toLocalIterator().asScala.foreach { r =>
+        ResultRows.stream(df)(_.foreach { r =>
           w.write(cols.indices.map(i => csvCell(cellString(r.get(i)))).mkString(","))
           w.write("\n")
-        }
+        })
       case "json" =>
         w.write("[")
         var first = true
-        df.toLocalIterator().asScala.foreach { r =>
+        ResultRows.stream(df)(_.foreach { r =>
           if (first) first = false else w.write(",")
           w.write(cols.indices.map { i =>
             s"${jsonStr(cols(i))}:${jsonVal(r.get(i))}"
           }.mkString("{", ",", "}"))
-        }
+        })
         w.write("]")
       case other => throw new IllegalArgumentException(s"unknown format: $other")
     }
@@ -2787,12 +2786,14 @@ object HttpFacade {
   val PrettyMaxRows: Int = 1000
 
   /** Fully-rendered result string. csv/json delegate to the streaming
-    * writer (one code path); pretty is the only eager format, and it is
-    * capped at [[PrettyMaxRows]] rows. */
+    * writer (one code path); pretty is the only eager format: it takes at
+    * most [[PrettyMaxRows]] + 1 rows through the same
+    * [[graft.core.ResultRows]] path and renders the first
+    * [[PrettyMaxRows]]. */
   def renderResult(df: DataFrame, format: String): String = format match {
     case "pretty" =>
       val cols = df.columns.toSeq
-      val fetched = df.limit(PrettyMaxRows + 1).collect().toSeq
+      val fetched = ResultRows.collect(df.limit(PrettyMaxRows + 1))
       val truncated = fetched.size > PrettyMaxRows
       val rows = fetched.take(PrettyMaxRows)
       val cells = rows.map(r => cols.indices.map(i => cellString(r.get(i))))

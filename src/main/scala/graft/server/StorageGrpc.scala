@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.util.control.NonFatal
 
+import graft.core.ResultRows
 import graft.operators.InfluxRpc
 
 /** The storage gRPC service over [[GrpcServer]]'s real HTTP/2 framing —
@@ -102,10 +103,10 @@ object StorageGrpc {
               val values = StorageProtoReader.renderTagKey(tk) match {
                 case "_measurement" => Seq(t)
                 case "_field" =>
-                  InfluxRpc.fieldColumns(df, pred).collect()
-                    .map(_.getString(0)).toSeq
-                case k => InfluxRpc.tagValues(df, k, pred)
-                  .collect().map(_.getString(0)).toSeq
+                  ResultRows.collect(InfluxRpc.fieldColumns(df, pred))
+                    .map(_.getString(0))
+                case k => ResultRows.collect(InfluxRpc.tagValues(df, k, pred))
+                  .map(_.getString(0))
               }
               Right(Iterator.single(StorageProto.stringValuesResponse(
                 values.map(_.getBytes(UTF_8)))))
@@ -126,10 +127,9 @@ object StorageGrpc {
         case (Some(db), Some(t)) =>
           f.measurementView(db, t) match {
             case Some(df) =>
-              val fields = InfluxRpc.fieldColumns(df, pred).collect()
+              val fields = ResultRows.collect(InfluxRpc.fieldColumns(df, pred))
                 .map(r => (r.getString(0),
                   StorageProto.fieldTypeOf(r.getString(1)), r.getLong(2)))
-                .toSeq
               Right(Iterator.single(
                 StorageProto.measurementFieldsResponse(fields)))
             case None => Left(s"no table $t in database $db")
@@ -190,9 +190,11 @@ object StorageGrpc {
   }
 
   /** One ReadResponse message per frame, converted on the driver as the
-    * plan's rows stream in. */
+    * plan's rows stream in and encoded inside the read, since the
+    * transport writes the response set after the dispatch returns. */
   private def frameStream(plan: InfluxRpc.SeriesPlan): Iterator[Array[Byte]] =
-    plan.frames().map(fr => StorageProto.readResponse(Seq(StorageProto.encodeFrame(fr))))
+    plan.streamFrames(_.map(fr =>
+      StorageProto.readResponse(Seq(StorageProto.encodeFrame(fr)))).toVector).iterator
 
   private def readGroup(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {

@@ -16,7 +16,8 @@ least nine tenths of them (ties count for neither side) and the medians
 differ, in the better direction, by more than the parent's own q1-q3
 spread. A metric with a
 bound in BENCHMARK.json also reports whether the change's median is worse
-than the parent's by more than that bound.
+than the parent's by more than that bound. Under the summary table, a
+second table gives every metric's parent/change values seed by seed.
 
 Quartiles interpolate linearly between order statistics
 (`statistics.quantiles(..., method="inclusive")`).
@@ -128,7 +129,24 @@ def report(summary, out):
                   f"{'':>4s} {s['wins']:>2d}/{s['pairs']:<2d}  {verdict}\n")
 
 
+def per_seed(values, out):
+    """`values`: metric -> [(seed, parent, change)], the same seeds in the
+    same order for every metric. One row per metric, one `parent/change`
+    cell per seed."""
+    if not values:
+        return
+    seeds = [str(s) for s, _, _ in next(iter(values.values()))]
+    cells = {name: [f"{p:.4g}/{c:.4g}" for _, p, c in rows]
+             for name, rows in values.items()}
+    width = max(len(x) for x in seeds + [c for cs in cells.values() for c in cs])
+    out.write("per seed, parent/change:\n")
+    out.write(f"{'metric':34s} " + " ".join(f"{s:>{width}s}" for s in seeds) + "\n")
+    for name, cs in cells.items():
+        out.write(f"{name:34s} " + " ".join(f"{c:>{width}s}" for c in cs) + "\n")
+
+
 def selftest():
+    import io
     # change better by 5 on every pair; parent IQR 4.5
     parent = [10, 11, 12, 13, 14, 15, 16, 17, 18, 19]
     s = summarize([(p, p - 5) for p in parent], "lower", 0.25)
@@ -158,6 +176,18 @@ def selftest():
     assert value({"value": 1.5, "unit": "s"}) == 1.5 and value(2) == 2
     assert parse_seeds("5-7") == [5, 6, 7] and parse_seeds("4") == [4]
     assert math.isclose(quartiles([1, 2, 3, 4])[1], 2.5)
+    buf = io.StringIO()
+    per_seed({"ops_per_s": [(8101, 30.72, 33.73), (8102, 29.21, 34.0)],
+              "setup_s": [(8101, 21.34, 21.25), (8102, 21.0, 21.5)]}, buf)
+    lines = buf.getvalue().splitlines()
+    assert lines[0] == "per seed, parent/change:"
+    assert lines[1].split() == ["metric", "8101", "8102"]
+    assert lines[2].split() == ["ops_per_s", "30.72/33.73", "29.21/34"]
+    assert lines[3].split() == ["setup_s", "21.34/21.25", "21/21.5"]
+    assert len({len(l) for l in lines[1:]}) == 1  # aligned columns
+    empty = io.StringIO()
+    per_seed({}, empty)
+    assert empty.getvalue() == ""
     print("bench_ab selftest ok")
 
 
@@ -200,13 +230,13 @@ def main():
     names = sorted(set.intersection(*[
         set(by[(s, side)]["metrics"]) for s in complete for side in ("parent", "change")
     ])) if complete else []
-    summary = {}
+    summary, values = {}, {}
     for name in names:
         better, bound = specs.get(name, ("lower", None))
-        summary[name] = summarize(
-            [(value(by[(s, "parent")]["metrics"][name]),
-              value(by[(s, "change")]["metrics"][name])) for s in complete],
-            better, bound)
+        values[name] = [(s, value(by[(s, "parent")]["metrics"][name]),
+                         value(by[(s, "change")]["metrics"][name])) for s in complete]
+        summary[name] = summarize([(p, c) for _, p, c in values[name]],
+                                  better, bound)
     failed = {side: [by[(s, side)].get("failed") for s in a.seeds]
               for side in ("parent", "change")}
     with open(out, "w") as fh:
@@ -217,6 +247,7 @@ def main():
     print(f"{a.workload}: {len(complete)}/{len(a.seeds)} complete pairs, "
           f"failed parent {failed['parent']} change {failed['change']}")
     report(summary, sys.stdout)
+    per_seed(values, sys.stdout)
     print(f"sidecar: {out}")
 
 
