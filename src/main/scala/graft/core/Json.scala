@@ -102,18 +102,6 @@ object Json {
         "-?\\d+".r.findAllIn(inner).map(_.toLong).toSeq
     }
 
-  /** `"key": {"a": "x"}` -> Map(a -> x); absent -> empty. Flat
-    * string-to-string objects only. */
-  def strMapField(json: String, key: String): Map[String, String] =
-    blockField(json, key, '{', '}') match {
-      case None => Map.empty
-      case Some((inner, _, _)) =>
-        val pairRe =
-          "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        pairRe.findAllMatchIn(inner)
-          .map(m => unescape(m.group(1)) -> unescape(m.group(2))).toMap
-    }
-
   def unescape(s: String): String = {
     val sb = new StringBuilder
     var i = 0

@@ -14,10 +14,11 @@ import org.apache.arrow.vector.ipc.message.MessageSerializer
   * actual `arrow.flight.protocol.FlightService` wire mapping (reference:
   * src/influxdb_ioxd/rpc/flight.rs behind tonic): the request is a
   * Flight `Ticket { bytes ticket = 1 }` carrying the same ReadInfo JSON
-  * the HTTP bridge accepts, and each response message is a `FlightData`
-  * protobuf — `data_header` (2) holding one Arrow IPC flatbuffer Message
-  * (schema, then record batches) and `data_body` (1000, Flight's
-  * historical high-tag optimization) holding that message's buffer body.
+  * the HTTP `do_get` route accepts, and each response message is a
+  * `FlightData` protobuf — `data_header` (2) holding one Arrow IPC
+  * flatbuffer Message (schema, then record batches) and `data_body`
+  * (1000, Flight's historical high-tag optimization) holding that
+  * message's buffer body.
   * A Flight client reassembles the IPC stream from exactly these frames;
   * [[flightDataToIpc]] is that client half, used by the spec to prove
   * byte-level round-tripping.
@@ -57,7 +58,7 @@ object FlightGrpc {
       case Some((db, sql)) =>
         // existence, not emptiness: a freshly created or drop-emptied
         // database is real — queries over it should plan (and fail with
-        // table-not-found where warranted), matching the HTTP bridge
+        // table-not-found where warranted), matching the HTTP do_get route
         if (!f.hasDatabase(db)) Left(s"database not found: $db")
         else
           f.planSql(db, sql).map { df =>

@@ -28,12 +28,10 @@ import io.netty.util.ReferenceCountUtil
   *
   * The dispatch function maps `:path` (e.g.
   * `/influxdata.platform.storage.Storage/ReadFilter`) + request payload
-  * to response payloads — the SAME protobuf bytes the HTTP transport
-  * bridge serves ([[StorageGrpc]] wires them). Dispatch runs on a
-  * dedicated pool (Spark jobs must not block the event loop); the
-  * response set is materialized before writing (server-streaming without
-  * backpressure wiring — the documented test-scale tradeoff; the HTTP
-  * bridge remains the streaming path).
+  * to response payloads ([[IoxGrpc]] multiplexes the services). Dispatch
+  * runs on a dedicated pool (Spark jobs must not block the event loop);
+  * the response set is materialized before writing (server-streaming
+  * without backpressure wiring — the documented test-scale tradeoff).
   */
 final class GrpcServer(
     dispatch: (String, Array[Byte]) => Either[String, Iterator[Array[Byte]]],

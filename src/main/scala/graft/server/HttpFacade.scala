@@ -530,20 +530,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         case ("POST", "/api/v1/write_pb") => handleWritePb(ex)
         case ("POST", "/api/v2/flight/do_get") => handleDoGet(ex)
         case ("POST", "/api/v2/flight/do_put") => handleDoPut(ex)
-        case ("POST", "/api/v1/storage/read_filter") => handleReadFilter(ex)
-        case ("POST", "/api/v1/storage/read_group") => handleReadGroup(ex)
-        case ("POST", "/api/v1/storage/read_window_aggregate") =>
-          handleReadWindowAggregate(ex)
-        case ("POST", "/api/v1/storage/tag_keys") |
-             ("POST", "/api/v1/storage/measurement_tag_keys") => handleTagKeys(ex)
-        case ("POST", "/api/v1/storage/tag_values") |
-             ("POST", "/api/v1/storage/measurement_tag_values") => handleTagValues(ex)
-        case ("POST", "/api/v1/storage/measurement_names") => handleMeasurementNames(ex)
-        case ("POST", "/api/v1/storage/measurement_fields") => handleMeasurementFields(ex)
-        case ("POST", "/api/v1/storage/read_series_cardinality") =>
-          handleSeriesCardinality(ex)
-        case ("GET", "/api/v1/storage/capabilities") =>
-          respondProto(ex, StorageProto.capabilitiesResponse())
         case ("GET", "/health") => respond(ex, 200, "text/plain", "OK")
         case ("GET", "/metrics") => handleMetrics(ex)
         case ("GET", "/api/v1/partitions") => handlePartitions(ex)
@@ -625,14 +611,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** The `write_pb` service (src/influxdb_ioxd/rpc/write_pb.rs, served
-    * here over the same HTTP transport bridge as the storage routes): a
-    * protobuf WriteRequest carrying a columnar DatabaseBatch. Decoded
-    * frames land in the SAME per-measurement store as line-protocol
-    * writes — the engine's counterpart of both paths funneling into one
-    * Entry (entry.rs:306 pb_to_entry). The database comes from
-    * database_name (a `?db=` param overrides, as on the storage routes).
-    */
   /** Columnar-batch ingest core shared by the HTTP `write_pb` route and
     * the gRPC `WriteEntry` flatbuffers path: frames land in the SAME
     * per-measurement store as LP writes, with the same per-write
@@ -652,6 +630,13 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     ingestBytes.addAndGet(bodyBytes.toLong)
   }
 
+  /** The `write_pb` service (src/influxdb_ioxd/rpc/write_pb.rs, served
+    * here as an HTTP route): a protobuf WriteRequest carrying a columnar
+    * DatabaseBatch. Decoded frames land in the SAME per-measurement store
+    * as line-protocol writes — the engine's counterpart of both paths
+    * funneling into one Entry (entry.rs:306 pb_to_entry). The database
+    * comes from database_name (a `?db=` param overrides).
+    */
   private def handleWritePb(ex: HttpExchange): Unit = {
     val raw = storageBodyBytes(ex).getOrElse(return)
     try {
@@ -744,10 +729,11 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   }
 
   /** Plans `sql` over `db`'s measurement views plus `extraViews` (which
-    * win on a name collision), for the SQL endpoint, the do_get bridge
-    * and Flight. The views, and any snapshot build behind them, are built
-    * BEFORE the shared temp-view catalog lock is taken; under it the
-    * views are only registered and the query analyzed. spark.sql
+    * win on a name collision), for the SQL endpoint and Flight `DoGet`
+    * (the HTTP route and the gRPC service). The views, and any snapshot
+    * build behind them, are built BEFORE the shared temp-view catalog
+    * lock is taken; under it the views are only registered and the
+    * query analyzed. spark.sql
     * analyzes eagerly, so the plan is bound to this request's views
     * before the lock releases and streaming runs outside it. Errors come
     * back as their message. */
@@ -1448,124 +1434,25 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** Storage read_filter with HTTP carrying what the tonic service puts
-    * on the wire (service.rs:212-318): the request JSON names the
-    * database + table plus an optional `[start, stop)` ns range, and the
-    * response body is ReadResponse protobuf bytes (storage_common.proto:
-    * 78-142) a storage client would decode. Frames stream out one
-    * encoded single-frame ReadResponse at a time — proto repeated-field
-    * concatenation makes the chunks one valid message, so a large series
-    * set never buffers in the facade. */
-  private def handleReadFilter(ex: HttpExchange): Unit = {
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    val parsed: Either[String, (String, String, graft.core.RpcPredicate)] =
-      if (isProtoRequest(ex)) {
-        // the wire request: ReadFilterRequest protobuf — table selection
-        // arrives as the predicate's \x00 _measurement sentinel conjunct,
-        // exactly like the reference's storage clients send it
-        try {
-          val req = StorageProtoReader.decodeReadFilter(raw)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), meas.orElse(queryParams(ex).get("table"))) match {
-              case (Some(db), Some(t)) => Right((db, t, pred))
-              case _ => Left("request needs read_source (or ?db=) and a " +
-                "_measurement predicate (or ?table=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), jsonStrField(body, "table")) match {
-          case (Some(db), Some(t)) => Right((db, t, predOf(body)))
-          case _ => Left("""expected {"database_name": ..., "table": ...}""")
-        }
-      }
-    parsed match {
-      case Left(err) => respondJsonError(ex, 400, err)
-      case Right((db, table, pred)) =>
-        // no catalog lock here (or in the handlers below): these plans
-        // build from measurementView over the concurrent chunk map and
-        // never touch the shared temp-view catalog the SQL endpoint
-        // synchronizes on — a slow metadata scan must not stall queries
-        planReadFilter(db, table, pred) match {
-          case None => respondJsonError(ex, 404, s"no table $table in database $db")
-          case Some(plan) => streamFrames(ex, plan)
-        }
-    }
-  }
-
-  /** Transport-neutral read_filter planning core — shared by the HTTP
-    * bridge above and the gRPC service ([[StorageGrpc]]): the table's
-    * rows sorted by series key and time, with the driver-side converter
-    * that streams them out as series frames one series at a time
-    * ([[InfluxRpc.seriesPlan]]); None when `db` has no such table. The
-    * sort is the only regroup: no typed series-set pipeline runs in
-    * Spark. */
+  /** read_filter planning core for the gRPC service ([[StorageGrpc]]):
+    * the table's rows sorted by series key and time, with the
+    * driver-side converter that streams them out as series frames one
+    * series at a time ([[InfluxRpc.seriesPlan]]); None when `db` has no
+    * such table. The sort is the only regroup: no typed series-set
+    * pipeline runs in Spark. */
   private[server] def planReadFilter(db: String, table: String,
       pred: graft.core.RpcPredicate): Option[InfluxRpc.SeriesPlan] =
     measurementView(db, table).map(df =>
       InfluxRpc.seriesPlan(InfluxRpc.readFilter(df, pred), table))
 
-  // -------------------------------------- remaining storage RPC surface
-  // (service.rs:218-782) with HTTP carrying the tonic payloads: request
-  // JSON in, the service's protobuf response messages out. `table` and
-  // `measurement` are accepted interchangeably (the measurement_* RPC
-  // family is the measurement-scoped spelling of the same operators);
-  // omitting both on the metadata RPCs gives the reference's
-  // database-level answer (the *AcrossTables merges).
-
-  private def storageBody(ex: HttpExchange): Option[String] =
-    storageBodyBytes(ex).map(new String(_, UTF_8))
-
-  /** Raw request bytes — protobuf-carried requests are binary and must
-    * not round-trip through a UTF-8 decode. */
+  /** Raw request bytes (a 413 response when over the cap) — protobuf
+    * bodies are binary and must not round-trip through a UTF-8 decode. */
   private def storageBodyBytes(ex: HttpExchange): Option[Array[Byte]] =
     readBody(ex.getRequestBody, gzipped = false) match {
       case Some(b) => Some(b)
       case None =>
         respondJsonError(ex, 413, s"request exceeds $MaxBodySize bytes"); None
     }
-
-  /** The storage routes accept BOTH encodings: the tonic request protobuf
-    * (Content-Type: application/x-protobuf — storage_common.proto
-    * messages, predicate Node trees and all) and the JSON spelling the
-    * facade always carried. */
-  private def isProtoRequest(ex: HttpExchange): Boolean =
-    Option(ex.getRequestHeaders.getFirst("Content-Type"))
-      .exists(_.toLowerCase.contains("protobuf"))
-
-  /** Database for a protobuf-carried request: the reference resolves it
-    * from read_source org/bucket ids (service.rs get_database_name →
-    * `{org:016x}_{bucket:016x}`); a `?db=` query param overrides for
-    * string-named databases — the HTTP-transport bridge, same disclosure
-    * as the transport itself. */
-  private def protoDb(ex: HttpExchange,
-      req: StorageProtoReader.StorageRequest): Option[String] =
-    queryParams(ex).get("db").orElse(req.databaseName)
-
-  /** Request predicate (predicate.proto / PredicateBuilder): optional
-    * `[start, stop)` range plus the request-level restrictions the
-    * reference's storage requests carry —
-    * `"tag_eq": {"host": "a", ...}` (tag = value conjuncts),
-    * `"tag_regex": {"host": "^a.*"}` (`=~`, Java-dialect),
-    * `"fields": ["usage", ...]` (field-column restriction). */
-  private def predOf(body: String): graft.core.RpcPredicate = {
-    var p = (jsonLongField(body, "start"), jsonLongField(body, "stop")) match {
-      case (Some(s), Some(e)) => graft.core.RpcPredicate().withRange(s, e)
-      case _ => graft.core.RpcPredicate()
-    }
-    for ((k, v) <- jsonStrMapField(body, "tag_eq"))
-      p = p.withExpr(col(k) === v)
-    for ((k, re) <- jsonStrMapField(body, "tag_regex"))
-      p = p.withRegexMatch(k, re)
-    val fields = jsonStrArrayField(body, "fields")
-    if (fields.nonEmpty) p = p.withFields(fields: _*)
-    p
-  }
-
-  private def tableOf(body: String): Option[String] =
-    jsonStrField(body, "table").orElse(jsonStrField(body, "measurement"))
 
   /** All measurements of `db` as a name->view map: the catalog SQL and
     * InfluxQL plan over, and the database-level operand of the
@@ -1692,8 +1579,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   }
 
   /** 404 for an unknown database, like the query endpoints — without
-    * this, database-level metadata RPCs would answer "exists and is
-    * empty" for a typo'd name. Returns false after responding. */
+    * this, a database-level route would answer "exists and is empty"
+    * for a typo'd name. Returns false after responding. */
   private def requireDb(ex: HttpExchange, db: String): Boolean =
     databases.contains(db) || {
       respondJsonError(ex, 404, s"database not found: $db"); false
@@ -1706,171 +1593,37 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     os.write(bytes); os.close()
   }
 
-  /** Stream a read's frames as concatenated single-frame ReadResponse
-    * messages (valid as one message by proto repeated-field concat). */
-  private def streamFrames(ex: HttpExchange, plan: InfluxRpc.SeriesPlan): Unit = {
-    ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-    ex.sendResponseHeaders(200, 0) // chunked
-    val os = ex.getResponseBody
-    try plan.streamFrames(_.foreach { f =>
-      os.write(StorageProto.readResponse(Seq(StorageProto.encodeFrame(f))))
-    }) finally os.close()
-  }
-
-  private[server] val aggKinds: Map[String, graft.operators.InfluxRpc.AggKind] = {
-    import graft.operators.InfluxRpc.AggKind._
-    Map("none" -> None, "sum" -> Sum, "count" -> Count, "min" -> Min,
-      "max" -> Max, "mean" -> Mean, "first" -> First, "last" -> Last)
-  }
-
-  /** Aggregate.AggregateType enum (storage_common.proto:56-66) → the
-    * facade's aggregate names. */
-  private[server] val protoAggNames: Map[Int, String] = Map(0 -> "none", 1 -> "sum",
-    2 -> "count", 3 -> "min", 4 -> "max", 5 -> "first", 6 -> "last",
-    7 -> "mean")
-
-  /** read_group (service.rs:260): group frames + member series. The
-    * response stream interleaves one GroupFrame per distinct group-key
-    * value with its member series/points pairs (data.rs:75-121). */
-  private def handleReadGroup(ex: HttpExchange): Unit = {
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    val parsed: Either[String,
-        (String, String, graft.core.RpcPredicate, String, Seq[String])] =
-      if (isProtoRequest(ex)) {
-        try {
-          val req = StorageProtoReader.decodeReadGroup(raw)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), meas.orElse(queryParams(ex).get("table"))) match {
-              case (Some(db), Some(t)) =>
-                // reject enum values outside the proto's 0-7 range like
-                // the reference's AggregateType conversion (expr.rs
-                // convert_aggregate) instead of silently degrading to raw
-                val code = req.aggregates.headOption.getOrElse(0)
-                protoAggNames.get(code) match {
-                  case Some(aggName) =>
-                    Right((db, t, pred, aggName, req.groupKeys))
-                  case scala.None =>
-                    Left(s"unconvertible aggregate type enum: $code")
-                }
-              case _ => Left("request needs read_source (or ?db=) and a " +
-                "_measurement predicate (or ?table=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), tableOf(body)) match {
-          case (Some(db), Some(t)) =>
-            Right((db, t, predOf(body),
-              jsonStrField(body, "aggregate").getOrElse("none"),
-              jsonStrArrayField(body, "group_keys")))
-          case _ => Left("""expected {"database_name": ..., "table": ...}""")
-        }
-      }
-    val (db, table, pred, aggName, groupKeys) = parsed match {
-      case Left(err) => respondJsonError(ex, 400, err); return
-      case Right(p) => p
-    }
-    planReadGroup(db, table, pred, aggName, groupKeys) match {
-      case Left((status, err)) => respondJsonError(ex, status, err)
-      case Right(plan) => streamFrames(ex, plan)
-    }
-  }
-
-  /** Transport-neutral read_group planning core — shared by the HTTP
-    * bridge above and the gRPC service ([[StorageGrpc]]): the read_group
-    * rows in group order, with the driver-side converter that streams
-    * each group frame ahead of its member series
+  /** read_group planning core for the gRPC service ([[StorageGrpc]]):
+    * the read_group rows in group order, with the driver-side converter
+    * that streams each group frame ahead of its member series
     * ([[InfluxRpc.groupedSeriesPlan]]). An aggregated read buffers one
     * group of one-point members; a raw (`none`) read buffers one series
     * and takes its group frames' tag keys from one small aggregate. No
-    * typed series-set pipeline runs in Spark. */
+    * typed series-set pipeline runs in Spark. Errors are gRPC statuses:
+    * NOT_FOUND for a missing table, INVALID_ARGUMENT for a bad request. */
   private[server] def planReadGroup(db: String, table: String,
-      pred: graft.core.RpcPredicate, aggName: String, groupKeys: Seq[String])
-      : Either[(Int, String), InfluxRpc.SeriesPlan] = {
-    val agg = aggKinds.get(aggName) match {
-      case Some(a) => a
-      case scala.None => return Left((400, s"unknown aggregate: $aggName"))
-    }
+      pred: graft.core.RpcPredicate, agg: InfluxRpc.AggKind, groupKeys: Seq[String])
+      : Either[String, InfluxRpc.SeriesPlan] =
     measurementView(db, table) match {
-      case scala.None => Left((404, s"no table $table in database $db"))
+      case scala.None => Left(noTable(db, table))
       case Some(df) =>
         val tags = IoxSchema.tagColumns(df.schema)
         val bad = groupKeys.filterNot(tags.contains)
         if (bad.nonEmpty)
-          Left((400,
-            s"group keys must be tag columns; not tags: ${bad.mkString(", ")}"))
+          Left(s"group keys must be tag columns; not tags: ${bad.mkString(", ")}")
         else Right(InfluxRpc.groupedSeriesPlan(
           InfluxRpc.readGroup(df, pred, agg, groupKeys), table, groupKeys, agg))
     }
-  }
 
-  /** read_window_aggregate (service.rs:339): per-series time-bucketed
-    * series frames; fixed ns or calendar-month widths. */
-  private def handleReadWindowAggregate(ex: HttpExchange): Unit = {
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    // (db, table, pred, aggName, everyNs, everyMonths, offsetNs, offsetMonths)
-    val parsed: Either[String, (String, String, graft.core.RpcPredicate,
-        String, Option[Long], Option[Long], Long, Int)] =
-      if (isProtoRequest(ex)) {
-        try {
-          val req = StorageProtoReader.decodeReadWindowAggregate(raw)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), meas.orElse(queryParams(ex).get("table"))) match {
-              case (Some(db), Some(t)) if req.aggregates.size != 1 =>
-                // expr.rs:553 AggregateNotSingleton: exactly one aggregate
-                Left(s"aggregate must be a singleton, got ${req.aggregates.size}")
-              case (Some(db), Some(t)) =>
-                protoAggNames.get(req.aggregates.head) match {
-                  case scala.None =>
-                    // enum outside 0-7: reject like the reference's
-                    // AggregateType conversion, not degrade to raw
-                    Left("unconvertible aggregate type enum: " +
-                      req.aggregates.head)
-                  case Some(aggName) =>
-                    resolveProtoWindow(req).map {
-                      case (evNs, evMonths, offNs, offMonths) =>
-                        (db, t, pred, aggName, evNs, evMonths, offNs, offMonths)
-                    }
-                }
-              case _ => Left("request needs read_source (or ?db=) and a " +
-                "_measurement predicate (or ?table=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), tableOf(body)) match {
-          case (Some(db), Some(t)) =>
-            Right((db, t, predOf(body),
-              jsonStrField(body, "aggregate").getOrElse(""),
-              jsonLongField(body, "window_every"),
-              jsonLongField(body, "window_every_months"),
-              jsonLongField(body, "offset").getOrElse(0L),
-              jsonLongField(body, "offset_months").getOrElse(0L).toInt))
-          case _ => Left("""expected {"database_name": ..., "table": ...}""")
-        }
-      }
-    val (db, table, pred, aggName, everyNs, everyMonths, offsetNs, offsetMonths) =
-      parsed match {
-        case Left(err) => respondJsonError(ex, 400, err); return
-        case Right(p) => p
-      }
-    planReadWindowAggregate(db, table, pred, aggName, everyNs, everyMonths,
-        offsetNs, offsetMonths) match {
-      case Left((status, err)) => respondJsonError(ex, status, err)
-      case Right(plan) => streamFrames(ex, plan)
-    }
-  }
+  /** The NOT_FOUND status of a read whose table `db` does not have. */
+  private[server] def noTable(db: String, table: String): String =
+    GrpcServer.statusError(5, s"no table $table in database $db")
 
   /** expr.rs:568-570: nonzero flat WindowEvery/Offset WIN and the
     * `window` message is ignored; the message applies only when both
     * flat fields are zero. The reference's convert_duration also rejects
     * a Duration carrying BOTH nonzero months and nsecs — mixed units
-    * have no single window unit. Shared by the HTTP proto branch and
-    * the gRPC service. */
+    * have no single window unit. */
   private[server] def resolveProtoWindow(req: StorageProtoReader.StorageRequest)
       : Either[String, (Option[Long], Option[Long], Long, Int)] =
     (req.window, req.windowEveryNs, req.offsetNs) match {
@@ -1894,31 +1647,27 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         Right((Some(req.windowEveryNs), scala.None, req.offsetNs, 0))
     }
 
-  /** Transport-neutral read_window_aggregate planning core — shared by
-    * the HTTP bridge above and the gRPC service ([[StorageGrpc]]): the
-    * windowed rows sorted by series key and window, with the driver-side
-    * converter that streams them out one series at a time
-    * ([[InfluxRpc.seriesPlan]]), for nanosecond and calendar-month
-    * windows alike. No typed series-set pipeline runs in Spark. */
+  /** read_window_aggregate planning core for the gRPC service
+    * ([[StorageGrpc]]): the windowed rows sorted by series key and
+    * window, with the driver-side converter that streams them out one
+    * series at a time ([[InfluxRpc.seriesPlan]]), for nanosecond and
+    * calendar-month windows alike. No typed series-set pipeline runs in
+    * Spark. Errors are gRPC statuses, as in [[planReadGroup]]. */
   private[server] def planReadWindowAggregate(db: String, table: String,
-      pred: graft.core.RpcPredicate, aggName: String, everyNs: Option[Long],
+      pred: graft.core.RpcPredicate, agg: InfluxRpc.AggKind, everyNs: Option[Long],
       everyMonths: Option[Long], offsetNs: Long, offsetMonths: Int)
-      : Either[(Int, String), InfluxRpc.SeriesPlan] = {
-    val agg = aggKinds.get(aggName) match {
-      case Some(InfluxRpc.AggKind.None) | scala.None =>
-        return Left((400,
-          s"window aggregate requires an aggregate, got '$aggName'"))
-      case Some(a) => a
-    }
+      : Either[String, InfluxRpc.SeriesPlan] = {
+    if (agg == InfluxRpc.AggKind.None)
+      return Left("window aggregate requires an aggregate, got none")
     val everyDefined = everyNs.exists(_ != 0L) || everyMonths.isDefined
     if (!everyDefined)
-      return Left((400, "window_every (ns) or window_every_months required"))
+      return Left("window every (ns) or every (months) required")
     if (everyNs.exists(_ < 0L) ||
         everyMonths.exists(m => m <= 0L || m > Int.MaxValue))
-      return Left((400, "window width must be a positive " +
-        "duration (months fit in 32 bits)"))
+      return Left("window width must be a positive " +
+        "duration (months fit in 32 bits)")
     measurementView(db, table) match {
-      case scala.None => Left((404, s"no table $table in database $db"))
+      case scala.None => Left(noTable(db, table))
       case Some(df) =>
         val out = (everyNs.filter(_ > 0L), everyMonths) match {
           case (Some(every), _) =>
@@ -1931,118 +1680,10 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** tag_keys / measurement_tag_keys (service.rs:403,661):
-    * StringValuesResponse with the 0x00/0xff measurement/field sentinels
-    * (tag_keys_to_byte_vecs, data.rs:45-56). Without a table, keys merge
-    * across the database's measurements. */
-  private def handleTagKeys(ex: HttpExchange): Unit = {
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    // (db, optional table restriction, predicate)
-    val parsed: Either[String,
-        (String, Option[String], graft.core.RpcPredicate)] =
-      if (isProtoRequest(ex)) {
-        try {
-          // the two routes this handler serves carry DIFFERENT messages:
-          // TagKeysRequest (source=1, range=2, predicate=3) vs
-          // MeasurementTagKeysRequest (source=1, measurement=2 string,
-          // range=3, predicate=4) — decoding the measurement-scoped one
-          // with the read_filter layout parses the measurement bytes as
-          // a range and drops the restriction (the gRPC path at
-          // StorageGrpc.measurementTagKeys already distinguishes them)
-          val (req, scoped) =
-            if (ex.getRequestURI.getPath.endsWith("measurement_tag_keys"))
-              StorageProtoReader.decodeMeasurementScoped(raw)
-            else (StorageProtoReader.decodeReadFilter(raw), scala.None)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            protoDb(ex, req) match {
-              case Some(db) =>
-                Right((db, scoped.orElse(meas)
-                  .orElse(queryParams(ex).get("table")), pred))
-              case scala.None => Left("request needs read_source (or ?db=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        jsonStrField(body, "database_name") match {
-          case Some(db) => Right((db, tableOf(body), predOf(body)))
-          case _ => Left("""expected {"database_name": ...}""")
-        }
-      }
-    parsed match {
-      case Left(err) => respondJsonError(ex, 400, err)
-      case Right((db, table, pred)) =>
-        if (!requireDb(ex, db)) return
-        val keys =
-          table match {
-            case Some(t) => measurementView(db, t).map(InfluxRpc.tagKeys(_, pred))
-            case scala.None => Some(InfluxRpc.tagKeysAcrossTables(dbTables(db), pred))
-          }
-        keys match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(ks) => respondProto(ex,
-            StorageProto.stringValuesResponse(StorageProto.tagKeysByteVecs(ks)))
-        }
-    }
-  }
-
-  /** tag_values / measurement_tag_values (service.rs:456,715). The
-    * reference's meta keys are honored: `\u0000`/`_measurement` lists
-    * measurement names, `ÿ`/`_field` lists field names
-    * (service.rs:483-526). */
-  private def handleTagValues(ex: HttpExchange): Unit = {
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    // (db, optional table, tag key, predicate) — the proto tag_key bytes
-    // carry the same \x00/\xff sentinels the JSON spelling writes as
-    // "\u0000"/"\u00ff"; the reader renders them "_measurement"/"_field"
-    val parsed: Either[String,
-        (String, Option[String], String, graft.core.RpcPredicate)] =
-      if (isProtoRequest(ex)) {
-        try {
-          // TagValuesRequest (tag_key=3) vs MeasurementTagValuesRequest
-          // (measurement=2, tag_key=3, range=4, predicate=5) — same
-          // two-message split as the tag-keys handler above
-          val (req, scoped) =
-            if (ex.getRequestURI.getPath.endsWith("measurement_tag_values"))
-              StorageProtoReader.decodeMeasurementTagValues(raw)
-            else (StorageProtoReader.decodeTagValues(raw), scala.None)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), req.tagKey) match {
-              case (Some(db), Some(tk)) =>
-                Right((db, scoped.orElse(meas)
-                  .orElse(queryParams(ex).get("table")),
-                  StorageProtoReader.renderTagKey(tk), pred))
-              case (scala.None, _) => Left("request needs read_source (or ?db=)")
-              case (_, scala.None) => Left("request needs tag_key")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), jsonStrField(body, "tag_key")) match {
-          case (Some(db), Some(tk)) =>
-            Right((db, tableOf(body), tk, predOf(body)))
-          case _ => Left("""expected {"database_name": ..., "tag_key": ...}""")
-        }
-      }
-    parsed match {
-      case Left(err) => respondJsonError(ex, 400, err)
-      case Right((db, table, tagKey, pred)) =>
-        if (!requireDb(ex, db)) return
-        planTagValues(db, table, tagKey, pred) match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(vs) => respondProto(ex,
-            StorageProto.stringValuesResponse(vs.map(_.getBytes(UTF_8))))
-        }
-    }
-  }
-
-  /** Transport-neutral tag_values core — shared by the HTTP bridge above
-    * and the gRPC service ([[StorageGrpc]]): the values of `tagKey` in
-    * `table`, or across the database without one; None when there is no
-    * such table. The sentinel keys list measurement or field names.
+  /** tag_values core for the gRPC service ([[StorageGrpc]]): the values
+    * of `tagKey` in `table`, or across the database without one; None
+    * when there is no such table. The sentinel keys list measurement or
+    * field names.
     * Across measurements, only those with a `tagKey` column are read
     * ([[tablesWithColumn]]). */
   private[server] def planTagValues(db: String, table: Option[String], tagKey: String,
@@ -2063,73 +1704,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         case scala.None =>
           Some(InfluxRpc.tagValuesAcrossTables(tablesWithColumn(db, k), k, pred))
       }
-  }
-
-  /** measurement_names (service.rs:605): StringValuesResponse of table
-    * names passing the predicate. */
-  private def handleMeasurementNames(ex: HttpExchange): Unit = {
-    val body = storageBody(ex).getOrElse(return)
-    jsonStrField(body, "database_name") match {
-      case Some(db) =>
-        if (!requireDb(ex, db)) return
-        val names =
-          InfluxRpc.tableNames(dbTables(db), predOf(body))
-        respondProto(ex,
-          StorageProto.stringValuesResponse(names.map(_.getBytes(UTF_8))))
-      case _ => respondJsonError(ex, 400, """expected {"database_name": ...}""")
-    }
-  }
-
-  /** measurement_fields (service.rs:771): MeasurementFieldsResponse with
-    * (key, FieldType, last-timestamp) per field. Without a measurement,
-    * the database-level merge (fieldlist.rs into_fieldlist). */
-  private def handleMeasurementFields(ex: HttpExchange): Unit = {
-    val body = storageBody(ex).getOrElse(return)
-    jsonStrField(body, "database_name") match {
-      case Some(db) =>
-        if (!requireDb(ex, db)) return
-        val pred = predOf(body)
-        val fields: Option[Seq[(String, String, Long)]] =
-          tableOf(body) match {
-            case Some(t) => measurementView(db, t).map(df =>
-              ResultRows.collect(InfluxRpc.fieldColumns(df, pred))
-                .map(r => (r.getString(0), r.getString(1), r.getLong(2))))
-            case scala.None =>
-              Some(InfluxRpc.fieldColumnsAcrossTables(dbTables(db), pred))
-          }
-        fields match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(fs) => respondProto(ex, StorageProto.measurementFieldsResponse(
-            fs.map { case (n, t, ts) => (n, StorageProto.fieldTypeOf(t), ts) }))
-        }
-      case _ => respondJsonError(ex, 400, """expected {"database_name": ...}""")
-    }
-  }
-
-  /** read_series_cardinality (service.rs:560 — declared but
-    * unimplemented there; completed here): Int64ValuesResponse with the
-    * distinct-series count. Without a table, series sum across the
-    * database's measurements (series are per-table tag sets). */
-  private def handleSeriesCardinality(ex: HttpExchange): Unit = {
-    val body = storageBody(ex).getOrElse(return)
-    jsonStrField(body, "database_name") match {
-      case Some(db) =>
-        if (!requireDb(ex, db)) return
-        val pred = predOf(body)
-        val exact = !jsonStrField(body, "mode").contains("estimate")
-        val n: Option[Long] =
-          tableOf(body) match {
-            case Some(t) => measurementView(db, t)
-              .map(InfluxRpc.seriesCardinality(_, pred, exact))
-            case scala.None => Some(dbTables(db).values
-              .map(InfluxRpc.seriesCardinality(_, pred, exact)).sum)
-          }
-        n match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(v) => respondProto(ex, StorageProto.int64ValuesResponse(Seq(v)))
-        }
-      case _ => respondJsonError(ex, 400, """expected {"database_name": ...}""")
-    }
   }
 
   // ------------------------------------------------- management surface
@@ -2206,7 +1780,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
 
   private def handlePutRules(ex: HttpExchange, db: String): Unit = {
-    val body = storageBody(ex).getOrElse(return)
+    val body = new String(storageBodyBytes(ex).getOrElse(return), UTF_8)
     graft.streaming.DatabaseRules.fromJson(body) match {
       case Left(err) => respondJsonError(ex, 400, err)
       case Right(r) if r.name != db =>
@@ -2672,17 +2246,6 @@ object HttpFacade {
   // the rules codec.
   private[server] def jsonStrField(json: String, key: String): Option[String] =
     graft.core.Json.strField(json, key)
-
-  private[server] def jsonLongField(json: String, key: String): Option[Long] =
-    graft.core.Json.longField(json, key)
-
-  /** `"key": {"a": "x"}` -> Map; quote-aware (values may contain '}'). */
-  private[graft] def jsonStrMapField(json: String, key: String): Map[String, String] =
-    graft.core.Json.strMapField(json, key)
-
-  /** `"key": ["a", "b"]` -> Seq; quote-aware (elements may contain ']'). */
-  private[graft] def jsonStrArrayField(json: String, key: String): Seq[String] =
-    graft.core.Json.strArrayField(json, key)
 
   private[server] def urlEnc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")

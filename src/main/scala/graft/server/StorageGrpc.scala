@@ -4,30 +4,46 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.util.control.NonFatal
 
-import graft.core.ResultRows
+import org.apache.spark.sql.DataFrame
+
+import graft.core.{ResultRows, RpcPredicate}
 import graft.operators.InfluxRpc
+import graft.server.{StorageProtoReader => R}
 
 /** The storage gRPC service over [[GrpcServer]]'s real HTTP/2 framing —
-  * `influxdata.platform.storage.Storage` methods wired to the SAME
-  * protobuf decode/plan/encode pipeline the HTTP transport bridge serves
-  * (reference: src/influxdb_ioxd/rpc/storage/service.rs behind tonic).
-  * Requests here are always protobuf (no JSON convenience branch);
-  * database resolution is the read_source org/bucket rendering, table
-  * selection the `\x00 _measurement` predicate sentinel — exactly what
-  * reference storage clients put on the wire.
+  * `influxdata.platform.storage.Storage`, the one transport for the
+  * storage API (reference: src/influxdb_ioxd/rpc/storage/service.rs
+  * behind tonic). Requests are protobuf; database resolution is the
+  * read_source org/bucket rendering, table selection the
+  * `\x00 _measurement` predicate sentinel (or the measurement field of
+  * the Measurement* requests) — exactly what reference storage clients
+  * put on the wire.
   *
   * The FULL service.rs route surface is wired: Capabilities, ReadFilter /
   * ReadGroup / ReadWindowAggregate (server-streaming ReadResponse, planned
-  * by transport-neutral cores shared with the HTTP bridge and converted
-  * to frames on the driver as the rows stream in), TagKeys, TagValues
-  * (incl. the `_measurement`/`_field` sentinel keys, also through a
-  * shared core), MeasurementNames, MeasurementTagKeys,
-  * MeasurementTagValues, MeasurementFields, ReadSeriesCardinality
-  * (exact; service.rs:560 declares it unimplemented), and Offsets
-  * (empty response, service.rs:794).
+  * by the facade's planning cores and converted to frames on the driver
+  * as the rows stream in), TagKeys, TagValues (incl. the
+  * `_measurement`/`_field` sentinel keys), MeasurementNames,
+  * MeasurementTagKeys, MeasurementTagValues, MeasurementFields,
+  * ReadSeriesCardinality (exact; service.rs:560 declares it
+  * unimplemented), and Offsets (empty response, service.rs:794).
+  *
+  * Statuses follow the reference's: an unknown database or measurement
+  * is NOT_FOUND (5; service.rs maps DatabaseNotFound to
+  * `Status::not_found`), so a mistyped name never reads as "exists and
+  * is empty"; a malformed request is INVALID_ARGUMENT (3).
   */
 object StorageGrpc {
   val ServicePrefix = "/influxdata.platform.storage.Storage/"
+
+  /** Aggregate.AggregateType enum (storage_common.proto:56-66). A code
+    * outside 0-7 is rejected like the reference's AggregateType
+    * conversion (expr.rs convert_aggregate), not degraded to raw. */
+  private val aggKinds: Map[Int, InfluxRpc.AggKind] = {
+    import InfluxRpc.AggKind._
+    Map(0 -> None, 1 -> Sum, 2 -> Count, 3 -> Min, 4 -> Max, 5 -> First,
+      6 -> Last, 7 -> Mean)
+  }
 
   def dispatcher(facade: HttpFacade)
       : (String, Array[Byte]) => Either[String, Iterator[Array[Byte]]] =
@@ -42,8 +58,7 @@ object StorageGrpc {
       : Either[String, Iterator[Array[Byte]]] =
     if (!path.startsWith(ServicePrefix)) Left(s"unknown service: $path")
     else path.stripPrefix(ServicePrefix) match {
-      case "Capabilities" =>
-        Right(Iterator.single(StorageProto.capabilitiesResponse()))
+      case "Capabilities" => Right(one(StorageProto.capabilitiesResponse()))
       case "ReadFilter" => readFilter(f, raw)
       case "ReadGroup" => readGroup(f, raw)
       case "ReadWindowAggregate" => readWindowAggregate(f, raw)
@@ -56,138 +71,93 @@ object StorageGrpc {
       case "ReadSeriesCardinality" => readSeriesCardinality(f, raw)
       case "Offsets" =>
         // service.rs:794 returns an empty OffsetsResponse; mirror that
-        Right(Iterator.single(Array.emptyByteArray))
+        Right(one(Array.emptyByteArray))
       case other => Left(s"unimplemented method: $other")
     }
 
-  private def measurementNames(f: HttpFacade, raw: Array[Byte])
-      : Either[String, Iterator[Array[Byte]]] = {
-    val req = StorageProtoReader.decodeReadFilter(raw) // same field layout
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, _) =>
+  private def one(bytes: Array[Byte]): Iterator[Array[Byte]] =
+    Iterator.single(bytes)
+
+  private def strings(vs: Seq[String]): Iterator[Array[Byte]] =
+    one(StorageProto.stringValuesResponse(vs.map(_.getBytes(UTF_8))))
+
+  /** The request's predicate, its `_measurement` sentinel and its
+    * database, which must exist. */
+  private def parse(f: HttpFacade, req: R.StorageRequest)
+      : Either[String, (RpcPredicate, Option[String], String)] =
+    R.toRpcPredicate(req).flatMap { case (pred, meas) =>
       req.databaseName match {
-        case Some(db) => Right(Iterator.single(
-          StorageProto.stringValuesResponse(
-            InfluxRpc.tableNames(f.dbTables(db), pred)
-              .map(_.getBytes(UTF_8)))))
+        case Some(db) if f.hasDatabase(db) => Right((pred, meas, db))
+        case Some(db) =>
+          Left(GrpcServer.statusError(5, s"database not found: $db"))
         case None => Left("request needs read_source")
       }
     }
-  }
+
+  private def table(meas: Option[String]): Either[String, String] =
+    meas.toRight("request needs a measurement")
+
+  private def view(f: HttpFacade, db: String, t: String): Either[String, DataFrame] =
+    f.measurementView(db, t).toRight(f.noTable(db, t))
+
+  private def measurementNames(f: HttpFacade, raw: Array[Byte])
+      : Either[String, Iterator[Array[Byte]]] =
+    parse(f, R.decodeReadFilter(raw)).map { case (pred, _, db) => // same layout
+      strings(InfluxRpc.tableNames(f.dbTables(db), pred))
+    }
 
   private def measurementTagKeys(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
-    val (req, meas) = StorageProtoReader.decodeMeasurementScoped(raw)
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, sentinel) =>
-      (req.databaseName, meas.orElse(sentinel)) match {
-        case (Some(db), Some(t)) =>
-          f.measurementView(db, t) match {
-            case Some(df) => Right(Iterator.single(
-              StorageProto.stringValuesResponse(
-                StorageProto.tagKeysByteVecs(InfluxRpc.tagKeys(df, pred)))))
-            case None => Left(s"no table $t in database $db")
-          }
-        case (None, _) => Left("request needs read_source")
-        case (_, None) => Left("request needs a measurement")
-      }
+    val (req, meas) = R.decodeMeasurementScoped(raw)
+    parse(f, req).flatMap { case (pred, sentinel, db) =>
+      table(meas.orElse(sentinel)).flatMap(view(f, db, _)).map(df =>
+        one(StorageProto.stringValuesResponse(
+          StorageProto.tagKeysByteVecs(InfluxRpc.tagKeys(df, pred)))))
     }
   }
 
   private def measurementTagValues(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
-    val (req, meas) = StorageProtoReader.decodeMeasurementTagValues(raw)
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, sentinel) =>
-      (req.databaseName, meas.orElse(sentinel), req.tagKey) match {
-        case (Some(db), Some(t), Some(tk)) =>
-          f.measurementView(db, t) match {
-            case Some(df) =>
-              val values = StorageProtoReader.renderTagKey(tk) match {
-                case "_measurement" => Seq(t)
-                case "_field" =>
-                  ResultRows.collect(InfluxRpc.fieldColumns(df, pred))
-                    .map(_.getString(0))
-                case k => ResultRows.collect(InfluxRpc.tagValues(df, k, pred))
-                  .map(_.getString(0))
-              }
-              Right(Iterator.single(StorageProto.stringValuesResponse(
-                values.map(_.getBytes(UTF_8)))))
-            case None => Left(s"no table $t in database $db")
-          }
-        case (None, _, _) => Left("request needs read_source")
-        case (_, None, _) => Left("request needs a measurement")
-        case (_, _, None) => Left("request needs tag_key")
-      }
+    val (req, meas) = R.decodeMeasurementTagValues(raw)
+    parse(f, req).flatMap { case (pred, sentinel, db) =>
+      for {
+        t <- table(meas.orElse(sentinel))
+        tk <- req.tagKey.toRight("request needs tag_key")
+        df <- view(f, db, t)
+      } yield strings(R.renderTagKey(tk) match {
+        case "_measurement" => Seq(t)
+        case "_field" =>
+          ResultRows.collect(InfluxRpc.fieldColumns(df, pred)).map(_.getString(0))
+        case k =>
+          ResultRows.collect(InfluxRpc.tagValues(df, k, pred)).map(_.getString(0))
+      })
     }
   }
 
   private def measurementFields(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
-    val (req, meas) = StorageProtoReader.decodeMeasurementScoped(raw)
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, sentinel) =>
-      (req.databaseName, meas.orElse(sentinel)) match {
-        case (Some(db), Some(t)) =>
-          f.measurementView(db, t) match {
-            case Some(df) =>
-              val fields = ResultRows.collect(InfluxRpc.fieldColumns(df, pred))
-                .map(r => (r.getString(0),
-                  StorageProto.fieldTypeOf(r.getString(1)), r.getLong(2)))
-              Right(Iterator.single(
-                StorageProto.measurementFieldsResponse(fields)))
-            case None => Left(s"no table $t in database $db")
-          }
-        case (None, _) => Left("request needs read_source")
-        case (_, None) => Left("request needs a measurement")
+    val (req, meas) = R.decodeMeasurementScoped(raw)
+    parse(f, req).flatMap { case (pred, sentinel, db) =>
+      table(meas.orElse(sentinel)).flatMap(view(f, db, _)).map { df =>
+        val fields = ResultRows.collect(InfluxRpc.fieldColumns(df, pred))
+          .map(r => (r.getString(0),
+            StorageProto.fieldTypeOf(r.getString(1)), r.getLong(2)))
+        one(StorageProto.measurementFieldsResponse(fields))
       }
     }
   }
 
   private def readSeriesCardinality(f: HttpFacade, raw: Array[Byte])
-      : Either[String, Iterator[Array[Byte]]] = {
-    val req = StorageProtoReader.decodeReadFilter(raw) // same field layout
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-      req.databaseName match {
-        case Some(db) =>
-          val n = meas match {
-            case Some(t) => f.measurementView(db, t)
-              .map(InfluxRpc.seriesCardinality(_, pred, exact = true))
-            case None => Some(f.dbTables(db).values
-              .map(InfluxRpc.seriesCardinality(_, pred, exact = true)).sum)
-          }
-          n match {
-            case Some(v) => Right(Iterator.single(
-              StorageProto.int64ValuesResponse(Seq(v))))
-            case None => Left(s"no such table in $db")
-          }
-        case None => Left("request needs read_source")
+      : Either[String, Iterator[Array[Byte]]] =
+    parse(f, R.decodeReadFilter(raw)).flatMap { case (pred, meas, db) => // same layout
+      val n = meas match {
+        case Some(t) =>
+          view(f, db, t).map(InfluxRpc.seriesCardinality(_, pred, exact = true))
+        case None => Right(f.dbTables(db).values
+          .map(InfluxRpc.seriesCardinality(_, pred, exact = true)).sum)
       }
+      n.map(v => one(StorageProto.int64ValuesResponse(Seq(v))))
     }
-  }
-
-  private def readWindowAggregate(f: HttpFacade, raw: Array[Byte])
-      : Either[String, Iterator[Array[Byte]]] = {
-    val req = StorageProtoReader.decodeReadWindowAggregate(raw)
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-      (req.databaseName, meas) match {
-        case (Some(db), Some(t)) =>
-          if (req.aggregates.size != 1)
-            Left(s"aggregate must be a singleton, got ${req.aggregates.size}")
-          else f.protoAggNames.get(req.aggregates.head) match {
-            case Some(aggName) =>
-              f.resolveProtoWindow(req).flatMap {
-                case (evNs, evMonths, offNs, offMonths) =>
-                  f.planReadWindowAggregate(db, t, pred, aggName, evNs,
-                      evMonths, offNs, offMonths) match {
-                    case Left((_, err)) => Left(err)
-                    case Right(plan) => Right(frameStream(plan))
-                  }
-              }
-            case None =>
-              Left(s"unconvertible aggregate type enum: ${req.aggregates.head}")
-          }
-        case (None, _) => Left("request needs read_source")
-        case (_, None) => Left("request needs a _measurement predicate")
-      }
-    }
-  }
 
   /** One ReadResponse message per frame, converted on the driver as the
     * plan's rows stream in and encoded inside the read, since the
@@ -196,80 +166,63 @@ object StorageGrpc {
     plan.streamFrames(_.map(fr =>
       StorageProto.readResponse(Seq(StorageProto.encodeFrame(fr)))).toVector).iterator
 
+  private def readFilter(f: HttpFacade, raw: Array[Byte])
+      : Either[String, Iterator[Array[Byte]]] =
+    parse(f, R.decodeReadFilter(raw)).flatMap { case (pred, meas, db) =>
+      table(meas).flatMap(t =>
+        f.planReadFilter(db, t, pred).toRight(f.noTable(db, t)).map(frameStream))
+    }
+
   private def readGroup(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
-    val req = StorageProtoReader.decodeReadGroup(raw)
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-      (req.databaseName, meas) match {
-        case (Some(db), Some(t)) =>
-          val code = req.aggregates.headOption.getOrElse(0)
-          f.protoAggNames.get(code) match {
-            case Some(aggName) =>
-              f.planReadGroup(db, t, pred, aggName, req.groupKeys) match {
-                case Left((_, err)) => Left(err)
-                case Right(plan) => Right(frameStream(plan))
-              }
-            case None => Left(s"unconvertible aggregate type enum: $code")
-          }
-        case (None, _) => Left("request needs read_source")
-        case (_, None) => Left("request needs a _measurement predicate")
-      }
+    val req = R.decodeReadGroup(raw)
+    parse(f, req).flatMap { case (pred, meas, db) =>
+      val code = req.aggregates.headOption.getOrElse(0)
+      for {
+        t <- table(meas)
+        agg <- aggKinds.get(code).toRight(s"unconvertible aggregate type enum: $code")
+        plan <- f.planReadGroup(db, t, pred, agg, req.groupKeys)
+      } yield frameStream(plan)
     }
   }
 
-  private def readFilter(f: HttpFacade, raw: Array[Byte])
+  private def readWindowAggregate(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
-    val req = StorageProtoReader.decodeReadFilter(raw)
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-      (req.databaseName, meas) match {
-        case (Some(db), Some(t)) =>
-          f.planReadFilter(db, t, pred) match {
-            case Some(plan) => Right(frameStream(plan))
-            case None => Left(s"no table $t in database $db")
-          }
-        case (None, _) => Left("request needs read_source")
-        case (_, None) => Left("request needs a _measurement predicate")
-      }
+    val req = R.decodeReadWindowAggregate(raw)
+    parse(f, req).flatMap { case (pred, meas, db) =>
+      for {
+        t <- table(meas)
+        // expr.rs:553 AggregateNotSingleton: exactly one aggregate
+        code <- (if (req.aggregates.size == 1) Right(req.aggregates.head)
+          else Left(s"aggregate must be a singleton, got ${req.aggregates.size}"))
+        agg <- aggKinds.get(code).toRight(s"unconvertible aggregate type enum: $code")
+        plan <- f.resolveProtoWindow(req).flatMap {
+          case (everyNs, everyMonths, offsetNs, offsetMonths) =>
+            f.planReadWindowAggregate(db, t, pred, agg, everyNs, everyMonths,
+              offsetNs, offsetMonths)
+        }
+      } yield frameStream(plan)
     }
   }
 
   private def tagKeys(f: HttpFacade, raw: Array[Byte])
-      : Either[String, Iterator[Array[Byte]]] = {
-    val req = StorageProtoReader.decodeReadFilter(raw) // same field set
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-      req.databaseName match {
-        case Some(db) =>
-          val keys = meas match {
-            case Some(t) =>
-              f.measurementView(db, t).map(InfluxRpc.tagKeys(_, pred))
-            case None =>
-              Some(InfluxRpc.tagKeysAcrossTables(f.dbTables(db), pred))
-          }
-          keys match {
-            case Some(ks) => Right(Iterator.single(
-              StorageProto.stringValuesResponse(
-                StorageProto.tagKeysByteVecs(ks))))
-            case None => Left(s"no such table in $db")
-          }
-        case None => Left("request needs read_source")
+      : Either[String, Iterator[Array[Byte]]] =
+    parse(f, R.decodeReadFilter(raw)).flatMap { case (pred, meas, db) => // same layout
+      val keys = meas match {
+        case Some(t) => view(f, db, t).map(InfluxRpc.tagKeys(_, pred))
+        case None => Right(InfluxRpc.tagKeysAcrossTables(f.dbTables(db), pred))
       }
+      keys.map(ks => one(StorageProto.stringValuesResponse(
+        StorageProto.tagKeysByteVecs(ks))))
     }
-  }
 
   private def tagValues(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
-    val req = StorageProtoReader.decodeTagValues(raw)
-    StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-      (req.databaseName, req.tagKey) match {
-        case (Some(db), Some(tk)) =>
-          f.planTagValues(db, meas, StorageProtoReader.renderTagKey(tk), pred) match {
-            case Some(vs) => Right(Iterator.single(
-              StorageProto.stringValuesResponse(vs.map(_.getBytes(UTF_8)))))
-            case None => Left(s"no such table in $db")
-          }
-        case (None, _) => Left("request needs read_source")
-        case (_, None) => Left("request needs tag_key")
-      }
+    val req = R.decodeTagValues(raw)
+    parse(f, req).flatMap { case (pred, meas, db) =>
+      req.tagKey.toRight("request needs tag_key").flatMap(tk =>
+        f.planTagValues(db, meas, R.renderTagKey(tk), pred) // None: meas is missing
+          .toRight(f.noTable(db, meas.mkString)).map(strings))
     }
   }
 }

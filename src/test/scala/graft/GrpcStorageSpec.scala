@@ -3,148 +3,80 @@ package graft
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.server.{FlightGrpc, GrpcClient, GrpcServer, HttpFacade, StorageGrpc, StorageProto, StorageProtoReader => R}
+import graft.server.{FlightGrpc, GrpcClient, HttpFacade, StorageGrpc, StorageProtoReader => R}
+import graft.StorageRequests._
 
 /** End-to-end storage gRPC over REAL HTTP/2: a client speaking the
   * public gRPC wire protocol (h2c prior knowledge, 5-byte length-prefixed
   * messages, grpc-status trailers) over a loopback socket against
-  * [[GrpcServer]] + [[StorageGrpc]] — the same request/response protobuf
-  * bytes the HTTP transport bridge serves, now under genuine framing. */
+  * [[graft.server.GrpcServer]] + [[StorageGrpc]], the one transport of
+  * the storage API. */
 class GrpcStorageSpec extends SparkSpec {
 
-  private def msg(f: StorageProto.Writer => Unit): Array[Byte] = {
-    val w = new StorageProto.Writer
-    f(w); w.result()
-  }
-  private def tagRef(b: Array[Byte]) = msg(w => w.varintField(1, 3).bytes(9, b))
-  private def litStr(s: String) = msg(w => w.varintField(1, 4).string(3, s))
-  private def cmp(op: Int, l: Array[Byte], r: Array[Byte]) =
-    msg(w => w.varintField(1, 1).bytes(2, l).bytes(2, r).varintField(12, op.toLong))
-  private def predicate(root: Array[Byte]) = msg(w => w.bytes(1, root))
-  // the Any-wrapped ReadSource a request's field 1 carries directly
-  private def readSource(org: Long, bucket: Long) =
-    msg(s => s.string(1, "type.googleapis.com/ReadSource")
-      .bytes(2, msg(rs => rs.varintField(1, org).varintField(2, bucket))))
-  private val measurementSentinel = Array(0x00.toByte)
-
-  private def stringValues(resp: Array[Byte]): Seq[String] = {
-    val r = new R.Reader(resp)
-    val out = Seq.newBuilder[String]
-    while (r.hasMore) r.key() match {
-      case (1, 2) => out += new String(r.bytesField(), UTF_8)
-      case (_, wt) => r.skip(wt)
-    }
-    out.result()
-  }
+  private val cpuData =
+    "cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\ncpu,host=b usage=5.0 100"
 
   test("storage gRPC over real HTTP/2: caps, read_filter, tag keys/values") {
-    val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
-    val storage = StorageGrpc.dispatcher(facade)
-    val flight = FlightGrpc.dispatcher(facade)
-    val grpc = new GrpcServer((path, req) =>
-      if (path.startsWith(FlightGrpc.ServicePrefix)) flight(path, req)
-      else storage(path, req))
-    try {
-      // land data under the hex database the read_source (0xab, 0xcd)
-      // renders to, via the LP write endpoint
-      val conn = new URI(s"http://127.0.0.1:${facade.boundPort}" +
-        "/api/v2/write?org=00000000000000ab&bucket=00000000000000cd").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      conn.setRequestMethod("POST"); conn.setDoOutput(true)
-      conn.getOutputStream.write(
-        ("cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\n" +
-          "cpu,host=b usage=5.0 100").getBytes(UTF_8))
-      conn.getOutputStream.close()
-      assert(conn.getResponseCode == 204)
-
-      val p = grpc.boundPort
-      val S = StorageGrpc.ServicePrefix
-
+    // data lands under the hex database the read_source (0xab, 0xcd)
+    // renders to, via the LP write endpoint
+    withStorageGrpc(spark, cpuData) { (_, p) =>
       // Capabilities: empty request, one response message
-      val (cs, caps) = GrpcClient.call(p, S + "Capabilities",
-        Array.emptyByteArray)
+      val (cs, caps) = call(p, "Capabilities", Array.emptyByteArray)
       assert(cs == 0 && caps.size == 1 && caps.head.nonEmpty)
 
       // ReadFilter: table via the \x00 _measurement sentinel; the
       // server-streamed messages carry series/points frame pairs per host
       val rf = msg { b =>
-        b.bytes(1, readSource(0xab, 0xcd))
-        b.bytes(3, predicate(cmp(R.Cmp.Equal, tagRef(measurementSentinel),
-          litStr("cpu"))))
+        b.bytes(1, source)
+        b.bytes(3, predicate(measurementIs("cpu")))
       }
-      val (rs, frames) = GrpcClient.call(p, S + "ReadFilter", rf)
+      val (rs, rmsgs) = call(p, "ReadFilter", rf)
       assert(rs == 0, s"grpc-status $rs")
-      val members = frames.flatMap { m =>
-        val r = new R.Reader(m)
-        val out = Seq.newBuilder[Int]
-        while (r.hasMore) r.key() match {
-          case (1, 2) => val f = r.sub(); out += f.key()._1; f.bytesField()
-          case (_, wt) => r.skip(wt)
-        }
-        out.result()
-      }
+      val members = frames(rmsgs).map(_._1)
       assert(members == Seq(1, 2, 1, 2), s"got $members")
 
       // ReadGroup by host with SUM: group frame + series + points per host
       val rg = msg { b =>
-        b.bytes(1, readSource(0xab, 0xcd))
-        b.bytes(3, predicate(cmp(R.Cmp.Equal, tagRef(measurementSentinel),
-          litStr("cpu"))))
+        b.bytes(1, source)
+        b.bytes(3, predicate(measurementIs("cpu")))
         b.bytes(4, "host".getBytes(UTF_8))
         b.varintField(5, 2) // Group::GROUP_BY
         b.bytes(6, msg(a => a.varintField(1, 1))) // Aggregate SUM
       }
-      val (gs, gmsgs) = GrpcClient.call(p, S + "ReadGroup", rg)
+      val (gs, gmsgs) = call(p, "ReadGroup", rg)
       assert(gs == 0, s"grpc-status $gs")
-      val gm = gmsgs.flatMap { m =>
-        val r = new R.Reader(m)
-        val out = Seq.newBuilder[Int]
-        while (r.hasMore) r.key() match {
-          case (1, 2) => val f = r.sub(); out += f.key()._1; f.bytesField()
-          case (_, wt) => r.skip(wt)
-        }
-        out.result()
-      }
+      val gm = frames(gmsgs).map(_._1)
       assert(gm == Seq(7, 1, 2, 7, 1, 2), s"got $gm")
 
       // ReadWindowAggregate: 100ns windows, SUM — per-series bucketed
       // series/points frames over the same transport
       val rwa = msg { b =>
-        b.bytes(1, readSource(0xab, 0xcd))
-        b.bytes(3, predicate(cmp(R.Cmp.Equal, tagRef(measurementSentinel),
-          litStr("cpu"))))
+        b.bytes(1, source)
+        b.bytes(3, predicate(measurementIs("cpu")))
         b.varintField(4, 100L) // WindowEvery ns
         b.bytes(5, msg(a => a.varintField(1, 1))) // Aggregate SUM
       }
-      val (ws, wmsgs) = GrpcClient.call(p, S + "ReadWindowAggregate", rwa)
+      val (ws, wmsgs) = call(p, "ReadWindowAggregate", rwa)
       assert(ws == 0, s"grpc-status $ws")
-      val wm = wmsgs.flatMap { m =>
-        val r = new R.Reader(m)
-        val out = Seq.newBuilder[Int]
-        while (r.hasMore) r.key() match {
-          case (1, 2) => val fr = r.sub(); out += fr.key()._1; fr.bytesField()
-          case (_, wt) => r.skip(wt)
-        }
-        out.result()
-      }
+      val wm = frames(wmsgs).map(_._1)
       assert(wm == Seq(1, 2, 1, 2), s"got $wm")
 
       // TagKeys: sentinel keys plus the series tag
-      val (ks, keys) = GrpcClient.call(p, S + "TagKeys", rf)
+      val (ks, keys) = call(p, "TagKeys", rf)
       assert(ks == 0 && stringValues(keys.head).contains("host"))
 
       // TagValues for host
       val tv = msg { b =>
-        b.bytes(1, readSource(0xab, 0xcd))
+        b.bytes(1, source)
         b.bytes(4, "host".getBytes(UTF_8))
       }
-      val (vs, vals) = GrpcClient.call(p, S + "TagValues", tv)
+      val (vs, vals) = call(p, "TagValues", tv)
       assert(vs == 0 && stringValues(vals.head) == Seq("a", "b"))
 
       // Arrow Flight DoGet on the same connection semantics: Ticket ->
       // FlightData messages -> reassembled IPC stream round-trips rows
       val ticketJson =
-        """{"database_name":"00000000000000ab_00000000000000cd",""" +
+        s"""{"database_name":"$Db",""" +
           """"sql_query":"SELECT host, usage, time FROM cpu ORDER BY time, host"}"""
       val ticket = msg(w => w.bytes(1, ticketJson.getBytes(UTF_8)))
       val (fs, fdata) = GrpcClient.call(p,
@@ -164,21 +96,18 @@ class GrpcStorageSpec extends SparkSpec {
 
       // metadata route family: names, scoped keys/values/fields,
       // cardinality, offsets — the full service.rs surface over gRPC
-      val src = readSource(0xab, 0xcd)
-      val (ms1, names) = GrpcClient.call(p, S + "MeasurementNames",
-        msg(b => b.bytes(1, src)))
+      val (ms1, names) = call(p, "MeasurementNames", msg(b => b.bytes(1, source)))
       assert(ms1 == 0 && stringValues(names.head) == Seq("cpu"))
-      val scoped = msg { b => b.bytes(1, src); b.string(2, "cpu") }
-      val (ms2, mtk) = GrpcClient.call(p, S + "MeasurementTagKeys", scoped)
+      val scoped = msg { b => b.bytes(1, source); b.string(2, "cpu") }
+      val (ms2, mtk) = call(p, "MeasurementTagKeys", scoped)
       assert(ms2 == 0 && stringValues(mtk.head).contains("host"))
-      val (ms3, mtv) = GrpcClient.call(p, S + "MeasurementTagValues",
-        msg { b => b.bytes(1, src); b.string(2, "cpu")
+      val (ms3, mtv) = call(p, "MeasurementTagValues",
+        msg { b => b.bytes(1, source); b.string(2, "cpu")
           b.bytes(3, "host".getBytes(UTF_8)) })
       assert(ms3 == 0 && stringValues(mtv.head) == Seq("a", "b"))
-      val (ms4, mf) = GrpcClient.call(p, S + "MeasurementFields", scoped)
+      val (ms4, mf) = call(p, "MeasurementFields", scoped)
       assert(ms4 == 0 && mf.size == 1 && mf.head.nonEmpty)
-      val (ms5, card) = GrpcClient.call(p, S + "ReadSeriesCardinality",
-        msg(b => b.bytes(1, src)))
+      val (ms5, card) = call(p, "ReadSeriesCardinality", msg(b => b.bytes(1, source)))
       assert(ms5 == 0)
       // Int64ValuesResponse { repeated int64 values = 1 } (packed):
       // the db's one measurement carries two tag sets
@@ -186,18 +115,57 @@ class GrpcStorageSpec extends SparkSpec {
       assert(cr.key() == ((1, 2)))
       val packed = new R.Reader(cr.bytesField())
       assert(packed.varint() == 2L, "cpu has two series")
-      val (ms6, off) = GrpcClient.call(p, S + "Offsets", Array.emptyByteArray)
+      val (ms6, off) = call(p, "Offsets", Array.emptyByteArray)
       assert(ms6 == 0 && off.size == 1 && off.head.isEmpty)
 
       // errors surface as grpc-status 3 trailers, not transport failures
-      val (es, _) = GrpcClient.call(p, S + "Nope", Array.emptyByteArray)
+      val (es, _) = call(p, "Nope", Array.emptyByteArray)
       assert(es == 3)
-      val (ds, _) = GrpcClient.call(p, S + "ReadFilter",
-        msg(b => b.bytes(3, predicate(cmp(R.Cmp.Equal,
-          tagRef(measurementSentinel), litStr("cpu"))))))
+      val (ds, _) = call(p, "ReadFilter",
+        msg(b => b.bytes(3, predicate(measurementIs("cpu")))))
       assert(ds == 3, "missing read_source is INVALID_ARGUMENT")
-    } finally {
-      grpc.stop(); facade.stop()
+    }
+  }
+
+  test("an unknown database or measurement is NOT_FOUND; malformed protobuf is INVALID_ARGUMENT") {
+    withStorageGrpc(spark, cpuData) { (_, p) =>
+      val nope = readSource(0x1, 0x2) // no such database
+      def status(rpc: String, req: Array[Byte]): Int = call(p, rpc, req)._1
+      // database-level metadata reads: NOT_FOUND, not "exists and is empty"
+      assert(status("MeasurementNames", msg(b => b.bytes(1, nope))) == 5)
+      assert(status("TagKeys", msg(b => b.bytes(1, nope))) == 5)
+      assert(status("ReadSeriesCardinality", msg(b => b.bytes(1, nope))) == 5)
+      assert(status("TagValues", msg { b =>
+        b.bytes(1, nope); b.bytes(4, "host".getBytes(UTF_8)) }) == 5)
+      assert(status("ReadFilter", msg { b =>
+        b.bytes(1, nope); b.bytes(3, predicate(measurementIs("cpu"))) }) == 5)
+      // a measurement the database does not have: NOT_FOUND on every read
+      val mem = predicate(measurementIs("mem"))
+      assert(status("ReadFilter", msg { b => b.bytes(1, source); b.bytes(3, mem) }) == 5)
+      assert(status("ReadGroup", msg { b => b.bytes(1, source); b.bytes(3, mem)
+        b.bytes(6, msg(a => a.varintField(1, 1))) }) == 5)
+      assert(status("ReadWindowAggregate", msg { b => b.bytes(1, source)
+        b.bytes(3, mem); b.varintField(4, 100L)
+        b.bytes(5, msg(a => a.varintField(1, 1))) }) == 5)
+      assert(status("TagKeys", msg { b => b.bytes(1, source); b.bytes(3, mem) }) == 5)
+      assert(status("TagValues", msg { b => b.bytes(1, source); b.bytes(3, mem)
+        b.bytes(4, "host".getBytes(UTF_8)) }) == 5)
+      assert(status("ReadSeriesCardinality",
+        msg { b => b.bytes(1, source); b.bytes(3, mem) }) == 5)
+      val memScoped = msg { b => b.bytes(1, source); b.string(2, "mem") }
+      assert(status("MeasurementTagKeys", memScoped) == 5)
+      assert(status("MeasurementFields", memScoped) == 5)
+      assert(status("MeasurementTagValues", msg { b => b.bytes(1, source)
+        b.string(2, "mem"); b.bytes(3, "host".getBytes(UTF_8)) }) == 5)
+      // the data is there: the same reads of cpu succeed
+      assert(status("ReadSeriesCardinality", msg(b => b.bytes(1, source))) == 0)
+      // malformed protobuf (a length-delimited field overrunning the
+      // message) is INVALID_ARGUMENT on every RPC
+      val bad = Array[Byte](0x0a, 0x7f, 0x01)
+      for (rpc <- Seq("ReadFilter", "ReadGroup", "ReadWindowAggregate", "TagKeys",
+          "TagValues", "MeasurementNames", "MeasurementTagKeys",
+          "MeasurementTagValues", "MeasurementFields", "ReadSeriesCardinality"))
+        assert(status(rpc, bad) == 3, rpc)
     }
   }
 
@@ -206,27 +174,19 @@ class GrpcStorageSpec extends SparkSpec {
   /** Runs `body` against a storage gRPC server whose database (the
     * read_source 0xab/0xcd) holds `cpu` with fields usage and temp, where
     * host=c has no usage. */
-  private def withTwoFields(body: Int => Unit): Unit = {
-    val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
-    val grpc = new GrpcServer(StorageGrpc.dispatcher(facade))
-    try {
-      assert(HttpFacade.postWrite(facade.boundPort, "00000000000000ab", "00000000000000cd",
-        "cpu,host=a usage=1.5,temp=30.0 100\ncpu,host=a usage=2.5,temp=31.0 200\n" +
-          "cpu,host=b usage=5.0,temp=20.0 100\ncpu,host=c temp=10.0 300") == 204)
-      body(grpc.boundPort)
-    } finally {
-      grpc.stop(); facade.stop()
+  private def withTwoFields(body: Int => Unit): Unit =
+    withStorageGrpc(spark,
+      "cpu,host=a usage=1.5,temp=30.0 100\ncpu,host=a usage=2.5,temp=31.0 200\n" +
+        "cpu,host=b usage=5.0,temp=20.0 100\ncpu,host=c temp=10.0 300") { (_, p) =>
+      body(p)
     }
-  }
 
-  private val cpu = cmp(R.Cmp.Equal, tagRef(measurementSentinel), litStr("cpu"))
-  private val usageOnly = predicate(msg(w => w.varintField(1, R.NodeType.Logical)
-    .bytes(2, cpu)
-    .bytes(2, cmp(R.Cmp.Equal, tagRef(Array(0xff.toByte)), litStr("usage"))) // _field
-    .varintField(11, 0))) // AND
+  private val cpu = measurementIs("cpu")
+  private val usageOnly = predicate(logical(0, // AND
+    cpu, cmp(R.Cmp.Equal, tagRef(fieldSentinel), litStr("usage")))) // _field
 
   private def readGroup(aggregate: Int, pred: Array[Byte] = usageOnly) = msg { b =>
-    b.bytes(1, readSource(0xab, 0xcd))
+    b.bytes(1, source)
     b.bytes(3, pred)
     b.bytes(4, "host".getBytes(UTF_8))
     b.varintField(5, 2) // Group::GROUP_BY
@@ -235,7 +195,7 @@ class GrpcStorageSpec extends SparkSpec {
 
   /** The `_field` tag of every series frame a read returns, in order. */
   private def seriesFields(port: Int, rpc: String, req: Array[Byte]): Seq[String] = {
-    val (status, resp) = GrpcClient.call(port, StorageGrpc.ServicePrefix + rpc, req)
+    val (status, resp) = call(port, rpc, req)
     assert(status == 0, s"$rpc: grpc-status $status")
     def fields(tags: R.Reader): Seq[String] = {
       val out = Seq.newBuilder[String]
@@ -270,7 +230,7 @@ class GrpcStorageSpec extends SparkSpec {
 
   test("ReadFilter with a _field restriction returns only that field's series") {
     withTwoFields { p =>
-      val req = msg { b => b.bytes(1, readSource(0xab, 0xcd)); b.bytes(3, usageOnly) }
+      val req = msg { b => b.bytes(1, source); b.bytes(3, usageOnly) }
       assert(seriesFields(p, "ReadFilter", req) == Seq("usage", "usage"))
     }
   }
@@ -285,7 +245,7 @@ class GrpcStorageSpec extends SparkSpec {
   test("ReadWindowAggregate with a _field restriction returns only that field's series") {
     withTwoFields { p =>
       val req = msg { b =>
-        b.bytes(1, readSource(0xab, 0xcd))
+        b.bytes(1, source)
         b.bytes(3, usageOnly)
         b.varintField(4, 100L) // WindowEvery ns
         b.bytes(5, msg(a => a.varintField(1, 1))) // Aggregate SUM
@@ -309,12 +269,11 @@ class GrpcStorageSpec extends SparkSpec {
       // two chunks each, so each measurement's first read builds a snapshot
       Seq("cpu,host=a usage=1.0 100", "cpu,host=b usage=2.0 200",
         "disk,dev=sda free=1.0 100", "disk,dev=sdb free=2.0 200").foreach { lp =>
-        assert(HttpFacade.postWrite(facade.boundPort, "00000000000000ab",
-          "00000000000000cd", lp) == 204)
+        assert(HttpFacade.postWrite(facade.boundPort, Org, Bucket, lp) == 204)
       }
       def tagValues(key: String): Either[String, Seq[String]] =
         storage(StorageGrpc.ServicePrefix + "TagValues", msg { b =>
-          b.bytes(1, readSource(0xab, 0xcd))
+          b.bytes(1, source)
           b.bytes(4, key.getBytes(UTF_8))
         }).map(resp => stringValues(resp.next()))
       def snapshotBuilds(): Long = {

@@ -5,7 +5,8 @@ import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPOutputStream
 
-import graft.server.HttpFacade
+import graft.server.{HttpFacade, StorageProto, StorageProtoReader => R}
+import graft.StorageRequests._
 
 /** End-to-end drive of the HTTP wire facade (http.rs:364,462,595): the
   * SURVEY §7.2 minimum slice — ingest the committed transcription of the
@@ -776,8 +777,8 @@ class HttpFacadeSpec extends SparkSpec {
   }
 
   test("writeResult streams a 200k-row result through a bounded sink") {
-    // rows flow straight to the sink via toLocalIterator: memory is one
-    // partition + the 64KiB writer buffer, not the result size — the sink
+    // rows flow straight to the sink through ResultRows.stream: memory is
+    // one partition + the 64KiB writer buffer, not the result size — the sink
     // here never stores a byte, only counts lines
     import org.apache.spark.sql.functions._
     val df = spark.range(200000).select(col("id"), (col("id") % 7).as("m"))
@@ -798,7 +799,7 @@ class HttpFacadeSpec extends SparkSpec {
       """[{"id":0},{"id":1},{"id":2}]""")
   }
 
-  // ---- minimal proto3 reader (wire spec only) for the storage endpoints
+  // ---- minimal proto3 reader (wire spec only) for the storage responses
 
   private def pbVarint(b: Array[Byte], pos: Int): (Long, Int) = {
     var v = 0L; var shift = 0; var i = pos; var more = true
@@ -833,35 +834,22 @@ class HttpFacadeSpec extends SparkSpec {
 
   test("measurement-scoped storage routes decode their OWN protobuf " +
       "layout (measurement=2, not the read_filter field set)") {
-    withFacade { facade =>
-      val p = facade.boundPort
-      post(p, "/api/v2/write?org=o&bucket=b",
-        ("cpu,host=a usage=1.5 100\nmem,region=r free=1.0 100").getBytes(UTF_8))
-      import graft.server.StorageProto
-      def msg(f: StorageProto.Writer => Unit): Array[Byte] = {
-        val w = new StorageProto.Writer; f(w); w.result()
-      }
-      val source = msg(s => s.string(1, "type.googleapis.com/ReadSource")
-        .bytes(2, msg(rs => rs.varintField(1, 0xab).varintField(2, 0xcd))))
-      def postPb(path: String, body: Array[Byte]): Array[Byte] = {
-        val conn = new URI(s"http://127.0.0.1:$p$path?db=o_b").toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        conn.setRequestMethod("POST"); conn.setDoOutput(true)
-        conn.setRequestProperty("Content-Type", "application/x-protobuf")
-        conn.getOutputStream.write(body); conn.getOutputStream.close()
-        assert(conn.getResponseCode == 200, s"$path status ${conn.getResponseCode}")
-        conn.getInputStream.readAllBytes()
+    withStorageGrpc(spark, "cpu,host=a usage=1.5 100\nmem,region=r free=1.0 100") { (_, p) =>
+      def rpc(method: String, body: Array[Byte]): Array[Byte] = {
+        val (status, resp) = call(p, method, body)
+        assert(status == 0, s"$method grpc-status $status")
+        resp.flatten.toArray
       }
       def strings(b: Array[Byte]): Seq[String] =
         pbFields(b).collect { case (1, Right(v)) =>
           new String(v.toArray, UTF_8) }
       // MeasurementTagKeysRequest: source=1, measurement=2 — the
       // measurement restriction must hold (misparsed as a range before)
-      val keys = strings(postPb("/api/v1/storage/measurement_tag_keys",
+      val keys = strings(rpc("MeasurementTagKeys",
         msg { w => w.bytes(1, source); w.string(2, "cpu") }))
       assert(keys.contains("host") && !keys.contains("region"), keys)
       // MeasurementTagValuesRequest: measurement=2, tag_key=3
-      val vals = strings(postPb("/api/v1/storage/measurement_tag_values",
+      val vals = strings(rpc("MeasurementTagValues",
         msg { w => w.bytes(1, source); w.string(2, "cpu")
           w.bytes(3, "host".getBytes(UTF_8)) }))
       assert(vals == Seq("a"), vals)
@@ -869,24 +857,18 @@ class HttpFacadeSpec extends SparkSpec {
   }
 
   test("storage read_filter + capabilities speak the reference protobuf (service.rs:212,567)") {
-    withFacade { facade =>
-      val p = facade.boundPort
-      post(p, "/api/v2/write?org=o&bucket=b",
-        ("cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\n" +
-          "cpu,host=b usage=5.0 100").getBytes(UTF_8))
-
-      def readFilterBytes(body: String): Array[Byte] = {
-        val conn = new URI(s"http://127.0.0.1:$p/api/v1/storage/read_filter").toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        conn.setRequestMethod("POST"); conn.setDoOutput(true)
-        conn.getOutputStream.write(body.getBytes(UTF_8)); conn.getOutputStream.close()
-        assert(conn.getResponseCode == 200)
-        assert(conn.getHeaderField("Content-Type") == "application/x-protobuf")
-        conn.getInputStream.readAllBytes()
+    withStorageGrpc(spark,
+      "cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\ncpu,host=b usage=5.0 100") { (_, p) =>
+      // the ReadResponse messages of a read, concatenated: proto
+      // repeated-field concatenation makes them one valid message
+      def readFilterBytes(req: Array[Byte]): Array[Byte] = {
+        val (status, resp) = call(p, "ReadFilter", req)
+        assert(status == 0)
+        resp.flatten.toArray
       }
+      val cpu = msg { b => b.bytes(1, source); b.bytes(3, predicate(measurementIs("cpu"))) }
 
-      val frames = pbFields(readFilterBytes(
-        """{"database_name":"o_b","table":"cpu"}""")).map {
+      val frames = pbFields(readFilterBytes(cpu)).map {
         case (1, Right(frame)) => pbFields(frame).head
         case other => fail(s"unexpected top-level field $other")
       }
@@ -907,80 +889,75 @@ class HttpFacadeSpec extends SparkSpec {
 
       // time-range restriction reaches the predicate: [150, 300) keeps
       // only host=a's t=200 point
-      val ranged = pbFields(readFilterBytes(
-        """{"database_name":"o_b","table":"cpu","start":150,"stop":300}"""))
+      val ranged = pbFields(readFilterBytes(msg { b =>
+        b.bytes(1, source); b.bytes(2, range(150, 300))
+        b.bytes(3, predicate(measurementIs("cpu")))
+      }))
       assert(ranged.size == 2)
 
       // capabilities: byte-identical to the pinned encoding
-      val conn = new URI(s"http://127.0.0.1:$p/api/v1/storage/capabilities").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      assert(conn.getResponseCode == 200)
-      assert(conn.getInputStream.readAllBytes().sameElements(
+      val (cs, caps) = call(p, "Capabilities", Array.emptyByteArray)
+      assert(cs == 0)
+      assert(caps.flatten.toArray.sameElements(
         graft.server.StorageProto.capabilitiesResponse()))
 
-      // unknown table -> 404
-      val bad = new URI(s"http://127.0.0.1:$p/api/v1/storage/read_filter").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      bad.setRequestMethod("POST"); bad.setDoOutput(true)
-      bad.getOutputStream.write("""{"database_name":"o_b","table":"nope"}""".getBytes(UTF_8))
-      bad.getOutputStream.close()
-      assert(bad.getResponseCode == 404)
+      // unknown table -> NOT_FOUND
+      assert(call(p, "ReadFilter", msg { b =>
+        b.bytes(1, source); b.bytes(3, predicate(measurementIs("nope")))
+      })._1 == 5)
     }
   }
 
   test("remaining storage RPC surface: groups, windows, metadata, cardinality (service.rs:218-782)") {
-    withFacade { facade =>
-      val p = facade.boundPort
-      post(p, "/api/v2/write?org=o&bucket=b",
-        ("cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\n" +
-          "cpu,host=b usage=5.0 100\n" +
-          "mem,host=a,region=r free=10.0,load=3i 150").getBytes(UTF_8))
+    withStorageGrpc(spark,
+      "cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\n" +
+        "cpu,host=b usage=5.0 100\n" +
+        "mem,host=a,region=r free=10.0,load=3i 150") { (_, p) =>
 
-      def postBytes(path: String, body: String): Array[Byte] = {
-        val conn = new URI(s"http://127.0.0.1:$p$path").toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        conn.setRequestMethod("POST"); conn.setDoOutput(true)
-        conn.getOutputStream.write(body.getBytes(UTF_8)); conn.getOutputStream.close()
-        assert(conn.getResponseCode == 200, s"$path failed")
-        conn.getInputStream.readAllBytes()
+      def rpcBytes(method: String, body: Array[Byte]): Array[Byte] = {
+        val (status, resp) = call(p, method, body)
+        assert(status == 0, s"$method failed: grpc-status $status")
+        resp.flatten.toArray
       }
+      /** A request of [[Db]] with `fields` after its read_source. */
+      def req(fields: StorageProto.Writer => Unit): Array[Byte] =
+        msg { b => b.bytes(1, source); fields(b) }
+      def where(nodes: Array[Byte]*): Array[Byte] =
+        predicate(if (nodes.size == 1) nodes.head else logical(0, nodes: _*))
+      def tagEq(k: String, v: String) = cmp(R.Cmp.Equal, tagRef(k), litStr(v))
       def stringValues(b: Array[Byte]): Seq[Seq[Byte]] =
         pbFields(b).collect { case (1, Right(v)) => v.toSeq }
       def asStrings(vs: Seq[Seq[Byte]]): Seq[String] =
         vs.map(v => new String(v.toArray, UTF_8))
 
       // tag_keys with table: sentinel 0x00, host, sentinel 0xff
-      val tk = stringValues(postBytes("/api/v1/storage/tag_keys",
-        """{"database_name":"o_b","table":"cpu"}"""))
+      val tk = stringValues(rpcBytes("TagKeys",
+        req(_.bytes(3, where(measurementIs("cpu"))))))
       assert(tk == Seq(Seq[Byte](0), "host".getBytes(UTF_8).toSeq, Seq[Byte](-1)))
       // db-level (no table): keys merge across measurements
-      val tkDb = stringValues(postBytes("/api/v1/storage/tag_keys",
-        """{"database_name":"o_b"}"""))
+      val tkDb = stringValues(rpcBytes("TagKeys", req(_ => ())))
       assert(asStrings(tkDb.slice(1, tkDb.size - 1)) == Seq("host", "region"))
 
       // tag_values: plain key, then the reference's meta keys
-      assert(asStrings(stringValues(postBytes("/api/v1/storage/tag_values",
-        """{"database_name":"o_b","table":"cpu","tag_key":"host"}"""))) ==
-        Seq("a", "b"))
-      assert(asStrings(stringValues(postBytes("/api/v1/storage/tag_values",
-        """{"database_name":"o_b","tag_key":"_measurement"}"""))) ==
-        Seq("cpu", "mem"))
-      assert(asStrings(stringValues(postBytes("/api/v1/storage/measurement_tag_values",
-        """{"database_name":"o_b","measurement":"cpu","tag_key":"_field"}"""))) ==
-        Seq("usage"))
-      assert(asStrings(stringValues(postBytes("/api/v1/storage/tag_values",
-        """{"database_name":"o_b","tag_key":"_field"}"""))) ==
-        Seq("free", "load", "usage"))
+      assert(asStrings(stringValues(rpcBytes("TagValues", req { b =>
+        b.bytes(3, where(measurementIs("cpu"))); b.bytes(4, "host".getBytes(UTF_8))
+      }))) == Seq("a", "b"))
+      assert(asStrings(stringValues(rpcBytes("TagValues",
+        req(_.bytes(4, measurementSentinel))))) == Seq("cpu", "mem"))
+      assert(asStrings(stringValues(rpcBytes("MeasurementTagValues", req { b =>
+        b.string(2, "cpu"); b.bytes(3, fieldSentinel)
+      }))) == Seq("usage"))
+      assert(asStrings(stringValues(rpcBytes("TagValues",
+        req(_.bytes(4, fieldSentinel))))) == Seq("free", "load", "usage"))
 
       // measurement_names with and without a time range
-      assert(asStrings(stringValues(postBytes("/api/v1/storage/measurement_names",
-        """{"database_name":"o_b"}"""))) == Seq("cpu", "mem"))
-      assert(asStrings(stringValues(postBytes("/api/v1/storage/measurement_names",
-        """{"database_name":"o_b","start":200,"stop":300}"""))) == Seq("cpu"))
+      assert(asStrings(stringValues(rpcBytes("MeasurementNames", req(_ => ())))) ==
+        Seq("cpu", "mem"))
+      assert(asStrings(stringValues(rpcBytes("MeasurementNames",
+        req(_.bytes(2, range(200, 300)))))) == Seq("cpu"))
 
       // measurement_fields: (key, FieldType, last ns timestamp) per field
-      val mf = pbFields(postBytes("/api/v1/storage/measurement_fields",
-        """{"database_name":"o_b","measurement":"mem"}""")).collect {
+      val mf = pbFields(rpcBytes("MeasurementFields", req(_.string(2, "mem")))).collect {
         case (1, Right(f)) =>
           val kv = pbFields(f)
           (new String(kv.collectFirst { case (1, Right(v)) => v }.get, UTF_8),
@@ -998,15 +975,19 @@ class HttpFacadeSpec extends SparkSpec {
           }
           out.result()
         }.flatten
-      assert(int64s(postBytes("/api/v1/storage/read_series_cardinality",
-        """{"database_name":"o_b","table":"cpu"}""")) == Seq(2L))
-      assert(int64s(postBytes("/api/v1/storage/read_series_cardinality",
-        """{"database_name":"o_b"}""")) == Seq(3L))
+      assert(int64s(rpcBytes("ReadSeriesCardinality",
+        req(_.bytes(3, where(measurementIs("cpu")))))) == Seq(2L))
+      assert(int64s(rpcBytes("ReadSeriesCardinality", req(_ => ()))) == Seq(3L))
 
-      // read_group sum by host: group frame (oneof member 7) then the
-      // group's series/points pairs, per group (data.rs:75-121)
-      val rg = pbFields(postBytes("/api/v1/storage/read_group",
-        """{"database_name":"o_b","table":"cpu","aggregate":"sum","group_keys":["host"]}"""))
+      // read_group by host: group frame (oneof member 7) then the group's
+      // series/points pairs, per group (data.rs:75-121)
+      def readGroup(aggregate: Int, groupKeys: String*): Array[Byte] = req { b =>
+        b.bytes(3, where(measurementIs("cpu")))
+        groupKeys.foreach(k => b.bytes(4, k.getBytes(UTF_8)))
+        b.varintField(5, 2) // GROUP_BY
+        b.bytes(6, msg(a => a.varintField(1, aggregate.toLong)))
+      }
+      val rg = pbFields(rpcBytes("ReadGroup", readGroup(1, "host"))) // SUM
         .map { case (1, Right(frame)) => pbFields(frame).head
                case other => fail(s"unexpected field $other") }
       assert(rg.map(_._1) == Seq(7, 1, 2, 7, 1, 2))
@@ -1017,8 +998,7 @@ class HttpFacadeSpec extends SparkSpec {
         .map(java.lang.Double.longBitsToDouble) == Seq(4.0)) // 1.5 + 2.5
 
       // selector aggregate rides the per-field selected timestamp
-      val rgFirst = pbFields(postBytes("/api/v1/storage/read_group",
-        """{"database_name":"o_b","table":"cpu","aggregate":"first","group_keys":["host"]}"""))
+      val rgFirst = pbFields(rpcBytes("ReadGroup", readGroup(5, "host"))) // FIRST
         .map { case (1, Right(frame)) => pbFields(frame).head
                case other => fail(s"unexpected field $other") }
       val Right(ptsFirstA) = rgFirst(2)._2
@@ -1028,8 +1008,13 @@ class HttpFacadeSpec extends SparkSpec {
         .map(java.lang.Double.longBitsToDouble) == Seq(1.5))
 
       // read_window_aggregate: stop-labeled buckets per series
-      val rw = pbFields(postBytes("/api/v1/storage/read_window_aggregate",
-        """{"database_name":"o_b","table":"cpu","aggregate":"sum","window_every":100}"""))
+      def windowed(aggregate: Int)(window: StorageProto.Writer => Unit) = req { b =>
+        b.bytes(3, where(measurementIs("cpu")))
+        window(b)
+        b.bytes(5, msg(a => a.varintField(1, aggregate.toLong)))
+      }
+      val rw = pbFields(rpcBytes("ReadWindowAggregate",
+        windowed(1)(_.varintField(4, 100L)))) // SUM, WindowEvery 100 ns
         .map { case (1, Right(frame)) => pbFields(frame).head
                case other => fail(s"unexpected field $other") }
       assert(rw.map(_._1) == Seq(1, 2, 1, 2))
@@ -1040,53 +1025,40 @@ class HttpFacadeSpec extends SparkSpec {
         .map(java.lang.Double.longBitsToDouble) == Seq(1.5, 2.5))
 
       // windowed aggregate without an aggregate kind is a client error
-      def postStatus(path: String, body: String): Int = {
-        val c = new URI(s"http://127.0.0.1:$p$path").toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        c.setRequestMethod("POST"); c.setDoOutput(true)
-        c.getOutputStream.write(body.getBytes(UTF_8)); c.getOutputStream.close()
-        c.getResponseCode
-      }
-      assert(postStatus("/api/v1/storage/read_window_aggregate",
-        """{"database_name":"o_b","table":"cpu","aggregate":"none"}""") == 400)
+      def status(method: String, body: Array[Byte]): Int = call(p, method, body)._1
+      assert(status("ReadWindowAggregate", windowed(0)(_ => ())) == 3) // NONE
       // ...as is a windowed aggregate without any window width
-      assert(postStatus("/api/v1/storage/read_window_aggregate",
-        """{"database_name":"o_b","table":"cpu","aggregate":"sum"}""") == 400)
+      assert(status("ReadWindowAggregate", windowed(1)(_ => ())) == 3)
       // non-positive or overflowing widths are client errors too
-      assert(postStatus("/api/v1/storage/read_window_aggregate",
-        """{"database_name":"o_b","table":"cpu","aggregate":"sum","window_every":0}""") == 400)
-      assert(postStatus("/api/v1/storage/read_window_aggregate",
-        """{"database_name":"o_b","table":"cpu","aggregate":"sum",
-           "window_every_months":4294967296}""") == 400)
-      // a group key that is not a tag is a 400, not a server error
-      assert(postStatus("/api/v1/storage/read_group",
-        """{"database_name":"o_b","table":"cpu","aggregate":"sum",
-           "group_keys":["usage"]}""") == 400)
-      // an unknown database is 404 on metadata RPCs, not "empty"
-      assert(postStatus("/api/v1/storage/measurement_names",
-        """{"database_name":"nope"}""") == 404)
-      assert(postStatus("/api/v1/storage/tag_keys",
-        """{"database_name":"nope"}""") == 404)
-      // group_keys elements containing ']' survive the body parse
-      assert(HttpFacade.jsonStrArrayField(
+      assert(status("ReadWindowAggregate", windowed(1)(_.varintField(4, 0L))) == 3)
+      assert(status("ReadWindowAggregate", windowed(1)(_.bytes(7, msg(w => w.bytes(1,
+        msg(d => d.varintField(2, 4294967296L))))))) == 3) // every: 2^32 months
+      // a group key that is not a tag is a client error, not a server error
+      assert(status("ReadGroup", readGroup(1, "usage")) == 3)
+      // an unknown database is NOT_FOUND on metadata RPCs, not "empty"
+      val nope = msg(b => b.bytes(1, readSource(0x1, 0x2)))
+      assert(status("MeasurementNames", nope) == 5)
+      assert(status("TagKeys", nope) == 5)
+      // list elements containing ']' survive the JSON parse
+      assert(graft.core.Json.strArrayField(
         """{"group_keys": ["rack]1", "host"]}""", "group_keys") ==
         Seq("rack]1", "host"))
 
       // request predicates: tag equality and regex restrict the series
       // set; a field restriction reaches the projection
-      val predFrames = pbFields(postBytes("/api/v1/storage/read_filter",
-        """{"database_name":"o_b","table":"cpu","predicate_note":"",
-           "tag_eq":{"host":"a"}}"""))
+      val predFrames = pbFields(rpcBytes("ReadFilter",
+        req(_.bytes(3, where(measurementIs("cpu"), tagEq("host", "a"))))))
         .map { case (1, Right(frame)) => pbFields(frame).head
                case other => fail(s"unexpected field $other") }
       assert(predFrames.map(_._1) == Seq(1, 2)) // ONE series (host=a) + points
-      val regexFrames = pbFields(postBytes("/api/v1/storage/read_filter",
-        """{"database_name":"o_b","table":"cpu","tag_regex":{"host":"^[ab]$"}}"""))
+      val regexFrames = pbFields(rpcBytes("ReadFilter", req(_.bytes(3, where(
+        measurementIs("cpu"), cmp(R.Cmp.Regex, tagRef("host"), litRegex("^[ab]$")))))))
       assert(regexFrames.size == 4) // hosts a and b both match
-      // tag_values under a tag_eq predicate
-      assert(asStrings(stringValues(postBytes("/api/v1/storage/tag_values",
-        """{"database_name":"o_b","table":"cpu","tag_key":"host",
-           "tag_eq":{"host":"b"}}"""))) == Seq("b"))
+      // tag_values under a tag equality predicate
+      assert(asStrings(stringValues(rpcBytes("TagValues", req { b =>
+        b.bytes(3, where(measurementIs("cpu"), tagEq("host", "b")))
+        b.bytes(4, "host".getBytes(UTF_8))
+      }))) == Seq("b"))
     }
   }
 

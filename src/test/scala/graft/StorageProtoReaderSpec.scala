@@ -1,46 +1,16 @@
 package graft
 
-import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.server.{HttpFacade, StorageProto, StorageProtoReader => R}
+import graft.server.{StorageProto, StorageProtoReader => R}
+import graft.StorageRequests._
 
 /** Request-side protobuf decoding: byte-built tonic request messages
   * (storage_common.proto, predicate.proto Node trees) through the
-  * hand-rolled reader, and one end-to-end drive where the facade serves a
-  * protobuf-carried read_filter whose table arrives as the \x00
-  * _measurement sentinel — the way a real storage client addresses it. */
+  * hand-rolled reader, and end-to-end drives of the storage gRPC service
+  * where the table arrives as the \x00 _measurement sentinel — the way a
+  * real storage client addresses it. */
 class StorageProtoReaderSpec extends SparkSpec {
-
-  private def msg(f: StorageProto.Writer => Unit): Array[Byte] = {
-    val w = new StorageProto.Writer
-    f(w); w.result()
-  }
-
-  // predicate.proto Node builders (Writer omits zero enums, which is
-  // exactly what the decoder must tolerate: EQUAL=0, AND=0)
-  private def tagRef(b: Array[Byte]) = msg(w => w.varintField(1, 3).bytes(9, b))
-  private def fieldRef(name: String) = msg(w => w.varintField(1, 5).string(10, name))
-  private def litStr(s: String) = msg(w => w.varintField(1, 4).string(3, s))
-  private def litRegex(s: String) = msg(w => w.varintField(1, 4).string(8, s))
-  private def litFloat(d: Double) = msg(w => w.varintField(1, 4)
-    .sfixed64Field(7, java.lang.Double.doubleToLongBits(d)))
-  private def cmp(op: Int, l: Array[Byte], r: Array[Byte]) =
-    msg(w => w.varintField(1, 1).bytes(2, l).bytes(2, r).varintField(12, op.toLong))
-  private def logical(op: Int, children: Array[Byte]*) = msg { w =>
-    w.varintField(1, 0)
-    children.foreach(c => w.bytes(2, c))
-    w.varintField(11, op.toLong)
-  }
-  private def predicate(root: Array[Byte]) = msg(w => w.bytes(1, root))
-  private def range(start: Long, stop: Long) =
-    msg(w => w.varintField(1, start).varintField(2, stop))
-  private def readSource(org: Long, bucket: Long) = msg(w => w.bytes(1,
-    msg(s => s.string(1, "type.googleapis.com/ReadSource")
-      .bytes(2, msg(rs => rs.varintField(1, org).varintField(2, bucket))))))
-
-  private val measurementSentinel = Array(0x00.toByte)
-  private val fieldSentinel = Array(0xff.toByte)
 
   test("decodes the request family: range, source, predicate, extras") {
     val req = R.decodeReadFilter(msg { w =>
@@ -108,208 +78,119 @@ class StorageProtoReaderSpec extends SparkSpec {
   }
 
   test("facade serves protobuf read_group and tag_values end to end") {
-    val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
-    try {
-      val p = facade.boundPort
-      val w = new URI(s"http://127.0.0.1:$p/api/v2/write?org=o&bucket=b").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      w.setRequestMethod("POST"); w.setDoOutput(true)
-      w.getOutputStream.write(
-        ("cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\n" +
-          "cpu,host=b usage=5.0 100").getBytes(UTF_8))
-      w.getOutputStream.close()
-      assert(w.getResponseCode == 204)
-
-      def postProto(path: String, body: Array[Byte]): Array[Byte] = {
-        val c = new URI(s"http://127.0.0.1:$p$path?db=o_b").toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        c.setRequestMethod("POST"); c.setDoOutput(true)
-        c.setRequestProperty("Content-Type", "application/x-protobuf")
-        c.getOutputStream.write(body); c.getOutputStream.close()
-        assert(c.getResponseCode == 200, s"$path -> ${c.getResponseCode}")
-        c.getInputStream.readAllBytes()
+    withStorageGrpc(spark,
+      "cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\ncpu,host=b usage=5.0 100") { (_, p) =>
+      def rpc(method: String, body: Array[Byte]): Seq[Array[Byte]] = {
+        val (status, resp) = call(p, method, body)
+        assert(status == 0, s"$method -> grpc-status $status")
+        resp
       }
 
       // read_group: group by host, SUM, table via sentinel
       val groupReq = msg { b =>
+        b.bytes(1, source)
         b.bytes(3, predicate(cmp(R.Cmp.Equal, tagRef(measurementSentinel),
           litStr("cpu"))))
         b.bytes(4, "host".getBytes(UTF_8))
         b.varintField(5, 2) // GROUP_BY
         b.bytes(6, msg(a => a.varintField(1, 1))) // SUM
       }
-      val resp = postProto("/api/v1/storage/read_group", groupReq)
       // frame member sequence: group(7), series(1), points(2), per host
-      val members = {
-        val r = new R.Reader(resp)
-        val out = Seq.newBuilder[Int]
-        while (r.hasMore) r.key() match {
-          case (1, 2) => val f = r.sub(); out += f.key()._1; f.bytesField()
-          case (_, wt) => r.skip(wt)
-        }
-        out.result()
-      }
+      val members = frames(rpc("ReadGroup", groupReq)).map(_._1)
       assert(members == Seq(7, 1, 2, 7, 1, 2), s"got $members")
 
       // tag_values for host via protobuf tag_key bytes
-      val tvReq = msg(b => b.bytes(4, "host".getBytes(UTF_8)))
-      val tv = postProto("/api/v1/storage/tag_values", tvReq)
-      val vals = {
-        val r = new R.Reader(tv)
-        val out = Seq.newBuilder[String]
-        while (r.hasMore) r.key() match {
-          case (1, 2) => out += new String(r.bytesField(), UTF_8)
-          case (_, wt) => r.skip(wt)
-        }
-        out.result()
-      }
-      assert(vals == Seq("a", "b"))
+      val tvReq = msg { b => b.bytes(1, source); b.bytes(4, "host".getBytes(UTF_8)) }
+      assert(stringValues(rpc("TagValues", tvReq).head) == Seq("a", "b"))
 
       // tag_values with the \xff sentinel lists field names
-      val tf = postProto("/api/v1/storage/tag_values",
-        msg(b => b.bytes(4, fieldSentinel)))
-      val fr = new R.Reader(tf)
-      val fields = Seq.newBuilder[String]
-      while (fr.hasMore) fr.key() match {
-        case (1, 2) => fields += new String(fr.bytesField(), UTF_8)
-        case (_, wt) => fr.skip(wt)
-      }
-      assert(fields.result() == Seq("usage"))
-    } finally facade.stop()
+      val tf = rpc("TagValues", msg { b => b.bytes(1, source); b.bytes(4, fieldSentinel) })
+      assert(stringValues(tf.head) == Seq("usage"))
+    }
   }
 
   test("window aggregate request: singleton rule; flat fields beat the window message") {
-    val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
-    try {
-      val p = facade.boundPort
-      val w = new URI(s"http://127.0.0.1:$p/api/v2/write?org=o&bucket=b").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      w.setRequestMethod("POST"); w.setDoOutput(true)
-      w.getOutputStream.write(
-        "cpu,host=a usage=1.0 100\ncpu,host=a usage=3.0 2000000100".getBytes(UTF_8))
-      w.getOutputStream.close()
-      assert(w.getResponseCode == 204)
-
-      def post(body: Array[Byte]): HttpURLConnection = {
-        val c = new URI(
-          s"http://127.0.0.1:$p/api/v1/storage/read_window_aggregate?db=o_b").toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        c.setRequestMethod("POST"); c.setDoOutput(true)
-        c.setRequestProperty("Content-Type", "application/x-protobuf")
-        c.getOutputStream.write(body); c.getOutputStream.close()
-        c
-      }
+    withStorageGrpc(spark, "cpu,host=a usage=1.0 100\ncpu,host=a usage=3.0 2000000100") {
+      (_, p) =>
+      def post(fields: StorageProto.Writer => Unit): (Int, Seq[Array[Byte]]) =
+        call(p, "ReadWindowAggregate", msg { b => b.bytes(1, source); fields(b) })
       val measurementPred =
         predicate(cmp(R.Cmp.Equal, tagRef(measurementSentinel), litStr("cpu")))
 
       // two aggregates -> the reference's AggregateNotSingleton (expr.rs:553)
-      val two = post(msg { b =>
+      val (two, _) = post { b =>
         b.bytes(3, measurementPred)
         b.varintField(4, 1000000000L)
         b.bytes(5, msg(a => a.varintField(1, 1)))
         b.bytes(5, msg(a => a.varintField(1, 4)))
-      })
-      assert(two.getResponseCode == 400)
+      }
+      assert(two == 3)
 
       // aggregate enum outside 0-7 -> unconvertible, not degraded to raw
-      val badEnum = post(msg { b =>
+      val (badEnum, _) = post { b =>
         b.bytes(3, measurementPred)
         b.varintField(4, 1000000000L)
         b.bytes(5, msg(a => a.varintField(1, 9)))
-      })
-      assert(badEnum.getResponseCode == 400)
+      }
+      assert(badEnum == 3)
 
       // a Duration with BOTH months and nsecs nonzero -> the reference's
       // convert_duration rejects mixed units
-      val mixed = post(msg { b =>
+      val (mixed, _) = post { b =>
         b.bytes(3, measurementPred)
         b.bytes(5, msg(a => a.varintField(1, 1)))
         b.bytes(7, msg(x => x.bytes(1,
           msg(d => d.varintField(1, 1000000000L).varintField(2, 3)))))
-      })
-      assert(mixed.getResponseCode == 400)
+      }
+      assert(mixed == 3)
 
       // nonzero flat WindowEvery wins over a conflicting window message
       // (expr.rs:568-570): 1s buckets -> the two points land in two
       // windows; if the (bogus 1000s) window message won there'd be one
-      val resp = post(msg { b =>
+      val (status, resp) = post { b =>
         b.bytes(3, measurementPred)
         b.varintField(4, 1000000000L) // flat: 1s
         b.bytes(5, msg(a => a.varintField(1, 1))) // SUM
         b.bytes(7, msg(x => x.bytes(1, msg(d => d.varintField(1, 1000000000000L)))))
-      })
-      assert(resp.getResponseCode == 200)
-      val r = new R.Reader(resp.getInputStream.readAllBytes())
+      }
+      assert(status == 0)
       var bucketStamps = 0
-      while (r.hasMore) r.key() match {
-        case (1, 2) =>
-          val f = r.sub()
-          val (member, _) = f.key()
-          val body = f.bytesField()
-          if (member == 2) { // float points frame: count its timestamps
-            val pf = new R.Reader(body)
-            while (pf.hasMore) pf.key() match {
-              case (1, 2) =>
-                val packed = new R.Reader(pf.bytesField())
-                while (packed.hasMore) { packed.fixed64(); bucketStamps += 1 }
-              case (_, wt) => pf.skip(wt)
-            }
+      frames(resp).foreach { case (member, body) =>
+        if (member == 2) { // float points frame: count its timestamps
+          val pf = new R.Reader(body)
+          while (pf.hasMore) pf.key() match {
+            case (1, 2) =>
+              val packed = new R.Reader(pf.bytesField())
+              while (packed.hasMore) { packed.fixed64(); bucketStamps += 1 }
+            case (_, wt) => pf.skip(wt)
           }
-        case (_, wt) => r.skip(wt)
+        }
       }
       assert(bucketStamps == 2,
         s"1s flat windows -> 2 buckets; the bogus window message lost ($bucketStamps)")
-    } finally facade.stop()
+    }
   }
 
   test("facade serves a protobuf-carried read_filter end to end") {
-    val facade = new HttpFacade(spark, port = 0, clockNs = () => 42L)
-    try {
-      val p = facade.boundPort
-      // ingest over the HTTP write path: db name o_b
-      val w = new URI(s"http://127.0.0.1:$p/api/v2/write?org=o&bucket=b").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      w.setRequestMethod("POST"); w.setDoOutput(true)
-      w.getOutputStream.write(
-        ("cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\n" +
-          "cpu,host=b usage=5.0 100").getBytes(UTF_8))
-      w.getOutputStream.close()
-      assert(w.getResponseCode == 204)
-
+    withStorageGrpc(spark,
+      "cpu,host=a usage=1.5 100\ncpu,host=a usage=2.5 200\ncpu,host=b usage=5.0 100") { (_, p) =>
       // the wire request: range [150, 300) AND host = 'a', table via the
-      // \x00 sentinel; db via ?db= (string-named database bridge)
+      // \x00 sentinel; db via read_source
       val reqBytes = msg { b =>
-        b.bytes(1, readSource(1, 2))
+        b.bytes(1, source)
         b.bytes(2, range(150, 300))
         b.bytes(3, predicate(logical(0,
           cmp(R.Cmp.Equal, tagRef(measurementSentinel), litStr("cpu")),
           cmp(R.Cmp.Equal, tagRef("host".getBytes(UTF_8)), litStr("a")))))
       }
-      val conn = new URI(
-        s"http://127.0.0.1:$p/api/v1/storage/read_filter?db=o_b").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      conn.setRequestMethod("POST"); conn.setDoOutput(true)
-      conn.setRequestProperty("Content-Type", "application/x-protobuf")
-      conn.getOutputStream.write(reqBytes); conn.getOutputStream.close()
-      assert(conn.getResponseCode == 200)
-      val resp = conn.getInputStream.readAllBytes()
+      val (status, resp) = call(p, "ReadFilter", reqBytes)
+      assert(status == 0)
 
-      // decode the ReadResponse with the same reader: frames = field 1,
-      // series oneof member 1 / float points member 2
-      val frames = {
-        val r = new R.Reader(resp)
-        val out = Seq.newBuilder[(Int, Array[Byte])]
-        while (r.hasMore) r.key() match {
-          case (1, 2) =>
-            val f = r.sub()
-            val (member, _) = f.key()
-            out += member -> f.bytesField()
-          case (_, wt) => r.skip(wt)
-        }
-        out.result()
-      }
-      assert(frames.map(_._1) == Seq(1, 2), "one series, one points frame")
-      val pts = new R.Reader(frames(1)._2)
+      // decode the ReadResponse messages with the same reader: frames =
+      // field 1, series oneof member 1 / float points member 2
+      val fs = frames(resp)
+      assert(fs.map(_._1) == Seq(1, 2), "one series, one points frame")
+      val pts = new R.Reader(fs(1)._2)
       var ts: Seq[Long] = Nil
       while (pts.hasMore) pts.key() match {
         case (1, 2) =>
@@ -321,15 +202,8 @@ class StorageProtoReaderSpec extends SparkSpec {
       }
       assert(ts == Seq(200L), "range + tag predicate applied")
 
-      // malformed protobuf -> 400, not a stack trace
-      val badConn = new URI(
-        s"http://127.0.0.1:$p/api/v1/storage/read_filter?db=o_b").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      badConn.setRequestMethod("POST"); badConn.setDoOutput(true)
-      badConn.setRequestProperty("Content-Type", "application/x-protobuf")
-      badConn.getOutputStream.write(Array[Byte](0x0a, 0x7f, 0x01))
-      badConn.getOutputStream.close()
-      assert(badConn.getResponseCode == 400)
-    } finally facade.stop()
+      // malformed protobuf -> INVALID_ARGUMENT, not a stack trace
+      assert(call(p, "ReadFilter", Array[Byte](0x0a, 0x7f, 0x01))._1 == 3)
+    }
   }
 }

@@ -100,12 +100,12 @@ class OnePartitionReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       run(f.planReadFilter(Db, m, RpcPredicate()).get)
     },
     "planReadGroup" -> { (f, m) =>
-      run(f.planReadGroup(Db, m, RpcPredicate(), "sum", Seq("region"))
-        .fold(e => fail(e._2), identity))
+      run(f.planReadGroup(Db, m, RpcPredicate(), InfluxRpc.AggKind.Sum, Seq("region"))
+        .fold(fail(_), identity))
     },
     "planReadWindowAggregate" -> { (f, m) =>
-      run(f.planReadWindowAggregate(Db, m, RpcPredicate(), "sum", Some(100L),
-        None, 0L, 0).fold(e => fail(e._2), identity))
+      run(f.planReadWindowAggregate(Db, m, RpcPredicate(), InfluxRpc.AggKind.Sum,
+        Some(100L), None, 0L, 0).fold(fail(_), identity))
     },
     "tag values" -> { (f, m) =>
       run(InfluxRpc.tagValues(f.measurementView(Db, m).get, "host",
