@@ -12,10 +12,14 @@ import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pinned
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{IoxSchema, ResultRows}
 import graft.operators.{InfluxRpc, Upsert}
@@ -221,8 +225,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * advances, so the client's error truthfully means "nothing landed"
     * (no half-applied write that is queryable in memory but absent after
     * restart). */
-  private def appendChunks(db: String,
-      chunks: Seq[(String, DataFrame, Long)]): Unit = persistLock(db).synchronized {
+  private def appendChunks(db: String, written: Seq[(String, DataFrame, Long)])
+      : Unit = persistLock(db).synchronized {
+    val chunks = written.map { case (m, df, rows) => (m, Pinned.onePartition(df), rows) }
     val fids = dataDir.map { _ =>
       chunks.map { case (_, df, _) =>
         val fid = nextChunkFid.getAndIncrement()
@@ -318,7 +323,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     *
     * A measurement with one chunk reads that chunk. With more, the read
     * goes through a per-(db, measurement) snapshot: the deduplicated
-    * frame behind a lazy `localCheckpoint(eager = false)`, so a read
+    * frame behind a lazy local checkpoint ([[Pinned]]), so a read
     * plans over one checkpointed scan whatever the chunk count (the role
     * the reference's read-buffer compaction plays, data_management.md).
     * The snapshot is keyed by the exact chunk frames it covers, compared
@@ -344,29 +349,28 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * reference lets Spark's ContextCleaner free the blocks once no plan
     * holds them.
     *
-    * The incremental fold plans with no exchange when AQE would give its
+    * The incremental fold is local — one narrow merge task
+    * ([[SnapshotMerge]]), no Spark SQL plan — when AQE would give its
     * output one partition anyway: every input is one partition (see
     * [[onePartition]]) and the fold's size bound — the rows its chunks
     * recorded at write time times the schema's row width — is under the
-    * shuffle size at which AQE would split the dedup output. Its inputs
-    * union under `coalesce(1)`, so the partial and final aggregate run in
-    * one stage. A full rebuild, a snapshot of more than one partition,
-    * and a fold past that size keep the dedup shuffle, so AQE still
-    * decides how many partitions a growing snapshot gets and a long-lived
-    * snapshot is never pinned to one.
+    * shuffle size at which AQE would split the dedup output. The task
+    * reads the added chunks into a key-ordered map and streams the
+    * key-sorted snapshot once. A full rebuild, a snapshot of more than
+    * one partition, and a fold past that size keep the dedup shuffle, so
+    * AQE still decides how many partitions a growing snapshot gets and a
+    * long-lived snapshot is never pinned to one.
     *
-    * A view whose data is one partition is handed to the planners as
-    * one partition (`coalesce(1)`, a narrow no-op that reports
-    * `SinglePartition`): a snapshot that AQE sized to one partition or
-    * folded without an exchange, and a chunk built from one (every LP,
-    * write_pb and do_put write). Catalyst cannot see that by itself — a
-    * checkpoint taken under AQE and a frame over a parallelized RDD both
-    * report an unknown partitioning — so every aggregate, ORDER BY and
-    * series-set conversion would plan a shuffle over a few kilobytes.
-    * Marked, a read runs as one job with no exchange. Everything else
-    * plans as before: parquet chunks reloaded from [[dataDir]] and a
-    * snapshot with more than one partition. Only the view is marked,
-    * never the stored snapshot or chunk. */
+    * Data of one partition reports `SinglePartition` to the planners: a
+    * chunk built from one (every LP, write_pb and do_put write, wrapped
+    * when [[appendChunks]] stores it), a snapshot that AQE sized to one
+    * partition, and every local fold. Catalyst cannot see that by itself
+    * — a checkpoint taken under AQE and a frame over a parallelized RDD
+    * both report an unknown partitioning — so every aggregate, ORDER BY
+    * and series-set conversion would plan a shuffle over a few
+    * kilobytes; reported, a read runs as one job with no exchange. Everything
+    * else plans as before: parquet chunks reloaded from [[dataDir]] and a
+    * snapshot with more than one partition. */
   def measurementView(db: String, measurement: String): Option[DataFrame] =
     databases.get(db).flatMap { chunks =>
       val mine = chunks.collect { case (m, df) if m == measurement => df }
@@ -374,21 +378,19 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         if (mine.isEmpty) None
         else if (mine.size == 1) Some(mine.head)
         else Some(snapshot(db, measurement, mine))
-      merged.map(df => applyTombstones(db, measurement, markOnePartition(df)))
+      merged.map(applyTombstones(db, measurement, _))
     }
 
-  /** Whether `df` scans an existing RDD of one partition (a chunk or a
-    * checkpoint). */
-  private def onePartition(df: DataFrame): Boolean =
+  /** The existing RDD `df` scans (a chunk or a checkpoint), if any. */
+  private def scanned(df: DataFrame): Option[RDD[InternalRow]] =
     df.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.getNumPartitions == 1
-      case _ => false
+      case r: LogicalRDD => Some(r.rdd)
+      case _ => None
     }
 
-  /** `df` as a one-partition plan when [[onePartition]]; otherwise `df`
-    * unchanged. */
-  private def markOnePartition(df: DataFrame): DataFrame =
-    if (onePartition(df)) df.coalesce(1) else df
+  /** Whether `df` scans an existing RDD of one partition. */
+  private def onePartition(df: DataFrame): Boolean =
+    scanned(df).exists(_.getNumPartitions == 1)
 
   /** Rows of each in-memory chunk frame, recorded when it is appended and
     * keyed by the frame itself (`Dataset` keeps reference equality).
@@ -446,33 +448,49 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
 
   /** Whether a read has stored the blocks of checkpointed frame `df`. */
   private def checkpointed(df: DataFrame): Boolean =
-    df.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.isCheckpointed
-      case _ => true
-    }
+    scanned(df).forall(_.isCheckpointed)
 
   /** Union `base` (if any) then `added` by name and collapse equal (tags,
     * time) keys, later frames winning per field (last non-null), behind a
-    * lazy checkpoint. Exchange-free, and counted as such, when there is a
-    * base, every input is one partition and `rows` times the row width is
-    * under [[aqeSplitBytes]]; see [[measurementView]]. */
+    * lazy checkpoint. A local fold — there is a base, every input is one
+    * partition, `rows` times the row width is under [[aqeSplitBytes]] and
+    * [[SnapshotMerge.mergeable]] holds — is one narrow merge task
+    * ([[SnapshotMerge]]), counted as such; anything else is the dedup
+    * shuffle. See [[measurementView]]. */
   private def fold(base: Option[DataFrame], added: Seq[DataFrame],
       rows: Option[Long]): DataFrame = {
     val frames = base.toSeq ++ added
-    val merged = IoxSchema.mergeUnion(frames.zipWithIndex.map {
-      case (df, i) => df.withColumn("__seq", lit(i.toLong))
-    })
+    val schemas = frames.map(_.schema)
+    val shape = foldShape(schemas)
     // Catalyst's per-row size estimate: an 8-byte header plus each
     // column's default size
     val local = base.isDefined && frames.forall(onePartition) &&
-      rows.exists(_ * (8L + merged.schema.defaultSize) < aqeSplitBytes)
-    if (local) snapshotLocalFolds.incrementAndGet()
-    val pk = merged.schema.fields.collect {
-      case f if IoxSchema.categoryOf(f).exists(c =>
-        c == IoxSchema.Tag || c == IoxSchema.Time) => f.name
-    }.toSeq
-    Upsert.dedup(if (local) merged.coalesce(1) else merged, pk, "__seq")
-      .localCheckpoint(eager = false)
+      rows.exists(_ * (8L + shape.merged.defaultSize) < aqeSplitBytes) &&
+      SnapshotMerge.mergeable(schemas, shape)
+    if (local) {
+      snapshotLocalFolds.incrementAndGet()
+      Pinned.rows(spark,
+        SnapshotMerge.merge(frames.flatMap(scanned), schemas, shape), shape.out)
+    } else {
+      val merged = IoxSchema.mergeUnion(frames.zipWithIndex.map {
+        case (df, i) =>
+          Pinned.anyPartitioning(df).withColumn(SnapshotMerge.SeqCol, lit(i.toLong))
+      })
+      Pinned.lazily(Upsert.dedup(merged,
+        shape.out.fieldNames.take(shape.pkWidth).toSeq, SnapshotMerge.SeqCol))
+    }
+  }
+
+  /** [[SnapshotMerge.Shape]] per list of fold input schemas: the same
+    * few lists recur, one per measurement and fold width, so the analysis
+    * runs once for each. */
+  private val foldShapes = TrieMap.empty[Seq[StructType], SnapshotMerge.Shape]
+
+  private def foldShape(schemas: Seq[StructType]): SnapshotMerge.Shape = {
+    // a bound, not an eviction policy: a facade whose measurements keep
+    // changing shape re-analyses rather than growing without limit
+    if (foldShapes.size > 1024) foldShapes.clear()
+    foldShapes.getOrElseUpdate(schemas, SnapshotMerge.shapeOf(spark, schemas))
   }
 
   /** The shuffle size above which AQE would split the dedup output into
@@ -1054,7 +1072,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         // SAME per-measurement store as LP/protobuf writes (1.x
         // back-reference semantics: GROUP BY dims become tags, aggregate
         // columns become fields, a time-less aggregate lands at epoch 0).
-        // The snapshot is pinned with localCheckpoint so later source
+        // The snapshot is pinned with a local checkpoint so later source
         // writes cannot rewrite history, like a physical 1.x INTO write.
         // KNOWN TRADEOFF: the checkpoint executes the INTO's Spark job
         // while the shared planning lock is held, so a long INTO delays
@@ -1078,8 +1096,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         val projected =
           if (out.columns.contains("time")) out.select(metaCols: _*)
           else out.select(metaCols :+ lit(0L).as("time", meta(IoxSchema.Time)): _*)
-        val snap = projected.localCheckpoint()
-        val written = snap.count()
+        val (snap, written) = Pinned.eagerly(projected)
         appendChunks(db, Seq((target, snap, written)))
         import spark.implicits._
         Right(Some(("result", Seq.empty[String],

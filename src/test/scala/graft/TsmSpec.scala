@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   * mapper.rs:650-745): block/measurement counts, time range, org/bucket
   * ids, per-block value counts, and the cpu measurement's tag/field
   * columns. Those files cannot be rebuilt in this repo, so each test that reads
-  * one cancels (`referenceFile`) where the reference checkout is absent. */
+  * one cancels (`referenceFile`) where the reference checkout is absent.
+  * The generation-shadowing, shard-directory and RPC checks also run over
+  * small committed fixtures (`src/test/resources/tsm/`) that [[TsmWriter]]
+  * writes. */
 class TsmSpec extends SparkSpec {
 
   private def gunzip(path: java.nio.file.Path): Array[Byte] = {
@@ -129,20 +132,23 @@ class TsmSpec extends SparkSpec {
     }
   }
 
-  test("a later generation's rewrite of the same points shadows, " +
-      "never duplicates") {
-    // the same file under two generation names: every (series, time,
-    // field) arrives twice; the pivot's file-arrival last-write-wins
-    // must collapse them to the single-file row count
-    val src = mergeTsm("merge_a.tsm.gz")
+  /** The committed fixture `name` (written by [[TsmWriter]]). */
+  private def committed(name: String): java.nio.file.Path =
+    java.nio.file.Paths.get(getClass.getResource(s"/tsm/$name").toURI)
+
+  /** The same file under two generation names: every (series, time,
+    * field) arrives twice; the pivot's file-arrival last-write-wins must
+    * collapse them to the single-file row count. `ext` is the file
+    * extension (`.tsm` or `.tsm.gz`). */
+  private def checkShadowing(src: java.nio.file.Path, ext: String): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-tsm-shadow")
     val one = java.nio.file.Files.createTempDirectory("graft-tsm-one")
-    java.nio.file.Files.copy(src, one.resolve("000000001-000000001.tsm.gz"))
-    java.nio.file.Files.copy(src, tmp.resolve("000000001-000000001.tsm.gz"))
-    java.nio.file.Files.copy(src, tmp.resolve("000000002-000000001.tsm.gz"))
+    java.nio.file.Files.copy(src, one.resolve(s"000000001-000000001$ext"))
+    java.nio.file.Files.copy(src, tmp.resolve(s"000000001-000000001$ext"))
+    java.nio.file.Files.copy(src, tmp.resolve(s"000000002-000000001$ext"))
 
-    val single = Tsm.ingest(spark, one.toString + "/*.tsm.gz")
-    val doubled = Tsm.ingest(spark, tmp.toString + "/*.tsm.gz")
+    val single = Tsm.ingest(spark, one.toString + s"/*$ext")
+    val doubled = Tsm.ingest(spark, tmp.toString + s"/*$ext")
     assert(doubled.keySet == single.keySet)
     doubled.foreach { case (m, df) =>
       assert(df.count() == single(m).count(),
@@ -150,33 +156,82 @@ class TsmSpec extends SparkSpec {
     }
   }
 
-  test("same-basename files in different shard directories stay distinct") {
-    // real 1.x shard trees restart generation-sequence numbering per
-    // shard dir, so <root>/12/000000001-000000001.tsm and
-    // <root>/13/000000001-000000001.tsm are DIFFERENT files; file
-    // identity (and so the arrival rank) must key on the full path —
-    // basename identity merged them (r13 advice)
-    val src = mergeTsm("merge_a.tsm.gz")
+  /** Real 1.x shard trees restart generation-sequence numbering per shard
+    * dir, so <root>/12/000000001-000000001.tsm and
+    * <root>/13/000000001-000000001.tsm are DIFFERENT files; file identity
+    * (and so the arrival rank) must key on the full path — basename
+    * identity merged them. */
+  private def checkShardDirectories(src: java.nio.file.Path, ext: String): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft-tsm-shards")
     for (shard <- Seq("12", "13")) {
       val d = root.resolve(shard)
       java.nio.file.Files.createDirectory(d)
-      java.nio.file.Files.copy(src, d.resolve("000000001-000000001.tsm.gz"))
+      java.nio.file.Files.copy(src, d.resolve(s"000000001-000000001$ext"))
     }
-    val pts = Tsm.readPoints(spark, root.toString + "/*/*.tsm.gz")
+    val pts = Tsm.readPoints(spark, root.toString + s"/*/*$ext")
     assert(pts.select("file").distinct().count() == 2,
       "full-path file identity collapsed same-basename files across dirs")
     // identical content in both shards: the pivot still collapses each
     // (series, time, field) to one row, by path-order last-write-wins
     val one = java.nio.file.Files.createTempDirectory("graft-tsm-shard-one")
-    java.nio.file.Files.copy(src, one.resolve("000000001-000000001.tsm.gz"))
-    val single = Tsm.ingest(spark, one.toString + "/*.tsm.gz")
-    val both = Tsm.ingest(spark, root.toString + "/*/*.tsm.gz")
+    java.nio.file.Files.copy(src, one.resolve(s"000000001-000000001$ext"))
+    val single = Tsm.ingest(spark, one.toString + s"/*$ext")
+    val both = Tsm.ingest(spark, root.toString + s"/*/*$ext")
     assert(both.keySet == single.keySet)
     both.foreach { case (m, df) =>
       assert(df.count() == single(m).count(),
         s"$m: cross-directory duplicates changed the row count")
     }
+  }
+
+  test("a later generation's rewrite of the same points shadows, " +
+      "never duplicates") {
+    checkShadowing(mergeTsm("merge_a.tsm.gz"), ".tsm.gz")
+  }
+
+  test("same-basename files in different shard directories stay distinct") {
+    checkShardDirectories(mergeTsm("merge_a.tsm.gz"), ".tsm.gz")
+  }
+
+  test("committed fixtures: TsmWriter rewrites them byte for byte, and they decode to what it wrote") {
+    val written = TsmWriter.fixtures.map { case (name, series) =>
+      (name, series, TsmWriter.write(series))
+    }
+    if (sys.env.contains("GRAFT_REGEN_GOLDEN")) written.foreach { case (name, _, bytes) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get("src/test/resources/tsm", name), bytes)
+    }
+    written.foreach { case (name, series, bytes) =>
+      assert(java.nio.file.Files.readAllBytes(committed(name)).sameElements(bytes),
+        s"$name differs from TsmWriter's output (GRAFT_REGEN_GOLDEN=1 rewrites it)")
+      val got = Tsm.decodeFile(bytes).map { p =>
+        (p.measurement, p.tags, p.field, p.time,
+          Seq(p.fval, p.ival, p.uval, p.sval, p.bval).flatten.map(_.toString))
+      }.toSeq.sortBy(p => (p._1, p._3, p._2.toSeq.sorted.mkString, p._4))
+      val want = series.flatMap(s => s.points.map { case (t, v) =>
+        (s.measurement, s.tags.toMap, s.field, t, Seq(v.toString))
+      }).sortBy(p => (p._1, p._3, p._2.toSeq.sorted.mkString, p._4))
+      assert(got == want, name)
+    }
+  }
+
+  test("committed fixtures: a later generation's rewrite shadows, never duplicates") {
+    checkShadowing(committed("000000001-000000001.tsm"), ".tsm")
+    // the real second generation: its rewritten value wins, its repeated
+    // points add no row
+    val dir = committed("000000001-000000001.tsm").getParent.toString
+    val gen1 = java.nio.file.Files.createTempDirectory("graft-tsm-gen1")
+    java.nio.file.Files.copy(committed("000000001-000000001.tsm"),
+      gen1.resolve("000000001-000000001.tsm"))
+    val cpu = Tsm.ingest(spark, dir + "/*.tsm")("cpu")
+    assert(cpu.count() == Tsm.ingest(spark, gen1.toString + "/*.tsm")("cpu").count())
+    assert(cpu.count() == 12)
+    val a = cpu.filter(col("host") === "a").orderBy("time")
+      .select("usage_user").collect().map(_.getDouble(0)).toSeq
+    assert(a == Seq(0.0, 1.5, 99.0, 4.5, 6.0, 7.5))
+  }
+
+  test("committed fixtures: same-basename files in different shard directories stay distinct") {
+    checkShardDirectories(committed("000000001-000000001.tsm"), ".tsm")
   }
 
   test("a field whose blocks disagree on type across files fails loudly") {
@@ -206,16 +261,25 @@ class TsmSpec extends SparkSpec {
   }
 
   test("an ingested TSM measurement drives the RPC query layer") {
+    checkRpc(mergeTsm("merge_a.tsm.gz"), "merge_a.tsm.gz")
+  }
+
+  test("committed fixtures: an ingested TSM measurement drives the RPC query layer") {
+    checkRpc(committed("000000001-000000001.tsm"), "000000001-000000001.tsm")
+  }
+
+  /** `src`, copied in as `name`: its `cpu` measurement, tagged, answers
+    * the storage RPC metadata and grouped reads. */
+  private def checkRpc(src: java.nio.file.Path, name: String): Unit = {
     import org.apache.spark.sql.types.MetadataBuilder
     import graft.core.{IoxSchema, RpcPredicate}
     import graft.operators.InfluxRpc
-    val src = mergeTsm("merge_a.tsm.gz")
     val tmp = java.nio.file.Files.createTempDirectory("graft-tsm-rpc")
-    java.nio.file.Files.copy(src, tmp.resolve("merge_a.tsm.gz"))
-    val cpu = Tsm.ingest(spark, tmp.toString + "/*.tsm.gz")("cpu")
+    java.nio.file.Files.copy(src, tmp.resolve(name))
+    val cpu = Tsm.ingest(spark, tmp.toString + "/" + name)("cpu")
     def meta(cat: String) = new MetadataBuilder()
       .putString(IoxSchema.CategoryKey, cat).build()
-    val pts = Tsm.readPoints(spark, tmp.toString + "/*.tsm.gz")
+    val pts = Tsm.readPoints(spark, tmp.toString + "/" + name)
     val tagCols = pts.filter(col("measurement") === "cpu")
       .select(explode(map_keys(col("tags")))).distinct()
       .collect().map(_.getString(0)).toSet

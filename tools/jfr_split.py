@@ -19,6 +19,12 @@ JFR samples a bounded number of threads per sampling period, so a count is
 not CPU time: compare shares within one recording, or the same bucket
 across two recordings of the same workload, not absolute counts.
 
+The executor threads do a read's Spark work, the first read after a write
+computing and storing the snapshot fold among it; split them with
+`--threads 'Executor task'` (local mode names them "Executor task launch
+worker for task ..."). The "spark: block store", "spark: SizeEstimator"
+and "spark: sort/aggregate" buckets are for them.
+
 A recording of the benchmark, with `perfbench/run.py` unchanged:
 
     JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=stackdepth=512 \\
@@ -45,6 +51,11 @@ BUCKETS = [
      r"\.WholeStageCodegenExec\.doCodeGen|\.expressions\.codegen\.CodeGenerator|"
      r"^org\.codehaus\.janino\."),
     ("spark: SparkContext.runJob", r"^org\.apache\.spark\.SparkContext\.runJob"),
+    ("spark: block store", r"^org\.apache\.spark\.storage\.BlockManager\.doPutIterator"),
+    ("spark: SizeEstimator", r"^org\.apache\.spark\.util\.SizeEstimator"),
+    ("spark: sort/aggregate",
+     r"^org\.apache\.spark\.sql\.execution\.(SortExec|aggregate\.SortAggregateExec)[.$]|"
+     r"\.UnsafeExternal(Row)?Sorter\."),
     ("graft: snapshot fold",
      r"^graft\.server\.HttpFacade\.(\S*\$)?(snapshot|fold)(\$|$)"),
     ("graft: view registration",
@@ -177,17 +188,32 @@ def selftest():
              "$anonfun$lazyOptimizedPlan$1"),
             ("graft.server.HttpFacade", "graft$server$HttpFacade$$fold"),
             ("graft.server.HttpFacade", "snapshot")]
+    # an executor storing a fold: sizing the rows under the block store,
+    # then sorting them for the aggregate
+    size = [("org.apache.spark.util.SizeEstimator$", "visitSingleObject"),
+            ("org.apache.spark.storage.memory.MemoryStore", "putIterator"),
+            ("org.apache.spark.storage.BlockManager", "doPutIterator")]
+    sort = [("org.apache.spark.util.collection.unsafe.sort.UnsafeExternalSorter",
+             "insertRecord"),
+            ("org.apache.spark.sql.execution.UnsafeExternalRowSorter", "sort"),
+            ("org.apache.spark.sql.execution.SortExec", "$anonfun$doExecute$1"),
+            ("org.apache.spark.sql.execution.aggregate.SortAggregateExec",
+             "$anonfun$doExecute$1"),
+            ("org.apache.spark.storage.BlockManager", "doPutIterator")]
+    worker = "Executor task launch worker for task 0.0 in stage 1.0 (TID 1)"
     recording = {"recording": {"events": [
         event("2026-01-01T00:00:00.000000001Z", "grpc-dispatch", clean),
         event("2026-01-01T00:00:08.5Z", "http-facade", fold),
         event("2026-01-01T00:00:09Z", "grpc-dispatch", clean),
         event("2026-01-01T00:00:10.123456789+00:00", "grpc-dispatch", fold),
         event("2026-01-01T00:00:10Z", "executor task launch worker", clean),
+        event("2026-01-01T00:00:10Z", worker, size),
+        event("2026-01-01T00:00:10Z", worker, sort),
     ]}}
     text = json.dumps(recording, indent=2)
     # a tiny read chunk makes every event span several reads
     got = list(events(io.StringIO(text), chunk=7))
-    assert len(got) == 5 and got[3]["values"]["startTime"].startswith("2026")
+    assert len(got) == 7 and got[3]["values"]["startTime"].startswith("2026")
     n, counts = split(samples(io.StringIO(text), DEFAULT_THREADS))
     assert n == 4, n
     # in: every bucket on the stack; inner: the innermost one only
@@ -203,6 +229,14 @@ def selftest():
     assert n == 3 and counts["spark: ClosureCleaner"] == [1, 1], (n, counts)
     n, _ = split(samples(io.StringIO(text), "executor"))
     assert n == 1
+    n, counts = split(samples(io.StringIO(text), "Executor task"))
+    assert n == 2, n
+    assert counts["spark: block store"] == [2, 0]
+    assert counts["spark: SizeEstimator"] == [1, 1]
+    assert counts["spark: sort/aggregate"] == [1, 1]
+    assert counts["spark: ClosureCleaner"] == [0, 0]
+    assert buckets_of(["org.apache.spark.sql.execution.SortExecHelper.x"]) == \
+        (frozenset(), None)
     assert parse_time("2026-01-01T00:00:01.5Z") - parse_time("2026-01-01T00:00:00Z") == 1.5
     out = io.StringIO()
     report(4, {"a": [1, 0], "b": [3, 2]}, out)
