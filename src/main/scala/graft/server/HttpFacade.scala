@@ -62,25 +62,23 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     dataDir: Option[String] = None) {
   import HttpFacade._
 
-  /** measurement -> ordered chunks (one per accepted write batch). */
-  private val databases = TrieMap.empty[String, Vector[(String, DataFrame)]]
+  /** One chunk: one accepted write batch of one measurement.
+    *  - `rows`: the rows recorded at append; None for a parquet chunk
+    *    reloaded from [[dataDir]].
+    *  - `stage`: the lifecycle label the management actions move
+    *    (chunk_metadata.rs ChunkStorage: open → closed → moved). The chunk
+    *    STAYS queryable through every stage; only the label moves.
+    *  - `fid`: with [[dataDir]] set, the parquet file id backing it. File
+    *    ids are never reused: a dropped chunk's directory is simply no
+    *    longer referenced. */
+  private case class Chunk(measurement: String, frame: DataFrame,
+      rows: Option[Long], stage: String, fid: Option[Long])
 
-  /** With [[dataDir]] set, the parquet file id backing each chunk of a
-    * db's chunk vector (same order); the manifest file records the
-    * (fid, measurement) sequence, so a restarted facade can rebuild the
-    * exact chunk vector. File ids are never reused — a dropped chunk's
-    * directory is simply no longer referenced. */
-  private val chunkFiles = TrieMap.empty[String, Vector[Long]]
+  /** db -> its chunks in write order. A chunk's management id is its
+    * position here. Every change to a vector reads and rewrites it under
+    * [[persistLock]]. */
+  private val databases = TrieMap.empty[String, Vector[Chunk]]
   private val nextChunkFid = new AtomicLong
-
-  /** Chunk lifecycle stages set by the management actions, keyed by
-    * (db, chunk index); a chunk with no entry is OpenMutableBuffer. The
-    * chunk STAYS queryable through every stage — only its storage label
-    * moves, mirroring the reference's open → closed → moved state machine
-    * (chunk_metadata.rs ChunkStorage). */
-  private val chunkStages = TrieMap.empty[(String, Int), String]
-  private def chunkStage(db: String, idx: Int): String =
-    chunkStages.getOrElse((db, idx), "OpenMutableBuffer")
 
   /** 1.x DELETE tombstones, keyed (db, measurement): each entry is the
     * deleted region as (inclusive lo ns, exclusive hi ns, residual tag
@@ -150,9 +148,10 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   // (tests/end_to_end_cases/management_api.rs: rules survive restart).
   // With `dataDir` set this facade does the same: a rules.pb per
   // database, a server_id file, and every accepted write batch written
-  // through to `<db>/chunks/c<fid>` parquet with a manifest pinning the
-  // chunk-vector order. Reloaded chunks surface as ObjectStoreOnly —
-  // their bytes live on disk, the reference's post-restart stage.
+  // through to `<db>/chunks/c<fid>` parquet with a manifest of the chunk
+  // vector's (fid, measurement) records in order. Reloaded chunks
+  // surface as ObjectStoreOnly — their bytes live on disk, the
+  // reference's post-restart stage.
   // Purely in-memory sidecars the reference also rebuilds from scratch
   // on restart (operation records, 1.x DELETE tombstones, remotes)
   // reset. With dataDir = None (the default) nothing is written.
@@ -161,12 +160,11 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     s"${dataDir.get}/${URLEncoder.encode(db, "UTF-8")}"
 
   /** Per-DATABASE mutation locks: the HTTP pool is multi-threaded, and
-    * the manifest pairs two structures (`databases`, `chunkFiles`) that
-    * must advance together — two interleaved appends to one db would
-    * otherwise pair file ids with the wrong measurements
-    * (cross-measurement corruption after restart). Also taken WITHOUT a
-    * dataDir: the DROP path must not lose a concurrent append between
-    * its read and write of the chunk vector. The invariant is strictly
+    * every change to a db's chunk vector (an append, DROP MEASUREMENT, a
+    * stage move) reads the vector and writes it back. Without the lock,
+    * two interleaved changes would lose one, a stage move racing a drop
+    * would label the chunk that slid into the old position, and the
+    * manifest written after could miss a chunk. The invariant is strictly
     * per-db, so the lock is too — a slow parquet write to one database
     * never convoys writes to another; within one db, holding the lock
     * across the parquet write is the price of a consistent manifest. */
@@ -208,43 +206,33 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   /** Rewrite `db`'s chunk manifest: one `fid measurement` line per chunk
     * in vector order (measurement URL-encoded — names may hold spaces).
     * Call only while holding [[persistLock]]. */
-  private def writeManifest(db: String): Unit = {
-    val fids = chunkFiles.getOrElse(db, Vector.empty)
-    val ms = databases.getOrElse(db, Vector.empty).map(_._1)
+  private def writeManifest(db: String): Unit =
     atomicWrite(Paths.get(dbDir(db), "manifest"),
-      fids.zip(ms).map { case (fid, m) =>
-        s"$fid ${URLEncoder.encode(m, "UTF-8")}"
+      databases.getOrElse(db, Vector.empty).flatMap { c =>
+        c.fid.map(fid => s"$fid ${URLEncoder.encode(c.measurement, "UTF-8")}")
       }.mkString("\n").getBytes(UTF_8))
-  }
 
   /** Append write-batch chunks, as (measurement, frame, rows), to a db's
     * vector; with [[dataDir]] set, write each through to parquet and
     * advance the manifest. Every write path (HTTP LP, write_pb, gRPC
     * WriteEntry, SELECT INTO, 1.x JSON) lands here so durability is
-    * uniform. The parquet writes run FIRST: if any fails, neither store
-    * advances, so the client's error truthfully means "nothing landed"
+    * uniform. The parquet writes run FIRST: if any fails, the vector does
+    * not advance, so the client's error truthfully means "nothing landed"
     * (no half-applied write that is queryable in memory but absent after
     * restart). */
   private def appendChunks(db: String, written: Seq[(String, DataFrame, Long)])
       : Unit = persistLock(db).synchronized {
-    val chunks = written.map { case (m, df, rows) => (m, Pinned.onePartition(df), rows) }
-    val fids = dataDir.map { _ =>
-      chunks.map { case (_, df, _) =>
+    val chunks = written.toVector.map { case (m, df, rows) =>
+      val frame = Pinned.onePartition(df)
+      val fid = dataDir.map { _ =>
         val fid = nextChunkFid.getAndIncrement()
-        df.write.mode("overwrite").parquet(s"${dbDir(db)}/chunks/c$fid")
+        frame.write.mode("overwrite").parquet(s"${dbDir(db)}/chunks/c$fid")
         fid
       }
+      Chunk(m, frame, Some(rows), "OpenMutableBuffer", fid)
     }
-    chunks.foreach { case (_, df, rows) => chunkRowCounts.put(df, rows) }
-    databases.updateWith(db) { prev =>
-      Some(prev.getOrElse(Vector.empty) ++ chunks.map(c => c._1 -> c._2))
-    }
-    fids.foreach { ids =>
-      chunkFiles.updateWith(db) { prev =>
-        Some(prev.getOrElse(Vector.empty) ++ ids)
-      }
-      writeManifest(db)
-    }
+    databases.put(db, databases.getOrElse(db, Vector.empty) ++ chunks)
+    if (dataDir.isDefined) writeManifest(db)
   }
 
   // reload persisted state (runs before the HTTP listener below opens)
@@ -271,11 +259,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             }
           if (entries.nonEmpty) {
             databases.put(db, entries.map { case (fid, m) =>
-              m -> spark.read.parquet(s"${d.getAbsolutePath}/chunks/c$fid")
+              Chunk(m, spark.read.parquet(s"${d.getAbsolutePath}/chunks/c$fid"),
+                None, "ObjectStoreOnly", Some(fid))
             }.toVector)
-            chunkFiles.put(db, entries.map(_._1).toVector)
-            entries.indices.foreach(i =>
-              chunkStages((db, i)) = "ObjectStoreOnly")
             val top = entries.map(_._1).max + 1
             nextChunkFid.updateAndGet(cur => math.max(cur, top))
           }
@@ -328,7 +314,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * the reference's read-buffer compaction plays, data_management.md).
     * The snapshot is keyed by the exact chunk frames it covers, compared
     * by reference: chunk frames are immutable and appended, never
-    * replaced, so reference equality is both cheap and exact.
+    * replaced (a stage move replaces a chunk's record, not its frame), so
+    * reference equality is both cheap and exact.
     *  - chunks == key: the snapshot is reused;
     *  - chunks extend the key: only the new chunks fold in, as
     *    `dedup(snapshot @ seq 0, new chunks @ seq 1..k)` — the same
@@ -373,10 +360,10 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * snapshot with more than one partition. */
   def measurementView(db: String, measurement: String): Option[DataFrame] =
     databases.get(db).flatMap { chunks =>
-      val mine = chunks.collect { case (m, df) if m == measurement => df }
+      val mine = chunks.filter(_.measurement == measurement)
       val merged =
         if (mine.isEmpty) None
-        else if (mine.size == 1) Some(mine.head)
+        else if (mine.size == 1) Some(mine.head.frame)
         else Some(snapshot(db, measurement, mine))
       merged.map(applyTombstones(db, measurement, _))
     }
@@ -392,17 +379,12 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private def onePartition(df: DataFrame): Boolean =
     scanned(df).exists(_.getNumPartitions == 1)
 
-  /** Rows of each in-memory chunk frame, recorded when it is appended and
-    * keyed by the frame itself (`Dataset` keeps reference equality).
-    * Parquet chunks reloaded from [[dataDir]] have no entry. Bounds a
-    * snapshot fold's size without running a job. */
-  private val chunkRowCounts = TrieMap.empty[DataFrame, Long]
-
   /** A measurement's read snapshot (see [[measurementView]]): the chunk
     * frames it covers, the fold that built it (`base`, the snapshot it
     * folded over, then the `added` chunks; no base for a full rebuild),
     * the deduplicated frame, and an upper bound on its rows when every
-    * covered chunk recorded one. */
+    * covered chunk recorded its rows — a bound on the fold's size that
+    * runs no job. */
   private case class Snapshot(covers: Vector[DataFrame],
       base: Option[DataFrame], added: Vector[DataFrame], frame: DataFrame,
       rows: Option[Long])
@@ -415,34 +397,33 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private val snapshotLocalFolds = new AtomicLong
 
   private def snapshot(db: String, measurement: String,
-      chunks: Vector[DataFrame]): DataFrame = {
-    def rowsOf(frames: Seq[DataFrame]): Option[Long] =
-      frames.foldLeft(Option(0L)) { (acc, df) =>
-        acc.flatMap(n => chunkRowCounts.get(df).map(n + _))
-      }
+      chunks: Vector[Chunk]): DataFrame = {
+    val frames = chunks.map(_.frame)
+    def rowsOf(cs: Seq[Chunk]): Option[Long] =
+      cs.foldLeft(Option(0L))((acc, c) => for (n <- acc; r <- c.rows) yield n + r)
     def build(base: Option[DataFrame], added: Vector[DataFrame],
         rows: Option[Long]): DataFrame = {
       val frame = fold(base, added, rows)
       snapshotBuilds.incrementAndGet()
-      val entry = Snapshot(chunks, base, added, frame, rows)
+      val entry = Snapshot(frames, base, added, frame, rows)
       snapshots.put((db, measurement), entry)
       // a DROP MEASUREMENT that raced this build must not leave the
       // dropped chunks' snapshot pinned in the map
-      if (!databases.get(db).exists(_.exists(_._2 eq chunks.head)))
+      if (!databases.get(db).exists(_.exists(_.frame eq frames.head)))
         snapshots.remove((db, measurement), entry)
       frame
     }
     snapshots.get((db, measurement)) match {
-      case Some(s) if s.covers.size <= chunks.size &&
-          s.covers.indices.forall(i => s.covers(i) eq chunks(i)) =>
+      case Some(s) if s.covers.size <= frames.size &&
+          s.covers.indices.forall(i => s.covers(i) eq frames(i)) =>
         val more = chunks.drop(s.covers.size)
         val rows = for (n <- s.rows; m <- rowsOf(more)) yield n + m
         if (more.isEmpty) {
           snapshotReuses.incrementAndGet()
           s.frame
-        } else if (checkpointed(s.frame)) build(Some(s.frame), more, rows)
-        else build(s.base, s.added ++ more, rows)
-      case _ => build(None, chunks, rowsOf(chunks))
+        } else if (checkpointed(s.frame)) build(Some(s.frame), more.map(_.frame), rows)
+        else build(s.base, s.added ++ more.map(_.frame), rows)
+      case _ => build(None, frames, rowsOf(chunks))
     }
   }
 
@@ -534,7 +515,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
 
   def measurements(db: String): Seq[String] =
-    databases.get(db).map(_.map(_._1).distinct).getOrElse(Nil)
+    databases.get(db).map(_.map(_.measurement).distinct).getOrElse(Nil)
 
   // ---------------------------------------------------------------- routing
 
@@ -580,23 +561,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     val params = queryParams(ex)
     (params.get("org"), params.get("bucket")) match {
       case (Some(org), Some(bucket)) =>
-        val gzipped = Option(ex.getRequestHeaders.getFirst("Content-Encoding")) match {
-          case None => false
-          case Some("gzip") => true
-          case Some(other) =>
-            respondJsonError(ex, 400, s"invalid content encoding: $other"); return
-        }
-        readBody(ex.getRequestBody, gzipped) match {
-          case None => respondJsonError(ex, 413,
-            s"request size exceeds $MaxBodySize bytes")
-          case Some(bytes) =>
-            writeLines(dbName(org, bucket), new String(bytes, UTF_8),
-                bytes.length) match {
-              case Right(_) => ex.sendResponseHeaders(204, -1)
-              case Left(err) => respondJsonError(ex, 400,
-                s"error parsing line protocol: $err")
-            }
-        }
+        writeLpBody(ex)(writeLines(dbName(org, bucket), _, _))
       case _ => respondJsonError(ex, 400, "missing org/bucket query parameters")
     }
   }
@@ -604,27 +569,32 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   /** Db-addressed LP write — the downstream hop of shard routing (the
     * reference's write_entry gRPC, server/src/lib.rs:775: addressed by
     * db_name, writes LOCALLY — a forwarded write is never re-sharded). */
-  private def handleDbWrite(ex: HttpExchange): Unit = {
+  private def handleDbWrite(ex: HttpExchange): Unit =
     queryParams(ex).get("db") match {
       case None => respondJsonError(ex, 400, "missing db query parameter")
-      case Some(db) =>
-        // same Content-Encoding contract as the v2 write route: external
-        // clients may gzip this route too (forwarded writes never do)
-        val gzipped = Option(ex.getRequestHeaders.getFirst("Content-Encoding")) match {
-          case None => false
-          case Some("gzip") => true
-          case Some(other) =>
-            respondJsonError(ex, 400, s"invalid content encoding: $other"); return
-        }
-        readBody(ex.getRequestBody, gzipped) match {
-          case None => respondJsonError(ex, 413,
-            s"request size exceeds $MaxBodySize bytes")
-          case Some(bytes) =>
-            writeLinesLocal(db, new String(bytes, UTF_8), bytes.length) match {
-              case Right(_) => ex.sendResponseHeaders(204, -1)
-              case Left(err) => respondJsonError(ex, 400,
-                s"error parsing line protocol: $err")
-            }
+      case Some(db) => writeLpBody(ex)(writeLinesLocal(db, _, _))
+    }
+
+  /** Reads an LP write body (gzip per Content-Encoding, capped at
+    * [[MaxBodySize]] after inflating) and hands it, with its byte count,
+    * to `write`: 204 on success, 400 on an unknown encoding or bad LP,
+    * 413 over the cap. */
+  private def writeLpBody(ex: HttpExchange)(
+      write: (String, Int) => Either[String, Long]): Unit = {
+    val gzipped = Option(ex.getRequestHeaders.getFirst("Content-Encoding")) match {
+      case None => false
+      case Some("gzip") => true
+      case Some(other) =>
+        respondJsonError(ex, 400, s"invalid content encoding: $other"); return
+    }
+    readBody(ex.getRequestBody, gzipped) match {
+      case None => respondJsonError(ex, 413,
+        s"request size exceeds $MaxBodySize bytes")
+      case Some(bytes) =>
+        write(new String(bytes, UTF_8), bytes.length) match {
+          case Right(_) => ex.sendResponseHeaders(204, -1)
+          case Left(err) => respondJsonError(ex, 400,
+            s"error parsing line protocol: $err")
         }
     }
   }
@@ -683,9 +653,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           respondJsonError(ex, 400, s"unknown format type: $format. " +
             "Expected one of 'pretty', 'csv' or 'json'"); return
         }
-        if (!databases.contains(db)) {
-          respondJsonError(ex, 404, s"database not found: $db"); return
-        }
+        if (!requireDb(ex, db)) return
         // remote query routing (the read twin of shard-routed writes,
         // reference grpc-router + server/src/lib.rs remotes): when the
         // db's shard targets map the query's tables to configured
@@ -784,15 +752,16 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     val sysChunks = chunkRows(db)
       .map(c => (c.id.toLong, c.partitionKey, c.table, c.storage, c.rowCount))
       .toDF("id", "partition_key", "table_name", "storage", "row_count")
-    val frames = databases.getOrElse(db, Vector.empty).zipWithIndex
-    val chunkColFrames = frames.flatMap { case ((m, df), i) =>
+    val chunks = databases.getOrElse(db, Vector.empty).zipWithIndex
+    val chunkColFrames = chunks.flatMap { case (chunk, i) =>
+      val df = chunk.frame
       df.columns.toSeq.map { c =>
         df.agg(count(col(c)).as("row_count"),
             min(col(c)).cast("string").as("min_value"),
             max(col(c)).cast("string").as("max_value"))
           .select(lit(i.toLong).as("chunk_id"), lit("").as("partition_key"),
-            lit(m).as("table_name"), lit(c).as("column_name"),
-            lit(chunkStage(db, i)).as("storage"), col("row_count"),
+            lit(chunk.measurement).as("table_name"), lit(c).as("column_name"),
+            lit(chunk.stage).as("storage"), col("row_count"),
             col("min_value"), col("max_value"))
       }
     }
@@ -912,6 +881,18 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
+  /** Tag/time roles for a measurement view, read from the ingest schema
+    * category metadata (every other column is a field). */
+  private def asMeasurement(df: DataFrame): graft.operators.InfluxMeasurement = {
+    val tags = df.schema.fields.collect {
+      case f if IoxSchema.categoryOf(f).contains(IoxSchema.Tag) => f.name
+    }.toSeq
+    val timeCol = df.schema.fields.collectFirst {
+      case f if IoxSchema.categoryOf(f).contains(IoxSchema.Time) => f.name
+    }.getOrElse(graft.core.NsTime.TimeColumn)
+    graft.operators.InfluxMeasurement(df, timeCol, tags)
+  }
+
   /** InfluxDB 1.x compatibility query endpoint (`GET /query?db=..&q=..`,
     * the shape every 1.x client library speaks): the q parameter is
     * InfluxQL text, parsed by [[graft.core.InfluxQl]] and planned onto
@@ -925,18 +906,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * (tags, time) ordering, so large results never collect on the
     * facade; errors surface INSIDE the results array with HTTP 200,
     * exactly as 1.x clients expect. */
-  /** Tag/time roles for a measurement view, read from the ingest schema
-    * category metadata (every other column is a field). */
-  private def asMeasurement(df: DataFrame): graft.operators.InfluxMeasurement = {
-    val tags = df.schema.fields.collect {
-      case f if IoxSchema.categoryOf(f).contains(IoxSchema.Tag) => f.name
-    }.toSeq
-    val timeCol = df.schema.fields.collectFirst {
-      case f if IoxSchema.categoryOf(f).contains(IoxSchema.Time) => f.name
-    }.getOrElse(graft.core.NsTime.TimeColumn)
-    graft.operators.InfluxMeasurement(df, timeCol, tags)
-  }
-
   private def handleInfluxQlQuery(ex: HttpExchange): Unit = {
     val params = queryParams(ex)
     val db = params.getOrElse("db", "")
@@ -946,9 +915,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         // 1.x defines SHOW DATABASES / SHOW QUERIES / KILL QUERY as
         // database-less — client libraries probe connectivity with a
         // db-less SHOW DATABASES, which must not 404. A db param is
-        // required only when some statement actually reads a database;
-        // a db created via the management surface but never written to
-        // also resolves (hasDatabase, not databases.contains).
+        // required only when some statement actually reads a database.
         val dbFree =
           try graft.core.InfluxQl.parseAll(q).forall {
             case sh: graft.core.InfluxQl.Show =>
@@ -961,9 +928,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
               if d.what == "continuous query" && d.db.isDefined => true
             case _ => false
           } catch { case NonFatal(_) => false }
-        if (!dbFree && !hasDatabase(db)) {
-          respondJsonError(ex, 404, s"database not found: $db"); return
-        }
+        if (!dbFree && !requireDb(ex, db)) return
         // 1.x `epoch=` time-unit selection (default ns, this engine's axis)
         val epochDiv = params.get("epoch") match {
           case None | Some("ns") => 1L
@@ -1110,7 +1075,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     case sh: graft.core.InfluxQl.Show if sh.what == "databases" =>
       import spark.implicits._
       Right(Some(("databases", Seq.empty[String],
-        databases.keys.toSeq.sorted.toDF("name"))))
+        databaseNames.toDF("name"))))
     case sh: graft.core.InfluxQl.Show if sh.what == "retention policies" =>
       // one implicit autogen policy per database: this engine's retention
       // lives in the lifecycle rules, but 1.x clients probe this on
@@ -1199,39 +1164,15 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       }
     case graft.core.InfluxQl.Drop("measurement", m, _, _) =>
       // the whole measurement goes away: its chunks AND its tombstones.
-      // Chunk stages are keyed by position in the db's chunk vector, so
-      // the surviving chunks' stage labels must migrate to their new
-      // indices — otherwise a ReadBuffer mark orphaned at an old index
-      // attaches to whatever chunk slides into it (wrong ListChunks
-      // storage, wrong already-moved lifecycle errors)
+      // Each surviving chunk keeps its record, so its stage and file id
+      // move with it to its new position
       if (!measurements(db).contains(m)) Left(s"measurement not found: $m")
       else {
-        // persistLock, not a bare updateWith: TrieMap.updateWith may
-        // re-invoke its remap function on CAS contention, so side
-        // effects (stage remapping, chunkFiles, the manifest) must live
-        // OUTSIDE any retry-able closure; the lock also pins the
-        // databases/chunkFiles pair against a concurrent append
         persistLock(db).synchronized {
-          databases.get(db).foreach { chunks =>
-            val survivors = chunks.zipWithIndex.filterNot(_._1._1 == m)
-            val remapped = survivors.zipWithIndex.flatMap {
-              case ((_, oldIdx), newIdx) =>
-                chunkStages.get((db, oldIdx)).map(newIdx -> _)
-            }.toMap
-            chunkStages.keys.filter(_._1 == db).foreach(chunkStages.remove)
-            remapped.foreach { case (i, stage) =>
-              chunkStages((db, i)) = stage
-            }
-            // the persisted manifest tracks the vector: drop the file
-            // ids at the dropped positions, keep survivor order
-            chunkFiles.updateWith(db)(_.map { fids =>
-              fids.zip(chunks.map(_._1)).filterNot(_._2 == m).map(_._1)
-            })
-            databases.put(db, survivors.map(_._1))
-            chunks.filter(_._1 == m).foreach(c => chunkRowCounts.remove(c._2))
-          }
+          databases.get(db).foreach(chunks =>
+            databases.put(db, chunks.filterNot(_.measurement == m)))
           snapshots.remove((db, m))
-          dataDir.foreach(_ => writeManifest(db))
+          if (dataDir.isDefined) writeManifest(db)
         }
         tombstones.remove((db, m))
         Right(None)
@@ -1384,9 +1325,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         respondJsonError(ex, 400, s"invalid ticket: expected " +
           """{"database_name": ..., "sql_query": ...}""")
       case Some((db, sql)) =>
-        if (!databases.contains(db)) {
-          respondJsonError(ex, 404, s"database not found: $db"); return
-        }
+        if (!requireDb(ex, db)) return
         planSql(db, sql) match {
           case Left(err) => respondJsonError(ex, 400, s"query error: $err")
           case Right(df) =>
@@ -1484,7 +1423,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * nothing — after building its view, snapshot fold included. */
   private[server] def tablesWithColumn(db: String, column: String): Map[String, DataFrame] =
     databases.get(db).toSeq
-      .flatMap(_.collect { case (m, df) if df.columns.contains(column) => m })
+      .flatMap(_.collect { case c if c.frame.columns.contains(column) => c.measurement })
       .distinct
       .flatMap(m => measurementView(db, m).map(m -> _)).toMap
 
@@ -1595,11 +1534,13 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** 404 for an unknown database, like the query endpoints — without
-    * this, a database-level route would answer "exists and is empty"
-    * for a typo'd name. Returns false after responding. */
+  /** 404 for an unknown database on every HTTP route that reads one —
+    * without this, a database-level route would answer "exists and is
+    * empty" for a typo'd name. A database exists once written to or
+    * configured ([[hasDatabase]]), the rule the gRPC services use too.
+    * Returns false after responding. */
   private def requireDb(ex: HttpExchange, db: String): Boolean =
-    databases.contains(db) || {
+    hasDatabase(db) || {
       respondJsonError(ex, 404, s"database not found: $db"); false
     }
 
@@ -1811,25 +1752,22 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** Management ListChunks (management/v1/service.proto:30,
-    * chunk.proto:44-76): one entry per (partition_key, table, write
-    * chunk) — the facade's hot write batches split by the configured
-    * partition template, exactly the reference's per-partition open
-    * chunks. Storage starts at OpenMutableBuffer and moves through the
-    * management actions (new_partition_chunk → ClosedMutableBuffer,
-    * close_partition_chunk → ReadBuffer); the compacted/persisted disk
-    * stages live on the ChunkedTable path and surface through
-    * `system_chunks`. */
-  /** list_chunks data (management.rs:157-186): one [[HttpFacade.ChunkRow]]
-    * per (partition_key, table, write chunk), sorted. */
+  /** Management ListChunks data (management.rs:157-186,
+    * chunk.proto:44-76): one [[HttpFacade.ChunkRow]] per (partition_key,
+    * table, write chunk), sorted — the facade's write batches split by
+    * the configured partition template, exactly the reference's
+    * per-partition open chunks. Storage starts at OpenMutableBuffer and
+    * moves through the management actions (new_partition_chunk →
+    * ClosedMutableBuffer, close_partition_chunk → ReadBuffer). */
   private[server] def chunkRows(db: String): Seq[HttpFacade.ChunkRow] = {
     val template = rulesOf(db).partitionTemplate
     databases.getOrElse(db, Vector.empty).zipWithIndex.flatMap {
-      case ((m, df), i) =>
-        ResultRows.collect(df.groupBy(template.keyColumn(m, df.schema).as("k"))
+      case (c, i) =>
+        ResultRows.collect(c.frame
+            .groupBy(template.keyColumn(c.measurement, c.frame.schema).as("k"))
             .agg(count(lit(1)).as("n")))
-          .map(r => HttpFacade.ChunkRow(r.getString(0), m, i,
-            chunkStage(db, i), r.getLong(1)))
+          .map(r => HttpFacade.ChunkRow(r.getString(0), c.measurement, i,
+            c.stage, r.getLong(1)))
     }.sortBy(c => (c.partitionKey, c.table, c.id))
   }
 
@@ -1843,9 +1781,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     (params.get("org"), params.get("bucket")) match {
       case (Some(org), Some(bucket)) =>
         val db = dbName(org, bucket)
-        if (!databases.contains(db)) {
-          respondJsonError(ex, 404, s"database not found: $db"); return
-        }
+        if (!requireDb(ex, db)) return
         respond(ex, 200, "application/json",
           chunkRows(db).map(chunkRowJson).mkString("[", ",", "]"))
       case _ => respondJsonError(ex, 400, "org and bucket params required")
@@ -1869,17 +1805,17 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * partition keys, sorted. */
   private[server] def partitionKeysOf(db: String): Seq[String] = {
     val template = rulesOf(db).partitionTemplate
-    databases.getOrElse(db, Vector.empty).flatMap { case (m, df) =>
-      ResultRows.collect(df.select(template.keyColumn(m, df.schema).as("k"))
+    databases.getOrElse(db, Vector.empty).flatMap { c =>
+      ResultRows.collect(c.frame
+        .select(template.keyColumn(c.measurement, c.frame.schema).as("k"))
         .distinct()).map(_.getString(0))
     }.distinct.sorted
   }
 
   /** get_partition membership (management.rs:265). */
   private[server] def partitionExists(db: String, key: String): Boolean =
-    databases.getOrElse(db, Vector.empty).exists { case (m, df) =>
-      inPartition(db, m, df, key)
-    }
+    databases.getOrElse(db, Vector.empty).exists(c =>
+      inPartition(db, c.measurement, c.frame, key))
 
   private def handleDbPartitions(ex: HttpExchange, db: String): Unit = {
     if (!requireDb(ex, db)) return
@@ -1904,10 +1840,11 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       key: String): Seq[HttpFacade.ChunkRow] = {
     val template = rulesOf(db).partitionTemplate
     databases.getOrElse(db, Vector.empty).zipWithIndex.flatMap {
-      case ((m, df), i) =>
-        val n = df.filter(template.keyColumn(m, df.schema) === key).count()
+      case (c, i) =>
+        val n = c.frame
+          .filter(template.keyColumn(c.measurement, c.frame.schema) === key).count()
         if (n == 0L) None
-        else Some(HttpFacade.ChunkRow(key, m, i, chunkStage(db, i), n))
+        else Some(HttpFacade.ChunkRow(key, c.measurement, i, c.stage, n))
     }.sortBy(c => (c.table, c.id))
   }
 
@@ -1923,20 +1860,20 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * OpenMutableBuffer → ClosedMutableBuffer, the first edge of the
     * reference's chunk state machine. Rolling over a partition whose
     * open chunk is already closed is a no-op, like the reference's
-    * rollover of an empty open chunk. */
-  /** new_partition_chunk core (management.rs:318 → rollover_partition):
-    * false when the (partition, table) holds no rows. */
+    * rollover of an empty open chunk. False when the (partition, table)
+    * holds no rows. */
   private[server] def rolloverPartition(db: String, key: String,
-      table: String): Boolean = {
-    val members = databases.getOrElse(db, Vector.empty).zipWithIndex
-      .filter { case ((m, df), _) => m == table && inPartition(db, m, df, key) }
-      .map(_._2)
-    if (members.isEmpty) false
-    else {
-      members.filter(chunkStage(db, _) == "OpenMutableBuffer")
-        .foreach(i => chunkStages((db, i)) = "ClosedMutableBuffer")
-      true
-    }
+      table: String): Boolean = persistLock(db).synchronized {
+    val chunks = databases.getOrElse(db, Vector.empty)
+    val members = chunks.map(c =>
+      c.measurement == table && inPartition(db, table, c.frame, key))
+    if (members.contains(true))
+      databases.put(db, chunks.zip(members).map {
+        case (c, true) if c.stage == "OpenMutableBuffer" =>
+          c.copy(stage = "ClosedMutableBuffer")
+        case (c, _) => c
+      })
+    members.contains(true)
   }
 
   private def handleNewPartitionChunk(ex: HttpExchange, db: String,
@@ -1947,41 +1884,41 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     else respondJsonError(ex, 404, s"partition not found: $key (table $table)")
   }
 
+  /** Moves chunk `chunkId` of `table` in partition `key` to the stage
+    * `next` gives for its current one, or fails with `next`'s lifecycle
+    * error. The check and the move run under [[persistLock]], so a
+    * concurrent append or drop cannot slide another chunk under the id.
+    * Left is (http-ish status, message): 404 not-found, 400 lifecycle. */
+  private def moveChunk(db: String, key: String, table: String,
+      chunkId: Int)(next: String => Either[String, String])
+      : Either[(Int, String), Unit] = persistLock(db).synchronized {
+    val chunks = databases.getOrElse(db, Vector.empty)
+    chunks.lift(chunkId).filter(_.measurement == table) match {
+      case None => Left((404, s"chunk $chunkId not found for table $table"))
+      case Some(c) if !inPartition(db, table, c.frame, key) =>
+        Left((404, s"chunk $chunkId holds no rows of partition $key"))
+      case Some(c) => next(c.stage) match {
+        case Left(err) => Left((400, err))
+        case Right(stage) =>
+          databases.put(db, chunks.updated(chunkId, c.copy(stage = stage)))
+          Right(())
+      }
+    }
+  }
+
   /** close_partition_chunk (management.rs:342 → Server::close_chunk):
-    * move one chunk to the read buffer and return the tracked operation,
-    * with the reference's CloseChunk job shape (job.rs:91 description
-    * "Loading chunk to ReadBuffer"). Closing an already-moved chunk is
-    * the reference's lifecycle error. */
-  /** close_partition_chunk core (management.rs:342 → Server::close_chunk):
     * move one chunk to the read buffer and return the tracked operation
     * record, with the reference's CloseChunk job shape (job.rs:91
     * description "Loading chunk to ReadBuffer"). Closing an
-    * already-moved chunk is the reference's lifecycle error. Left is
-    * (http-ish status, message): 404 not-found, 400 lifecycle. */
-  /** Shared (table, partition, id) validation of the chunk-scoped
-    * management actions; Left is (404, message). */
-  private def validateChunkRef(db: String, key: String, table: String,
-      chunkId: Int): Either[(Int, String), Unit] = {
-    val chunks = databases.getOrElse(db, Vector.empty)
-    if (chunkId < 0 || chunkId >= chunks.size || chunks(chunkId)._1 != table)
-      Left((404, s"chunk $chunkId not found for table $table"))
-    else if (!inPartition(db, table, chunks(chunkId)._2, key))
-      Left((404, s"chunk $chunkId holds no rows of partition $key"))
-    else Right(())
-  }
-
+    * already-moved chunk is the reference's lifecycle error. */
   private[server] def closeChunkAction(db: String, key: String,
       table: String, chunkId: Int): Either[(Int, String), HttpFacade.OpRecord] =
-    validateChunkRef(db, key, table, chunkId).flatMap { _ =>
-      if (chunkStage(db, chunkId) == "ReadBuffer")
-        Left((400, s"chunk $chunkId already moved to ReadBuffer"))
-      else {
-        chunkStages((db, chunkId)) = "ReadBuffer"
-        Right(trackOperation(HttpFacade.OpRecord(0, "CloseChunk",
-          "Loading chunk to ReadBuffer", dbName = db, partitionKey = key,
-          tableName = table, chunkId = Some(chunkId))))
-      }
-    }
+    moveChunk(db, key, table, chunkId) {
+      case "ReadBuffer" => Left(s"chunk $chunkId already moved to ReadBuffer")
+      case _ => Right("ReadBuffer")
+    }.map(_ => trackOperation(HttpFacade.OpRecord(0, "CloseChunk",
+      "Loading chunk to ReadBuffer", dbName = db, partitionKey = key,
+      tableName = table, chunkId = Some(chunkId))))
 
   /** unload_partition_chunk (management.rs:366-396 → unload_read_buffer):
     * drop the read-buffer stage label, keeping the chunk queryable —
@@ -1991,13 +1928,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * reference's lifecycle error. */
   private[server] def unloadChunkAction(db: String, key: String,
       table: String, chunkId: Int): Either[(Int, String), Unit] =
-    validateChunkRef(db, key, table, chunkId).flatMap { _ =>
-      if (chunkStage(db, chunkId) != "ReadBuffer")
-        Left((400, s"chunk $chunkId is not in the read buffer"))
-      else {
-        chunkStages((db, chunkId)) = "ObjectStoreOnly"
-        Right(())
-      }
+    moveChunk(db, key, table, chunkId) {
+      case "ReadBuffer" => Right("ObjectStoreOnly")
+      case _ => Left(s"chunk $chunkId is not in the read buffer")
     }
 
   private def trackOperation(r: HttpFacade.OpRecord): HttpFacade.OpRecord = {
@@ -2015,17 +1948,14 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
 
   /** wipe_preserved_catalog (management.rs:447-471): only legal for a
     * database the server does NOT actively hold — wiping an active
-    * database is the reference's AlreadyExists error. The facade's
-    * preserved-catalog analog is the chunk-stage sidecar, which is
-    * cleared for the name. */
+    * database is the reference's AlreadyExists error. A database the
+    * facade does not hold has no chunks, so only the operation is
+    * tracked. */
   private[server] def wipePreservedCatalog(
       db: String): Either[String, HttpFacade.OpRecord] =
     if (hasDatabase(db)) Left(s"database already exists: $db")
-    else {
-      chunkStages.keys.filter(_._1 == db).foreach(chunkStages.remove)
-      Right(trackOperation(HttpFacade.OpRecord(0, "WipePreservedCatalog",
-        "Wiping preserved catalog", dbName = db)))
-    }
+    else Right(trackOperation(HttpFacade.OpRecord(0, "WipePreservedCatalog",
+      "Wiping preserved catalog", dbName = db)))
 
   private[server] def operationsList: Seq[HttpFacade.OpRecord] =
     operations.toSeq.sortBy(_._1).map(_._2)
@@ -2067,9 +1997,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     (params.get("org"), params.get("bucket")) match {
       case (Some(org), Some(bucket)) =>
         val db = dbName(org, bucket)
-        if (!databases.contains(db)) {
-          respondJsonError(ex, 404, s"database not found: $db"); return
-        }
+        if (!requireDb(ex, db)) return
         // the database's CONFIGURED template (management surface), with
         // the reference default when none was set
         val template = rulesOf(db).partitionTemplate

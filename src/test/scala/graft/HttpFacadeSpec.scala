@@ -319,6 +319,66 @@ class HttpFacadeSpec extends SparkSpec {
     }
   }
 
+  test("a chunk's stage follows it to its new id across DROP MEASUREMENT") {
+    withFacade { facade =>
+      val p = facade.boundPort
+      val day = "1568756160000000000" // 2019-09-17
+      for (lp <- Seq(s"a,t=x f=1.0 $day", s"b,t=x f=2.0 $day",
+          s"a,t=y f=3.0 $day", s"c,t=x f=4.0 $day"))
+        assert(post(p, "/api/v2/write?org=o&bucket=b", lp.getBytes(UTF_8))._1 == 204)
+      // chunks: a 0, b 1, a 2, c 3; b's chunk moves to the read buffer
+      assert(post(p,
+        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/b/chunks/1/close",
+        Array.emptyByteArray)._1 == 200)
+      val (ds, db) = get(p, s"/query?db=o_b&q=${enc("DROP MEASUREMENT a")}")
+      assert(ds == 200 && db == """{"results":[{"statement_id":0}]}""", db)
+      // b is chunk 0 now and keeps its label; c, now at b's old id, is open
+      assert(get(p, "/iox/api/v1/chunks?org=o&bucket=b") == (200,
+        """[{"partition_key":"2019-09-17","table_name":"b","id":0,""" +
+          """"storage":"ReadBuffer","row_count":1},""" +
+          """{"partition_key":"2019-09-17","table_name":"c","id":1,""" +
+          """"storage":"OpenMutableBuffer","row_count":1}]"""))
+      // the lifecycle checks follow the chunk too
+      assert(post(p,
+        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/b/chunks/0/close",
+        Array.emptyByteArray)._1 == 400)
+      assert(post(p,
+        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/c/chunks/1/close",
+        Array.emptyByteArray)._1 == 200)
+    }
+  }
+
+  test("a database created through management but never written serves " +
+      "the HTTP read routes; unknown names still 404") {
+    withFacade { facade =>
+      val p = facade.boundPort
+      val conn = new URI(s"http://127.0.0.1:$p/iox/api/v1/databases/o_b/rules")
+        .toURL.openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("PUT")
+      conn.setDoOutput(true)
+      conn.getOutputStream.write("""{"name":"o_b"}""".getBytes(UTF_8))
+      conn.getOutputStream.close()
+      assert(readResponse(conn)._1 == 200)
+
+      assert(get(p, s"/iox/api/v1/databases/o_b/query?q=${enc("SELECT 1 AS one")}" +
+        "&format=csv") == (200, "one\n1\n"))
+      assert(HttpFacade.doGet(p, "o_b", "SELECT 1 AS one") ==
+        (Seq("one"), Seq(Seq(1))))
+      assert(get(p, "/iox/api/v1/chunks?org=o&bucket=b") == (200, "[]"))
+      assert(get(p, "/iox/api/v1/databases/o_b/partitions") == (200, "[]"))
+      assert(get(p, "/api/v1/partitions?org=o&bucket=b") == (200, "[]"))
+      val (ss, shown) = get(p, s"/query?q=${enc("SHOW DATABASES")}")
+      assert(ss == 200 && shown.contains("""["o_b"]"""), shown)
+
+      assert(get(p, s"/iox/api/v1/databases/o_x/query?q=${enc("SELECT 1")}")._1 == 404)
+      assert(intercept[RuntimeException](HttpFacade.doGet(p, "o_x", "SELECT 1"))
+        .getMessage.contains("(404)"))
+      assert(get(p, "/iox/api/v1/chunks?org=o&bucket=x")._1 == 404)
+      assert(get(p, "/iox/api/v1/databases/o_x/partitions")._1 == 404)
+      assert(get(p, "/api/v1/partitions?org=o&bucket=x")._1 == 404)
+    }
+  }
+
   test("flight do_get: ticket -> Arrow IPC stream round-trips all types (flight.rs:158)") {
     withFacade { facade =>
       val p = facade.boundPort

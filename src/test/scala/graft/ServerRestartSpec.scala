@@ -84,6 +84,35 @@ class ServerRestartSpec extends SparkSpec {
     }
   }
 
+  test("DROP MEASUREMENT then restart: the surviving chunks reload with " +
+      "their own measurement and rows, in vector order") {
+    val dir = Files.createTempDirectory("graft-restart-drop").toString
+    withFacade(dir) { (fac, p) =>
+      writeLp(p, "ddb", "cpu,host=a usage=1.0 100\ncpu,host=b usage=2.0 200")
+      writeLp(p, "ddb", "mem,host=a used=5i 100")
+      writeLp(p, "ddb", "disk,host=a free=9.0 100")
+      writeLp(p, "ddb", "cpu,host=c usage=3.0 300")
+      val conn = new java.net.URI(s"http://127.0.0.1:${fac.boundPort}/query" +
+        s"?db=ddb&q=${java.net.URLEncoder.encode("DROP MEASUREMENT mem", "UTF-8")}")
+        .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      assert(conn.getResponseCode == 200 && new String(
+        conn.getInputStream.readAllBytes(), "UTF-8") ==
+        """{"results":[{"statement_id":0}]}""")
+    }
+    withFacade(dir) { (fac, p) =>
+      // cpu 0, disk 1, cpu 2, all on disk
+      assert(chunkList(p, "ddb") == Seq(("1970-01-01", 0L, 5, "cpu", 2L),
+        ("1970-01-01", 2L, 5, "cpu", 1L), ("1970-01-01", 1L, 5, "disk", 1L)))
+      val (cs, cpu) = HttpFacade.getQuery(fac.boundPort, "ddb",
+        "SELECT count(*) AS n, sum(usage) AS su FROM cpu")
+      assert(cs == 200 && cpu.trim.split("\n").toSeq == Seq("n,su", "3,6.0"))
+      val (ds, disk) = HttpFacade.getQuery(fac.boundPort, "ddb",
+        "SELECT host, free FROM disk")
+      assert(ds == 200 && disk.trim.split("\n").toSeq == Seq("host,free", "a,9.0"))
+      assert(HttpFacade.getQuery(fac.boundPort, "ddb", "SELECT * FROM mem")._1 == 400)
+    }
+  }
+
   test("server id, rules, and chunk data survive facade restarts " +
       "(management_api.rs restart shape)") {
     val dir = Files.createTempDirectory("graft-restart").toString
