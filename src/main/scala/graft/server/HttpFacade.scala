@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Pinned
+import org.apache.spark.sql.graft.{Pinned, SqlBinder}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -48,9 +48,9 @@ import graft.sources.LineProtocol
   *
   * The server itself is the JDK's `com.sun.net.httpserver` — a facade, not
   * a data path: bodies are capped micro-batches; all heavy lifting (parse
-  * fan-out, dedup, SQL) stays in Spark. Query views register per request
-  * so the one-JVM Spark catalog never holds stale state; each is built
-  * before the shared catalog lock from a per-measurement deduplicated
+  * fan-out, dedup, SQL) stays in Spark. A query binds its table names to
+  * views of its own database for that query alone, with no lock (see
+  * [[planSql]]); each view is built from a per-measurement deduplicated
   * snapshot that the first read after a write folds the new chunks into
   * (see [[measurementView]]), so a read's plan does not grow with the
   * write count. The fold is lazy and, over small one-partition data,
@@ -664,21 +664,12 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** Plan `q` over the db's measurement views (+ `extraViews`, which win
-    * on name collision — the scatter-gather path injects fetched remote
-    * tables) with [[planSql]] and stream the response. */
+  /** Plan `q` for `db` with [[planSql]] (`extraViews` win on a name
+    * collision — the scatter-gather path injects fetched remote tables)
+    * and stream the response. */
   private def planAndRespond(ex: HttpExchange, db: String, q: String,
       format: String, extraViews: Seq[(String, DataFrame)]): Unit = {
-        // system tables ride the query path like the reference's
-        // system.chunks/columns/... (query_tests sql.rs:260-361 runs them
-        // through the db's query engine) — registered only when the query
-        // text mentions them, so the data hot path never pays the
-        // metadata collection
-        def sysViews =
-          if (q.toLowerCase(java.util.Locale.ROOT).contains("system_"))
-            systemViews(db)
-          else Nil
-        planSql(db, q, sysViews ++ extraViews) match {
+        planSql(db, q, extraViews) match {
           case Left(err) => respondJsonError(ex, 400, s"query error: $err")
           case Right(df) if format == "pretty" =>
             // pretty needs global column widths, so it stays eager — it is
@@ -714,29 +705,27 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         }
   }
 
-  /** Plans `sql` over `db`'s measurement views plus `extraViews` (which
-    * win on a name collision), for the SQL endpoint and Flight `DoGet`
-    * (the HTTP route and the gRPC service). The views, and any snapshot
-    * build behind them, are built BEFORE the shared temp-view catalog
-    * lock is taken; under it the views are only registered and the
-    * query analyzed. spark.sql
-    * analyzes eagerly, so the plan is bound to this request's views
-    * before the lock releases and streaming runs outside it. Errors come
-    * back as their message. */
+  /** Plans `sql` for `db`, for the SQL endpoint and Flight `DoGet` (the
+    * HTTP route and the gRPC service), with no lock: [[SqlBinder]] binds
+    * each table name the query reads to a view built for this request
+    * when named — an `extraViews` entry, else a `system_*` view, else the
+    * database's measurement. Errors come back as their message. */
   private[server] def planSql(db: String, sql: String,
-      extraViews: => Seq[(String, DataFrame)] = Nil): Either[String, DataFrame] =
+      extraViews: Seq[(String, DataFrame)] = Nil): Either[String, DataFrame] =
     try {
-      val views = dbTables(db).toSeq ++ extraViews
-      HttpFacade.synchronized {
-        HttpFacade.registerMeasurementViews(spark, views)
-        Right(spark.sql(sql))
-      }
+      val same = spark.sessionState.conf.resolver
+      Right(SqlBinder.bind(spark, spark.sessionState.sqlParser.parsePlan(sql)) { name =>
+        extraViews.find(v => same(v._1, name))
+          .orElse(SystemViews.find(same(_, name)).map(v => v -> systemView(db, v)))
+          .orElse(measurements(db).find(same(_, name))
+            .flatMap(m => measurementView(db, m).map(m -> _)))
+      })
     } catch {
       case NonFatal(e) =>
         Left(Option(e.getMessage).getOrElse(e.getClass.getName))
     }
 
-  /** The db's system tables as queryable views over the facade's write
+  /** The db's system table `name` ([[SystemViews]]) as a view over the write
     * store — the HTTP twin of the reference serving system.chunks /
     * system.columns / system.chunk_columns / system.operations through
     * its query engine (server/src/db/system_tables.rs; queried by
@@ -746,40 +735,40 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * theirs through SqlFrontend.registerChunked. The chunk/operation
     * views are metadata-sized; chunk_columns is LAZY (per-column aggs
     * run only if the view is actually queried). */
-  private def systemViews(db: String): Seq[(String, DataFrame)] = {
+  private def systemView(db: String, name: String): DataFrame = {
     import spark.implicits._
-    val sysColumns = graft.sources.SqlFrontend.systemColumns(spark, dbTables(db))
-    val sysChunks = chunkRows(db)
-      .map(c => (c.id.toLong, c.partitionKey, c.table, c.storage, c.rowCount))
-      .toDF("id", "partition_key", "table_name", "storage", "row_count")
-    val chunks = databases.getOrElse(db, Vector.empty).zipWithIndex
-    val chunkColFrames = chunks.flatMap { case (chunk, i) =>
-      val df = chunk.frame
-      df.columns.toSeq.map { c =>
-        df.agg(count(col(c)).as("row_count"),
-            min(col(c)).cast("string").as("min_value"),
-            max(col(c)).cast("string").as("max_value"))
-          .select(lit(i.toLong).as("chunk_id"), lit("").as("partition_key"),
-            lit(chunk.measurement).as("table_name"), lit(c).as("column_name"),
-            lit(chunk.stage).as("storage"), col("row_count"),
-            col("min_value"), col("max_value"))
-      }
+    name match {
+      case "system_columns" =>
+        graft.sources.SqlFrontend.systemColumns(spark, dbTables(db))
+      case "system_chunks" => chunkRows(db)
+        .map(c => (c.id.toLong, c.partitionKey, c.table, c.storage, c.rowCount))
+        .toDF("id", "partition_key", "table_name", "storage", "row_count")
+      case "system_chunk_columns" =>
+        val chunks = databases.getOrElse(db, Vector.empty).zipWithIndex
+        val chunkColFrames = chunks.flatMap { case (chunk, i) =>
+          val df = chunk.frame
+          df.columns.toSeq.map { c =>
+            df.agg(count(col(c)).as("row_count"),
+                min(col(c)).cast("string").as("min_value"),
+                max(col(c)).cast("string").as("max_value"))
+              .select(lit(i.toLong).as("chunk_id"), lit("").as("partition_key"),
+                lit(chunk.measurement).as("table_name"), lit(c).as("column_name"),
+                lit(chunk.stage).as("storage"), col("row_count"),
+                col("min_value"), col("max_value"))
+          }
+        }
+        if (chunkColFrames.isEmpty)
+          Seq.empty[(Long, String, String, String, String, Long, String, String)]
+            .toDF("chunk_id", "partition_key", "table_name", "column_name",
+              "storage", "row_count", "min_value", "max_value")
+        else chunkColFrames.reduce(_ unionByName _)
+      case "system_operations" => operationsList
+        .map(r => (r.id, if (r.cancelled) "Cancelled" else "Complete",
+          r.kind, r.dbName, r.partitionKey, r.tableName,
+          r.chunkId.map(_.toLong).getOrElse(-1L), r.description))
+        .toDF("id", "status", "kind", "db_name", "partition_key",
+          "table_name", "chunk_id", "description")
     }
-    val sysChunkColumns =
-      if (chunkColFrames.isEmpty)
-        Seq.empty[(Long, String, String, String, String, Long, String, String)]
-          .toDF("chunk_id", "partition_key", "table_name", "column_name",
-            "storage", "row_count", "min_value", "max_value")
-      else chunkColFrames.reduce(_ unionByName _)
-    val sysOps = operationsList
-      .map(r => (r.id, if (r.cancelled) "Cancelled" else "Complete",
-        r.kind, r.dbName, r.partitionKey, r.tableName,
-        r.chunkId.map(_.toLong).getOrElse(-1L), r.description))
-      .toDF("id", "status", "kind", "db_name", "partition_key",
-        "table_name", "chunk_id", "description")
-    Seq("system_columns" -> sysColumns, "system_chunks" -> sysChunks,
-      "system_chunk_columns" -> sysChunkColumns,
-      "system_operations" -> sysOps)
   }
 
   /** Remote QUERY routing — the read twin of [[writeLines]]'s shard
@@ -811,10 +800,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     // regex over SQL text); parse failures fall through to the local
     // path, whose error reporting is the canonical one
     val tables: Seq[String] =
-      try spark.sessionState.sqlParser.parsePlan(q).collect {
-        case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-            if r.multipartIdentifier.size == 1 => r.multipartIdentifier.head
-      }.distinct
+      try SqlBinder.names(spark.sessionState.sqlParser.parsePlan(q))._1
       catch { case NonFatal(_) => Nil }
     val mapped = tables.flatMap(t =>
       targets.find(_._1.matches(t)).map(t -> _._2))
@@ -958,7 +944,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             try {
             // plan every statement in order, then stream
             val planned = stmts.map { stmt =>
-              try lockedPlan(db, stmt)
+              try planStatement(db, stmt)
               catch { case NonFatal(e) =>
                 Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
             }
@@ -999,30 +985,13 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** Plans one 1.x statement under the catalog lock. The measurement
-    * views it reads are built first, outside the lock, so a snapshot
-    * build never stalls other requests' planning; they are resolved per
-    * statement, so a statement sees the writes, deletes and drops of the
-    * ones before it. */
-  private[server] def lockedPlan(db: String, stmt: graft.core.InfluxQl.Stmt)
-      : Either[String, Option[(String, Seq[String], DataFrame)]] = {
-    val views = stmt match {
-      case _: graft.core.InfluxQl.Select | _: graft.core.InfluxQl.Explain |
-          _: graft.core.InfluxQl.Delete |
-          graft.core.InfluxQl.Drop("series", _, _, _) => dbTables(db)
-      case sh: graft.core.InfluxQl.Show if !ViewlessShows(sh.what) =>
-        dbTables(db)
-      case _ => Map.empty[String, DataFrame]
-    }
-    HttpFacade.synchronized(planStatement(db, stmt, views))
-  }
-
-  /** Plans one 1.x statement against `db` over `views` (the db's
-    * measurement views, for the statements that read them; caller holds
-    * the catalog lock): returns (series name, tag columns, frame) or an
-    * in-band error string. */
-  private def planStatement(db: String, stmt: graft.core.InfluxQl.Stmt,
-      views: Map[String, DataFrame])
+  /** Plans one 1.x statement against `db`: returns (series name, tag
+    * columns, frame) or an in-band error string. The statements that read
+    * measurements plan over the db's views ([[dbTables]]), built when the
+    * statement is planned, so a statement sees the writes, deletes and
+    * drops of the ones before it. No lock is held while planning: the
+    * views are values, and the planner writes no shared catalog. */
+  private[server] def planStatement(db: String, stmt: graft.core.InfluxQl.Stmt)
       : Either[String, Option[(String, Seq[String], DataFrame)]] = stmt match {
     case sel: graft.core.InfluxQl.Select =>
       // subqueries may nest: resolve the root measurement for the series
@@ -1030,7 +999,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       def root(s: graft.core.InfluxQl.Select): String =
         s.fromSub.map(root).getOrElse(s.from)
       val name = root(sel)
-      val msAll = views.map { case (m, df) => m -> asMeasurement(df) }
+      val msAll = dbTables(db).map { case (m, df) => m -> asMeasurement(df) }
       if (!msAll.contains(name)) Left(s"measurement not found: $name")
       else if (sel.into.isDefined) {
         // `SELECT … INTO <target>`: run now and land the result in the
@@ -1039,11 +1008,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         // columns become fields, a time-less aggregate lands at epoch 0).
         // The snapshot is pinned with a local checkpoint so later source
         // writes cannot rewrite history, like a physical 1.x INTO write.
-        // KNOWN TRADEOFF: the checkpoint executes the INTO's Spark job
-        // while the shared planning lock is held, so a long INTO delays
-        // other requests' PLANNING (their streams are unaffected) — at
-        // the facade's micro-batch scale that beats the alternative of
-        // snapshotting without catalog consistency.
         import org.apache.spark.sql.types.MetadataBuilder
         val target = sel.into.get
         val out = graft.operators.InfluxQlPlanner.plan(msAll, sel,
@@ -1131,14 +1095,14 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       if (continuousQueries.remove(key).isDefined) Right(None)
       else Left(s"continuous query not found: $name")
     case sh: graft.core.InfluxQl.Show =>
-      val ms = views.map { case (m, df) => m -> asMeasurement(df) }
+      val ms = dbTables(db).map { case (m, df) => m -> asMeasurement(df) }
       Right(Some((sh.what, Seq.empty[String],
         graft.operators.InfluxQlPlanner.showPlan(ms, sh))))
     case graft.core.InfluxQl.Delete(from, where) =>
       if (!measurements(db).contains(from))
         Left(s"measurement not found: $from")
       else {
-        val tags = views.get(from).map(asMeasurement(_).tagCols)
+        val tags = dbTables(db).get(from).map(asMeasurement(_).tagCols)
           .getOrElse(Seq.empty)
         // DELETE ... WHERE time < now() - 7d is the canonical retention
         // command: resolve now() against the server clock before the
@@ -1156,10 +1120,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             return Left(s"DELETE supports time and tag conditions only; " +
               s"not tags: ${bad.mkString(", ")}")
         }
-        tombstones.updateWith((db, from)) {
-          case Some(v) => Some(v :+ ((lo, hi, rest)))
-          case None => Some(Vector((lo, hi, rest)))
-        }
+        addTombstone(db, from, (lo, hi, rest))
         Right(None) // ack: a results entry with no series
       }
     case graft.core.InfluxQl.Drop("measurement", m, _, _) =>
@@ -1172,9 +1133,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           databases.get(db).foreach(chunks =>
             databases.put(db, chunks.filterNot(_.measurement == m)))
           snapshots.remove((db, m))
+          tombstones.remove((db, m))
           if (dataDir.isDefined) writeManifest(db)
         }
-        tombstones.remove((db, m))
         Right(None)
       }
     case graft.core.InfluxQl.Drop("series", m, where, _) =>
@@ -1183,7 +1144,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       // series
       if (!measurements(db).contains(m)) Left(s"measurement not found: $m")
       else {
-        val tags = views.get(m).map(asMeasurement(_).tagCols)
+        val tags = dbTables(db).get(m).map(asMeasurement(_).tagCols)
           .getOrElse(Seq.empty)
         where.foreach { e =>
           val bad = collectRefs(e).filterNot(tags.contains)
@@ -1191,10 +1152,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             return Left("DROP SERIES selects by tag conditions only; " +
               s"not tags: ${bad.mkString(", ")}")
         }
-        tombstones.updateWith((db, m)) {
-          case Some(v) => Some(v :+ ((None, None, where)))
-          case None => Some(Vector((None, None, where)))
-        }
+        addTombstone(db, m, (None, None, where))
         Right(None)
       }
     case graft.core.InfluxQl.Drop(what, _, _, _) =>
@@ -1205,7 +1163,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       // ANALYZE = the final AQE-resolved executed plan after running
       def root(s0: graft.core.InfluxQl.Select): String =
         s0.fromSub.map(root).getOrElse(s0.from)
-      val msAll = views.map { case (m, df) => m -> asMeasurement(df) }
+      val msAll = dbTables(db).map { case (m, df) => m -> asMeasurement(df) }
       if (!msAll.contains(root(sel)))
         Left(s"measurement not found: ${root(sel)}")
       else {
@@ -1222,6 +1180,15 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           text.linesIterator.toSeq.toDF("QUERY PLAN"))))
       }
   }
+
+  /** Records a DELETE / DROP SERIES region on `m`, unless a concurrent
+    * DROP MEASUREMENT, which clears tombstones under this lock, won. */
+  private def addTombstone(db: String, m: String, region: (Option[Long],
+      Option[Long], Option[graft.core.InfluxQl.Expr])): Unit =
+    persistLock(db).synchronized {
+      if (measurements(db).contains(m))
+        tombstones.updateWith((db, m))(v => Some(v.getOrElse(Vector.empty) :+ region))
+    }
 
   private def collectRefs(e: graft.core.InfluxQl.Expr): Seq[String] = e match {
     case graft.core.InfluxQl.Ref(n) => Seq(n)
@@ -1255,7 +1222,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         val bounded = cq.sel.copy(where =
           Some(cq.sel.where.map(w => Bin("and", w, bound)).getOrElse(bound)))
         val planned =
-          try lockedPlan(cdb, bounded)
+          try planStatement(cdb, bounded)
           catch { case NonFatal(e) => Left(String.valueOf(e.getMessage)) }
         planned match {
           case Right(Some((_, _, ack))) =>
@@ -1410,8 +1377,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         respondJsonError(ex, 413, s"request exceeds $MaxBodySize bytes"); None
     }
 
-  /** All measurements of `db` as a name->view map: the catalog SQL and
-    * InfluxQL plan over, and the database-level operand of the
+  /** All measurements of `db` as a name->view map: the catalog InfluxQL
+    * and `system_columns` plan over, and the database-level operand of the
     * *AcrossTables metadata ops. */
   private[server] def dbTables(db: String): Map[String, DataFrame] =
     measurements(db).flatMap(m => measurementView(db, m).map(m -> _)).toMap
@@ -2050,32 +2017,9 @@ object HttpFacade {
   /** Max accepted body, pre- and post-inflate (http.rs:345 MAX_SIZE). */
   val MaxBodySize: Int = 10 * 1024 * 1024
 
-  /** The SHOW statements answered without reading any measurement. */
-  private val ViewlessShows =
-    Set("databases", "retention policies", "queries", "continuous queries")
-
-  /** Measurement temp views currently registered in the shared session
-    * catalog (guarded by `HttpFacade.synchronized`, like the
-    * registration sites). Planning for one database FIRST drops the
-    * previous request's views: without this, a measurement that exists
-    * only in db A kept resolving in db B's queries and silently served
-    * A's rows instead of a table-not-found error. Only views this
-    * registry created are dropped — externally registered views (e.g.
-    * SqlFrontend system tables) are untouched. Plans are analyzed
-    * eagerly under the lock, so dropping a view later never unbinds an
-    * in-flight stream. */
-  private val registeredViews = scala.collection.mutable.Set.empty[String]
-
-  private[server] def registerMeasurementViews(
-      spark: org.apache.spark.sql.SparkSession,
-      views: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
-    registeredViews.foreach(v => spark.catalog.dropTempView(v))
-    registeredViews.clear()
-    views.foreach { case (m, df) =>
-      df.createOrReplaceTempView(m)
-      registeredViews += m
-    }
-  }
+  /** The system tables a SQL query can name ([[systemView]]). */
+  private val SystemViews = Seq("system_columns", "system_chunks",
+    "system_chunk_columns", "system_operations")
 
   /** One management-surface chunk row (chunk.proto:46-81 Chunk):
     * partition key, table, id, lifecycle storage stage, row count —

@@ -1178,6 +1178,13 @@ class HttpFacadeSpec extends SparkSpec {
           "&format=csv")
         assert(qj == 200 && bodyJ.contains("1.5") && bodyJ.contains("70.25"),
           s"cross-shard join failed: $qj $bodyJ")
+        // a remote table named only inside a subquery expression is
+        // routed too: scatter-gather, not a local table-not-found
+        val (qi, bodyI) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
+          enc("SELECT a.temp FROM air a WHERE a.city IN (SELECT city FROM water)") +
+          "&format=csv")
+        assert(qi == 200 && bodyI.contains("70.25"),
+          s"subquery table was not routed: $qi $bodyI")
         // a shard id with no configured remote fails loudly (ShardNotFound)
         val rules2 = """{"name":"o_b","shard_config":""" +
           """{"specific_targets":[{"regex":"^water","shard":9}]}}"""

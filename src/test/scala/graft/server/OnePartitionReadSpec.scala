@@ -94,7 +94,7 @@ class OnePartitionReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "InfluxQL aggregate" -> { (f, m) =>
       val stmt = InfluxQl.parseAll(
         s"SELECT count(usage), sum(usage) FROM $m WHERE region = 'us' GROUP BY host").head
-      run(f.lockedPlan(Db, stmt).fold(fail(_), _.get._3), ordered = false)
+      run(f.planStatement(Db, stmt).fold(fail(_), _.get._3), ordered = false)
     },
     "planReadFilter" -> { (f, m) =>
       run(f.planReadFilter(Db, m, RpcPredicate()).get)

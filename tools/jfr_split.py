@@ -58,12 +58,12 @@ BUCKETS = [
      r"\.UnsafeExternal(Row)?Sorter\."),
     ("graft: snapshot fold",
      r"^graft\.server\.HttpFacade\.(\S*\$)?(snapshot|fold)(\$|$)"),
-    ("graft: view registration",
-     r"^graft\.server\.HttpFacade\$?\.(\S*\$)?registerMeasurementViews(\$|$)"),
+    ("graft: SQL binding", r"^org\.apache\.spark\.sql\.graft\.SqlBinder\$?\."),
     ("graft: measurement view",
      r"^graft\.server\.HttpFacade\.(\S*\$)?measurementView(\$|$)"),
     ("graft: SQL plan", r"^graft\.server\.HttpFacade\.(\S*\$)?planSql(\$|$)"),
-    ("graft: InfluxQL plan", r"^graft\.server\.HttpFacade\.(\S*\$)?lockedPlan(\$|$)"),
+    ("graft: InfluxQL plan",
+     r"^graft\.server\.HttpFacade\.(\S*\$)?planStatement(\$|$)"),
     ("graft: storage RPC plan",
      r"^graft\.server\.HttpFacade\.(\S*\$)?plan(ReadFilter|ReadGroup|"
      r"ReadWindowAggregate|TagValues)(\$|$)"),
@@ -246,8 +246,11 @@ def selftest():
     assert lines[2].split() == ["a", "1", "25.0", "%", "0", "0.0", "%"]
     assert len({len(l) for l in lines}) == 1  # aligned columns
     assert buckets_of(["graft.server.HttpFacade.snapshotsOf"]) == (frozenset(), None)
-    assert buckets_of(["graft.server.HttpFacade$.registerMeasurementViews"]) == \
-        ({"graft: view registration"}, "graft: view registration")
+    assert buckets_of(["org.apache.spark.sql.graft.SqlBinder$.bind",
+                       "graft.server.HttpFacade.planSql"]) == \
+        ({"graft: SQL binding", "graft: SQL plan"}, "graft: SQL binding")
+    assert buckets_of(["graft.server.HttpFacade.planStatement"]) == \
+        ({"graft: InfluxQL plan"}, "graft: InfluxQL plan")
     print("jfr_split selftest ok")
 
 
