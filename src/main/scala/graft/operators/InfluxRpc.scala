@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
-import graft.core.{IoxSchema, NsTime, ResultRows, RpcPredicate}
+import graft.core.{IoxSchema, NsTime, ResultRows, RpcPredicate, Utf8Order}
 import graft.functions.{Selectors, WindowBounds}
 
 /** The InfluxDB "storage gRPC" operator set, re-expressed as DataFrame
@@ -54,10 +53,9 @@ object InfluxRpc {
     * (influxrpc.rs:183-219). Library form over a map of table DataFrames;
     * LIMIT 1 per table keeps it O(first match) instead of O(rows). */
   def tableNames(tables0: Map[String, DataFrame], pred: RpcPredicate): Seq[String] =
-    tables0.toSeq
+    Utf8Order.sorted(tables0.iterator
       .filter { case (name, _) => pred.tables.forall(_.contains(name)) }
-      .collect { case (name, df) if !pred.applyTo(df).isEmpty => name }
-      .sorted
+      .collect { case (name, df) if !pred.applyTo(df).isEmpty => name })
 
   /** tag_keys: tag columns with >= 1 non-null value passing the predicate
     * (influxrpc.rs:225-323). The reference builds a custom SchemaPivot plan
@@ -69,7 +67,7 @@ object InfluxRpc {
     val counts = pred.applyTo(df)
       .select(ts.map(t => count(col(t)).as(t)): _*)
       .head()
-    ts.zipWithIndex.filter { case (_, i) => counts.getLong(i) > 0 }.map(_._1).sorted
+    Utf8Order.sorted(ts.zipWithIndex.collect { case (t, i) if counts.getLong(i) > 0 => t })
   }
 
   /** tag_values: distinct non-null values of one tag under the predicate
@@ -77,7 +75,8 @@ object InfluxRpc {
     * error (:377-394, "not a tag, it is Field"); a column absent from the
     * table entirely yields an EMPTY result, not an error (the reference's
     * known-columns check treats unknown as no-values,
-    * tag_values.rs list_tag_values_no_tag). */
+    * tag_values.rs list_tag_values_no_tag). Values come sorted by Spark,
+    * whose string order is [[Utf8Order]]'s. */
   def tagValues(df: DataFrame, tag: String, pred: RpcPredicate): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -97,20 +96,18 @@ object InfluxRpc {
     * predicate admits (tag_keys.rs cases run against the whole db). */
   def tagKeysAcrossTables(tables0: Map[String, DataFrame],
       pred: RpcPredicate): Seq[String] =
-    tables0.toSeq
+    Utf8Order.sorted(tables0.iterator
       .filter { case (name, _) => pred.tables.forall(_.contains(name)) }
-      .flatMap { case (_, df) => tagKeys(df, pred) }
-      .distinct.sorted
+      .flatMap { case (_, df) => tagKeys(df, pred) })
 
   /** Database-level tag_values: union of per-table values over the tables
     * the predicate admits (service.rs tag_values fans out per table). */
   def tagValuesAcrossTables(tables0: Map[String, DataFrame], tag: String,
       pred: RpcPredicate): Seq[String] =
-    tables0.toSeq
+    Utf8Order.sorted(tables0.iterator
       .filter { case (name, _) => pred.tables.forall(_.contains(name)) }
       .flatMap { case (_, df) =>
-        ResultRows.collect(tagValues(df, tag, pred)).map(_.getString(0)) }
-      .distinct.sorted
+        ResultRows.collect(tagValues(df, tag, pred)).map(_.getString(0)) })
 
   /** field_columns: (field name, last timestamp at which the field was
     * non-null) per field passing the predicate (influxrpc.rs:477-504,
@@ -152,7 +149,7 @@ object InfluxRpc {
           s"inconsistent field types for '$n': ${types.sorted.mkString(", ")}")
         (n, types.head, fs.map(_._3).max)
       }
-      .toSeq.sortBy(_._1)
+      .toSeq.sortBy(_._1)(Utf8Order.ordering)
 
   /** read_series_cardinality: number of distinct series (tag-set
     * combinations) passing the predicate. The reference declares but never
@@ -366,17 +363,13 @@ object InfluxRpc {
   private def memberKey(s: Series): Seq[String] =
     s.tags.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
 
-  /** Strings compared as Spark compares them (UTF-8 bytes), so a sort here
-    * and a Spark sort on the same keys agree; sequences compare element by
-    * element, then shorter first, like Spark arrays. */
-  private val sparkStringOrder: Ordering[String] = (a, b) =>
-    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
-
-  /** Member order within a group: by [[memberKey]], then by field. */
+  /** Member order within a group: by [[memberKey]], then by field, with
+    * strings in Spark's order ([[Utf8Order]]) and sequences compared
+    * element by element, then shorter first, like Spark arrays. */
   private val memberOrder: Ordering[Series] = Ordering.by[Series, (Seq[String], String)](
     s => (memberKey(s), s.field))(
-    Ordering.Tuple2(Ordering.Implicits.seqOrdering[Seq, String](sparkStringOrder),
-      sparkStringOrder))
+    Ordering.Tuple2(Ordering.Implicits.seqOrdering[Seq, String](Utf8Order.ordering),
+      Utf8Order.ordering))
 
   private def groupFrame(gv: Seq[String], tagKeys: Seq[String]): Frame =
     Frame("group", Map.empty, Nil, Nil, tagKeys, gv)
@@ -578,7 +571,7 @@ object InfluxRpc {
     val rest = out.columns.toSeq.filterNot(tagCols.contains)
     agg match {
       case AggKind.None =>
-        val fieldCols = rest.filterNot(_ == NsTime.TimeColumn).sorted(sparkStringOrder)
+        val fieldCols = rest.filterNot(_ == NsTime.TimeColumn).sorted(Utf8Order.ordering)
         val rows = frameRows(
           out.orderBy(groupKeys.map(col) :+ memberKeyColumn(tagCols) :+ time: _*),
           tagCols, fieldCols.map(_ -> NsTime.TimeColumn))

@@ -13,7 +13,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.core.{IoxSchema, ResultRows}
 import graft.operators.{InfluxRpc, Upsert}
-import graft.sources.LineProtocol
+import graft.sources.{LineProtocol, StatsCatalog}
 
 /** The reference's HTTP front door, re-expressed over the Spark engine
   * (src/influxdb_ioxd/http.rs:364 router, :462 write, :595 query):
@@ -61,18 +61,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     clockNs: () => Long = () => System.currentTimeMillis() * 1000000L,
     dataDir: Option[String] = None) {
   import HttpFacade._
-
-  /** One chunk: one accepted write batch of one measurement.
-    *  - `rows`: the rows recorded at append; None for a parquet chunk
-    *    reloaded from [[dataDir]].
-    *  - `stage`: the lifecycle label the management actions move
-    *    (chunk_metadata.rs ChunkStorage: open → closed → moved). The chunk
-    *    STAYS queryable through every stage; only the label moves.
-    *  - `fid`: with [[dataDir]] set, the parquet file id backing it. File
-    *    ids are never reused: a dropped chunk's directory is simply no
-    *    longer referenced. */
-  private case class Chunk(measurement: String, frame: DataFrame,
-      rows: Option[Long], stage: String, fid: Option[Long])
 
   /** db -> its chunks in write order. A chunk's management id is its
     * position here. Every change to a vector reads and rewrites it under
@@ -148,10 +136,13 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   // (tests/end_to_end_cases/management_api.rs: rules survive restart).
   // With `dataDir` set this facade does the same: a rules.pb per
   // database, a server_id file, and every accepted write batch written
-  // through to `<db>/chunks/c<fid>` parquet with a manifest of the chunk
-  // vector's (fid, measurement) records in order. Reloaded chunks
-  // surface as ObjectStoreOnly — their bytes live on disk, the
-  // reference's post-restart stage.
+  // through to `<db>/chunks/c<fid>` parquet, its summary beside the data
+  // (`StatsCatalog.save`), with a manifest of the chunk vector's (fid,
+  // measurement) records in order. Reloaded chunks surface as
+  // ObjectStoreOnly — their bytes live on disk, the reference's
+  // post-restart stage. A chunk whose summary file is missing (a data dir
+  // written before chunks kept one) reloads without one, and metadata
+  // requests over its measurement scan.
   // Purely in-memory sidecars the reference also rebuilds from scratch
   // on restart (operation records, 1.x DELETE tombstones, remotes)
   // reset. With dataDir = None (the default) nothing is written.
@@ -212,31 +203,46 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         c.fid.map(fid => s"$fid ${URLEncoder.encode(c.measurement, "UTF-8")}")
       }.mkString("\n").getBytes(UTF_8))
 
-  /** Append write-batch chunks, as (measurement, frame, rows), to a db's
-    * vector; with [[dataDir]] set, write each through to parquet and
-    * advance the manifest. Every write path (HTTP LP, write_pb, gRPC
+  /** Append write-batch chunks, as (measurement, frame, summary), to a
+    * db's vector; with [[dataDir]] set, write each through to parquet, its
+    * summary beside it, and advance the manifest. Every write path (HTTP LP, write_pb, gRPC
     * WriteEntry, SELECT INTO, 1.x JSON) lands here so durability is
     * uniform. The parquet writes run FIRST: if any fails, the vector does
     * not advance, so the client's error truthfully means "nothing landed"
     * (no half-applied write that is queryable in memory but absent after
     * restart). */
-  private def appendChunks(db: String, written: Seq[(String, DataFrame, Long)])
+  private def appendChunks(db: String,
+      written: Seq[(String, DataFrame, Option[StatsCatalog.TableStats])])
       : Unit = persistLock(db).synchronized {
-    val chunks = written.toVector.map { case (m, df, rows) =>
+    val chunks = written.toVector.map { case (m, df, stats) =>
       val frame = Pinned.onePartition(df)
       val fid = dataDir.map { _ =>
         val fid = nextChunkFid.getAndIncrement()
-        frame.write.mode("overwrite").parquet(s"${dbDir(db)}/chunks/c$fid")
+        val dir = s"${dbDir(db)}/chunks/c$fid"
+        frame.write.mode("overwrite").parquet(dir)
+        stats.foreach(StatsCatalog.save(spark, dir, _))
         fid
       }
-      Chunk(m, frame, Some(rows), "OpenMutableBuffer", fid)
+      Chunk(m, frame, stats, "OpenMutableBuffer", fid)
     }
     databases.put(db, databases.getOrElse(db, Vector.empty) ++ chunks)
     if (dataDir.isDefined) writeManifest(db)
   }
 
+  /** A write batch held as rows on the driver (LP, write_pb, do_put), as
+    * the chunk [[appendChunks]] takes: its frame of one partition and the
+    * summary of the same rows, built in one pass with no job. */
+  private def batchChunk(m: String, schema: StructType, rows: Seq[Row])
+      : (String, DataFrame, Option[StatsCatalog.TableStats]) =
+    (m, spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
+      StatsCatalog.ofRows(schema, rows))
+
   // reload persisted state (runs before the HTTP listener below opens)
   dataDir.foreach { root =>
+    // one FileSystem for every chunk's summary: building the Hadoop conf
+    // per chunk would dominate a reload of many chunks
+    lazy val chunkFs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val rootPath = Paths.get(root)
     Files.createDirectories(rootPath)
     val idFile = rootPath.resolve("server_id")
@@ -259,8 +265,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
             }
           if (entries.nonEmpty) {
             databases.put(db, entries.map { case (fid, m) =>
-              Chunk(m, spark.read.parquet(s"${d.getAbsolutePath}/chunks/c$fid"),
-                None, "ObjectStoreOnly", Some(fid))
+              val dir = s"${d.getAbsolutePath}/chunks/c$fid"
+              Chunk(m, spark.read.parquet(dir), StatsCatalog.load(chunkFs, dir),
+                "ObjectStoreOnly", Some(fid))
             }.toVector)
             val top = entries.map(_._1).max + 1
             nextChunkFid.updateAndGet(cur => math.max(cur, top))
@@ -339,8 +346,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * The incremental fold is local — one narrow merge task
     * ([[SnapshotMerge]]), no Spark SQL plan — when AQE would give its
     * output one partition anyway: every input is one partition (see
-    * [[onePartition]]) and the fold's size bound — the rows its chunks
-    * recorded at write time times the schema's row width — is under the
+    * [[onePartition]]) and the fold's size bound — its chunks' summary
+    * row counts times the schema's row width — is under the
     * shuffle size at which AQE would split the dedup output. The task
     * reads the added chunks into a key-ordered map and streams the
     * key-sorted snapshot once. A full rebuild, a snapshot of more than
@@ -383,8 +390,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * frames it covers, the fold that built it (`base`, the snapshot it
     * folded over, then the `added` chunks; no base for a full rebuild),
     * the deduplicated frame, and an upper bound on its rows when every
-    * covered chunk recorded its rows — a bound on the fold's size that
-    * runs no job. */
+    * covered chunk has a summary (the sum of their row counts) — a bound
+    * on the fold's size that runs no job. */
   private case class Snapshot(covers: Vector[DataFrame],
       base: Option[DataFrame], added: Vector[DataFrame], frame: DataFrame,
       rows: Option[Long])
@@ -395,12 +402,14 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private val snapshotBuilds = new AtomicLong
   private val snapshotReuses = new AtomicLong
   private val snapshotLocalFolds = new AtomicLong
+  /** Metadata requests answered from chunk summaries ([[counted]]). */
+  private[server] val summaryAnswers = new AtomicLong
 
   private def snapshot(db: String, measurement: String,
       chunks: Vector[Chunk]): DataFrame = {
     val frames = chunks.map(_.frame)
     def rowsOf(cs: Seq[Chunk]): Option[Long] =
-      cs.foldLeft(Option(0L))((acc, c) => for (n <- acc; r <- c.rows) yield n + r)
+      cs.foldLeft(Option(0L))((acc, c) => for (n <- acc; st <- c.stats) yield n + st.rowCount)
     def build(base: Option[DataFrame], added: Vector[DataFrame],
         rows: Option[Long]): DataFrame = {
       val frame = fold(base, added, rows)
@@ -605,11 +614,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * counters (rows in, non-null field cells in, body bytes in). */
   private[server] def writeBatches(db: String,
       tables: Vector[WriteProto.PbTableBatch], bodyBytes: Int): Unit = {
-    val frames = WriteProto.toFrames(spark,
-      WriteProto.PbDatabaseBatch(db, tables))
-    appendChunks(db, frames.zip(tables).map { case ((m, df), t) =>
-      (m, df, t.rowCount.toLong)
-    })
+    appendChunks(db, WriteProto.toBatches(WriteProto.PbDatabaseBatch(db, tables))
+      .map { case (m, schema, rows) => batchChunk(m, schema, rows) })
     ingestLines.addAndGet(tables.iterator.map(_.rowCount.toLong).sum)
     ingestFields.addAndGet(tables.iterator.flatMap { t =>
       t.columns.iterator.filter(_.semanticType == WriteProto.Semantic.Field)
@@ -1026,7 +1032,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           if (out.columns.contains("time")) out.select(metaCols: _*)
           else out.select(metaCols :+ lit(0L).as("time", meta(IoxSchema.Time)): _*)
         val (snap, written) = Pinned.eagerly(projected)
-        appendChunks(db, Seq((target, snap, written)))
+        // its summary costs jobs here, at the INTO, and on no read
+        appendChunks(db, Seq((target, snap, Some(StatsCatalog.compute(snap)))))
         import spark.implicits._
         Right(Some(("result", Seq.empty[String],
           Seq((0L, written)).toDF("time", "written"))))
@@ -1338,9 +1345,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
                 else IoxSchema.Field
               IoxSchema.tagged(f.name, f.dataType, cat)
             })
-          val df = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), withMeta)
-          appendChunks(db, Seq((m, df, rows.size.toLong)))
+          appendChunks(db, Seq(batchChunk(m, withMeta, rows)))
           ingestLines.addAndGet(rows.size.toLong)
           ingestFields.addAndGet(withMeta.fields.iterator
             .filter(f => IoxSchema.categoryOf(f).contains(IoxSchema.Field))
@@ -1489,9 +1494,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       bodyBytes: Int): Either[String, Long] = {
     try {
       val parsed = LineProtocol.parseLines(body.split("\n").iterator).toSeq
-      val frames = LineProtocol.framesOf(spark, parsed, clockNs())
-      val rows = parsed.groupMapReduce(_.measurement)(_ => 1L)(_ + _)
-      appendChunks(db, frames.toSeq.map { case (m, df) => (m, df, rows(m)) })
+      appendChunks(db, LineProtocol.batchesOf(parsed, clockNs()).toSeq.map {
+        case (m, (schema, rows)) => batchChunk(m, schema, rows)
+      })
       ingestLines.addAndGet(parsed.size.toLong)
       ingestFields.addAndGet(parsed.iterator.map(_.fields.size.toLong).sum)
       ingestBytes.addAndGet(bodyBytes.toLong)
@@ -1608,13 +1613,14 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   /** tag_values core for the gRPC service ([[StorageGrpc]]): the values
     * of `tagKey` in `table`, or across the database without one; None
     * when there is no such table. The sentinel keys list measurement or
-    * field names.
-    * Across measurements, only those with a `tagKey` column are read
-    * ([[tablesWithColumn]]). */
+    * field names. Tag values come from the chunk summaries when
+    * [[ChunkSummaries.select]] allows and no selected chunk holds the key
+    * as a non-tag or past its summary's cap ([[ChunkSummaries.tagValues]]);
+    * otherwise from a scan of the views, which across measurements reads
+    * only those with a `tagKey` column ([[tablesWithColumn]]). */
   private[server] def planTagValues(db: String, table: Option[String], tagKey: String,
       pred: graft.core.RpcPredicate): Option[Seq[String]] = tagKey match {
-    case "\u0000" | "_measurement" =>
-      Some(InfluxRpc.tableNames(dbTables(db), pred))
+    case "\u0000" | "_measurement" => Some(planMeasurementNames(db, pred))
     case "ÿ" | "_field" =>
       table match {
         case Some(t) => measurementView(db, t).map(df =>
@@ -1623,12 +1629,62 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           Some(InfluxRpc.fieldColumnsAcrossTables(dbTables(db), pred).map(_._1))
       }
     case k =>
-      table match {
+      counted(summaries(db, table, pred, holding = Some(k))
+        .flatMap(ChunkSummaries.tagValues(_, k))).orElse(table match {
         case Some(t) => measurementView(db, t).map(df =>
           ResultRows.collect(InfluxRpc.tagValues(df, k, pred)).map(_.getString(0)))
         case scala.None =>
           Some(InfluxRpc.tagValuesAcrossTables(tablesWithColumn(db, k), k, pred))
-      }
+      })
+  }
+
+  /** tag_keys core for the gRPC service: the tag keys of `table`, or
+    * across the database without one; None when there is no such table.
+    * From the chunk summaries when [[ChunkSummaries.select]] allows,
+    * otherwise from a scan of the views. */
+  private[server] def planTagKeys(db: String, table: Option[String],
+      pred: graft.core.RpcPredicate): Option[Seq[String]] =
+    counted(summaries(db, table, pred).map(ChunkSummaries.tagKeys)).orElse(table match {
+      case Some(t) => measurementView(db, t).map(InfluxRpc.tagKeys(_, pred))
+      case scala.None => Some(InfluxRpc.tagKeysAcrossTables(dbTables(db), pred))
+    })
+
+  /** measurement_names core for the gRPC service: the measurements with
+    * a row under `pred`, from the chunk summaries when
+    * [[ChunkSummaries.select]] allows, otherwise from a scan of every
+    * view. */
+  private[server] def planMeasurementNames(db: String,
+      pred: graft.core.RpcPredicate): Seq[String] =
+    counted(summaries(db, scala.None, pred).map(ChunkSummaries.measurementNames))
+      .getOrElse(InfluxRpc.tableNames(dbTables(db), pred))
+
+  /** The summaries of the chunks of `db` that a metadata request selects
+    * — `table`'s, or without one those of the measurements `pred`'s table
+    * set allows that have a `holding` column (any, without one) — when
+    * [[ChunkSummaries.select]] lets them answer it; None, for a scan,
+    * otherwise and when there is no such table. */
+  private def summaries(db: String, table: Option[String],
+      pred: graft.core.RpcPredicate, holding: Option[String] = scala.None)
+      : Option[Seq[ChunkSummaries.Summarized]] = {
+    // tombstones before chunks: a DELETE that lands in between leaves an
+    // answer as of before it, never one without a tombstone it needs
+    val dead = tombstones.readOnlySnapshot()
+    val chunks = databases.getOrElse(db, Vector.empty)
+    val held = holding.map(k =>
+      chunks.collect { case c if c.frame.columns.contains(k) => c.measurement }.toSet)
+    val selected = chunks.filter(c => table match {
+      case Some(t) => c.measurement == t
+      case scala.None => held.forall(_(c.measurement)) &&
+        pred.tables.forall(_.contains(c.measurement))
+    })
+    if (table.isDefined && selected.isEmpty) scala.None
+    else ChunkSummaries.select(selected, pred, m => dead.get((db, m)).exists(_.nonEmpty))
+  }
+
+  /** `answer`, counted when it came from the summaries. */
+  private def counted[A](answer: Option[A]): Option[A] = {
+    if (answer.isDefined) summaryAnswers.incrementAndGet()
+    answer
   }
 
   // ------------------------------------------------- management surface
@@ -1991,6 +2047,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
          |read_snapshot_builds ${snapshotBuilds.get}
          |read_snapshot_reuses ${snapshotReuses.get}
          |read_snapshot_local_folds ${snapshotLocalFolds.get}
+         |metadata_summary_answers ${summaryAnswers.get}
          |""".stripMargin
     respond(ex, 200, "text/plain", body)
   }
@@ -2020,6 +2077,21 @@ object HttpFacade {
   /** The system tables a SQL query can name ([[systemView]]). */
   private val SystemViews = Seq("system_columns", "system_chunks",
     "system_chunk_columns", "system_operations")
+
+  /** One chunk: one accepted write batch of one measurement.
+    *  - `stats`: its summary ([[StatsCatalog.TableStats]]: row count, time
+    *    range, per-tag distinct values), built at append; None for a
+    *    batch without an i64 `time` ([[StatsCatalog.ofRows]]) and for a
+    *    chunk reloaded from a data dir that kept none. The metadata RPCs
+    *    answer from it ([[ChunkSummaries]]).
+    *  - `stage`: the lifecycle label the management actions move
+    *    (chunk_metadata.rs ChunkStorage: open → closed → moved). The chunk
+    *    STAYS queryable through every stage; only the label moves.
+    *  - `fid`: with a data dir set, the parquet file id backing it. File
+    *    ids are never reused: a dropped chunk's directory is simply no
+    *    longer referenced. */
+  private[server] final case class Chunk(measurement: String, frame: DataFrame,
+      stats: Option[StatsCatalog.TableStats], stage: String, fid: Option[Long])
 
   /** One management-surface chunk row (chunk.proto:46-81 Chunk):
     * partition key, table, id, lifecycle storage stage, row count —

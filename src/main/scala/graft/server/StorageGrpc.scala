@@ -27,6 +27,9 @@ import graft.server.{StorageProtoReader => R}
   * MeasurementTagKeys, MeasurementTagValues, MeasurementFields,
   * ReadSeriesCardinality (exact; service.rs:560 declares it
   * unimplemented), and Offsets (empty response, service.rs:794).
+  * TagKeys, TagValues, MeasurementNames, MeasurementTagKeys and
+  * MeasurementTagValues answer from the chunk summaries with no Spark job
+  * when the predicate allows, and scan otherwise ([[ChunkSummaries]]).
   *
   * Statuses follow the reference's: an unknown database or measurement
   * is NOT_FOUND (5; service.rs maps DatabaseNotFound to
@@ -103,16 +106,16 @@ object StorageGrpc {
   private def measurementNames(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] =
     parse(f, R.decodeReadFilter(raw)).map { case (pred, _, db) => // same layout
-      strings(InfluxRpc.tableNames(f.dbTables(db), pred))
+      strings(f.planMeasurementNames(db, pred))
     }
 
   private def measurementTagKeys(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] = {
     val (req, meas) = R.decodeMeasurementScoped(raw)
     parse(f, req).flatMap { case (pred, sentinel, db) =>
-      table(meas.orElse(sentinel)).flatMap(view(f, db, _)).map(df =>
-        one(StorageProto.stringValuesResponse(
-          StorageProto.tagKeysByteVecs(InfluxRpc.tagKeys(df, pred)))))
+      table(meas.orElse(sentinel)).flatMap(t =>
+        f.planTagKeys(db, Some(t), pred).toRight(f.noTable(db, t))).map(ks =>
+        one(StorageProto.stringValuesResponse(StorageProto.tagKeysByteVecs(ks))))
     }
   }
 
@@ -123,14 +126,11 @@ object StorageGrpc {
       for {
         t <- table(meas.orElse(sentinel))
         tk <- req.tagKey.toRight("request needs tag_key")
-        df <- view(f, db, t)
-      } yield strings(R.renderTagKey(tk) match {
-        case "_measurement" => Seq(t)
-        case "_field" =>
-          ResultRows.collect(InfluxRpc.fieldColumns(df, pred)).map(_.getString(0))
-        case k =>
-          ResultRows.collect(InfluxRpc.tagValues(df, k, pred)).map(_.getString(0))
-      })
+        vs <- (R.renderTagKey(tk) match {
+          case "_measurement" => Option.when(f.measurements(db).contains(t))(Seq(t))
+          case k => f.planTagValues(db, Some(t), k, pred)
+        }).toRight(f.noTable(db, t))
+      } yield strings(vs)
     }
   }
 
@@ -208,12 +208,8 @@ object StorageGrpc {
   private def tagKeys(f: HttpFacade, raw: Array[Byte])
       : Either[String, Iterator[Array[Byte]]] =
     parse(f, R.decodeReadFilter(raw)).flatMap { case (pred, meas, db) => // same layout
-      val keys = meas match {
-        case Some(t) => view(f, db, t).map(InfluxRpc.tagKeys(_, pred))
-        case None => Right(InfluxRpc.tagKeysAcrossTables(f.dbTables(db), pred))
-      }
-      keys.map(ks => one(StorageProto.stringValuesResponse(
-        StorageProto.tagKeysByteVecs(ks))))
+      f.planTagKeys(db, meas, pred).toRight(f.noTable(db, meas.mkString)).map(ks =>
+        one(StorageProto.stringValuesResponse(StorageProto.tagKeysByteVecs(ks))))
     }
 
   private def tagValues(f: HttpFacade, raw: Array[Byte])

@@ -216,13 +216,12 @@ object WriteProto {
     }
   }
 
-  /** One (measurement, frame) per table batch, schema-tagged exactly like
-    * [[graft.sources.LineProtocol.inferSchema]] output: tags, then
-    * fields, then `time` — IOx-native columns ride as fields (the
-    * engine's schema model is LP-shaped; `time`-named Time columns keep
-    * the Time category in both sets). */
-  def toFrames(spark: SparkSession, batch: PbDatabaseBatch)
-      : Seq[(String, DataFrame)] = {
+  /** One (measurement, schema, rows) per table batch, on the driver,
+    * schema-tagged exactly like [[graft.sources.LineProtocol.inferSchema]]
+    * output: tags, then fields, then `time` — IOx-native columns ride as
+    * fields (the engine's schema model is LP-shaped; `time`-named Time
+    * columns keep the Time category in both sets). */
+  def toBatches(batch: PbDatabaseBatch): Seq[(String, StructType, Seq[Row])] =
     batch.tables.map { t =>
       checkColumnTypes(t)
       if (t.rowCount <= 0)
@@ -245,9 +244,13 @@ object WriteProto {
         times.map(c => IoxSchema.tagged(c.name, LongType, IoxSchema.Time)))
       val ordered = tags ++ fields ++ times
       val byCol = ordered.map(cells(_, t.rowCount))
-      val rows = (0 until t.rowCount).map(r => Row.fromSeq(byCol.map(_(r))))
-      t.name -> spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
+      (t.name, schema, (0 until t.rowCount).map(r => Row.fromSeq(byCol.map(_(r)))))
     }
-  }
+
+  /** [[toBatches]] as one (measurement, frame of one partition) each. */
+  def toFrames(spark: SparkSession, batch: PbDatabaseBatch)
+      : Seq[(String, DataFrame)] =
+    toBatches(batch).map { case (m, schema, rows) =>
+      m -> spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    }
 }

@@ -304,13 +304,23 @@ object LineProtocol {
     * tests and micro-batches). `defaultTimeNs` stands in for the
     * server-assigned wall clock the reference applies to timestamp-less
     * lines. Callers that need the parsed lines themselves (the server's
-    * write counters) parse once and call this. */
+    * write counters) parse once and call this; callers that need the rows
+    * on the driver as well (the server's chunk summaries) call
+    * [[batchesOf]]. */
   def framesOf(spark: SparkSession, parsed: Seq[ParsedLine],
       defaultTimeNs: Long = 0L): Map[String, DataFrame] =
+    batchesOf(parsed, defaultTimeNs).map { case (m, (schema, rows)) =>
+      m -> spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    }
+
+  /** Parsed lines as one (schema, rows) batch per measurement, on the
+    * driver: the rows [[framesOf]] builds its frames from, each with its
+    * line's resolved timestamp. */
+  def batchesOf(parsed: Seq[ParsedLine],
+      defaultTimeNs: Long = 0L): Map[String, (StructType, Seq[Row])] =
     parsed.groupBy(_.measurement).map { case (m, ls) =>
       val schema = inferSchema(ls)
-      val rows = ls.map(toRow(_, schema, defaultTimeNs))
-      m -> spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      m -> (schema, ls.map(toRow(_, schema, defaultTimeNs)))
     }
 
   /** [[framesOf]] over raw line-protocol lines. */

@@ -2,28 +2,39 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{IoxSchema, NsTime, RpcPredicate}
+import graft.core.{IoxSchema, NsTime, RpcPredicate, Utf8Order}
 
-/** Table-level statistics sidecar — the engine's chunk metadata.
+/** Table-level statistics: the engine's chunk metadata.
   *
   * The reference answers tag_keys / tag_values / table_names from chunk
   * metadata whenever the predicate allows, only falling back to data scans
   * (influxrpc.rs:198-214, 269-292, 396-420); its chunks carry per-column
-  * summaries (partition_metadata.rs TableSummary/ColumnSummary). Parquet
-  * footers give min/max but not distinct tag sets, so compaction writes
-  * this sidecar (`_graft_stats/` JSON, one row) next to the data:
-  * row count, time range, and per-tag distinct values (capped — a tag
-  * above the cap is marked and excluded from metadata-only answering).
+  * summaries (partition_metadata.rs TableSummary/ColumnSummary). A
+  * [[TableStats]] is that summary: row count, time range, and per-tag
+  * distinct values (capped: a tag above the cap is marked and excluded
+  * from metadata-only answering). Two places keep one:
+  *  - compaction writes it as a sidecar (`_graft_stats/` JSON, one row)
+  *    next to the parquet data, whose footers give min/max but not
+  *    distinct tag sets ([[compute]], [[computeDuringWrite]]);
+  *  - every server chunk carries one on its record, built at append from
+  *    the batch's rows on the driver with no job ([[ofRows]]), and the
+  *    server's metadata RPCs answer from the union of their chunks'
+  *    summaries when [[covers]] holds (`graft.server.ChunkSummaries`).
   *
   * At 100 TB this is the difference between O(1) metadata queries and a
   * full scan per cardinality lookup — the reference treats that as a
-  * first-class design point and so does this engine.
+  * first-class design point and so does this engine. Every metadata
+  * answer here is in UTF-8 byte order ([[Utf8Order]]), like a scan's.
   */
 object StatsCatalog {
 
   /** `_`-prefixed so Spark's file index skips it on data scans (same
     * convention as _SUCCESS / _metadata). */
   val StatsFile = "_graft_stats.json"
+
+  /** The distinct values a summary keeps per tag by default; a tag with
+    * more is capped. */
+  val MaxTagValues = 10000
 
   private lazy val mapper = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -68,13 +79,60 @@ object StatsCatalog {
     * Stats run at compaction time, so the extra scan is off the query path.
     * `tagCols` defaults to the schema's category metadata; pass explicitly
     * for frames that lost metadata in a parquet round-trip. */
-  def compute(df: DataFrame, tagCols: Seq[String] = Nil, cap: Int = 10000,
+  def compute(df: DataFrame, tagCols: Seq[String] = Nil, cap: Int = MaxTagValues,
       sortKey: Option[Seq[String]] = None): TableStats = {
     val tags = if (tagCols.nonEmpty) tagCols else IoxSchema.tagColumns(df.schema)
     val aggs = scalarAggs(df.schema, tags)
     val pre = df.agg(aggs.head, aggs.tail: _*).head()
     val m = pre.schema.fieldNames.iterator.zip(pre.toSeq.iterator).toMap
     finish(df, df.schema, tags, cap, sortKey, m)
+  }
+
+  /** Stats of a batch held as rows on the driver, in one pass and with no
+    * job: row count, time bounds and per-tag distinct non-null values,
+    * capped like [[compute]]'s (a tag with more than [[MaxTagValues]]
+    * distinct values is marked capped and keeps none). None when the rows
+    * have no i64 `time` column or a null time, which a range predicate
+    * could not be checked against. Tags are `schema`'s tag-category
+    * columns. */
+  def ofRows(schema: org.apache.spark.sql.types.StructType,
+      rows: Iterable[org.apache.spark.sql.Row]): Option[TableStats] = {
+    val timeIdx = Some(schema.fieldNames.indexOf(NsTime.TimeColumn))
+      .filter(i => i >= 0 && schema(i).dataType == org.apache.spark.sql.types.LongType)
+    timeIdx.flatMap { ti =>
+      val tags = IoxSchema.tagColumns(schema)
+      val tagIdx = tags.map(schema.fieldIndex).toArray
+      val seen = Array.fill(tags.size)(scala.collection.mutable.HashSet.empty[String])
+      var n = 0L
+      var tMin = Long.MaxValue
+      var tMax = Long.MinValue
+      var timed = true
+      val it = rows.iterator
+      while (timed && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(ti)) timed = false
+        else {
+          val t = r.getLong(ti)
+          n += 1
+          tMin = math.min(tMin, t)
+          tMax = math.max(tMax, t)
+          var i = 0
+          while (i < tagIdx.length) {
+            if (!r.isNullAt(tagIdx(i)) && seen(i).size <= MaxTagValues)
+              seen(i) += r.getString(tagIdx(i))
+            i += 1
+          }
+        }
+      }
+      Option.when(timed)(TableStats(
+        rowCount = n,
+        timeMin = if (n == 0) 0L else tMin,
+        timeMax = if (n == 0) 0L else tMax,
+        tagValues = tags.indices.map(i => tags(i) ->
+          (if (seen(i).size > MaxTagValues) Nil else Utf8Order.sorted(seen(i)))).toMap,
+        cappedTags = tags.indices.collect { case i if seen(i).size > MaxTagValues => tags(i) }
+          .sorted))
+    }
   }
 
   /** Stats computed in the SAME job as a write: the scalar pass (row
@@ -94,7 +152,7 @@ object StatsCatalog {
     * (open hot chunks) whose sidecars no metadata fast path ever reads;
     * the scalar stats (row count, time bounds, per-column count/min/max)
     * still ride the write for free. */
-  def computeDuringWrite(df: DataFrame, tagCols: Seq[String] = Nil, cap: Int = 10000,
+  def computeDuringWrite(df: DataFrame, tagCols: Seq[String] = Nil, cap: Int = MaxTagValues,
       sortKey: Option[Seq[String]] = None, tagSets: Boolean = true)(
       write: DataFrame => Unit, written: => DataFrame): TableStats = {
     val tags =
@@ -127,7 +185,7 @@ object StatsCatalog {
       }
       key -> finish(
         sys.error("computeGrouped never runs a distinct-set pass"),
-        schema, Nil, 10000, None, m - keyCol)
+        schema, Nil, MaxTagValues, None, m - keyCol)
     }.toMap
   }
 
@@ -150,15 +208,20 @@ object StatsCatalog {
       tags: Seq[String]): Seq[org.apache.spark.sql.Column] = {
     val time = col(NsTime.TimeColumn)
     Seq(count(lit(1)).as("__n"), min(time).as("__tmin"), max(time).as("__tmax")) ++
-      tags.map(t => approx_count_distinct(col(t), 0.05).as(s"__est_$t")) ++
+      tags.map(t => approx_count_distinct(column(t), 0.05).as(s"__est_$t")) ++
       schema.fields.flatMap { f =>
-        val base = Seq(count(col(f.name)).as(s"__cnt_${f.name}"))
+        val base = Seq(count(column(f.name)).as(s"__cnt_${f.name}"))
         if (orderableForStats(f.dataType))
-          base ++ Seq(min(col(f.name)).cast("string").as(s"__cmin_${f.name}"),
-            max(col(f.name)).cast("string").as(s"__cmax_${f.name}"))
+          base ++ Seq(min(column(f.name)).cast("string").as(s"__cmin_${f.name}"),
+            max(column(f.name)).cast("string").as(s"__cmax_${f.name}"))
         else base
       }
   }
+
+  /** The column named `name`, quoted: a tag or field name may hold a dot,
+    * which `col` would read as a nested-field path. */
+  private def column(name: String): org.apache.spark.sql.Column =
+    col(s"`${name.replace("`", "``")}`")
 
   /** Shared tail of both compute paths: run the capped `collect_set` pass
     * over `src` for tags whose HLL estimate is plausibly under the cap,
@@ -172,7 +235,7 @@ object StatsCatalog {
       if (collectable.isEmpty) Map.empty
       else {
         val aggs = collectable.map(t =>
-          slice(sort_array(collect_set(col(t))), 1, cap + 1).as(s"__tag_$t"))
+          slice(sort_array(collect_set(column(t))), 1, cap + 1).as(s"__tag_$t"))
         val row = src.agg(aggs.head, aggs.tail: _*).head()
         collectable.map(t => t -> row.getSeq[String](row.fieldIndex(s"__tag_$t"))).toMap
       }
@@ -337,7 +400,7 @@ object StatsCatalog {
     load(spark, tablePath) match {
       case Some(st) if covers(st, pred) && st.tagValues.contains(tag) &&
           !st.cappedTags.contains(tag) =>
-        st.tagValues(tag).sorted.toDF("value")
+        Utf8Order.sorted(st.tagValues(tag)).toDF("value")
       case _ => fallback
     }
   }
@@ -349,8 +412,8 @@ object StatsCatalog {
       fallback: => Seq[String]): Seq[String] =
     load(spark, tablePath) match {
       case Some(st) if covers(st, pred) =>
-        (st.tagValues.collect { case (t, vs) if vs.nonEmpty => t } ++
-          st.cappedTags).toSeq.distinct.sorted
+        Utf8Order.sorted(st.tagValues.collect { case (t, vs) if vs.nonEmpty => t } ++
+          st.cappedTags)
       case _ => fallback
     }
 
@@ -359,7 +422,7 @@ object StatsCatalog {
     * time ranges intersect; otherwise it must be probed via `fallback`. */
   def tableNamesFast(spark: SparkSession, tables: Map[String, String],
       pred: RpcPredicate)(fallback: String => Boolean): Seq[String] =
-    tables.toSeq.collect { case (name, path)
+    Utf8Order.sorted(tables.iterator.collect { case (name, path)
         if pred.tables.forall(_.contains(name)) &&
           (load(spark, path) match {
             case Some(st) if pred.exprs.isEmpty =>
@@ -367,5 +430,5 @@ object StatsCatalog {
                 r.startNs <= st.timeMax && r.stopNs > st.timeMin)
             case _ => fallback(name)
           }) => name
-    }.sorted
+    })
 }

@@ -271,9 +271,13 @@ class GrpcStorageSpec extends SparkSpec {
         "disk,dev=sda free=1.0 100", "disk,dev=sdb free=2.0 200").foreach { lp =>
         assert(HttpFacade.postWrite(facade.boundPort, Org, Bucket, lp) == 204)
       }
+      // `key =~ /.*/` keeps the request on the scan path, whose view reads
+      // this test counts: with no predicate it reads none (chunk summaries
+      // answer it, ChunkSummarySpec)
       def tagValues(key: String): Either[String, Seq[String]] =
         storage(StorageGrpc.ServicePrefix + "TagValues", msg { b =>
           b.bytes(1, source)
+          b.bytes(3, predicate(cmp(R.Cmp.Regex, tagRef(key), litRegex(".*"))))
           b.bytes(4, key.getBytes(UTF_8))
         }).map(resp => stringValues(resp.next()))
       def snapshotBuilds(): Long = {

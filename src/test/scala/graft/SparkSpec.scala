@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,9 +22,36 @@ trait SparkSpec extends AnyFunSuite {
       s"reference checkout file not present: $path")
     path
   }
+
+  /** `body`'s value, and the number of Spark jobs it started. */
+  def countingJobs[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger
+    val seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(SparkSpec.JobSentinel) != null))
+          seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      // the listener bus delivers in order: once the start of a job run
+      // after `body` arrives, every job `body` started has been counted
+      sc.setLocalProperty(SparkSpec.JobSentinel, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(SparkSpec.JobSentinel, null)
+      assert(seen.await(60, TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
+  /** The local property that marks [[SparkSpec.countingJobs]]'s own job. */
+  private val JobSentinel = "graft.test.sentinel"
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -2,13 +2,10 @@ package graft
 
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.server.{ArrowIpc, FlightGrpc, GrpcClient, HttpFacade}
 import graft.StorageRequests._
@@ -120,8 +117,8 @@ class SqlBindingSpec extends SparkSpec {
       (1 to 5).foreach(i =>
         assert(HttpFacade.postWrite(p, Org, Bucket, s"m,host=h v=${i}i $i") == 204))
       assert(sqlRows(p, Db, "SELECT count(*) AS n FROM system_chunks") == Seq("5"))
-      val plain = jobsOf(sqlRows(p, Db, "SELECT 'plain_x' AS s"))
-      val literal = jobsOf(sqlRows(p, Db, "SELECT 'system_x' AS s"))
+      val plain = countingJobs(sqlRows(p, Db, "SELECT 'plain_x' AS s"))
+      val literal = countingJobs(sqlRows(p, Db, "SELECT 'system_x' AS s"))
       assert(plain._1 == Seq("plain_x") && literal._1 == Seq("system_x"))
       assert(literal._2 == plain._2, s"jobs: ${literal._2} vs ${plain._2}")
     }
@@ -180,31 +177,5 @@ class SqlBindingSpec extends SparkSpec {
         }
       } finally pool.shutdown()
     }
-  }
-
-  private val Sentinel = "graft.test.sentinel"
-
-  /** `body`'s value, and the number of Spark jobs it started. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val jobs = new AtomicInteger
-    val seen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Sentinel) != null))
-          seen.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      // the listener bus delivers in order: once the start of a job run
-      // after `body` arrives, every job `body` started has been counted
-      sc.setLocalProperty(Sentinel, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(Sentinel, null)
-      assert(seen.await(60, TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 }

@@ -2,6 +2,7 @@
 """Splits a JFR CPU profile into Spark phases and graft call paths.
 
     python3 tools/jfr_split.py RECORDING.jfr [--threads REGEX] [--last SECONDS]
+    python3 tools/jfr_split.py RECORDING.jfr --jit [--last SECONDS]
     python3 tools/jfr_split.py --selftest
 
 Reads the recording's `jdk.ExecutionSample` events through
@@ -25,10 +26,18 @@ computing and storing the snapshot fold among it; split them with
 worker for task ..."). The "spark: block store", "spark: SizeEstimator"
 and "spark: sort/aggregate" buckets are for them.
 
+With `--jit` it reads the `jdk.Compilation` events instead and prints the
+JIT compilers' time, summed over the compilations that started in the last
+`--last` seconds: the total, then by compiler (c1, c2) and by top package
+(the first four components of the compiled method's package, such as
+`org/apache/spark/sql`), largest first. The `profile` settings record only
+compilations over 100 ms; add `jdk.Compilation#threshold=0ms` to the
+recording options to record them all.
+
 A recording of the benchmark, with `perfbench/run.py` unchanged:
 
     JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=stackdepth=512 \\
-      -XX:StartFlightRecording=filename=X.jfr,settings=profile" \\
+      -XX:StartFlightRecording=filename=X.jfr,settings=profile,jdk.Compilation#threshold=0ms" \\
       python3 perfbench/run.py --workload server-mixed --seed N --seconds 15 --trace 0
 """
 import argparse
@@ -66,7 +75,7 @@ BUCKETS = [
      r"^graft\.server\.HttpFacade\.(\S*\$)?planStatement(\$|$)"),
     ("graft: storage RPC plan",
      r"^graft\.server\.HttpFacade\.(\S*\$)?plan(ReadFilter|ReadGroup|"
-     r"ReadWindowAggregate|TagValues)(\$|$)"),
+     r"ReadWindowAggregate|TagValues|TagKeys|MeasurementNames)(\$|$)"),
     ("graft: result rows", r"^graft\.core\.ResultRows"),
     ("graft: line-protocol write",
      r"^graft\.server\.HttpFacade\.(\S*\$)?writeLines(\$|$)"),
@@ -162,6 +171,57 @@ def split(sampled, last=None):
     return len(sampled), counts
 
 
+def parse_duration(text):
+    """Seconds of a JFR JSON duration (ISO 8601: "PT0.0123S", "PT1M2.5S")."""
+    m = re.fullmatch(r"(-)?PT(?:(\d+)H)?(?:(\d+)M)?(?:(\d+(?:\.\d+)?)S)?", text)
+    secs = int(m.group(2) or 0) * 3600 + int(m.group(3) or 0) * 60 + float(m.group(4) or 0)
+    return -secs if m.group(1) else secs
+
+
+def top_package(cls, depth=4):
+    """The first `depth` components of the package of class `cls`
+    ("org/apache/spark/sql/Dataset" -> "org/apache/spark/sql")."""
+    parts = cls.replace(".", "/").split("/")[:-1]
+    return "/".join(parts[:depth]) or "(default package)"
+
+
+def compilations(stream):
+    """(start time, seconds, compiler, top package) of each compilation."""
+    for e in events(stream):
+        v = e.get("values") or {}
+        cls = ((v.get("method") or {}).get("type") or {}).get("name") or "?"
+        yield (parse_time(v["startTime"]), parse_duration(v["duration"]),
+               v.get("compiler") or "?", top_package(cls))
+
+
+def jit_split(compiled, last=None):
+    """(total seconds, {compiler: [count, seconds]}, {package: [count,
+    seconds]}) over the compilations that started in the last `last`
+    seconds before the newest start."""
+    compiled = list(compiled)
+    if last is not None and compiled:
+        newest = max(c[0] for c in compiled)
+        compiled = [c for c in compiled if c[0] >= newest - last]
+    by_compiler, by_package = {}, {}
+    for _, secs, compiler, package in compiled:
+        for key, acc in ((compiler, by_compiler), (package, by_package)):
+            acc.setdefault(key, [0, 0.0])
+            acc[key][0] += 1
+            acc[key][1] += secs
+    return sum(c[1] for c in compiled), by_compiler, by_package
+
+
+def jit_report(total, by_compiler, by_package, out, top=15):
+    share = lambda secs: 100.0 * secs / total if total else 0.0
+    out.write(f"{'JIT compilation':40s} {'count':>7s} {'s':>9s} {'share':>8s}\n")
+    out.write(f"{'total':40s} {sum(c for c, _ in by_compiler.values()):7d} "
+              f"{total:9.3f} {100.0 if total else 0.0:6.1f} %\n")
+    for title, acc, n in (("compiler", by_compiler, None), ("package", by_package, top)):
+        ranked = sorted(acc.items(), key=lambda kv: (-kv[1][1], kv[0]))[:n]
+        for name, (count, secs) in ranked:
+            out.write(f"{title + ' ' + name:40s} {count:7d} {secs:9.3f} {share(secs):6.1f} %\n")
+
+
 def report(n, counts, out):
     pct = lambda c: 100.0 * c / n if n else 0.0
     out.write(f"{f'{n} samples':32s} {'in':>7s} {'share':>8s} {'inner':>7s} {'share':>8s}\n")
@@ -251,6 +311,36 @@ def selftest():
         ({"graft: SQL binding", "graft: SQL plan"}, "graft: SQL binding")
     assert buckets_of(["graft.server.HttpFacade.planStatement"]) == \
         ({"graft: InfluxQL plan"}, "graft: InfluxQL plan")
+    # --jit: compile time by compiler and top package, over the window
+    def compilation(ts, duration, compiler, cls):
+        return {"type": "jdk.Compilation", "values": {
+            "startTime": ts, "duration": duration, "compiler": compiler,
+            "method": {"type": {"name": cls}, "name": "m"}}}
+    jit = json.dumps({"recording": {"events": [
+        compilation("2026-01-01T00:00:00Z", "PT1M0.5S", "c2", "scala/Predef$"),
+        compilation("2026-01-01T00:00:09Z", "PT0.25S", "c2",
+                    "org/apache/spark/sql/catalyst/trees/TreeNode"),
+        compilation("2026-01-01T00:00:09.5Z", "PT0.5S", "c1", "org/apache/spark/sql/Dataset"),
+        compilation("2026-01-01T00:00:10Z", "PT0.125S", "c2", "graft/server/HttpFacade"),
+        compilation("2026-01-01T00:00:10Z", "PT0S", "c1", "Toplevel"),
+    ]}}, indent=2)
+    assert parse_duration("PT1H2M3.5S") == 3723.5 and parse_duration("PT0S") == 0.0
+    total, by_compiler, by_package = jit_split(compilations(io.StringIO(jit)))
+    assert total == 61.375 and by_compiler == {"c2": [3, 60.875], "c1": [2, 0.5]}
+    # the last 2 s before the newest start (10 s): 9, 9.5 and 10 s
+    total, by_compiler, by_package = jit_split(compilations(io.StringIO(jit)), last=2.0)
+    assert total == 0.875, total
+    assert by_compiler == {"c2": [2, 0.375], "c1": [2, 0.5]}, by_compiler
+    assert by_package == {"org/apache/spark/sql": [2, 0.75], "graft/server": [1, 0.125],
+                          "(default package)": [1, 0.0]}, by_package
+    out = io.StringIO()
+    jit_report(total, by_compiler, by_package, out, top=2)
+    lines = out.getvalue().splitlines()
+    assert lines[1].split() == ["total", "4", "0.875", "100.0", "%"], lines
+    assert lines[2].split() == ["compiler", "c1", "2", "0.500", "57.1", "%"], lines
+    assert lines[4].split() == ["package", "org/apache/spark/sql", "2", "0.750", "85.7", "%"]
+    assert len(lines) == 6  # `top` packages only
+    assert len({len(l) for l in lines}) == 1  # aligned columns
     print("jfr_split selftest ok")
 
 
@@ -263,14 +353,23 @@ def main():
     ap.add_argument("--threads", default=DEFAULT_THREADS,
                     help=f"thread-name regex (default {DEFAULT_THREADS!r})")
     ap.add_argument("--last", type=float, help="only the last SECONDS of samples")
+    ap.add_argument("--jit", action="store_true",
+                    help="sum JIT compilation time by compiler and top package")
     a = ap.parse_args()
+    event = "jdk.Compilation" if a.jit else "jdk.ExecutionSample"
     p = subprocess.Popen(["jfr", "print", "--stack-depth", "512", "--json",
-                          "--events", "jdk.ExecutionSample", a.recording],
+                          "--events", event, a.recording],
                          stdout=subprocess.PIPE, text=True)
-    n, counts = split(samples(p.stdout, a.threads), a.last)
+    if a.jit:
+        result = jit_split(compilations(p.stdout), a.last)
+    else:
+        n, counts = split(samples(p.stdout, a.threads), a.last)
     if p.wait() != 0:
         sys.exit(f"jfr print exited {p.returncode}")
-    report(n, counts, sys.stdout)
+    if a.jit:
+        jit_report(*result, sys.stdout)
+    else:
+        report(n, counts, sys.stdout)
 
 
 if __name__ == "__main__":
