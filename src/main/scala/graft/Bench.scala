@@ -9,21 +9,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val mainStartNs = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // The default codegen cache holds 100 generated classes; the ~75
-      // bench queries generate more than that, so with the default size a
-      // query's Janino-compiled classes are evicted before its next timed
-      // pass and every pass re-pays compilation. A large cache makes the
-      // cold pass 0 keep ALL subsequent passes warm.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     // ERROR, not WARN: the driver keeps only a 2000-byte TAIL of merged
     // stdout+stderr and parses the last JSON line in it. r13's artifact
     // was rc=124/parsed=null because the tail was 100% `WARN WindowExec`/

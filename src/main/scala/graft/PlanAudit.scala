@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
@@ -110,14 +109,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = if (args.length > 1) args(1) else "plan_audit.json"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false") // static plan shapes
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 8 fixed cores and no AQE: plan shapes that do not depend on the
+    // host or on runtime statistics, so audits diff across rounds
+    val spark = GraftSession.builder("8")
+      .config("spark.sql.adaptive.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val shapes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic ×F scale-up of a testdata SF directory into a repo-local
@@ -53,13 +53,10 @@ object ScaleData {
     val outDir = if (args.length > 1) args(1) else "/root/repo/scale_scratch/x10"
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 2, s"factor must be >= 2, got $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 32 shuffle partitions whatever the core count: the scaled tables'
+    // file layout does not depend on the host that generated them
+    val spark = GraftSession.builder()
+      .config("spark.sql.shuffle.partitions", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

@@ -46,6 +46,13 @@ import graft.sources.{LineProtocol, StatsCatalog}
   *    measurement (http.rs:698; key = the default `%Y-%m-%d` TimeFormat
   *    template of database_rules.rs:233).
   *
+  * Beside these: the 1.x `/query` endpoint, the db-addressed LP write the
+  * shard router forwards to, `write_pb`, Flight `do_get`/`do_put`, and
+  * the chunk listing `GET /iox/api/v1/chunks`. The management API
+  * (databases, rules, partitions, chunk actions, operations) is served
+  * over gRPC only, by [[ManagementGrpc]], as in the reference
+  * (rpc/management.rs); this class holds its state and backend.
+  *
   * The server itself is the JDK's `com.sun.net.httpserver` — a facade, not
   * a data path: bodies are capped micro-batches; all heavy lifting (parse
   * fan-out, dedup, SQL) stays in Spark. A query binds its table names to
@@ -101,10 +108,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     TrieMap.empty[(String, String), graft.core.InfluxQl.CreateCq]
 
   /** Long-running-operations registry (rpc/operations.rs): one
-    * structured record per tracked management job — rendered as JSON by
-    * the HTTP routes and as `google.longrunning.Operation` protobuf by
-    * the gRPC operations service ([[ManagementGrpc]]), both from the
-    * same record. */
+    * structured record per tracked management job, served as
+    * `google.longrunning.Operation` protobuf by the gRPC operations
+    * service ([[ManagementGrpc]]) and as rows of `system_operations`. */
   private val operations = TrieMap.empty[Long, HttpFacade.OpRecord]
   private val nextOpId = new AtomicLong
 
@@ -542,19 +548,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         case ("GET", "/metrics") => handleMetrics(ex)
         case ("GET", "/api/v1/partitions") => handlePartitions(ex)
         case ("GET", "/iox/api/v1/chunks") => handleListChunks(ex)
-        case ("GET", "/iox/api/v1/databases") => handleListDatabases(ex)
-        case ("GET", RulesPath(db)) => handleGetRules(ex, db)
-        case ("PUT", RulesPath(db)) => handlePutRules(ex, db)
-        case ("GET", "/iox/api/v1/operations") => handleListOperations(ex)
-        case ("GET", OperationPath(id)) => handleGetOperation(ex, id.toLong)
-        case ("GET", DbPartitionsPath(db)) => handleDbPartitions(ex, db)
-        case ("GET", PartitionChunksPath(db, key)) =>
-          handlePartitionChunks(ex, db, key)
-        case ("GET", PartitionPath(db, key)) => handleGetPartition(ex, db, key)
-        case ("POST", NewChunkPath(db, key, table)) =>
-          handleNewPartitionChunk(ex, db, key, table)
-        case ("POST", CloseChunkPath(db, key, table, id)) =>
-          handleClosePartitionChunk(ex, db, key, table, id.toInt)
         case ("GET", QueryPath(db)) => handleQuery(ex, db)
         case ("GET", "/query") => handleInfluxQlQuery(ex)
         case _ => respondJsonError(ex, 404, s"no route for $path")
@@ -992,21 +985,21 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   }
 
   /** Plans one 1.x statement against `db`: returns (series name, tag
-    * columns, frame) or an in-band error string. The statements that read
-    * measurements plan over the db's views ([[dbTables]]), built when the
-    * statement is planned, so a statement sees the writes, deletes and
-    * drops of the ones before it. No lock is held while planning: the
-    * views are values, and the planner writes no shared catalog. */
+    * columns, frame) or an in-band error string. SELECT, INTO and EXPLAIN
+    * plan over the views of the measurements they read ([[readViews]]),
+    * SHOW over every view ([[dbTables]]), built when the statement is
+    * planned, so a statement sees the writes, deletes and drops of the
+    * ones before it; DELETE and DROP SERIES check their tags against the
+    * chunk schemas ([[chunkTags]]) and build no view. No lock is held
+    * while planning: the views are values, and the planner writes no
+    * shared catalog. */
   private[server] def planStatement(db: String, stmt: graft.core.InfluxQl.Stmt)
       : Either[String, Option[(String, Seq[String], DataFrame)]] = stmt match {
     case sel: graft.core.InfluxQl.Select =>
-      // subqueries may nest: resolve the root measurement for the series
-      // name, and hand the planner the whole catalog
-      def root(s: graft.core.InfluxQl.Select): String =
-        s.fromSub.map(root).getOrElse(s.from)
       val name = root(sel)
-      val msAll = dbTables(db).map { case (m, df) => m -> asMeasurement(df) }
-      if (!msAll.contains(name)) Left(s"measurement not found: $name")
+      val msAll = readViews(db, sel)
+      if (sel.fromRegex.isEmpty && !msAll.contains(name))
+        Left(s"measurement not found: $name")
       else if (sel.into.isDefined) {
         // `SELECT … INTO <target>`: run now and land the result in the
         // SAME per-measurement store as LP/protobuf writes (1.x
@@ -1018,7 +1011,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         val target = sel.into.get
         val out = graft.operators.InfluxQlPlanner.plan(msAll, sel,
           nowNs = Some(clockNs()))
-        val tagSet = msAll.values.flatMap(_.tagCols).toSet + "name"
+        val tagSet = chunkTags(db) + "name"
         def meta(cat: String) = new MetadataBuilder()
           .putString(IoxSchema.CategoryKey, cat).build()
         val metaCols = out.schema.fields.toSeq.map { f =>
@@ -1040,8 +1033,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       } else {
         val df = graft.operators.InfluxQlPlanner.plan(msAll, sel,
           nowNs = Some(clockNs()))
-        val tagSet = msAll.values.flatMap(_.tagCols).toSet
-        Right(Some((name, df.columns.filter(tagSet).toSeq, df)))
+        Right(Some((name, df.columns.filter(chunkTags(db)).toSeq, df)))
       }
     case sh: graft.core.InfluxQl.Show if sh.what == "databases" =>
       import spark.implicits._
@@ -1109,8 +1101,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       if (!measurements(db).contains(from))
         Left(s"measurement not found: $from")
       else {
-        val tags = dbTables(db).get(from).map(asMeasurement(_).tagCols)
-          .getOrElse(Seq.empty)
+        val tags = chunkTags(db, _ == from)
         // DELETE ... WHERE time < now() - 7d is the canonical retention
         // command: resolve now() against the server clock before the
         // time-bound split, exactly like the SELECT path
@@ -1151,8 +1142,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       // series
       if (!measurements(db).contains(m)) Left(s"measurement not found: $m")
       else {
-        val tags = dbTables(db).get(m).map(asMeasurement(_).tagCols)
-          .getOrElse(Seq.empty)
+        val tags = chunkTags(db, _ == m)
         where.foreach { e =>
           val bad = collectRefs(e).filterNot(tags.contains)
           if (bad.nonEmpty)
@@ -1168,10 +1158,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
       // the 1.x plan-inspection statement, answered with the engine's
       // native plan: EXPLAIN = formatted Catalyst logical->physical,
       // ANALYZE = the final AQE-resolved executed plan after running
-      def root(s0: graft.core.InfluxQl.Select): String =
-        s0.fromSub.map(root).getOrElse(s0.from)
-      val msAll = dbTables(db).map { case (m, df) => m -> asMeasurement(df) }
-      if (!msAll.contains(root(sel)))
+      val msAll = readViews(db, sel)
+      if (sel.fromRegex.isEmpty && !msAll.contains(root(sel)))
         Left(s"measurement not found: ${root(sel)}")
       else {
         val df = graft.operators.InfluxQlPlanner.plan(msAll, sel,
@@ -1187,6 +1175,35 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           text.linesIterator.toSeq.toDF("QUERY PLAN"))))
       }
   }
+
+  /** The measurement a SELECT's series are named after: its FROM, through
+    * nested subqueries ("" for a regex FROM). */
+  private def root(s: graft.core.InfluxQl.Select): String =
+    s.fromSub.map(root).getOrElse(s.from)
+
+  /** The catalog a SELECT plans over: the views of the measurements it
+    * reads — its FROM list, or those of `db` its FROM regex matches, at
+    * the innermost subquery. Every other measurement stays unbuilt, so
+    * one that cannot be read fails only the statements that read it. */
+  private def readViews(db: String, s: graft.core.InfluxQl.Select)
+      : Map[String, graft.operators.InfluxMeasurement] = {
+    def reads(s: graft.core.InfluxQl.Select): Seq[String] = s.fromSub match {
+      case Some(inner) => reads(inner)
+      case None => s.fromRegex match {
+        case Some(re) =>
+          val p = java.util.regex.Pattern.compile(graft.core.GoRegex.toJava(re))
+          measurements(db).filter(p.matcher(_).find())
+        case None => s.from :: s.fromMore
+      }
+    }
+    reads(s).distinct.flatMap(m => measurementView(db, m).map(m -> asMeasurement(_))).toMap
+  }
+
+  /** The tag columns of the chunks of `db` whose measurement `keep`
+    * accepts, from their schemas: no view is built. */
+  private def chunkTags(db: String, keep: String => Boolean = _ => true): Set[String] =
+    databases.getOrElse(db, Vector.empty).iterator.filter(c => keep(c.measurement))
+      .flatMap(c => IoxSchema.tagColumns(c.frame.schema)).toSet
 
   /** Records a DELETE / DROP SERIES region on `m`, unless a concurrent
     * DROP MEASUREMENT, which clears tombstones under this lock, won. */
@@ -1383,7 +1400,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
 
   /** All measurements of `db` as a name->view map: the catalog InfluxQL
-    * and `system_columns` plan over, and the database-level operand of the
+    * SHOW and `system_columns` plan over, and the database-level operand of the
     * *AcrossTables metadata ops. */
   private[server] def dbTables(db: String): Map[String, DataFrame] =
     measurements(db).flatMap(m => measurementView(db, m).map(m -> _)).toMap
@@ -1687,10 +1704,10 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     answer
   }
 
-  // ------------------------------------------------- management surface
-  // (the reference's management API: CreateDatabase / GetDatabase /
-  // ListDatabases with DatabaseRules payloads — gRPC there,
-  // management.proto; HTTP-carried JSON here like the other stand-ins)
+  // ------------------------------------------------- management backend
+  // (the reference's management API, management.proto: databases and
+  // their DatabaseRules, partitions, chunk actions, operations — served
+  // over gRPC by [[ManagementGrpc]])
 
   /** db_names_sorted (management.rs:85-91): every database that was
     * written to or configured. */
@@ -1749,29 +1766,26 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private[server] def setServingReadiness(ready: Boolean): Unit =
     servingReady.set(ready)
 
-  private def handleListDatabases(ex: HttpExchange): Unit =
-    respond(ex, 200, "application/json",
-      databaseNames.map(jsonStr).mkString("""{"names":[""", ",", "]}"))
-
-  private def handleGetRules(ex: HttpExchange, db: String): Unit =
-    storedRules(db) match {
-      case Some(r) => respond(ex, 200, "application/json",
-        graft.streaming.DatabaseRules.toJson(r))
-      case None => respondJsonError(ex, 404, s"database not found: $db")
+  /** One [[HttpFacade.ChunkRow]] per (chunk, partition key) with rows,
+    * over the chunks of `db` that `select` keeps (given each chunk and
+    * its id), under the partition template in effect, in no particular
+    * order: the membership every listing and chunk action filters. One
+    * Spark job, the union of each selected chunk's (id, key) projection
+    * grouped in one partition; none when nothing is selected. */
+  private def partitionRows(db: String,
+      select: (Chunk, Int) => Boolean = (_, _) => true): Seq[HttpFacade.ChunkRow] = {
+    val template = rulesOf(db).partitionTemplate
+    val chunks = databases.getOrElse(db, Vector.empty)
+    val keyed = chunks.zipWithIndex.collect { case (c, i) if select(c, i) =>
+      c.frame.select(lit(i).as("id"),
+        template.keyColumn(c.measurement, c.frame.schema).as("k"))
     }
-
-  private def handlePutRules(ex: HttpExchange, db: String): Unit = {
-    val body = new String(storageBodyBytes(ex).getOrElse(return), UTF_8)
-    graft.streaming.DatabaseRules.fromJson(body) match {
-      case Left(err) => respondJsonError(ex, 400, err)
-      case Right(r) if r.name != db =>
-        respondJsonError(ex, 400,
-          s"rules name '${r.name}' does not match path database '$db'")
-      case Right(r) =>
-        rulesStore.put(db, r)
-        persistRules(r)
-        respond(ex, 200, "application/json",
-          graft.streaming.DatabaseRules.toJson(r))
+    if (keyed.isEmpty) Nil
+    else ResultRows.collect(keyed.reduce(_ union _).coalesce(1)
+        .groupBy("id", "k").agg(count(lit(1)))).map { r =>
+      val c = chunks(r.getInt(0))
+      HttpFacade.ChunkRow(r.getString(1), c.measurement, r.getInt(0), c.stage,
+        r.getLong(2))
     }
   }
 
@@ -1782,17 +1796,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * per-partition open chunks. Storage starts at OpenMutableBuffer and
     * moves through the management actions (new_partition_chunk →
     * ClosedMutableBuffer, close_partition_chunk → ReadBuffer). */
-  private[server] def chunkRows(db: String): Seq[HttpFacade.ChunkRow] = {
-    val template = rulesOf(db).partitionTemplate
-    databases.getOrElse(db, Vector.empty).zipWithIndex.flatMap {
-      case (c, i) =>
-        ResultRows.collect(c.frame
-            .groupBy(template.keyColumn(c.measurement, c.frame.schema).as("k"))
-            .agg(count(lit(1)).as("n")))
-          .map(r => HttpFacade.ChunkRow(r.getString(0), c.measurement, i,
-            c.stage, r.getLong(1)))
-    }.sortBy(c => (c.partitionKey, c.table, c.id))
-  }
+  private[server] def chunkRows(db: String): Seq[HttpFacade.ChunkRow] =
+    partitionRows(db).sortBy(c => (c.partitionKey, c.table, c.id))
 
   private def chunkRowJson(c: HttpFacade.ChunkRow): String =
     s"""{"partition_key":${jsonStr(c.partitionKey)},""" +
@@ -1813,70 +1818,20 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
 
   // -------------------------------- management partitions / chunk actions
 
-  /** True when chunk frame `df` of `table` holds any row of partition
-    * `key` under the db's configured template — the membership test every
-    * partition-scoped action uses. The filter is a scan-level predicate
-    * over the (bounded, facade-sized) chunk frame. */
-  private def inPartition(db: String, table: String, df: DataFrame,
-      key: String): Boolean = {
-    val template = rulesOf(db).partitionTemplate
-    df.filter(template.keyColumn(table, df.schema) === key)
-      .limit(1).count() > 0L
-  }
-
   /** list_partitions data (management.rs:243): the database's distinct
     * partition keys, sorted. */
-  private[server] def partitionKeysOf(db: String): Seq[String] = {
-    val template = rulesOf(db).partitionTemplate
-    databases.getOrElse(db, Vector.empty).flatMap { c =>
-      ResultRows.collect(c.frame
-        .select(template.keyColumn(c.measurement, c.frame.schema).as("k"))
-        .distinct()).map(_.getString(0))
-    }.distinct.sorted
-  }
+  private[server] def partitionKeysOf(db: String): Seq[String] =
+    partitionRows(db).map(_.partitionKey).distinct.sorted
 
   /** get_partition membership (management.rs:265). */
   private[server] def partitionExists(db: String, key: String): Boolean =
-    databases.getOrElse(db, Vector.empty).exists(c =>
-      inPartition(db, c.measurement, c.frame, key))
-
-  private def handleDbPartitions(ex: HttpExchange, db: String): Unit = {
-    if (!requireDb(ex, db)) return
-    respond(ex, 200, "application/json",
-      partitionKeysOf(db).map(k => s"""{"key":${jsonStr(k)}}""")
-        .mkString("[", ",", "]"))
-  }
-
-  /** get_partition (management.rs:265): the partition by key, 404 when
-    * the database holds no row under it. */
-  private def handleGetPartition(ex: HttpExchange, db: String,
-      key: String): Unit = {
-    if (!requireDb(ex, db)) return
-    if (partitionExists(db, key))
-      respond(ex, 200, "application/json", s"""{"key":${jsonStr(key)}}""")
-    else respondJsonError(ex, 404, s"partition not found: $key")
-  }
+    partitionRows(db).exists(_.partitionKey == key)
 
   /** list_partition_chunks data (management.rs:293): the chunks holding
     * rows of one partition, with their current lifecycle storage stage. */
   private[server] def partitionChunkRows(db: String,
-      key: String): Seq[HttpFacade.ChunkRow] = {
-    val template = rulesOf(db).partitionTemplate
-    databases.getOrElse(db, Vector.empty).zipWithIndex.flatMap {
-      case (c, i) =>
-        val n = c.frame
-          .filter(template.keyColumn(c.measurement, c.frame.schema) === key).count()
-        if (n == 0L) None
-        else Some(HttpFacade.ChunkRow(key, c.measurement, i, c.stage, n))
-    }.sortBy(c => (c.table, c.id))
-  }
-
-  private def handlePartitionChunks(ex: HttpExchange, db: String,
-      key: String): Unit = {
-    if (!requireDb(ex, db)) return
-    respond(ex, 200, "application/json",
-      partitionChunkRows(db, key).map(chunkRowJson).mkString("[", ",", "]"))
-  }
+      key: String): Seq[HttpFacade.ChunkRow] =
+    partitionRows(db).filter(_.partitionKey == key).sortBy(c => (c.table, c.id))
 
   /** new_partition_chunk (management.rs:318 → rollover_partition): close
     * the partition's open chunks so the next write starts a fresh one —
@@ -1887,44 +1842,34 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * holds no rows. */
   private[server] def rolloverPartition(db: String, key: String,
       table: String): Boolean = persistLock(db).synchronized {
-    val chunks = databases.getOrElse(db, Vector.empty)
-    val members = chunks.map(c =>
-      c.measurement == table && inPartition(db, table, c.frame, key))
-    if (members.contains(true))
-      databases.put(db, chunks.zip(members).map {
-        case (c, true) if c.stage == "OpenMutableBuffer" =>
+    val members = partitionRows(db, (c, _) => c.measurement == table)
+      .collect { case r if r.partitionKey == key => r.id }.toSet
+    if (members.nonEmpty)
+      databases.put(db, databases(db).zipWithIndex.map {
+        case (c, i) if members(i) && c.stage == "OpenMutableBuffer" =>
           c.copy(stage = "ClosedMutableBuffer")
         case (c, _) => c
       })
-    members.contains(true)
-  }
-
-  private def handleNewPartitionChunk(ex: HttpExchange, db: String,
-      key: String, table: String): Unit = {
-    if (!requireDb(ex, db)) return
-    if (rolloverPartition(db, key, table))
-      respond(ex, 200, "application/json", "{}")
-    else respondJsonError(ex, 404, s"partition not found: $key (table $table)")
+    members.nonEmpty
   }
 
   /** Moves chunk `chunkId` of `table` in partition `key` to the stage
-    * `next` gives for its current one, or fails with `next`'s lifecycle
-    * error. The check and the move run under [[persistLock]], so a
-    * concurrent append or drop cannot slide another chunk under the id.
-    * Left is (http-ish status, message): 404 not-found, 400 lifecycle. */
+    * `next` gives for its current one. The check and the move run under
+    * [[persistLock]], so a concurrent append or drop cannot slide another
+    * chunk under the id. Left is a gRPC status: NOT_FOUND for a chunk
+    * that is not there, `next`'s lifecycle error as it is. */
   private def moveChunk(db: String, key: String, table: String,
       chunkId: Int)(next: String => Either[String, String])
-      : Either[(Int, String), Unit] = persistLock(db).synchronized {
+      : Either[String, Unit] = persistLock(db).synchronized {
     val chunks = databases.getOrElse(db, Vector.empty)
     chunks.lift(chunkId).filter(_.measurement == table) match {
-      case None => Left((404, s"chunk $chunkId not found for table $table"))
-      case Some(c) if !inPartition(db, table, c.frame, key) =>
-        Left((404, s"chunk $chunkId holds no rows of partition $key"))
-      case Some(c) => next(c.stage) match {
-        case Left(err) => Left((400, err))
-        case Right(stage) =>
-          databases.put(db, chunks.updated(chunkId, c.copy(stage = stage)))
-          Right(())
+      case None =>
+        Left(GrpcServer.statusError(5, s"chunk $chunkId not found for table $table"))
+      case Some(_) if !partitionRows(db, (_, i) => i == chunkId)
+          .exists(_.partitionKey == key) =>
+        Left(GrpcServer.statusError(5, s"chunk $chunkId holds no rows of partition $key"))
+      case Some(c) => next(c.stage).map { stage =>
+        databases.put(db, chunks.updated(chunkId, c.copy(stage = stage))); ()
       }
     }
   }
@@ -1935,7 +1880,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * description "Loading chunk to ReadBuffer"). Closing an
     * already-moved chunk is the reference's lifecycle error. */
   private[server] def closeChunkAction(db: String, key: String,
-      table: String, chunkId: Int): Either[(Int, String), HttpFacade.OpRecord] =
+      table: String, chunkId: Int): Either[String, HttpFacade.OpRecord] =
     moveChunk(db, key, table, chunkId) {
       case "ReadBuffer" => Left(s"chunk $chunkId already moved to ReadBuffer")
       case _ => Right("ReadBuffer")
@@ -1950,7 +1895,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * Unloading a chunk that is not in the read buffer is the
     * reference's lifecycle error. */
   private[server] def unloadChunkAction(db: String, key: String,
-      table: String, chunkId: Int): Either[(Int, String), Unit] =
+      table: String, chunkId: Int): Either[String, Unit] =
     moveChunk(db, key, table, chunkId) {
       case "ReadBuffer" => Right("ObjectStoreOnly")
       case _ => Left(s"chunk $chunkId is not in the read buffer")
@@ -1991,29 +1936,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * like the reference's `is_cancelled`. False when the id is unknown. */
   private[server] def cancelOperation(id: Long): Boolean =
     operations.updateWith(id)(_.map(_.copy(cancelled = true))).isDefined
-
-  private def handleClosePartitionChunk(ex: HttpExchange, db: String,
-      key: String, table: String, chunkId: Int): Unit = {
-    if (!requireDb(ex, db)) return
-    closeChunkAction(db, key, table, chunkId) match {
-      case Left((status, msg)) => respondJsonError(ex, status, msg)
-      case Right(rec) => respond(ex, 200, "application/json",
-        s"""{"operation":${HttpFacade.opJson(rec)}}""")
-    }
-  }
-
-  /** Operations listing (rpc/operations.rs): every tracked management
-    * job, oldest first; per-id fetch below. */
-  private def handleListOperations(ex: HttpExchange): Unit =
-    respond(ex, 200, "application/json",
-      operationsList.map(HttpFacade.opJson).mkString("[", ",", "]"))
-
-  private def handleGetOperation(ex: HttpExchange, id: Long): Unit =
-    operationGet(id) match {
-      case Some(op) => respond(ex, 200, "application/json",
-        HttpFacade.opJson(op))
-      case None => respondJsonError(ex, 404, s"operation $id not found")
-    }
 
   private def handlePartitions(ex: HttpExchange): Unit = {
     val params = queryParams(ex)
@@ -2095,7 +2017,8 @@ object HttpFacade {
 
   /** One management-surface chunk row (chunk.proto:46-81 Chunk):
     * partition key, table, id, lifecycle storage stage, row count —
-    * rendered as JSON by the HTTP routes and protobuf by gRPC. */
+    * rendered as protobuf by gRPC, as JSON by `GET /iox/api/v1/chunks`
+    * and as rows of `system_chunks`. */
   final case class ChunkRow(partitionKey: String, table: String, id: Int,
       storage: String, rowCount: Long)
 
@@ -2108,25 +2031,6 @@ object HttpFacade {
       dbName: String = "", partitionKey: String = "", tableName: String = "",
       chunkId: Option[Int] = None, nanos: Seq[Long] = Nil,
       cancelled: Boolean = false)
-
-  /** The HTTP rendering of an operation record — the shape the
-    * /iox/api/v1/operations routes have always served. */
-  private[server] def opJson(r: OpRecord): String = {
-    val job = r.kind match {
-      case "CloseChunk" =>
-        s""""job":{"kind":"CloseChunk","db_name":${jsonStr(r.dbName)},""" +
-          s""""partition_key":${jsonStr(r.partitionKey)},""" +
-          s""""table_name":${jsonStr(r.tableName)},""" +
-          s""""chunk_id":${r.chunkId.getOrElse(0)}}"""
-      case "WipePreservedCatalog" =>
-        s""""job":{"kind":"WipePreservedCatalog","db_name":${jsonStr(r.dbName)}}"""
-      case _ =>
-        s""""job":{"kind":"Dummy","nanos":${r.nanos.mkString("[", ",", "]")}}"""
-    }
-    val status = if (r.cancelled) "Cancelled" else "Complete"
-    s"""{"id":${r.id},"status":"$status",""" +
-      s""""description":${jsonStr(r.description)},$job}"""
-  }
 
   // ------------------------------------------- minimal client (tests/demos)
 
@@ -2212,18 +2116,6 @@ object HttpFacade {
     java.net.URLEncoder.encode(s, "UTF-8")
 
   private val QueryPath = "/iox/api/v1/databases/([^/]+)/query".r
-  private val RulesPath = "/iox/api/v1/databases/([^/]+)/rules".r
-  private val DbPartitionsPath =
-    "/iox/api/v1/databases/([^/]+)/partitions".r
-  private val PartitionPath =
-    "/iox/api/v1/databases/([^/]+)/partitions/([^/]+)".r
-  private val PartitionChunksPath =
-    "/iox/api/v1/databases/([^/]+)/partitions/([^/]+)/chunks".r
-  private val NewChunkPath =
-    "/iox/api/v1/databases/([^/]+)/partitions/([^/]+)/tables/([^/]+)/chunks/new".r
-  private val CloseChunkPath =
-    "/iox/api/v1/databases/([^/]+)/partitions/([^/]+)/tables/([^/]+)/chunks/([0-9]+)/close".r
-  private val OperationPath = "/iox/api/v1/operations/([0-9]+)".r
 
   /** org + bucket -> database name (data_types/src/names.rs:18): both
     * halves percent-encode every non-alphanumeric byte, joined by `_`. */

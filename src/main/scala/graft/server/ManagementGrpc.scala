@@ -6,9 +6,9 @@ import scala.util.control.NonFatal
   * framing — `influxdata.iox.management.v1.ManagementService`
   * (reference: src/influxdb_ioxd/rpc/management.rs:50-472),
   * `google.longrunning.Operations` (rpc/operations.rs:129-205) and
-  * `influxdata.iox.write.v1.WriteService` (rpc/write.rs:18-72) — wired
-  * to the SAME facade state the HTTP management routes serve, so a
-  * database created over gRPC is queryable over HTTP and vice versa.
+  * `influxdata.iox.write.v1.WriteService` (rpc/write.rs:18-72) — the
+  * only transport of the management API, wired to the facade's state,
+  * so a database created here is queryable over HTTP.
   *
   * Error codes follow the reference's tonic statuses: NOT_FOUND(5) for
   * unknown databases/partitions/operations, ALREADY_EXISTS(6) for
@@ -54,7 +54,7 @@ object ManagementGrpc {
   private def build(f: StorageProto.Writer => Unit): Array[Byte] = {
     val w = new StorageProto.Writer; f(w); w.result()
   }
-  private val empty = one(Array.emptyByteArray)
+  private def empty = one(Array.emptyByteArray)
 
   def dispatcher(facade: HttpFacade)
       : (String, Array[Byte]) => Either[String, Iterator[Array[Byte]]] =
@@ -176,20 +176,13 @@ object ManagementGrpc {
     case "ClosePartitionChunk" =>
       requireDb(f, P.readString(raw, 1)).flatMap { db =>
         val (_, key, table, chunkId) = P.readChunkRef(raw, tableField = 4)
-        f.closeChunkAction(db, key, table, chunkId) match {
-          case Right(rec) => one(P.operationWrapper(rec))
-          case Left((404, msg)) => notFound(msg)
-          case Left((_, msg)) => Left(msg)
-        }
+        f.closeChunkAction(db, key, table, chunkId)
+          .flatMap(rec => one(P.operationWrapper(rec)))
       }
     case "UnloadPartitionChunk" =>
       requireDb(f, P.readString(raw, 1)).flatMap { db =>
         val (_, key, table, chunkId) = P.readChunkRef(raw, tableField = 4)
-        f.unloadChunkAction(db, key, table, chunkId) match {
-          case Right(()) => empty
-          case Left((404, msg)) => notFound(msg)
-          case Left((_, msg)) => Left(msg)
-        }
+        f.unloadChunkAction(db, key, table, chunkId).flatMap(_ => empty)
       }
     case "WipePreservedCatalog" =>
       f.wipePreservedCatalog(P.readString(raw, 1)) match {

@@ -109,11 +109,17 @@ OBSERVER: Locally query unified queryable views of remote system tables
 
     private def enc(s: String) = HttpFacade.urlEnc(s)
 
+    /** The server's databases, from the database-less 1.x
+      * `SHOW DATABASES`: every string after the series' `"values"` key
+      * (none when the series is empty). */
     private def dbNames(): Seq[String] = {
-      val (status, body) = httpGet("/iox/api/v1/databases")
-      if (status != 200) sys.error(s"listing databases failed: $status $body")
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(
-        body.dropWhile(_ != '[')).map(_.group(1)).toSeq
+      val (status, body) = httpGet(s"/query?q=${enc("SHOW DATABASES")}")
+      if (status != 200 || body.contains("\"error\":"))
+        sys.error(s"listing databases failed: $status $body")
+      val values = body.indexOf("\"values\":")
+      if (values < 0) Nil
+      else "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(
+        body.substring(values + "\"values\":".length)).map(_.group(1)).toSeq
     }
 
     /** Execute one parsed command; false means exit. */
@@ -272,11 +278,10 @@ OBSERVER: Locally query unified queryable views of remote system tables
     def opt(name: String, dflt: String): String =
       args.sliding(2).collectFirst { case Array(`name`, v) => v }.getOrElse(dflt)
     val url = opt("--url", "http://127.0.0.1:8080")
-    lazy val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 4 cores and 4 shuffle partitions by default: observer queries read
+    // a few system-table rows
+    lazy val spark = graft.GraftSession.builder(graft.GraftSession.cpus("4"))
+      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
     val repl = new Repl(url, System.out, () => spark)
     repl.loop(new BufferedReader(new java.io.InputStreamReader(System.in, UTF_8)))
   }

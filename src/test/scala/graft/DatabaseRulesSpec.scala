@@ -90,36 +90,25 @@ class DatabaseRulesSpec extends AnyFunSuite {
   test("management routes: put/get/list rules; configured template drives partitions") {
     val spark = SparkSpec.session
     val facade = new graft.server.HttpFacade(spark, port = 0)
-    try {
+    try ManagementCalls.withGrpc(facade) { g =>
+      import ManagementCalls._
+      import StorageRequests.msg
       val p = facade.boundPort
-      def send(method: String, path: String, body: Option[String]): (Int, String) = {
-        val c = new URI(s"http://127.0.0.1:$p$path").toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        c.setRequestMethod(method)
-        body.foreach { b =>
-          c.setDoOutput(true)
-          c.getOutputStream.write(b.getBytes(UTF_8)); c.getOutputStream.close()
-        }
-        val is = if (c.getResponseCode >= 400) c.getErrorStream else c.getInputStream
-        (c.getResponseCode, if (is == null) "" else new String(is.readAllBytes(), UTF_8))
-      }
 
-      // unknown database: 404 on get, list empty
-      assert(send("GET", "/iox/api/v1/databases/o_b/rules", None)._1 == 404)
-      assert(send("GET", "/iox/api/v1/databases", None)._2 == """{"names":[]}""")
+      // unknown database: NOT_FOUND on get, list empty
+      assert(getDatabase(g, "o_b")._1 == NotFound)
+      assert(listDatabases(g) == Nil)
 
-      // put rules with a month template; name mismatch is a 400
-      val rules = """{"name":"o_b","partition_template":[{"part":"time","format":"%Y-%m"}]}"""
-      assert(send("PUT", "/iox/api/v1/databases/other/rules", Some(rules))._1 == 400)
-      val (ps, pbody) = send("PUT", "/iox/api/v1/databases/o_b/rules", Some(rules))
-      assert(ps == 200 && pbody.contains(""""format":"%Y-%m""""))
+      // create with a month template
+      val month = PartitionTemplate(Seq(TemplatePart.TimeFormat("%Y-%m")))
+      assert(createDatabase(g, DatabaseRules("o_b", partitionTemplate = month)) == 0)
 
-      // round-trip through GET
-      val (gs, gbody) = send("GET", "/iox/api/v1/databases/o_b/rules", None)
-      assert(gs == 200)
-      assert(DatabaseRules.fromJson(gbody).map(_.partitionTemplate) ==
-        Right(PartitionTemplate(Seq(TemplatePart.TimeFormat("%Y-%m")))))
-      assert(send("GET", "/iox/api/v1/databases", None)._2 == """{"names":["o_b"]}""")
+      // round-trip through get
+      assert(getDatabase(g, "o_b") match {
+        case (0, Some(r)) => r.partitionTemplate == month
+        case _ => false
+      })
+      assert(listDatabases(g) == Seq("o_b"))
 
       // the configured template (monthly, not the default daily) shapes
       // the partition listing for data written afterwards
@@ -130,12 +119,19 @@ class DatabaseRulesSpec extends AnyFunSuite {
         "cpu,host=a usage=1.5 1609459200000000000".getBytes(UTF_8)) // 2021-01-01
       w.getOutputStream.close()
       assert(w.getResponseCode == 204)
-      val (_, parts) = send("GET", "/api/v1/partitions?org=o&bucket=b", None)
+      val r = new URI(s"http://127.0.0.1:$p/api/v1/partitions?org=o&bucket=b").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      val parts = new String(r.getInputStream.readAllBytes(), UTF_8)
       assert(parts == """[{"table":"cpu","partition_key":"2021-01"}]""", parts)
 
-      // an invalid rules document is rejected
-      assert(send("PUT", "/iox/api/v1/databases/o_b/rules",
-        Some("""{"name":"o_b","partition_template":[{"part":"bogus"}]}"""))._1 == 400)
+      // an invalid rules document is rejected: a template part the
+      // engine does not model
+      val regexPart = msg { r =>
+        r.string(1, "o_b")
+        r.bytes(2, msg(_.bytes(1, msg(_.bytes(4, msg { cf =>
+          cf.string(1, "c"); cf.string(2, "f") })))))
+      }
+      assert(updateDatabase(g, regexPart) == InvalidArgument)
     } finally facade.stop()
   }
 }

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPOutputStream
 
 import graft.server.{HttpFacade, StorageProto, StorageProtoReader => R}
+import graft.streaming.DatabaseRules
+import graft.ManagementCalls._
 import graft.StorageRequests._
 
 /** End-to-end drive of the HTTP wire facade (http.rs:364,462,595): the
@@ -254,68 +256,56 @@ class HttpFacadeSpec extends SparkSpec {
       post(p, "/api/v2/write?org=o&bucket=b",
         ("m,t=x f=1.0 1568756160000000000\n" +
           "m,t=y f=2.0 1568842560000000000").getBytes(UTF_8))
+      withGrpc(facade) { g =>
+        // list_partitions / get_partition (management.rs:243,265); an
+        // absent partition is an empty response (management.rs:281-290)
+        assert(listPartitions(g, "o_b") == ((0, Seq("2019-09-17", "2019-09-18"))))
+        assert(getPartition(g, "o_b", "2019-09-17") == ((0, Some("2019-09-17"))))
+        assert(getPartition(g, "o_b", "2030-01-01") == ((0, None)))
+        assert(listPartitions(g, "nope")._1 == NotFound)
 
-      // list_partitions / get_partition (management.rs:243,265)
-      assert(get(p, "/iox/api/v1/databases/o_b/partitions") ==
-        (200, """[{"key":"2019-09-17"},{"key":"2019-09-18"}]"""))
-      assert(get(p, "/iox/api/v1/databases/o_b/partitions/2019-09-17") ==
-        (200, """{"key":"2019-09-17"}"""))
-      assert(get(p, "/iox/api/v1/databases/o_b/partitions/2030-01-01")._1 == 404)
-      assert(get(p, "/iox/api/v1/databases/nope/partitions")._1 == 404)
+        // list_partition_chunks: the write batch is open
+        assert(listPartitionChunks(g, "o_b", "2019-09-17") == ((0,
+          Seq(HttpFacade.ChunkRow("2019-09-17", "m", 0, "OpenMutableBuffer", 1)))))
 
-      // list_partition_chunks: the write batch is open
-      assert(get(p, "/iox/api/v1/databases/o_b/partitions/2019-09-17/chunks") ==
-        (200, """[{"partition_key":"2019-09-17","table_name":"m","id":0,""" +
-          """"storage":"OpenMutableBuffer","row_count":1}]"""))
+        // new_partition_chunk: rollover closes the open chunk
+        assert(newPartitionChunk(g, "o_b", "2019-09-17", "m") == 0)
+        assert(listPartitionChunks(g, "o_b", "2019-09-17")._2.map(_.storage) ==
+          Seq("ClosedMutableBuffer"))
+        assert(newPartitionChunk(g, "o_b", "2019-09-17", "nope") == NotFound)
 
-      // new_partition_chunk: rollover closes the open chunk
-      val (rs, _) = post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/m/chunks/new",
-        Array.emptyByteArray)
-      assert(rs == 200)
-      assert(get(p, "/iox/api/v1/databases/o_b/partitions/2019-09-17/chunks")
-        ._2.contains("\"storage\":\"ClosedMutableBuffer\""))
-      assert(post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/nope/chunks/new",
-        Array.emptyByteArray)._1 == 404)
+        // a second write starts a FRESH open chunk alongside the closed one
+        post(p, "/api/v2/write?org=o&bucket=b",
+          "m,t=z f=3.0 1568756160000000001".getBytes(UTF_8))
+        assert(listPartitionChunks(g, "o_b", "2019-09-17")._2.map(c => (c.id, c.storage)) ==
+          Seq((0, "ClosedMutableBuffer"), (1, "OpenMutableBuffer")))
 
-      // a second write starts a FRESH open chunk alongside the closed one
-      post(p, "/api/v2/write?org=o&bucket=b",
-        "m,t=z f=3.0 1568756160000000001".getBytes(UTF_8))
-      val (_, listed) = get(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/chunks")
-      assert(listed.contains("\"id\":0,\"storage\":\"ClosedMutableBuffer\""))
-      assert(listed.contains("\"id\":1,\"storage\":\"OpenMutableBuffer\""))
+        // close_partition_chunk: chunk 0 moves to ReadBuffer, the tracked
+        // operation comes back with the reference's CloseChunk job shape,
+        // its description (job.rs:91) in system_operations
+        val (cs, op) = closePartitionChunk(g, "o_b", "2019-09-17", "m", 0)
+        assert(cs == 0 && op.map(o => (o.job, o.chunkId)) == Some(("CloseChunk", Some(0L))))
+        val (ds, described) = get(p, s"/iox/api/v1/databases/o_b/query" +
+          s"?q=${enc("SELECT kind, description FROM system_operations")}&format=csv")
+        assert(ds == 200 && described.contains("CloseChunk,Loading chunk to ReadBuffer"),
+          described)
+        assert(listPartitionChunks(g, "o_b", "2019-09-17")._2
+          .exists(c => c.id == 0 && c.storage == "ReadBuffer"))
+        // ...and the moved chunk STAYS queryable (reference semantics: the
+        // read buffer serves queries)
+        val (qs, csv) = get(p, s"/iox/api/v1/databases/o_b/query" +
+          s"?q=${enc("SELECT count(*) AS n FROM m")}&format=csv")
+        assert(qs == 200 && csv.trim.linesIterator.toSeq.last == "3")
+        // closing again is the reference's lifecycle error
+        assert(closePartitionChunk(g, "o_b", "2019-09-17", "m", 0)._1 == InvalidArgument)
+        assert(closePartitionChunk(g, "o_b", "2019-09-17", "m", 7)._1 == NotFound)
 
-      // close_partition_chunk: chunk 0 moves to ReadBuffer, the tracked
-      // operation comes back with the reference's CloseChunk job shape
-      val (cs, closeBody) = post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/m/chunks/0/close",
-        Array.emptyByteArray)
-      assert(cs == 200)
-      assert(closeBody.contains("\"description\":\"Loading chunk to ReadBuffer\""))
-      assert(closeBody.contains("\"kind\":\"CloseChunk\""))
-      assert(get(p, "/iox/api/v1/databases/o_b/partitions/2019-09-17/chunks")
-        ._2.contains("\"id\":0,\"storage\":\"ReadBuffer\""))
-      // ...and the moved chunk STAYS queryable (reference semantics: the
-      // read buffer serves queries)
-      val (qs, csv) = get(p, s"/iox/api/v1/databases/o_b/query" +
-        s"?q=${enc("SELECT count(*) AS n FROM m")}&format=csv")
-      assert(qs == 200 && csv.trim.linesIterator.toSeq.last == "3")
-      // closing again is the reference's lifecycle error
-      assert(post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/m/chunks/0/close",
-        Array.emptyByteArray)._1 == 400)
-      assert(post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/m/chunks/7/close",
-        Array.emptyByteArray)._1 == 404)
-
-      // operations listing + per-id fetch (rpc/operations.rs)
-      val (os, ops) = get(p, "/iox/api/v1/operations")
-      assert(os == 200)
-      assert(ops.startsWith("""[{"id":0,"status":"Complete""""))
-      assert(get(p, "/iox/api/v1/operations/0")._2.contains("\"chunk_id\":0"))
-      assert(get(p, "/iox/api/v1/operations/99")._1 == 404)
+        // operations listing + per-id fetch (rpc/operations.rs)
+        assert(listOperations(g).headOption.map(o => (o.name, o.done, o.cancelled)) ==
+          Some(("0", true, false)))
+        assert(getOperation(g, "0")._2.flatMap(_.chunkId) == Some(0L))
+        assert(getOperation(g, "99")._1 == NotFound)
+      }
     }
   }
 
@@ -326,25 +316,21 @@ class HttpFacadeSpec extends SparkSpec {
       for (lp <- Seq(s"a,t=x f=1.0 $day", s"b,t=x f=2.0 $day",
           s"a,t=y f=3.0 $day", s"c,t=x f=4.0 $day"))
         assert(post(p, "/api/v2/write?org=o&bucket=b", lp.getBytes(UTF_8))._1 == 204)
-      // chunks: a 0, b 1, a 2, c 3; b's chunk moves to the read buffer
-      assert(post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/b/chunks/1/close",
-        Array.emptyByteArray)._1 == 200)
-      val (ds, db) = get(p, s"/query?db=o_b&q=${enc("DROP MEASUREMENT a")}")
-      assert(ds == 200 && db == """{"results":[{"statement_id":0}]}""", db)
-      // b is chunk 0 now and keeps its label; c, now at b's old id, is open
-      assert(get(p, "/iox/api/v1/chunks?org=o&bucket=b") == (200,
-        """[{"partition_key":"2019-09-17","table_name":"b","id":0,""" +
-          """"storage":"ReadBuffer","row_count":1},""" +
-          """{"partition_key":"2019-09-17","table_name":"c","id":1,""" +
-          """"storage":"OpenMutableBuffer","row_count":1}]"""))
-      // the lifecycle checks follow the chunk too
-      assert(post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/b/chunks/0/close",
-        Array.emptyByteArray)._1 == 400)
-      assert(post(p,
-        "/iox/api/v1/databases/o_b/partitions/2019-09-17/tables/c/chunks/1/close",
-        Array.emptyByteArray)._1 == 200)
+      withGrpc(facade) { g =>
+        // chunks: a 0, b 1, a 2, c 3; b's chunk moves to the read buffer
+        assert(closePartitionChunk(g, "o_b", "2019-09-17", "b", 1)._1 == 0)
+        val (ds, db) = get(p, s"/query?db=o_b&q=${enc("DROP MEASUREMENT a")}")
+        assert(ds == 200 && db == """{"results":[{"statement_id":0}]}""", db)
+        // b is chunk 0 now and keeps its label; c, now at b's old id, is open
+        assert(get(p, "/iox/api/v1/chunks?org=o&bucket=b") == ((200,
+          """[{"partition_key":"2019-09-17","table_name":"b","id":0,""" +
+            """"storage":"ReadBuffer","row_count":1},""" +
+            """{"partition_key":"2019-09-17","table_name":"c","id":1,""" +
+            """"storage":"OpenMutableBuffer","row_count":1}]""")))
+        // the lifecycle checks follow the chunk too
+        assert(closePartitionChunk(g, "o_b", "2019-09-17", "b", 0)._1 == InvalidArgument)
+        assert(closePartitionChunk(g, "o_b", "2019-09-17", "c", 1)._1 == 0)
+      }
     }
   }
 
@@ -352,30 +338,94 @@ class HttpFacadeSpec extends SparkSpec {
       "the HTTP read routes; unknown names still 404") {
     withFacade { facade =>
       val p = facade.boundPort
-      val conn = new URI(s"http://127.0.0.1:$p/iox/api/v1/databases/o_b/rules")
-        .toURL.openConnection().asInstanceOf[HttpURLConnection]
-      conn.setRequestMethod("PUT")
-      conn.setDoOutput(true)
-      conn.getOutputStream.write("""{"name":"o_b"}""".getBytes(UTF_8))
-      conn.getOutputStream.close()
-      assert(readResponse(conn)._1 == 200)
+      withGrpc(facade) { g =>
+        assert(createDatabase(g, DatabaseRules("o_b")) == 0)
 
-      assert(get(p, s"/iox/api/v1/databases/o_b/query?q=${enc("SELECT 1 AS one")}" +
-        "&format=csv") == (200, "one\n1\n"))
-      assert(HttpFacade.doGet(p, "o_b", "SELECT 1 AS one") ==
-        (Seq("one"), Seq(Seq(1))))
-      assert(get(p, "/iox/api/v1/chunks?org=o&bucket=b") == (200, "[]"))
-      assert(get(p, "/iox/api/v1/databases/o_b/partitions") == (200, "[]"))
-      assert(get(p, "/api/v1/partitions?org=o&bucket=b") == (200, "[]"))
-      val (ss, shown) = get(p, s"/query?q=${enc("SHOW DATABASES")}")
-      assert(ss == 200 && shown.contains("""["o_b"]"""), shown)
+        assert(get(p, s"/iox/api/v1/databases/o_b/query?q=${enc("SELECT 1 AS one")}" +
+          "&format=csv") == ((200, "one\n1\n")))
+        assert(HttpFacade.doGet(p, "o_b", "SELECT 1 AS one") ==
+          ((Seq("one"), Seq(Seq(1)))))
+        assert(get(p, "/iox/api/v1/chunks?org=o&bucket=b") == ((200, "[]")))
+        assert(listPartitions(g, "o_b") == ((0, Nil)))
+        assert(get(p, "/api/v1/partitions?org=o&bucket=b") == ((200, "[]")))
+        val (ss, shown) = get(p, s"/query?q=${enc("SHOW DATABASES")}")
+        assert(ss == 200 && shown.contains("""["o_b"]"""), shown)
 
-      assert(get(p, s"/iox/api/v1/databases/o_x/query?q=${enc("SELECT 1")}")._1 == 404)
-      assert(intercept[RuntimeException](HttpFacade.doGet(p, "o_x", "SELECT 1"))
-        .getMessage.contains("(404)"))
-      assert(get(p, "/iox/api/v1/chunks?org=o&bucket=x")._1 == 404)
-      assert(get(p, "/iox/api/v1/databases/o_x/partitions")._1 == 404)
-      assert(get(p, "/api/v1/partitions?org=o&bucket=x")._1 == 404)
+        assert(get(p, s"/iox/api/v1/databases/o_x/query?q=${enc("SELECT 1")}")._1 == 404)
+        assert(intercept[RuntimeException](HttpFacade.doGet(p, "o_x", "SELECT 1"))
+          .getMessage.contains("(404)"))
+        assert(get(p, "/iox/api/v1/chunks?org=o&bucket=x")._1 == 404)
+        assert(listPartitions(g, "o_x")._1 == NotFound)
+        assert(get(p, "/api/v1/partitions?org=o&bucket=x")._1 == 404)
+      }
+    }
+  }
+
+  test("the management API has no HTTP routes: its old paths answer 404; " +
+      "chunks, partitions and do_get still answer") {
+    withFacade { facade =>
+      val p = facade.boundPort
+      assert(post(p, "/api/v2/write?org=o&bucket=b",
+        "m,t=x f=1.0 1568756160000000000".getBytes(UTF_8))._1 == 204)
+      def send(method: String, path: String): (Int, String) = {
+        val conn = new URI(s"http://127.0.0.1:$p$path").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        conn.setRequestMethod(method)
+        if (method != "GET") {
+          conn.setDoOutput(true)
+          conn.getOutputStream.write("""{"name":"o_b"}""".getBytes(UTF_8))
+          conn.getOutputStream.close()
+        }
+        readResponse(conn)
+      }
+      val db = "/iox/api/v1/databases/o_b"
+      val partition = s"$db/partitions/2019-09-17"
+      Seq("GET" -> "/iox/api/v1/databases", "GET" -> s"$db/rules", "PUT" -> s"$db/rules",
+        "GET" -> s"$db/partitions", "GET" -> partition, "GET" -> s"$partition/chunks",
+        "POST" -> s"$partition/tables/m/chunks/new",
+        "POST" -> s"$partition/tables/m/chunks/0/close",
+        "GET" -> "/iox/api/v1/operations", "GET" -> "/iox/api/v1/operations/0")
+        .foreach { case (method, path) =>
+          assert(send(method, path) == ((404, s"""{"error":"no route for $path"}""")),
+            s"$method $path")
+        }
+      assert(get(p, "/iox/api/v1/chunks?org=o&bucket=b") == ((200,
+        """[{"partition_key":"2019-09-17","table_name":"m","id":0,""" +
+          """"storage":"OpenMutableBuffer","row_count":1}]""")))
+      assert(get(p, "/api/v1/partitions?org=o&bucket=b") ==
+        ((200, """[{"table":"m","partition_key":"2019-09-17"}]""")))
+      assert(HttpFacade.doGet(p, "o_b", "SELECT t FROM m") == ((Seq("t"), Seq(Seq("x")))))
+    }
+  }
+
+  test("a measurement whose batches type a column two ways fails only the " +
+      "InfluxQL statements that read it") {
+    withFacade { facade =>
+      val p = facade.boundPort
+      for (lp <- Seq("cpu,host=a v=1 1000", "cpu,host=b v=2 2000",
+          "disk,kind=k1 v=1 1000", "disk v=1,kind=1.5 2000"))
+        assert(post(p, "/api/v2/write?org=o&bucket=b", lp.getBytes(UTF_8))._1 == 204)
+      def influx(q: String): String = {
+        val (s, body) = get(p, s"/query?db=o_b&q=${enc(q)}")
+        assert(s == 200, body)
+        body
+      }
+      // statements on cpu read cpu's chunks alone
+      val selected = influx("SELECT v FROM cpu")
+      assert(selected.contains("\"name\":\"cpu\"") && !selected.contains("error"), selected)
+      assert(!influx("EXPLAIN SELECT v FROM cpu").contains("error"))
+      // a FROM regex reads only the measurements it matches
+      assert(influx("SELECT v FROM /^c/").contains("""["cpu",1000,1.0]"""))
+      assert(influx("DELETE FROM cpu WHERE host = 'a'") ==
+        """{"results":[{"statement_id":0}]}""")
+      assert(influx("DROP SERIES FROM cpu WHERE host = 'b'") ==
+        """{"results":[{"statement_id":0}]}""")
+      assert(influx("SELECT v FROM cpu") ==
+        """{"results":[{"statement_id":0,"series":[]}]}""")
+      // a tag check still reads disk's chunks: kind is a tag in one of them
+      assert(influx("DELETE FROM disk WHERE v = 1").contains("not tags: v"))
+      // reading disk still fails, in-band
+      assert(influx("SELECT v FROM disk").contains("\"error\""))
     }
   }
 
@@ -1133,79 +1183,71 @@ class HttpFacadeSpec extends SparkSpec {
     // table regex -> shard id, the remotes registry maps shard id -> a
     // downstream server, and the facade forwards matching lines there.
     // Loopback second facade = the remote.
-    def put(port: Int, path: String, body: String): (Int, String) = {
-      val conn = new URI(s"http://127.0.0.1:$port$path").toURL
-        .openConnection().asInstanceOf[HttpURLConnection]
-      conn.setRequestMethod("PUT")
-      conn.setDoOutput(true)
-      conn.getOutputStream.write(body.getBytes(UTF_8))
-      conn.getOutputStream.close()
-      readResponse(conn)
-    }
+    def rules(json: String): DatabaseRules =
+      DatabaseRules.fromJson(json).fold(e => fail(e), identity)
     withFacade { local =>
       withFacade { remote =>
         val pl = local.boundPort
         val pr = remote.boundPort
-        local.updateRemote(7, s"127.0.0.1:$pr")
-        val rules = """{"name":"o_b","shard_config":""" +
-          """{"specific_targets":[{"regex":"^water","shard":7}]}}"""
-        assert(put(pl, "/iox/api/v1/databases/o_b/rules", rules)._1 == 200)
-        val lp = "water,city=SF level=1.5 100\nair,city=SF temp=70.25 100"
-        val (ws, _) = post(pl, "/api/v2/write?org=o&bucket=b", lp.getBytes(UTF_8))
-        assert(ws == 204)
-        // water landed on the remote and is queryable THERE
-        val (qs, body) = get(pr, "/iox/api/v1/databases/o_b/query?q=" +
-          enc("SELECT city, level FROM water") + "&format=csv")
-        assert(qs == 200 && body.contains("SF") && body.contains("1.5"),
-          s"water not queryable on remote: $qs $body")
-        // air stayed local
-        val (qa, bodyA) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
-          enc("SELECT city, temp FROM air") + "&format=csv")
-        assert(qa == 200 && bodyA.contains("70.25"),
-          s"air not queryable locally: $qa $bodyA")
+        withGrpc(local) { g =>
+          local.updateRemote(7, s"127.0.0.1:$pr")
+          assert(createDatabase(g, rules("""{"name":"o_b","shard_config":""" +
+            """{"specific_targets":[{"regex":"^water","shard":7}]}}""")) == 0)
+          val lp = "water,city=SF level=1.5 100\nair,city=SF temp=70.25 100"
+          val (ws, _) = post(pl, "/api/v2/write?org=o&bucket=b", lp.getBytes(UTF_8))
+          assert(ws == 204)
+          // water landed on the remote and is queryable THERE
+          val (qs, body) = get(pr, "/iox/api/v1/databases/o_b/query?q=" +
+            enc("SELECT city, level FROM water") + "&format=csv")
+          assert(qs == 200 && body.contains("SF") && body.contains("1.5"),
+            s"water not queryable on remote: $qs $body")
+          // air stayed local
+          val (qa, bodyA) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
+            enc("SELECT city, temp FROM air") + "&format=csv")
+          assert(qa == 200 && bodyA.contains("70.25"),
+            s"air not queryable locally: $qa $bodyA")
 
-        // ---- remote QUERY routing (r15, the read twin of the above) ----
-        // a query whose only table is remote-owned PROXIES to the remote:
-        // the ROUTER returns the remote's rows
-        val (qw, bodyW) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
-          enc("SELECT city, level FROM water") + "&format=csv")
-        assert(qw == 200 && bodyW.contains("SF") && bodyW.contains("1.5"),
-          s"router did not return the remote's rows: $qw $bodyW")
-        // scatter-gather: a JOIN across the remote table and a local one
-        // plans locally over the fetched remote view
-        val (qj, bodyJ) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
-          enc("SELECT w.level, a.temp FROM water w JOIN air a ON w.city = a.city") +
-          "&format=csv")
-        assert(qj == 200 && bodyJ.contains("1.5") && bodyJ.contains("70.25"),
-          s"cross-shard join failed: $qj $bodyJ")
-        // a remote table named only inside a subquery expression is
-        // routed too: scatter-gather, not a local table-not-found
-        val (qi, bodyI) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
-          enc("SELECT a.temp FROM air a WHERE a.city IN (SELECT city FROM water)") +
-          "&format=csv")
-        assert(qi == 200 && bodyI.contains("70.25"),
-          s"subquery table was not routed: $qi $bodyI")
-        // a shard id with no configured remote fails loudly (ShardNotFound)
-        val rules2 = """{"name":"o_b","shard_config":""" +
-          """{"specific_targets":[{"regex":"^water","shard":9}]}}"""
-        assert(put(pl, "/iox/api/v1/databases/o_b/rules", rules2)._1 == 200)
-        val (ws2, body2) = post(pl, "/api/v2/write?org=o&bucket=b",
-          "water,city=LA level=9.0 200".getBytes(UTF_8))
-        assert(ws2 == 400 && body2.contains("shard not found: 9"),
-          s"unresolvable shard did not fail loudly: $ws2 $body2")
-        // ... on the query side too
-        val (qs2, qbody2) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
-          enc("SELECT * FROM water") + "&format=csv")
-        assert(qs2 == 400 && qbody2.contains("shard not found: 9"),
-          s"query-side ShardNotFound missing: $qs2 $qbody2")
-        // with the shard config dropped, the local store provably never
-        // held the routed table (the write really did forward)
-        assert(put(pl, "/iox/api/v1/databases/o_b/rules",
-          """{"name":"o_b"}""")._1 == 200)
-        val (qw2, bodyW2) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
-          enc("SELECT * FROM water") + "&format=csv")
-        assert(qw2 != 200 || !bodyW2.contains("1.5"),
-          s"water leaked into the local store: $bodyW2")
+          // ---- remote QUERY routing (r15, the read twin of the above) ----
+          // a query whose only table is remote-owned PROXIES to the remote:
+          // the ROUTER returns the remote's rows
+          val (qw, bodyW) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
+            enc("SELECT city, level FROM water") + "&format=csv")
+          assert(qw == 200 && bodyW.contains("SF") && bodyW.contains("1.5"),
+            s"router did not return the remote's rows: $qw $bodyW")
+          // scatter-gather: a JOIN across the remote table and a local one
+          // plans locally over the fetched remote view
+          val (qj, bodyJ) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
+            enc("SELECT w.level, a.temp FROM water w JOIN air a ON w.city = a.city") +
+            "&format=csv")
+          assert(qj == 200 && bodyJ.contains("1.5") && bodyJ.contains("70.25"),
+            s"cross-shard join failed: $qj $bodyJ")
+          // a remote table named only inside a subquery expression is
+          // routed too: scatter-gather, not a local table-not-found
+          val (qi, bodyI) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
+            enc("SELECT a.temp FROM air a WHERE a.city IN (SELECT city FROM water)") +
+            "&format=csv")
+          assert(qi == 200 && bodyI.contains("70.25"),
+            s"subquery table was not routed: $qi $bodyI")
+          // a shard id with no configured remote fails loudly (ShardNotFound)
+          assert(updateDatabase(g, rules("""{"name":"o_b","shard_config":""" +
+            """{"specific_targets":[{"regex":"^water","shard":9}]}}""")) == 0)
+          val (ws2, body2) = post(pl, "/api/v2/write?org=o&bucket=b",
+            "water,city=LA level=9.0 200".getBytes(UTF_8))
+          assert(ws2 == 400 && body2.contains("shard not found: 9"),
+            s"unresolvable shard did not fail loudly: $ws2 $body2")
+          // ... on the query side too
+          val (qs2, qbody2) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
+            enc("SELECT * FROM water") + "&format=csv")
+          assert(qs2 == 400 && qbody2.contains("shard not found: 9"),
+            s"query-side ShardNotFound missing: $qs2 $qbody2")
+          // with the shard config dropped, the local store provably never
+          // held the routed table (the write really did forward)
+          assert(updateDatabase(g, rules("""{"name":"o_b"}""")) == 0)
+          val (qw2, bodyW2) = get(pl, "/iox/api/v1/databases/o_b/query?q=" +
+            enc("SELECT * FROM water") + "&format=csv")
+          assert(qw2 != 200 || !bodyW2.contains("1.5"),
+            s"water leaked into the local store: $bodyW2")
+        }
       }
     }
   }

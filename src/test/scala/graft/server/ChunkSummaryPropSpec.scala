@@ -120,8 +120,8 @@ class ChunkSummaryPropSpec extends SparkSpec {
       assert(conn.getResponseCode == 200)
       conn.disconnect()
     case Statement(text) =>
-      // a miss is an in-band error; a measurement whose chunks type `kind`
-      // two ways fails the statement, since it plans over every view
+      // a miss (an unknown measurement, a condition on a non-tag) is an
+      // in-band error; these statements read chunk schemas, never a view
       Try(f.planStatement(Db, InfluxQl.parseAll(text).head))
   }
 
